@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query seconds.
   *
@@ -13,20 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Bench-scale inputs are single-digit-MB files; 1 MB splits spread
-      // the scans across local threads. A production cluster reading
-      // TB-scale tables keeps the 128 MB default.
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envInt("SPARK_GRAFT_CPUS", 4))
     // Warmup: touch every table (FS cache) and JIT the hottest codegen
     // paths (decimal agg, cosine loop) so the first timed query doesn't
     // absorb JVM compilation.

@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val runs = math.max(1, GraftSession.envInt("SPARK_GRAFT_BENCHONE_RUNS", 2))
+    val spark = GraftSession.local(GraftSession.envInt("SPARK_GRAFT_CPUS", 32))
     val byName = SparkEntry.specs.map(sp => sp.name -> sp).toMap
     // Passes are INTERLEAVED across the requested queries (the
     // graft.Bench protocol): a host-steal burst then inflates one pass
     // of each query instead of every run of whichever query it hit, so
     // the per-query min stays clean on a contended box.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCHONE_RUNS", "2").toInt
     val times = (1 to runs).map { i =>
       args.map { name =>
         val t0 = System.nanoTime()

@@ -4,8 +4,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
-/** The staged-commit state machine shared by graft's three persisted
-  * indexes (dedup shingle/hash index, BM25 postings index, IVF vector
+/** The staged-commit state machine shared by graft's nine persisted
+  * index kinds (dedup shingle/hash; the BM25, positional phrase,
+  * character-trigram and word-positional (NEAR) postings indexes; the
+  * float IVF, IVF-PQ and IVF-binary vector indexes; the perceptual-hash
   * index). One instance wraps one index root and its batch ledger and
   * provides every filesystem-protocol primitive the indexes need, so
   * the exactly-once semantics live in ONE place:
@@ -486,7 +488,7 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
 
   /** Floor-bounded vacuum, kind-generic (the shared kernel of
     * `TimeTravel.vacuum`, `Retrieval.vacuumBm25Index`,
-    * `Retrieval.vacuumSubstringIndex` and
+    * `Retrieval.Trigram.vacuum` and
     * `Similarity.vacuumIvfIndex`): collapse every sub-root with
     * ledger id ≤ `floor` into ONE `c<floor>` dir per side — each
     * side's `stage` callback writes the index's own resolved

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -196,9 +197,7 @@ object Bpe {
 
   private def ensureModel(s: SparkSession, d: String, name: String,
       slice: DataFrame => DataFrame): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"$name$suffix")
+    val root = new org.apache.hadoop.fs.Path(Fixture.root(s, d, name))
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root.toString)(r =>
       Seq("merges", "vocab", "curve").forall(side => fs.exists(
@@ -268,9 +267,7 @@ object Bpe {
 
   private def ensureLedgered(s: SparkSession, d: String, name: String,
       vacuumFloor: Option[Long]): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"$name$suffix").toString
+    val root = Fixture.root(s, d, name)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val p = (r: String) => graft.index.ModelLedger.protocol(r)

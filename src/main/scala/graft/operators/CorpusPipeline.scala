@@ -111,7 +111,10 @@ object CorpusPipeline {
     // carried 5 copies of this subtree).
     val audit = nrm
       .select(col("doc_id"), col("lang"), col("source"), col("nt"),
-        nWords.cast("long").as("n_tok"), k1Cond.as("in_k1"))
+        nWords.cast("long").as("n_tok"),
+        // NULL-safe: a NULL filter verdict is a drop (the oracle's NOT
+        // IN (k1)), so the rejects audit's `!in_k1` never sees NULL
+        coalesce(k1Cond, lit(false)).as("in_k1"))
       .join(cc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("source"), col("nt"),
         col("n_tok"), col("in_k1"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -249,9 +250,7 @@ object Curation {
     */
   def ensureDsirModel(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_dsir_model$suffix")
+    val root = new org.apache.hadoop.fs.Path(Fixture.root(s, d, "graft_dsir_model"))
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root.toString)(r =>
       fs.exists(new org.apache.hadoop.fs.Path(r, "model/_SUCCESS")) &&
@@ -469,10 +468,7 @@ object Curation {
   }
 
   def ensurePagerankLedger(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_pr_ledger$suffix").toString
+    val root = Fixture.root(s, d, "graft_pr_ledger")
     Layout.ensurePublishedDir(s, root)(
       r => graphProtocol(r).foldedBatches().contains(1L)
     ) { staging =>
@@ -500,10 +496,7 @@ object Curation {
     */
   def ensureCheckpointedPagerank(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_pr_ckpt$suffix").toString
+    val root = Fixture.root(s, d, "graft_pr_ckpt")
     Layout.ensurePublishedDir(s, root)(r =>
       graphProtocol(r).foldedBatches().contains(2L) &&
         scoresProtocol(r).foldedBatches().contains(1L)
@@ -528,10 +521,7 @@ object Curation {
     */
   def ensureVacuumedCheckpointPagerank(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_pr_ckpt_vac$suffix").toString
+    val root = Fixture.root(s, d, "graft_pr_ckpt_vac")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root)(r =>
@@ -1777,7 +1767,10 @@ object Curation {
       val st = curateStages(s, d).toMap
       st("input")
         .select(col("doc_id"), col("source"),
-          curateQualityCond.as("in_k1"), curateMixCond.as("mix_ok"))
+          // NULL-safe: a NULL quality verdict (NULL text) is a drop,
+          // the oracle's NOT IN (k1) answer
+          coalesce(curateQualityCond, lit(false)).as("in_k1"),
+          curateMixCond.as("mix_ok"))
         .join(st("decontaminate").select(col("doc_id"),
           lit(true).as("in_k2")), Seq("doc_id"), "left")
         .join(st("dedup").select(col("doc_id"), lit(true).as("in_k3")),

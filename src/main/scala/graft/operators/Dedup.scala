@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.{Delete, Fixture, Fold, IndexKind, Seed, Step, Vacuum}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -962,37 +963,29 @@ object Dedup {
     * Layout's bucketed tables), and return its path.
     */
   def ensureIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_dedup_index"))(
-      dedupComplete(s, _)) { staging =>
-      val history = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
-      writeIndex(history, staging)
-    }
+    Fixture("graft_dedup_index", DedupKind, Seq(Seed(history(s, d))))
+      .ensure(s, d)
 
-  private def fixtureRoot(s: SparkSession, d: String,
-      name: String): String =
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      name + d.replaceAll("\\W", "_")).toString
-
-  /** Completeness predicate for the stage-and-publish fixtures: seed/
-    * OR a c<hw>/ compaction satisfies each frame (compaction rewrites
-    * the committed sub-dirs into one dir, and a compacted index is a
-    * complete index — rebuilding it would discard folds; resolution
-    * goes through the manifest), plus a committed df summary.
+  /** The dedup shingle/hash index as the fixture layer sees it: a
+    * committed df summary plus the two ledgered frames.
     */
-  private def dedupComplete(s: SparkSession, r: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val p = protocol(r)
-    def frameDone(sub: String): Boolean =
-      p.committedDirsOrEmpty(sub).exists { dir =>
-        val name = dir.substring(dir.lastIndexOf('/') + 1)
-        (name == "seed" || name.matches("c\\d+")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-      }
-    frameDone("shingles") && frameDone("hashes") &&
-      fs.exists(new org.apache.hadoop.fs.Path(p.dir("df"), "_SUCCESS"))
-  }
+  val DedupKind: IndexKind = IndexKind(protocol,
+    Seq("df"), Seq("shingles", "hashes"),
+    write = writeIndex(_, _),
+    fold = appendToIndex(_, _, _),
+    delete = deleteFromIndex(_, _, _),
+    vacuum = vacuumDedupIndex(_, _, _))
+
+  /** The gates' indexed history wave (doc_id % 5 ≠ 4). */
+  private def history(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
+
+  /** The shield classes (doc_id % 10 ∈ {0, 7}): history docs that
+    * shield incoming near-dups at every gate sf, so deleting them
+    * visibly changes the incremental answer.
+    */
+  private val isShield: Column =
+    col("doc_id") % 10 === 0 || col("doc_id") % 10 === 7
 
   /** Oracle CTE: exploded distinct (doc_id, shingle) pairs, no df cap. */
   private val rawShingleCte: String =
@@ -1018,19 +1011,9 @@ object Dedup {
     * commit rebuilds from scratch.
     */
   def ensureDeletedIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_dedup_del"))(
-      r => protocol(r).deletedBatches().contains(0L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      // victim classes chosen to include history docs that SHIELD
-      // incoming near-dups (verified present at every gate sf): the
-      // delete must visibly change the incremental answer, not just
-      // shrink the index
-      deleteFromIndex(docs.filter(col("doc_id") % 10 === 0 ||
-          col("doc_id") % 10 === 7)
-        .select(col("doc_id")), staging, 0L)
-    }
+    Fixture("graft_dedup_del", DedupKind, Seq(Seed(history(s, d)),
+      Delete(0L, history(s, d).filter(isShield).select(col("doc_id")))))
+      .ensure(s, d)
 
   /** Oracle for the deleted-index gate: the exact incremental answer
     * recomputed from scratch WITHOUT the tombstoned docs (doc_id % 10
@@ -1077,21 +1060,16 @@ object Dedup {
     * (the pre-ledger-order semantics: hide the id from ALL folds)
     * visibly changes the answer — this gate and
     * `dedup_incremental_deleted` bracket the delete semantics from
-    * both sides (shields gone there, restored here). Keyed on batch
-    * 2's ledger entry (it commits last).
+    * both sides (shields gone there, restored here).
     */
-  def ensureReaddedIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_dedup_readd"))(
-      r => protocol(r).foldedBatches().contains(2L)
-    ) { staging =>
-      val hist = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
-      val isVictim = col("doc_id") % 10 === 0 || col("doc_id") % 10 === 7
-      writeIndex(hist.filter(!isVictim), staging)
-      appendToIndex(hist.filter(isVictim), staging, 1L)
-      deleteFromIndex(hist.filter(isVictim).select(col("doc_id")),
-        staging, 0L)
-      appendToIndex(hist.filter(isVictim), staging, 2L)
-    }
+  def ensureReaddedIndex(s: SparkSession, d: String): String = {
+    lazy val hist = history(s, d)
+    Fixture("graft_dedup_readd", DedupKind, Seq(
+      Seed(hist.filter(!isShield)),
+      Fold(1L, hist.filter(isShield)),
+      Delete(0L, hist.filter(isShield).select(col("doc_id"))),
+      Fold(2L, hist.filter(isShield)))).ensure(s, d)
+  }
 
   /** Floor-bounded retention for the dedup shingle/hash index — the
     * last ledgered family to join the kind-generic
@@ -1126,44 +1104,23 @@ object Dedup {
     *   d2: takedown of the shield classes (doc_id % 10 ∈ {0, 7})
     */
   def ensureAsOfDedupIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_dedup_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val hist = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
-      writeIndex(hist.filter(col("doc_id") % 5 =!= 3), staging)
-      appendToIndex(hist.filter(col("doc_id") % 5 === 3), staging, 1L)
-      deleteFromIndex(hist.filter(col("doc_id") % 10 === 0 ||
-          col("doc_id") % 10 === 7)
-        .select(col("doc_id")), staging, 2L)
-    }
+    Fixture("graft_dedup_asof", DedupKind, asOfScript(s, d)).ensure(s, d)
+
+  private def asOfScript(s: SparkSession, d: String): Seq[Step] = {
+    lazy val hist = history(s, d)
+    Seq(Seed(hist.filter(col("doc_id") % 5 =!= 3)),
+      Fold(1L, hist.filter(col("doc_id") % 5 === 3)),
+      Delete(2L, hist.filter(isShield).select(col("doc_id"))))
+  }
 
   /** Build-if-absent the VACUUMED dedup-index gate fixture: the as-of
     * lifecycle then [[vacuumDedupIndex]] at floor 1 — horizon 0
     * reclaimed (refuses), horizons 1 and 2 must keep serving
-    * hash-equal to the unvacuumed construction. Completeness is the
-    * vacuum's POST-state (c1 landed, seed gone) so a crashed vacuum
-    * rebuilds rather than serving half-reclaimed.
+    * hash-equal to the unvacuumed construction.
     */
-  def ensureVacuumedDedupIndex(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, "graft_dedup_vacuum")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("shingles")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("shingles")}/seed"))
-    ) { staging =>
-      val hist = Tables.documents(s, d).filter(col("doc_id") % 5 =!= 4)
-      writeIndex(hist.filter(col("doc_id") % 5 =!= 3), staging)
-      appendToIndex(hist.filter(col("doc_id") % 5 === 3), staging, 1L)
-      deleteFromIndex(hist.filter(col("doc_id") % 10 === 0 ||
-          col("doc_id") % 10 === 7)
-        .select(col("doc_id")), staging, 2L)
-      vacuumDedupIndex(s, staging, 1L)
-    }
-  }
+  def ensureVacuumedDedupIndex(s: SparkSession, d: String): String =
+    Fixture("graft_dedup_vacuum", DedupKind, asOfScript(s, d) :+ Vacuum(1L))
+      .ensure(s, d)
 
   /** One horizon of the as-of / vacuum oracles: the full-batch
     * incremental rebuild over exactly the documents the horizon's

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -449,9 +450,8 @@ object Layout {
     * bucketed tables and both persisted indexes).
     */
   def ensureSortedEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_sorted_events$suffix")
+    val loc =
+      new org.apache.hadoop.fs.Path(Fixture.root(s, d, "graft_sorted_events"))
     val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
       fs.delete(loc, true)
@@ -480,9 +480,7 @@ object Layout {
   private def ensureClusteredEvents(
       s: SparkSession, d: String, name: String,
       key: org.apache.spark.sql.Column): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"$name$suffix")
+    val loc = new org.apache.hadoop.fs.Path(Fixture.root(s, d, name))
     val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
     ensurePublishedDir(s, loc.toString)(root =>
       fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))) {

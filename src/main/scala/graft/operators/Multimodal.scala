@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.{Delete, Fixture, Fold, IndexKind, Merge, Seed, Step, Vacuum}
 import graft.media._
 import graft.media.Media._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads are opaque
@@ -699,62 +700,46 @@ object Multimodal {
           .partitionBy("bucket")
           .parquet(staging))))
 
-  /** Build-if-absent the VACUUMED phash gate fixture: history wave
-    * seeded, late wave folded as b1, takedown d2, vacuumed at floor 1.
+  /** The perceptual-hash index as the fixture layer sees it. */
+  val PhashKind: IndexKind = IndexKind(phashProtocol, Nil, Seq("phashes"),
+    write = writePhashIndex(_, _),
+    fold = appendToPhashIndex(_, _, _),
+    delete = deleteFromPhashIndex(_, _, _),
+    vacuum = vacuumPhashIndex(_, _, _),
+    merge = mergePhashIndexes(_, _, _, _))
+
+  /** Perceptual hashes of the planted images whose asset_id passes
+    * `pred`, through the real decode.
     */
-  def ensureVacuumedPhashIndex(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_phash_vacuum$suffix").toString
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      phashProtocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${phashProtocol(r).dir("phashes")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${phashProtocol(r).dir("phashes")}/seed"))
-    ) { staging =>
-      def hashesOf(pred: org.apache.spark.sql.Column) =
-        perceptualHashes(plantedImages(s, d).filter(pred),
-          DispatchMediaKernel).toDF()
-      writePhashIndex(hashesOf(col("asset_id") % 5 =!= 4), staging)
-      appendToPhashIndex(hashesOf(col("asset_id") % 5 === 4), staging, 1L)
-      deleteFromPhashIndex(plantedImages(s, d)
-        .filter(col("asset_id") % 7 === 3)
-        .select(col("asset_id")), staging, 2L)
-      vacuumPhashIndex(s, staging, 1L)
-    }
-    root
-  }
+  private def hashesOf(s: SparkSession, d: String,
+      pred: Column => Column): DataFrame =
+    perceptualHashes(plantedImages(s, d).filter(pred(col("asset_id"))),
+      DispatchMediaKernel).toDF()
+
+  /** The three-commit phash lifecycle: history wave (asset_id % 5 ≠ 4)
+    * seeded, late wave folded as b1, takedown of asset_id % 7 = 3 as
+    * d2.
+    */
+  private def phashLifecycle(s: SparkSession, d: String): Seq[Step] =
+    Seq(Seed(hashesOf(s, d, _ % 5 =!= 4)),
+      Fold(1L, hashesOf(s, d, _ % 5 === 4)),
+      Delete(2L, plantedImages(s, d).filter(col("asset_id") % 7 === 3)
+        .select(col("asset_id"))))
+
+  /** Build-if-absent the VACUUMED phash gate fixture: the lifecycle
+    * vacuumed at floor 1.
+    */
+  def ensureVacuumedPhashIndex(s: SparkSession, d: String): String =
+    Fixture("graft_phash_vacuum", PhashKind,
+      phashLifecycle(s, d) :+ Vacuum(1L)).ensure(s, d)
 
   /** Build-if-absent the AS-OF phash gate fixture: the vacuum gate's
-    * three-commit lifecycle (history seed, late-wave fold b1, takedown
-    * d2) with its FULL per-commit history retained — so horizon 0
-    * (pre-fold) is servable too, which the vacuumed root by design
-    * cannot.
+    * three-commit lifecycle with its FULL per-commit history retained
+    * — so horizon 0 (pre-fold) is servable too, which the vacuumed
+    * root by design cannot.
     */
-  def ensureAsOfPhashIndex(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_phash_asof$suffix").toString
-    Layout.ensurePublishedDir(s, root)(r =>
-      phashProtocol(r).deletedBatches().contains(2L) &&
-        phashProtocol(r).foldedBatches().contains(1L)
-    ) { staging =>
-      def hashesOf(pred: org.apache.spark.sql.Column) =
-        perceptualHashes(plantedImages(s, d).filter(pred),
-          DispatchMediaKernel).toDF()
-      writePhashIndex(hashesOf(col("asset_id") % 5 =!= 4), staging)
-      appendToPhashIndex(hashesOf(col("asset_id") % 5 === 4), staging, 1L)
-      deleteFromPhashIndex(plantedImages(s, d)
-        .filter(col("asset_id") % 7 === 3)
-        .select(col("asset_id")), staging, 2L)
-    }
-    root
-  }
+  def ensureAsOfPhashIndex(s: SparkSession, d: String): String =
+    Fixture("graft_phash_asof", PhashKind, phashLifecycle(s, d)).ensure(s, d)
 
   /** Incremental image dedup — the `Dedup.incrementalKeepNew` contract
     * on perceptual hashes: an incoming image SURVIVES iff no image
@@ -819,24 +804,12 @@ object Multimodal {
   }
 
   /** Build-if-absent the incremental gate's HISTORY index: the planted
-    * corpus' doc_id % 5 ≠ 4 wave hashed through the real decode and
-    * seeded, keyed on the seed's completeness.
+    * corpus' asset_id % 5 ≠ 4 wave hashed through the real decode and
+    * seeded.
     */
-  def ensureIncrementalPhashIndex(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_phash_index$suffix")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root.toString)(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(
-        phashProtocol(r).dir("phashes") + "/seed", "_SUCCESS"))
-    ) { staging =>
-      val history = perceptualHashes(
-        plantedImages(s, d).filter(col("asset_id") % 5 =!= 4),
-        DispatchMediaKernel).toDF()
-      writePhashIndex(history, staging)
-    }
-  }
+  def ensureIncrementalPhashIndex(s: SparkSession, d: String): String =
+    Fixture("graft_phash_index", PhashKind,
+      Seq(Seed(hashesOf(s, d, _ % 5 =!= 4)))).ensure(s, d)
 
   /** Merge two independently-built perceptual-hash roots into ONE
     * servable root — the FOURTH index kind speaking the cross-root
@@ -872,44 +845,13 @@ object Multimodal {
     * merged — the union IS the history wave, so the merged serve
     * reuses `multimodal_phash_search`'s oracle verbatim.
     */
-  def ensureMergedPhashIndex(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    def build(name: String,
-        slice: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-        : String = {
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"$name$suffix")
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Layout.ensurePublishedDir(s, root.toString)(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(
-          phashProtocol(r).dir("phashes") + "/seed", "_SUCCESS"))
-      ) { staging =>
-        writePhashIndex(perceptualHashes(
-          plantedImages(s, d)
-            .filter(col("asset_id") % 5 =!= 4)
-            .filter(slice(col("asset_id"))),
-          DispatchMediaKernel).toDF(), staging)
-      }
-      root.toString
-    }
-    val srcA = build("graft_phash_src_a", _ % 3 =!= 2)
-    val srcB = build("graft_phash_src_b", _ % 3 === 2)
-    val merged = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_phash_merged$suffix").toString
-    // Completeness = the fold ledger AND a complete primary-copy seed
-    // (the ensureMergedBm25Index / ensureMergedIvfIndex pattern): a
-    // root whose phashes/seed dir was damaged but whose ledger
-    // survived must rebuild, not re-serve partial data.
-    Layout.ensurePublishedDir(s, merged)(r =>
-      phashProtocol(r).foldedBatches().contains(0L) && {
-        val seedOk = new org.apache.hadoop.fs.Path(
-          phashProtocol(r).dir("phashes") + "/seed", "_SUCCESS")
-        seedOk.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .exists(seedOk)
-      }
-    )(st => mergePhashIndexes(s, srcA, srcB, st))
-  }
+  def ensureMergedPhashIndex(s: SparkSession, d: String): String =
+    Fixture("graft_phash_merged", PhashKind, Seq(Merge(
+      Fixture("graft_phash_src_a", PhashKind,
+        Seq(Seed(hashesOf(s, d, id => id % 5 =!= 4 && id % 3 =!= 2)))),
+      Fixture("graft_phash_src_b", PhashKind,
+        Seq(Seed(hashesOf(s, d, id => id % 5 =!= 4 && id % 3 === 2)))))))
+      .ensure(s, d)
 
   /** Oracle CTE chain shared by the image-dedup and phash-search
     * gates: closed-form pixel values → 2×2 box averages → gradient

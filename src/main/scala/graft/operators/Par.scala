@@ -30,21 +30,45 @@ object Par {
     * even though the horizons are independent — guide §2.6, actions are
     * only sequential because the driver calls them sequentially. The
     * returned frames are then combined (union) and executed as one
-    * query exactly as before; only the construction overlaps. Failures
-    * propagate like the sequential form (first exception rethrown).
+    * query exactly as before; only the construction overlaps. The
+    * first failure (in time, not item order) is rethrown as-is and
+    * cancels its siblings: no queued body starts after it, and running
+    * ones are interrupted, so a failed build never keeps launching
+    * jobs behind the caller's back.
     */
   def buildAll[A, B](items: Seq[A], parallelism: Int = 4)(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, items.size))
+    // Recorded by the failing body's own thread before its exception
+    // leaves the pool, so no body can start after it and the rethrow is
+    // the first failure even when a skipped or interrupted sibling
+    // completes first.
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val done = new java.util.concurrent.ExecutorCompletionService[(Int, B)](pool)
     try {
-      val futures = items.map(a => pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = f(a) }))
-      futures.map { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
+      val futures = items.zipWithIndex.map { case (a, i) =>
+        done.submit(new java.util.concurrent.Callable[(Int, B)] {
+          def call(): (Int, B) = {
+            if (firstFailure.get() != null)
+              throw new java.util.concurrent.CancellationException()
+            try (i, f(a))
+            catch { case t: Throwable =>
+              firstFailure.compareAndSet(null, t); throw t }
+          }
+        })
       }
+      val out = new Array[Any](items.size)
+      for (_ <- items.indices) {
+        val (i, b) =
+          try done.take().get()
+          catch { case _: java.util.concurrent.ExecutionException =>
+            futures.foreach(_.cancel(true))
+            pool.shutdownNow()
+            throw firstFailure.get() }
+        out(i) = b
+      }
+      out.toSeq.asInstanceOf[Seq[B]]
     } finally pool.shutdown()
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.{Delete, Fixture, Fold, IndexKind, Merge, Seed, Step, Vacuum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -409,39 +410,53 @@ object Retrieval {
           .parquet(staging))))
   }
 
+  /** The BM25 index as the fixture layer sees it. */
+  val Bm25Kind: IndexKind = IndexKind(protocol, Nil, Seq("postings", "stats"),
+    write = writeBm25Index(_, _),
+    fold = appendToBm25Index(_, _, _),
+    delete = deleteFromBm25Index(_, _, _),
+    vacuum = vacuumBm25Index(_, _, _),
+    merge = mergeBm25Indexes(_, _, _, _))
+
+  /** The two corpus waves every text-index lifecycle gate replays: the
+    * history wave (doc_id % 5 ≠ 4) seeds, the remainder folds as
+    * `foldId`.
+    */
+  private def docWaves(s: SparkSession, d: String,
+      foldId: Long): Seq[Step] = {
+    lazy val docs = Tables.documents(s, d)
+    Seq(Seed(docs.filter(col("doc_id") % 5 =!= 4)),
+      Fold(foldId, docs.filter(col("doc_id") % 5 === 4)))
+  }
+
+  /** The gates' takedown: doc_id % 7 = 3, victims in both waves. */
+  private def docTakedown(s: SparkSession, d: String, deleteId: Long): Step =
+    Delete(deleteId, Tables.documents(s, d)
+      .filter(col("doc_id") % 7 === 3).select(col("doc_id")))
+
+  /** Seed → fold → takedown at the given ledger ids. */
+  private def docLifecycle(s: SparkSession, d: String, foldId: Long,
+      deleteId: Long): Seq[Step] =
+    docWaves(s, d, foldId) :+ docTakedown(s, d, deleteId)
+
+  /** Two INDEPENDENT crawls of `docs` merged into one root: crawl A
+    * (doc_id % 3 ≠ 2, the larger side) primary, crawl B secondary.
+    */
+  private def mergedCrawls(prefix: String, kind: IndexKind,
+      docs: => DataFrame): Merge =
+    Merge(
+      Fixture(s"${prefix}_src_a", kind,
+        Seq(Seed(docs.filter(col("doc_id") % 3 =!= 2)))),
+      Fixture(s"${prefix}_src_b", kind,
+        Seq(Seed(docs.filter(col("doc_id") % 3 === 2)))))
+
   /** Build-once cache keyed by the sf dir, same protocol as
-    * `Similarity.ensureIvfIndex`: a complete index (a seed OR `c<hw>`
-    * compaction _SUCCESS marker on both sides, resolved through the
-    * manifest) is reused, anything partial is torn down and rebuilt.
+    * `Similarity.ensureIvfIndex`: a complete index is reused, anything
+    * partial is torn down and rebuilt.
     */
   def ensureBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_index"))(
-      bm25Complete(s, _)) { staging =>
-      writeBm25Index(Tables.documents(s, d), staging)
-    }
-
-  private def fixtureRoot(s: SparkSession, d: String,
-      name: String): String =
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      name + d.replaceAll("\\W", "_")).toString
-
-  /** Both index sides carry a committed seed OR compaction dir with its
-    * `_SUCCESS` — the completeness predicate the stage-and-publish
-    * fixtures hand to `Layout.ensurePublishedDir` (it must also hold
-    * against the staging dir at the publish boundary).
-    */
-  private def bm25Complete(s: SparkSession, r: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val p = protocol(r)
-    Seq("postings", "stats").forall(side =>
-      p.committedDirsOrEmpty(side).exists { dir =>
-        val name = dir.substring(dir.lastIndexOf('/') + 1)
-        (name == "seed" || name.matches("c\\d+")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-      })
-  }
+    Fixture("graft_bm25_index", Bm25Kind,
+      Seq(Seed(Tables.documents(s, d)))).ensure(s, d)
 
   /** Merge two independently-built BM25 roots into ONE servable root —
     * the inverted-index half of the cross-root union
@@ -492,18 +507,10 @@ object Retrieval {
     * roots (crawl A = doc_id % 3 ≠ 2, crawl B = the rest), merged via
     * [[mergeBm25Indexes]] with A primary.
     */
-  def ensureMergedBm25Index(s: SparkSession, d: String): String = {
-    val docs = Tables.documents(s, d)
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_src_a"))(bm25Complete(s, _))(
-      st => writeBm25Index(docs.filter(col("doc_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_src_b"))(bm25Complete(s, _))(
-      st => writeBm25Index(docs.filter(col("doc_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_merged"))(
-      r => bm25Complete(s, r) && protocol(r).foldedBatches().contains(0L)
-    )(st => mergeBm25Indexes(s, srcA, srcB, st))
-  }
+  def ensureMergedBm25Index(s: SparkSession, d: String): String =
+    Fixture("graft_bm25_merged", Bm25Kind, Seq(
+      mergedCrawls("graft_bm25", Bm25Kind, Tables.documents(s, d))))
+      .ensure(s, d)
 
   /** Build-if-absent the merged×time-travel gate fixture — the
     * composition `text_bm25_merged` and `text_bm25_asof` each prove
@@ -512,62 +519,31 @@ object Retrieval {
     * lifecycle continues ON the merged root — the late wave folds as
     * b1 and a takedown tombstones d2 — so horizons STRADDLE the merge:
     * 0 = just-merged (history union), 1 = + late wave, 2 = post-
-    * takedown. Keyed on the takedown's ledger entry (commits last).
+    * takedown.
     */
-  def ensureMergedAsOfBm25Index(s: SparkSession, d: String): String = {
-    val docs = Tables.documents(s, d)
-    val hist = docs.filter(col("doc_id") % 5 =!= 4)
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_ma_src_a"))(bm25Complete(s, _))(
-      st => writeBm25Index(hist.filter(col("doc_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_ma_src_b"))(bm25Complete(s, _))(
-      st => writeBm25Index(hist.filter(col("doc_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_bm25_merged_asof"))(
-      r => bm25Complete(s, r) && protocol(r).deletedBatches().contains(2L)
-    ) { st =>
-      mergeBm25Indexes(s, srcA, srcB, st)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), st, 1L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), st, 2L)
-    }
-  }
+  def ensureMergedAsOfBm25Index(s: SparkSession, d: String): String =
+    Fixture("graft_bm25_merged_asof", Bm25Kind,
+      mergedCrawls("graft_bm25_ma", Bm25Kind, Tables.documents(s, d)
+        .filter(col("doc_id") % 5 =!= 4)) +: docLifecycle(s, d, 1L, 2L).tail)
+      .ensure(s, d)
 
   /** The grown-index gate: seed from the history wave (doc_id % 5 ≠ 4),
     * fold the remainder as one ledgered append, serve — result must be
     * IDENTICAL to scoring the whole corpus, so the fold itself sits
-    * under `text_bm25`'s value-level oracle. Cached like
-    * `ensureBm25Index` (the fold is deterministic, so a completed
-    * grown index re-serves without re-folding).
+    * under `text_bm25`'s value-level oracle.
     */
   def ensureGrownBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_grown"))(
-      r => protocol(r).foldedBatches().contains(0L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-    }
+    Fixture("graft_bm25_grown", Bm25Kind, docWaves(s, d, 0L)).ensure(s, d)
 
   /** Build-if-absent the full-lifecycle gate fixture: seed from the
     * history wave (doc_id % 5 ≠ 4), fold the remainder as a ledgered
     * append (batch 0), then tombstone doc_id % 7 = 3 as a ledgered
     * delete (batch 1) whose victims span BOTH waves — the
     * seed-append-takedown sequence a production index lives through.
-    * Keyed on the delete's ledger entry (it commits last, so its
-    * presence implies the whole sequence completed).
     */
   def ensureEvolvedBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
+    Fixture("graft_bm25_evolved", Bm25Kind, docLifecycle(s, d, 0L, 1L))
+      .ensure(s, d)
 
   /** Build-if-absent the AS-OF gate fixture — `Similarity
     * .ensureAsOfIvfIndex`'s contract on the inverted index: ledger ids
@@ -576,46 +552,19 @@ object Retrieval {
     * side's `d2` negative delta.
     */
   def ensureAsOfBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
+    Fixture("graft_bm25_asof", Bm25Kind, docLifecycle(s, d, 1L, 2L))
+      .ensure(s, d)
 
   /** Build-if-absent the VACUUMED-index gate fixture: the as-of
     * lifecycle (seed = history wave, fold b1 = late wave, takedown d2)
     * then [[vacuumBm25Index]] at floor 1 — the seed collapses into c1,
     * horizon 0 is reclaimed, horizons 1 and 2 must keep serving
     * hash-equal to the unvacuumed construction (same oracle as
-    * text_bm25_asof's surviving branches). Completeness is the
-    * vacuum's POST-state: c1 present on both sides, seed gone, the
-    * takedown ledgered.
+    * text_bm25_asof's surviving branches).
     */
-  def ensureVacuumedBm25Index(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, "graft_bm25_vacuum")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/c1", "_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("stats")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/seed"))
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToBm25Index(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-      vacuumBm25Index(s, staging, 1L)
-    }
-  }
+  def ensureVacuumedBm25Index(s: SparkSession, d: String): String =
+    Fixture("graft_bm25_vacuum", Bm25Kind,
+      docLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
 
   /** BM25 served from the persisted index. The query terms' buckets are
     * computed driver-side with the SAME xxhash64 the build used (a
@@ -840,19 +789,11 @@ object Retrieval {
 
   /** Build-if-absent the DELETED-index gate fixture: the full corpus
     * seeded, then one committed delete batch (doc_id % 7 = 3)
-    * tombstoned through [[deleteFromBm25Index]]. Keyed on the delete's
-    * ledger entry: a crash anywhere before its commit rebuilds from
-    * scratch.
+    * tombstoned through [[deleteFromBm25Index]].
     */
   def ensureDeletedBm25Index(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_bm25_del"))(
-      r => protocol(r).deletedBatches().contains(0L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs, staging)
-      deleteFromBm25Index(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 0L)
-    }
+    Fixture("graft_bm25_del", Bm25Kind,
+      Seq(Seed(Tables.documents(s, d)), docTakedown(s, d, 0L))).ensure(s, d)
 
   // ---- positional phrase index (next-word postings) ----
   //   <root>/postings/<sub>/ — (bg, doc_id, pos) partitioned by
@@ -873,7 +814,122 @@ object Retrieval {
   // ledgered folds, takedowns and compaction compose identically; the
   // gate exercises the seed build.
 
-  private val PhraseSchema = "bg STRING, doc_id BIGINT, pos INT, bucket BIGINT"
+  /** A postings-only bucketed text index: `<root>/postings/<sub>/`
+    * rows of `schema`, partitioned by `bucket=pmod(xxhash64(key),
+    * Buckets)`. The positional phrase, character-trigram and
+    * word-positional (NEAR) indexes are three values of this one
+    * implementation; they differ only in the `postings` function, the
+    * key column, the read schema and the compaction's lease tag. The
+    * root speaks the BM25 FoldProtocol dialect minus the stats side:
+    * the serves need no corpus statistics, so a fold stages exactly
+    * one guarded dir and a delete is tombstones only.
+    */
+  final class PostingsIndex private[Retrieval] (key: String, schema: String,
+      leaseTag: String, postings: DataFrame => DataFrame) {
+
+    private def writeBucketed(rows: DataFrame, dir: String): Unit =
+      bucketSliced(rows)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(dir)
+
+    private def writeSub(docs: DataFrame, path: String, sub: String): Unit =
+      writeBucketed(postings(docs)
+        .withColumn("bucket", pmod(xxhash64(col(key)), lit(Buckets))),
+        s"${protocol(path).dir("postings")}/$sub")
+
+    /** Build a fresh index at `path` (seed sub-root, same write-fan-out
+      * discipline as [[writeBm25Index]]).
+      */
+    def write(docs: DataFrame, path: String): Unit =
+      writeSub(docs, path, "seed")
+
+    /** Ledgered append, exactly once under replay — the BM25 fold
+      * contract on the postings alone.
+      */
+    def appendTo(docs: DataFrame, path: String, batchId: Long): Boolean =
+      protocol(path).fold(batchId, Seq("postings")) {
+        writeSub(docs, path, s"b$batchId")
+      }
+
+    /** Ledgered document takedown — tombstones only (the postings
+      * anti-join them at serve time), O(|ids|): nothing is rewritten
+      * until compaction.
+      */
+    def deleteFrom(ids: DataFrame, path: String, deleteId: Long): Boolean = {
+      val p = protocol(path)
+      p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
+    }
+
+    /** All committed postings minus committed tombstones, optionally AS
+      * OF a ledger horizon (list-time dir/tombstone scoping) — the
+      * same basePath-scoped per-sub-root partitioned reads as
+      * [[indexPostings]], so a `bucket` filter pushes into every union
+      * branch.
+      */
+    def read(s: SparkSession, path: String,
+        asOf: Option[Long] = None): DataFrame = {
+      def scan(r: String) =
+        s.read.schema(schema).option("basePath", r).parquet(r)
+      asOf.fold(
+        protocol(path).readCommittedStripped(s, "postings", "doc_id")(scan))(
+        h => protocol(path).readCommittedStrippedAsOf(s, "postings",
+          "doc_id", h)(scan))
+    }
+
+    /** Compact: every committed posting (tombstones already anti-joined
+      * away) rewritten as ONE `c<hw>` dir; sub-roots and tombstones
+      * retire through the same publish-and-clear as
+      * [[compactBm25Index]]. Serve-identical by construction — the
+      * reader sees either the old union or the new single root.
+      */
+    def compact(s: SparkSession, path: String): Unit = {
+      val p = protocol(path)
+      p.withLease(leaseTag) {
+        writeBucketed(read(s, path),
+          s"$path/.postings.compacting/${p.compactDirName()}")
+        p.publishDir(".postings.compacting", "postings")
+        p.clearTombstones()
+      }
+    }
+
+    /** Floor-bounded retention — the shared
+      * [[graft.index.FoldProtocol.vacuumKinds]] kernel: one collapsed
+      * bucket-partitioned `c<floor>` holding the served as-of view,
+      * sources and absorbed tombstones reclaimed, horizons below the
+      * floor refusing.
+      */
+    def vacuum(s: SparkSession, path: String, floorRequested: Long): Boolean =
+      protocol(path).vacuumKinds(s, floorRequested, Seq(
+        "postings" -> ((floor, staging) =>
+          writeBucketed(read(s, path, Some(floor)), staging))))
+
+    /** Cross-root union of two roots of this index: bucket is a global
+      * function of the posting key, so the merge is two partitioned
+      * copies — primary's committed (tombstone-stripped) postings as
+      * `seed/`, secondary's as ledgered fold `b0` with a `merged-from=`
+      * provenance line — and the bucket prune pushes into both
+      * branches unchanged. Disjoint doc spaces ⇒ serve ≡ a
+      * from-scratch union build.
+      */
+    def merge(s: SparkSession, primary: String, secondary: String,
+        dest: String): Unit = {
+      val p = protocol(dest)
+      writeBucketed(read(s, primary), s"${p.dir("postings")}/seed")
+      writeBucketed(read(s, secondary), s"${p.dir("postings")}/b0")
+      p.commitStaged(Seq("postings/b0"), "0", "merged-from=" +
+        s"${new org.apache.hadoop.fs.Path(primary).getName}+" +
+        new org.apache.hadoop.fs.Path(secondary).getName)
+    }
+
+    /** This index as the fixture layer sees it. */
+    val kind: IndexKind = IndexKind(protocol, Nil, Seq("postings"),
+      write = write(_, _),
+      fold = appendTo(_, _, _),
+      delete = deleteFrom(_, _, _),
+      vacuum = vacuum(_, _, _),
+      merge = merge(_, _, _, _))
+  }
 
   /** Adjacent word pairs of each document with their 0-based anchor
     * position — pure in-row work (one tokenize scan, an array
@@ -889,96 +945,17 @@ object Retrieval {
           " (x, i) -> concat(x, ' ', element_at(ws, i + 2)))"))
         .as(Seq("pos", "bg")))
 
-  private def writePhraseSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit =
-    bucketSliced(bigramPostings(docs)
-      .withColumn("bucket", pmod(xxhash64(col("bg")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${protocol(path).dir("postings")}/$sub")
-
-  /** Build a fresh phrase index at `path` (seed sub-root, same
-    * write-fan-out discipline as [[writeBm25Index]]).
-    */
-  def writePhraseIndex(docs: DataFrame, path: String): Unit =
-    writePhraseSubRoot(docs, path, "seed")
-
-  /** Ledgered append, exactly once under replay — the BM25 fold
-    * contract on the positional postings (no stats side: the phrase
-    * serve needs no corpus statistics, so a fold stages exactly one
-    * guarded dir).
-    */
-  def appendToPhraseIndex(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings")) {
-      writePhraseSubRoot(docs, path, s"b$batchId")
-    }
-
-  /** Ledgered document takedown, exactly once — tombstones only (the
-    * postings anti-join them at serve time; no stats delta to stage).
-    * O(|ids|): nothing is rewritten until compaction.
-    */
-  def deleteFromPhraseIndex(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
-  }
+  /** The positional phrase (next-word) index. */
+  val Phrase = new PostingsIndex("bg",
+    "bg STRING, doc_id BIGINT, pos INT, bucket BIGINT", "compact-phrase",
+    bigramPostings)
 
   /** Build-if-absent gate fixture (stage-and-publish, like every
     * warehouse fixture).
     */
   def ensurePhraseIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_phrase_index"))(
-      phraseComplete(s, _)) { staging =>
-      writePhraseIndex(Tables.documents(s, d), staging)
-    }
-
-  private def phraseComplete(s: SparkSession, r: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    protocol(r).committedDirsOrEmpty("postings").exists { dir =>
-      val name = dir.substring(dir.lastIndexOf('/') + 1)
-      (name == "seed" || name.matches("c\\d+")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-    }
-  }
-
-  /** All committed positional postings minus committed tombstones —
-    * the phrase twin of [[indexPostings]] (same basePath-scoped
-    * per-sub-root partitioned reads, so a `bucket` filter pushes into
-    * every union branch).
-    */
-  private def phrasePostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = asOf match {
-    case None =>
-      protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-        s.read.schema(PhraseSchema).option("basePath", r).parquet(r))
-    case Some(h) =>
-      // list-time dir/tombstone scoping — the indexPostingsAsOf
-      // contract on the next-word positional payload
-      protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-        h)(r => s.read.schema(PhraseSchema).option("basePath", r).parquet(r))
-  }
-
-  /** Compact the phrase index: every committed posting (tombstones
-    * already anti-joined away) rewritten as ONE `c<hw>` dir; sub-roots
-    * and tombstones retire atomically through the same
-    * publish-and-clear as [[compactBm25Index]]. Serve-identical by
-    * construction — the reader sees either the old union or the new
-    * single root.
-    */
-  def compactPhraseIndex(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-phrase") {
-      val cname = p.compactDirName()
-      bucketSliced(phrasePostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.clearTombstones()
-    }
-  }
+    Fixture("graft_phrase_index", Phrase.kind,
+      Seq(Seed(Tables.documents(s, d)))).ensure(s, d)
 
   /** The gate's probe phrase — present at every shipped scale. */
   val ProbePhrase = "hash join key"
@@ -1001,7 +978,7 @@ object Retrieval {
     val pairs = ws.sliding(2).map(_.mkString(" ")).toVector
     val offsets = pairs.zipWithIndex
     val buckets = graft.functions.LocalHash.bucketsOf(pairs.distinct, Buckets)
-    val posts = phrasePostings(s, indexPath, asOf)
+    val posts = Phrase.read(s, indexPath, asOf)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("bg").isInCollection(pairs.distinct))
     posts.join(broadcast(offsets.toDF("bg", "off")), Seq("bg"))
@@ -1071,7 +1048,7 @@ object Retrieval {
     val buckets = pairSet
       .select(pmod(xxhash64(col("bg")), lit(Buckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
-    val posts = phrasePostings(s, indexPath)
+    val posts = Phrase.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .join(pairSet, Seq("bg"), "left_semi")
       .select(col("bg"), col("doc_id"), col("pos"))
@@ -1120,19 +1097,11 @@ object Retrieval {
   /** Build-if-absent the phrase-index LIFECYCLE gate fixture: seed
     * from the history wave (doc_id % 5 ≠ 4), fold the remainder as a
     * ledgered append (batch 0), tombstone doc_id % 7 = 3 as a ledgered
-    * delete (batch 1) with victims in BOTH waves — keyed on the
-    * delete's ledger entry (it commits last).
+    * delete (batch 1) with victims in BOTH waves.
     */
   def ensureEvolvedPhraseIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_phrase_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writePhraseIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToPhraseIndex(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-      deleteFromPhraseIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
+    Fixture("graft_phrase_evolved", Phrase.kind, docLifecycle(s, d, 0L, 1L))
+      .ensure(s, d)
 
   /** Build-if-absent the phrase AS-OF gate fixture — the
     * [[ensureAsOfBm25Index]] lifecycle on the next-word index: seed
@@ -1141,15 +1110,8 @@ object Retrieval {
     * order so every horizon is a distinguishable snapshot.
     */
   def ensureAsOfPhraseIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_phrase_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writePhraseIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToPhraseIndex(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromPhraseIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
+    Fixture("graft_phrase_asof", Phrase.kind, docLifecycle(s, d, 1L, 2L))
+      .ensure(s, d)
 
   // ---- character-trigram substring (grep) index ----
   //   <root>/postings/<sub>/ — (tg, doc_id) DISTINCT rows partitioned
@@ -1174,8 +1136,6 @@ object Retrieval {
   // tombstones), so ledgered folds, takedowns and compaction compose
   // identically; `text_substring_evolved` value-gates the lifecycle.
 
-  private val TrigramSchema = "tg STRING, doc_id BIGINT, bucket BIGINT"
-
   /** Distinct character trigrams of each document — in-row work (the
     * lambda captures only the raw `text` ATTRIBUTE, so unlike the
     * computed-capture pitfall documented at `Dedup.kgrams` nothing is
@@ -1191,267 +1151,59 @@ object Retrieval {
           i => col("text").substr(i, lit(3)))))
         .otherwise(typedLit(Seq.empty[String]))).as("tg"))
 
-  private def writeSubstringSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit =
-    bucketSliced(trigramPostings(docs)
-      .withColumn("bucket", pmod(xxhash64(col("tg")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${protocol(path).dir("postings")}/$sub")
-
-  /** Build a fresh substring index at `path` (seed sub-root). */
-  def writeSubstringIndex(docs: DataFrame, path: String): Unit =
-    writeSubstringSubRoot(docs, path, "seed")
-
-  /** Ledgered append of new documents' trigram postings — the phrase
-    * fold contract (postings only, no stats side).
-    */
-  def appendToSubstringIndex(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings")) {
-      writeSubstringSubRoot(docs, path, s"b$batchId")
-    }
-
-  /** Ledgered document takedown — tombstones only, O(|ids|). */
-  def deleteFromSubstringIndex(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
-  }
-
-  /** All committed trigram postings minus committed tombstones. */
-  private def substringPostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = asOf match {
-    case None =>
-      protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-        s.read.schema(TrigramSchema).option("basePath", r).parquet(r))
-    case Some(h) =>
-      protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-        h)(r =>
-        s.read.schema(TrigramSchema).option("basePath", r).parquet(r))
-  }
-
-  /** Compact the trigram index: every committed posting (tombstones
-    * already anti-joined away) rewritten as ONE `c<hw>` dir — the
-    * [[compactPhraseIndex]] publish-and-clear on trigram postings.
-    */
-  def compactSubstringIndex(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-trgm") {
-      val cname = p.compactDirName()
-      bucketSliced(substringPostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.clearTombstones()
-    }
-  }
+  /** The character-trigram substring index. */
+  val Trigram = new PostingsIndex("tg",
+    "tg STRING, doc_id BIGINT, bucket BIGINT", "compact-trgm",
+    trigramPostings)
 
   /** Build-if-absent gate fixture (stage-and-publish). */
   def ensureSubstringIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_trgm_index"))(
-      phraseComplete(s, _)) { staging =>
-      writeSubstringIndex(Tables.documents(s, d), staging)
-    }
+    Fixture("graft_trgm_index", Trigram.kind,
+      Seq(Seed(Tables.documents(s, d)))).ensure(s, d)
 
   /** Lifecycle fixture: seed the history wave, fold the remainder
     * (batch 0), tombstone doc_id % 7 = 3 (batch 1) — victims span both
-    * waves, keyed on the delete's ledger entry (it commits last).
+    * waves.
     */
   def ensureEvolvedSubstringIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_trgm_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeSubstringIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToSubstringIndex(docs.filter(col("doc_id") % 5 === 4),
-        staging, 0L)
-      deleteFromSubstringIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
+    Fixture("graft_trgm_evolved", Trigram.kind, docLifecycle(s, d, 0L, 1L))
+      .ensure(s, d)
 
-  /** Merge two independently-built trigram roots into ONE servable
-    * root — the third index kind speaking the cross-root union
-    * ([[mergeBm25Indexes]] / `Similarity.mergeIvfIndexes` are the
-    * others). Postings-only and globally bucketed, so the merge is two
-    * partitioned copies: primary as `seed/`, secondary as ledgered
-    * fold `b0` with provenance; the bucket prune pushes into both
-    * branches of the merged union unchanged. Disjoint doc spaces ⇒
-    * serve ≡ a from-scratch union build (`text_substring_merged`
-    * reuses `text_substring`'s oracle verbatim).
-    */
-  def mergeSubstringIndexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit =
-    mergePostingsRoots(s, primary, secondary, dest)(
-      substringPostings(s, _))
-
-  /** The shared cross-root union for any POSTINGS-ONLY bucketed index
-    * kind — trigram, positional phrase and word-positional all carry
-    * the same layout (`postings/<sub>/bucket=…`, bucket a global
-    * function of the posting key), so one kernel merges them all:
-    * primary's committed (tombstone-stripped) postings land as
-    * `seed/`, secondary's as ledgered fold `b0` with a `merged-from=`
-    * provenance line.
-    */
-  private def mergePostingsRoots(s: SparkSession, primary: String,
-      secondary: String, dest: String)(
-      read: String => DataFrame): Unit = {
-    val p = protocol(dest)
-    def copySide(src: String, sub: String): Unit =
-      bucketSliced(read(src))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"${p.dir("postings")}/$sub")
-    copySide(primary, "seed")
-    copySide(secondary, "b0")
-    p.commitStaged(Seq("postings/b0"), "0", "merged-from=" +
-      s"${new org.apache.hadoop.fs.Path(primary).getName}+" +
-      new org.apache.hadoop.fs.Path(secondary).getName)
-  }
-
-  /** Cross-root union of two positional phrase roots. */
-  def mergePhraseIndexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit =
-    mergePostingsRoots(s, primary, secondary, dest)(
-      phrasePostings(s, _))
-
-  /** Cross-root union of two word-positional (NEAR) roots. */
-  def mergeNearIndexes(s: SparkSession, primary: String,
-      secondary: String, dest: String): Unit =
-    mergePostingsRoots(s, primary, secondary, dest)(
-      nearPostings(s, _))
-
-  /** Build-if-absent a merged two-crawl fixture for any postings-only
-    * kind: crawl A = doc_id % 3 ≠ 2 primary, crawl B = the rest,
-    * each built independently then merged.
+  /** Build-if-absent a merged two-crawl fixture for a postings-only
+    * kind: crawl A = doc_id % 3 ≠ 2 primary, crawl B = the rest, each
+    * built independently then merged.
     */
   private def ensureMergedPostingsIndex(s: SparkSession, d: String,
-      prefix: String, write: (DataFrame, String) => Unit,
-      merge: (String, String, String) => Unit): String = {
-    val docs = Tables.documents(s, d)
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, s"${prefix}_src_a"))(phraseComplete(s, _))(
-      st => write(docs.filter(col("doc_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, s"${prefix}_src_b"))(phraseComplete(s, _))(
-      st => write(docs.filter(col("doc_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, s"${prefix}_merged"))(
-      r => phraseComplete(s, r) && protocol(r).foldedBatches().contains(0L)
-    )(st => merge(srcA, srcB, st))
-  }
+      prefix: String, index: PostingsIndex): String =
+    Fixture(s"${prefix}_merged", index.kind, Seq(
+      mergedCrawls(prefix, index.kind, Tables.documents(s, d))))
+      .ensure(s, d)
 
   def ensureMergedPhraseIndex(s: SparkSession, d: String): String =
-    ensureMergedPostingsIndex(s, d, "graft_phrase",
-      writePhraseIndex, mergePhraseIndexes(s, _, _, _))
+    ensureMergedPostingsIndex(s, d, "graft_phrase", Phrase)
 
   def ensureMergedNearIndex(s: SparkSession, d: String): String =
-    ensureMergedPostingsIndex(s, d, "graft_near",
-      writeNearIndex, mergeNearIndexes(s, _, _, _))
+    ensureMergedPostingsIndex(s, d, "graft_near", Near)
 
   /** Build-if-absent the merged-trigram gate fixture (crawl A =
     * doc_id % 3 ≠ 2 primary, crawl B = the rest).
     */
   def ensureMergedSubstringIndex(s: SparkSession, d: String): String =
-    ensureMergedPostingsIndex(s, d, "graft_trgm",
-      writeSubstringIndex, mergeSubstringIndexes(s, _, _, _))
-
-  /** Floor-bounded retention for the trigram index — the shared
-    * [[graft.index.FoldProtocol.vacuumKinds]] kernel on a postings-
-    * only root: one collapsed bucket-partitioned `c<floor>` holding
-    * the served as-of view, sources and absorbed tombstones
-    * reclaimed, horizons below the floor refusing.
-    */
-  def vacuumSubstringIndex(s: SparkSession, path: String,
-      floorRequested: Long): Boolean =
-    protocol(path).vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(substringPostings(s, path, Some(floor)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
+    ensureMergedPostingsIndex(s, d, "graft_trgm", Trigram)
 
   /** Build-if-absent the VACUUMED trigram gate fixture: the as-of
     * ledger layout (seed / b1 / d2) vacuumed at floor 1.
     */
-  def ensureVacuumedSubstringIndex(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, "graft_trgm_vacuum")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/seed"))
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeSubstringIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToSubstringIndex(docs.filter(col("doc_id") % 5 === 4),
-        staging, 1L)
-      deleteFromSubstringIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-      vacuumSubstringIndex(s, staging, 1L)
-    }
-  }
-
-  /** Floor-bounded retention for the positional phrase index — a
-    * [[graft.index.FoldProtocol.vacuumKinds]] adapter like
-    * [[vacuumSubstringIndex]].
-    */
-  def vacuumPhraseIndex(s: SparkSession, path: String,
-      floorRequested: Long): Boolean =
-    protocol(path).vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(phrasePostings(s, path, Some(floor)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
-
-  /** Floor-bounded retention for the word-positional (NEAR) index. */
-  def vacuumNearIndex(s: SparkSession, path: String,
-      floorRequested: Long): Boolean =
-    protocol(path).vacuumKinds(s, floorRequested, Seq(
-      "postings" -> ((floor, staging) =>
-        bucketSliced(nearPostings(s, path, Some(floor)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
-
-  /** Build-if-absent a VACUUMED gate fixture over the as-of ledger
-    * layout (seed / b1 / d2, vacuumed at floor 1) — shared by the
-    * phrase/NEAR retention gates; `build` stages the three commits,
-    * `vacuum` runs the kind's adapter.
-    */
-  private def ensureVacuumedPostingsIndex(s: SparkSession, d: String,
-      name: String, build: String => Unit,
-      vacuum: String => Boolean): String = {
-    val root = fixtureRoot(s, d, name)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("postings")}/seed"))
-    ) { staging => build(staging); vacuum(staging); () }
-  }
+  def ensureVacuumedSubstringIndex(s: SparkSession, d: String): String =
+    Fixture("graft_trgm_vacuum", Trigram.kind,
+      docLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
 
   /** Build-if-absent the trigram AS-OF gate fixture (seed / `b1` /
     * `d2` — the [[ensureAsOfPhraseIndex]] ledger layout).
     */
   def ensureAsOfSubstringIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_trgm_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeSubstringIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToSubstringIndex(docs.filter(col("doc_id") % 5 === 4),
-        staging, 1L)
-      deleteFromSubstringIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
+    Fixture("graft_trgm_asof", Trigram.kind, docLifecycle(s, d, 1L, 2L))
+      .ensure(s, d)
 
   // ---- word-positional (unigram) index — proximity / NEAR queries ----
   //   <root>/postings/<sub>/ — (word, doc_id, pos) rows partitioned by
@@ -1472,103 +1224,33 @@ object Retrieval {
   //                      position merge). Same FoldProtocol dialect as
   //                      every other postings index.
 
-  private val WordPosSchema =
-    "word STRING, doc_id BIGINT, pos INT, bucket BIGINT"
-
   /** One row per token with its position — pure in-row work. */
   private def wordPositions(docs: DataFrame): DataFrame =
     Par.fanOut(docs)
       .select(col("doc_id"),
         posexplode(words(col("text"))).as(Seq("pos", "word")))
 
-  private def writeNearSubRoot(docs: DataFrame, path: String,
-      sub: String): Unit =
-    bucketSliced(wordPositions(docs)
-      .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${protocol(path).dir("postings")}/$sub")
-
-  /** Build a fresh word-positional index at `path` (seed sub-root). */
-  def writeNearIndex(docs: DataFrame, path: String): Unit =
-    writeNearSubRoot(docs, path, "seed")
-
-  /** Ledgered append — the postings-only fold contract. */
-  def appendToNearIndex(docs: DataFrame, path: String,
-      batchId: Long): Boolean =
-    protocol(path).fold(batchId, Seq("postings")) {
-      writeNearSubRoot(docs, path, s"b$batchId")
-    }
-
-  /** Ledgered document takedown — tombstones only, O(|ids|). */
-  def deleteFromNearIndex(ids: DataFrame, path: String,
-      deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.delete(deleteId) { p.stageTombstones(ids, "doc_id", deleteId) }
-  }
-
-  private def nearPostings(s: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = asOf match {
-    case None =>
-      protocol(path).readCommittedStripped(s, "postings", "doc_id")(r =>
-        s.read.schema(WordPosSchema).option("basePath", r).parquet(r))
-    case Some(h) =>
-      protocol(path).readCommittedStrippedAsOf(s, "postings", "doc_id",
-        h)(r =>
-        s.read.schema(WordPosSchema).option("basePath", r).parquet(r))
-  }
-
-  /** Compact the word-positional index: every committed posting
-    * (tombstones already anti-joined away) rewritten as ONE `c<hw>`
-    * dir — the [[compactPhraseIndex]] publish-and-clear on positional
-    * postings (this closes the one lifecycle verb the NEAR index was
-    * missing; fold/delete/serve/as-of already speak the protocol).
-    */
-  def compactNearIndex(s: SparkSession, path: String): Unit = {
-    val p = protocol(path)
-    p.withLease("compact-near") {
-      val cname = p.compactDirName()
-      bucketSliced(nearPostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      p.publishDir(".postings.compacting", "postings")
-      p.clearTombstones()
-    }
-  }
+  /** The word-positional (NEAR) index. */
+  val Near = new PostingsIndex("word",
+    "word STRING, doc_id BIGINT, pos INT, bucket BIGINT", "compact-near",
+    wordPositions)
 
   /** Build-if-absent gate fixture (stage-and-publish). */
   def ensureNearIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_near_index"))(
-      phraseComplete(s, _)) { staging =>
-      writeNearIndex(Tables.documents(s, d), staging)
-    }
+    Fixture("graft_near_index", Near.kind,
+      Seq(Seed(Tables.documents(s, d)))).ensure(s, d)
 
   /** Lifecycle fixture: seed, ledgered fold, ledgered takedown. */
   def ensureEvolvedNearIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_near_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeNearIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToNearIndex(docs.filter(col("doc_id") % 5 === 4), staging, 0L)
-      deleteFromNearIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 1L)
-    }
+    Fixture("graft_near_evolved", Near.kind, docLifecycle(s, d, 0L, 1L))
+      .ensure(s, d)
 
   /** Build-if-absent the word-positional AS-OF gate fixture (seed /
     * `b1` / `d2` — the [[ensureAsOfPhraseIndex]] ledger layout).
     */
   def ensureAsOfNearIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_near_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeNearIndex(docs.filter(col("doc_id") % 5 =!= 4), staging)
-      appendToNearIndex(docs.filter(col("doc_id") % 5 === 4), staging, 1L)
-      deleteFromNearIndex(docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id")), staging, 2L)
-    }
+    Fixture("graft_near_asof", Near.kind, docLifecycle(s, d, 1L, 2L))
+      .ensure(s, d)
 
   /** The gate's probe NEAR query: three words that co-occur both as
     * the probe phrase and scattered, inside an 8-word window.
@@ -1593,7 +1275,7 @@ object Retrieval {
       "NEAR takes distinct words")
     require(window >= wordsQ.length,
       "window must be at least the word count")
-    val posts = nearPostings(s, indexPath, asOf)
+    val posts = Near.read(s, indexPath, asOf)
     // every leg's bucket from the build's own hash, computed
     // driver-side (LocalHash) — constant word set, zero jobs
     val buckets = wordsQ
@@ -1660,7 +1342,7 @@ object Retrieval {
     require(needle.length >= 3, "substring search needs >= 3 chars")
     val grams = needle.sliding(3).toVector.distinct
     val buckets = graft.functions.LocalHash.bucketsOf(grams, Buckets)
-    substringPostings(s, indexPath, asOf)
+    Trigram.read(s, indexPath, asOf)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tg").isInCollection(grams))
       .groupBy(col("doc_id"))
@@ -1725,7 +1407,7 @@ object Retrieval {
     val buckets = gramSet
       .select(pmod(xxhash64(col("tg")), lit(Buckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0)).sorted
-    val cands = substringPostings(s, indexPath)
+    val cands = Trigram.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .join(gramSet, Seq("tg"), "left_semi")
       .join(qgrams.select(col("query_id"), col("tg")), Seq("tg"))
@@ -1877,7 +1559,7 @@ object Retrieval {
     val ln = lg.groupBy(_._1).map { case (id, g) => (id, g.length.toLong) }
       .toSeq.toDF("lit_id", "nq")
     val buckets = graft.functions.LocalHash.bucketsOf(grams, Buckets)
-    substringPostings(s, indexPath)
+    Trigram.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tg").isInCollection(grams))
       .join(lgDf, Seq("tg"))
@@ -1951,7 +1633,7 @@ object Retrieval {
     require(minShared >= 1 && minShared <= grams.length,
       s"minShared must be in [1, ${grams.length}]")
     val buckets = graft.functions.LocalHash.bucketsOf(grams, Buckets)
-    substringPostings(s, indexPath)
+    Trigram.read(s, indexPath)
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tg").isInCollection(grams))
       .groupBy(col("doc_id"))
@@ -2078,27 +1760,31 @@ object Retrieval {
   def takedownSweep(s: SparkSession, ids: DataFrame, root: String,
       deleteId: Long): Map[String, Boolean] = Map(
     "bm25" -> deleteFromBm25Index(ids, s"$root/bm25", deleteId),
-    "near" -> deleteFromNearIndex(ids, s"$root/near", deleteId),
-    "phrase" -> deleteFromPhraseIndex(ids, s"$root/phrase", deleteId),
-    "trgm" -> deleteFromSubstringIndex(ids, s"$root/trgm", deleteId))
+    "near" -> Near.deleteFrom(ids, s"$root/near", deleteId),
+    "phrase" -> Phrase.deleteFrom(ids, s"$root/phrase", deleteId),
+    "trgm" -> Trigram.deleteFrom(ids, s"$root/trgm", deleteId))
+
+  /** The sweep gates' members: one index of each `kinds` entry over
+    * `docs`, then the one takedown of the % 11 = 5 victims under
+    * deleteId 0 — each member a sub-dir of the group root.
+    */
+  private def sweepMembers(kinds: Seq[(String, IndexKind)],
+      docs: => DataFrame, idCol: String): Seq[Fixture] = kinds.map {
+    case (sub, kind) => Fixture(sub, kind, Seq(Seed(docs),
+      Delete(0L, docs.filter(col(idCol) % 11 === 5).select(col(idCol)))))
+  }
+
+  private def textSweepMembers(s: SparkSession, d: String): Seq[Fixture] =
+    sweepMembers(Seq("bm25" -> Bm25Kind, "near" -> Near.kind,
+      "phrase" -> Phrase.kind, "trgm" -> Trigram.kind),
+      Tables.documents(s, d), "doc_id")
 
   /** Gate fixture: all four indexes over the full corpus inside ONE
     * published root, then one sweep of doc_id % 11 = 5 — so the gate
     * certifies the post-sweep state of every serve path at once.
     */
   def ensureSweepFixture(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_sweep"))(r =>
-      SweepKinds.forall(k =>
-        protocol(s"$r/$k").deletedBatches().contains(0L))
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs, s"$staging/bm25")
-      writeNearIndex(docs, s"$staging/near")
-      writePhraseIndex(docs, s"$staging/phrase")
-      writeSubstringIndex(docs, s"$staging/trgm")
-      takedownSweep(s, docs.filter(col("doc_id") % 11 === 5)
-        .select(col("doc_id")), staging, 0L)
-    }
+    Fixture.ensureGroup(s, d, "graft_sweep", textSweepMembers(s, d): _*)
 
   /** Every deleteId committed by ANY of the sweep root's four indexes
     * — the streaming sweep's epoch source (a fresh checkpoint must
@@ -2117,9 +1803,9 @@ object Retrieval {
   def takedownAudit(s: SparkSession, root: String): DataFrame =
     Seq(
       "bm25" -> indexPostings(s, s"$root/bm25"),
-      "near" -> nearPostings(s, s"$root/near"),
-      "phrase" -> phrasePostings(s, s"$root/phrase"),
-      "trgm" -> substringPostings(s, s"$root/trgm"))
+      "near" -> Near.read(s, s"$root/near"),
+      "phrase" -> Phrase.read(s, s"$root/phrase"),
+      "trgm" -> Trigram.read(s, s"$root/trgm"))
       .map { case (k, posts) =>
         posts.agg(count(lit(1)).as("n_postings"))
           .select(lit(k).as("kind"), col("n_postings"))
@@ -2192,32 +1878,17 @@ object Retrieval {
     * ONE published root, then one universal sweep of the % 11 = 5
     * victims in each id domain under deleteId 0.
     */
-  def ensureSweepAllFixture(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_sweep_all"))(r =>
-      SweepKinds.forall(k =>
-        protocol(s"$r/$k").deletedBatches().contains(0L)) &&
-        Similarity.protocol(s"$r/ann").deletedBatches().contains(0L) &&
-        Multimodal.phashProtocol(s"$r/phash").deletedBatches()
-          .contains(0L)
-    ) { staging =>
-      val docs = Tables.documents(s, d)
-      writeBm25Index(docs, s"$staging/bm25")
-      writeNearIndex(docs, s"$staging/near")
-      writePhraseIndex(docs, s"$staging/phrase")
-      writeSubstringIndex(docs, s"$staging/trgm")
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").as("v"))
-      Similarity.writeIvfIndex(e, s"$staging/ann")
-      Multimodal.writePhashIndex(
-        Multimodal.perceptualHashes(Multimodal.plantedImages(s, d),
-          graft.media.DispatchMediaKernel).toDF(), s"$staging/phash")
-      takedownSweepAll(s,
-        docs.filter(col("doc_id") % 11 === 5).select(col("doc_id")),
-        e.filter(col("vec_id") % 11 === 5).select(col("vec_id")),
-        docs.filter(col("doc_id") % 11 === 5)
-          .select(col("doc_id").as("asset_id")),
-        staging, 0L)
-    }
+  def ensureSweepAllFixture(s: SparkSession, d: String): String = {
+    val phash = Fixture("phash", Multimodal.PhashKind, Seq(
+      Seed(Multimodal.perceptualHashes(Multimodal.plantedImages(s, d),
+        graft.media.DispatchMediaKernel).toDF()),
+      Delete(0L, Tables.documents(s, d).filter(col("doc_id") % 11 === 5)
+        .select(col("doc_id").as("asset_id")))))
+    Fixture.ensureGroup(s, d, "graft_sweep_all", textSweepMembers(s, d) ++
+      sweepMembers(Seq("ann" -> Similarity.IvfKind), Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").as("v")), "vec_id") :+
+      phash: _*)
+  }
 
   private val sweepAllOracleSql: String =
     s"""WITH $sweepTextCtes,
@@ -2866,15 +2537,8 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, n_hits, first_pos
          |FROM (${phraseOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureVacuumedPostingsIndex(s, d, "graft_phrase_vacuum",
-        st => {
-          val docs = Tables.documents(s, d)
-          writePhraseIndex(docs.filter(col("doc_id") % 5 =!= 4), st)
-          appendToPhraseIndex(docs.filter(col("doc_id") % 5 === 4), st, 1L)
-          deleteFromPhraseIndex(docs.filter(col("doc_id") % 7 === 3)
-            .select(col("doc_id")), st, 2L)
-        },
-        vacuumPhraseIndex(s, _, 1L))
+      val idx = Fixture("graft_phrase_vacuum", Phrase.kind,
+        docLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
       Par.buildAll(Seq(1L, 2L)) { h =>
         phraseTopK(s, idx, ProbePhrase, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"),
@@ -2892,15 +2556,8 @@ object Retrieval {
          |SELECT CAST(2 AS BIGINT) AS horizon, doc_id, best_span, n_windows
          |FROM (${nearOracleSqlOver("doc_id % 7 <> 3")})""".stripMargin) {
       (s, d) =>
-      val idx = ensureVacuumedPostingsIndex(s, d, "graft_near_vacuum",
-        st => {
-          val docs = Tables.documents(s, d)
-          writeNearIndex(docs.filter(col("doc_id") % 5 =!= 4), st)
-          appendToNearIndex(docs.filter(col("doc_id") % 5 === 4), st, 1L)
-          deleteFromNearIndex(docs.filter(col("doc_id") % 7 === 3)
-            .select(col("doc_id")), st, 2L)
-        },
-        vacuumNearIndex(s, _, 1L))
+      val idx = Fixture("graft_near_vacuum", Near.kind,
+        docLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
       Par.buildAll(Seq(1L, 2L)) { h =>
         nearSearch(s, idx, NearWords, NearWindow, asOf = Some(h))
           .select(lit(h).as("horizon"), col("doc_id"),
@@ -3401,11 +3058,10 @@ object Retrieval {
     * plus this one-row frame.
     */
   def ensureDenseQuery(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_hybrid_qdense$suffix")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root.toString)(r =>
+    val root = Fixture.root(s, d, "graft_hybrid_qdense")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    Layout.ensurePublishedDir(s, root)(r =>
       fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS"))
     ) { staging =>
       // Overwrite: the staging dir pre-exists (ensurePublishedDir
@@ -3747,11 +3403,10 @@ object Retrieval {
     * RetrievalSpec against [[hybridFused]].
     */
   def ensureHybridQueryBatch(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_hybrid_queries$suffix")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root.toString)(r =>
+    val root = Fixture.root(s, d, "graft_hybrid_queries")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    Layout.ensurePublishedDir(s, root)(r =>
       fs.exists(new org.apache.hadoop.fs.Path(r, "_SUCCESS"))
     ) { staging =>
       import s.implicits._

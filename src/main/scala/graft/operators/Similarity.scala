@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.{Delete, Fixture, Fold, IndexKind, Merge, Refresh, Seed, Step, Vacuum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -555,13 +556,7 @@ object Similarity {
     * recomputed from scratch (the `sim_ivf_grown` oracle).
     */
   def ensureGrownIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_grown"))(
-      r => ivfComplete(s, r) && protocol(r).foldedBatches().contains(0L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfIndex(e.filter(col("vec_id") % 5 === 4), staging, 0L)
-    }
+    Fixture("graft_ivf_grown", IvfKind, vecWaves(s, d, 0L)).ensure(s, d)
 
   /** Merge two independently-built IVF roots into ONE servable root —
     * the cross-root union the fold protocol lacked (two crawls, two
@@ -613,44 +608,22 @@ object Similarity {
     * centroids; re-homing the smaller side is the cheap direction).
     */
   def ensureMergedIvfIndex(s: SparkSession, d: String): String = {
-    val e = corpus(s, d).select(col("vec_id"), col("v"))
-    val srcA = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_ivf_src_a"))(ivfComplete(s, _))(
-      st => writeIvfIndex(e.filter(col("vec_id") % 3 =!= 2), st))
-    val srcB = Layout.ensurePublishedDir(
-      s, fixtureRoot(s, d, "graft_ivf_src_b"))(ivfComplete(s, _))(
-      st => writeIvfIndex(e.filter(col("vec_id") % 3 === 2), st))
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_merged"))(
-      r => ivfComplete(s, r) && protocol(r).foldedBatches().contains(0L)
-    )(st => mergeIvfIndexes(s, srcA, srcB, st))
-  }
-
-  /** [[ivfIndexComplete]] over a path string — the completeness
-    * predicate the stage-and-publish fixtures hand to
-    * `Layout.ensurePublishedDir` (it must run against the staging dir
-    * at the publish boundary too).
-    */
-  private def ivfComplete(s: SparkSession, r: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(r)
-    ivfIndexComplete(
-      p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+    lazy val e = corpus(s, d).select(col("vec_id"), col("v"))
+    Fixture("graft_ivf_merged", IvfKind, Seq(Merge(
+      Fixture("graft_ivf_src_a", IvfKind,
+        Seq(Seed(e.filter(col("vec_id") % 3 =!= 2)))),
+      Fixture("graft_ivf_src_b", IvfKind,
+        Seq(Seed(e.filter(col("vec_id") % 3 === 2))))))).ensure(s, d)
   }
 
   /** Build-if-absent the DELETED-index gate fixture: the full corpus
     * indexed, then one committed delete batch (vec_id % 9 = 0)
-    * tombstoned through [[deleteFromIvfIndex]]. Keyed on the delete's
-    * ledger entry: a crash anywhere before its commit rebuilds from
-    * scratch.
+    * tombstoned through [[deleteFromIvfIndex]].
     */
   def ensureDeletedIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_del"))(
-      r => protocol(r).deletedBatches().contains(0L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfIndex(e, staging)
-      deleteFromIvfIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 0L)
-    }
+    Fixture("graft_ivf_del", IvfKind, Seq(vecSeed(s, d), Delete(0L,
+      corpus(s, d).filter(col("vec_id") % 9 === 0).select(col("vec_id")))))
+      .ensure(s, d)
 
   // ---- centroid-refresh gate fixture: a DELIBERATE distribution
   // shift. The append wave is the negated copy of every 5th-residue
@@ -685,24 +658,13 @@ object Similarity {
   /** Build-if-absent the refresh-gate pair: BOTH indexes seed from the
     * original corpus and fold the shifted wave as one ledgered append;
     * the second then takes one [[refreshIvfIndex]] pass (refreshId 0,
-    * no drift gate). Keyed on the terminal ledger entry of each, so a
-    * crash mid-build rebuilds from scratch.
+    * no drift gate).
     */
-  def ensureShiftIvfIndexes(s: SparkSession, d: String): (String, String) = {
-    val e = corpus(s, d).select(col("vec_id"), col("v"))
-    def build(name: String, refresh: Boolean): String =
-      Layout.ensurePublishedDir(s, fixtureRoot(s, d, name))(
-        r =>
-          if (refresh) protocol(r).entries().contains("r0")
-          else protocol(r).foldedBatches().contains(0L)
-      ) { staging =>
-        writeIvfIndex(e, staging)
-        appendToIvfIndex(shiftedWave(s, d), staging, 0L)
-        if (refresh) refreshIvfIndex(s, staging, 0L)
-      }
-    (build("graft_ivf_frozen", refresh = false),
-      build("graft_ivf_refresh", refresh = true))
-  }
+  def ensureShiftIvfIndexes(s: SparkSession, d: String): (String, String) =
+    (Fixture("graft_ivf_frozen", IvfKind, shiftScript(s, d, refresh = false))
+      .ensure(s, d),
+      Fixture("graft_ivf_refresh", IvfKind, shiftScript(s, d, refresh = true))
+        .ensure(s, d))
 
   /** Oracle for `sim_ivf_refreshed`: recompute BOTH constructions —
     * frozen (centroids trained on the original corpus, everything
@@ -790,19 +752,11 @@ object Similarity {
   /** Build-if-absent the full-lifecycle gate fixture: seed from the
     * history wave (vec_id % 5 ≠ 4), fold the remainder as a ledgered
     * append (batch 0), then tombstone vec_id % 9 = 0 as a ledgered
-    * delete (batch 1) whose victims span BOTH waves. Keyed on the
-    * delete's ledger entry (it commits last).
+    * delete (batch 1) whose victims span BOTH waves.
     */
   def ensureEvolvedIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_evolved"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfIndex(e.filter(col("vec_id") % 5 === 4), staging, 0L)
-      deleteFromIvfIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 1L)
-    }
+    Fixture("graft_ivf_evolved", IvfKind, vecLifecycle(s, d, 0L, 1L))
+      .ensure(s, d)
 
   /** Build-if-absent the AS-OF gate fixture: the evolved lifecycle
     * with ledger ids drawn from one increasing sequence at DISTINCT
@@ -811,15 +765,8 @@ object Similarity {
     * evolved fixture's 0/1 ids would alias the fold with the seed).
     */
   def ensureAsOfIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_asof"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfIndex(e.filter(col("vec_id") % 5 === 4), staging, 1L)
-      deleteFromIvfIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 2L)
-    }
+    Fixture("graft_ivf_asof", IvfKind, vecLifecycle(s, d, 1L, 2L))
+      .ensure(s, d)
 
   /** One horizon's ranked serve for the as-of oracle: the shared
     * grown-index assign/probe frames restricted to the candidates the
@@ -1357,76 +1304,35 @@ object Similarity {
        |UNION ALL SELECT CAST(2 AS BIGINT), query_id, neighbor_id,
        |  CAST(rank AS INT) FROM h2_tk""".stripMargin
 
-  private def ivfBinaryComplete(s: SparkSession, r: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(r)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(
-      protocol(r).dir("cents"), "_SUCCESS")) &&
-      protocol(r).committedDirsOrEmpty("bwords").exists { d =>
-        val name = d.substring(d.lastIndexOf('/') + 1)
-        (name == "seed" || name.matches("c\\d+")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-      }
-  }
-
-  /** Build-if-absent the persisted IVF+binary gate fixture (root name
-    * carries the build K AND the ledgered layout — the
-    * construction-in-the-name lesson from the PQ flip: a completeness
-    * predicate can only attest "a complete index is here", not which
-    * construction made it).
+  /** Build-if-absent the persisted IVF+binary gate fixture (the root
+    * name carries the build K through [[IvfBinaryKind]]'s params).
     */
   def ensureIvfBinaryIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, s"graft_ivf_binl_k$FixedK"))(
-      ivfBinaryComplete(s, _)) { staging =>
-      writeIvfBinaryIndex(corpus(s, d).select(col("vec_id"), col("v")),
-        staging)
-    }
+    Fixture("graft_ivf_binl", IvfBinaryKind, Seq(vecSeed(s, d))).ensure(s, d)
 
   /** Build-if-absent the full-lifecycle binary gate fixture: seed
     * from the history wave (vec_id % 5 ≠ 4, bounded-K), fold the
     * remainder as ledgered batch 0, tombstone vec_id % 9 = 0 as
     * ledgered delete 1 — the [[ensureEvolvedIvfIndex]] scenario on
-    * the sign-word index. Keyed on the delete's ledger entry.
+    * the sign-word index.
     */
   def ensureEvolvedIvfBinaryIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, s"graft_ivf_binl_evolved_k$FixedK"))(
-      r => protocol(r).deletedBatches().contains(1L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfBinaryIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfBinaryIndex(e.filter(col("vec_id") % 5 === 4),
-        staging, 0L)
-      deleteFromIvfBinaryIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 1L)
-    }
+    Fixture("graft_ivf_binl_evolved", IvfBinaryKind,
+      vecLifecycle(s, d, 0L, 1L)).ensure(s, d)
 
   /** Build-if-absent the binary refresh-gate pair — the
     * [[ensureShiftIvfIndexes]] scenario on the sign-word index: both
     * seed from the original corpus and fold the shifted wave as one
     * ledgered append; the second takes one [[refreshIvfBinaryIndex]]
     * pass over the combined full-precision population (refreshId 0,
-    * no drift gate). Root names carry build K AND refresh state.
+    * no drift gate).
     */
   def ensureShiftIvfBinaryIndexes(s: SparkSession,
-      d: String): (String, String) = {
-    val e = corpus(s, d).select(col("vec_id"), col("v"))
-    def build(name: String, refresh: Boolean): String =
-      Layout.ensurePublishedDir(s, fixtureRoot(s, d, name))(
-        r =>
-          if (refresh) protocol(r).entries().contains("r0")
-          else protocol(r).foldedBatches().contains(0L)
-      ) { staging =>
-        writeIvfBinaryIndex(e, staging)
-        appendToIvfBinaryIndex(shiftedWave(s, d), staging, 0L)
-        if (refresh)
-          refreshIvfBinaryIndex(s, staging, 0L,
-            e.union(shiftedWave(s, d)))
-      }
-    (build(s"graft_ivf_binl_frozen_k$FixedK", refresh = false),
-      build(s"graft_ivf_binl_refresh_k$FixedK", refresh = true))
-  }
+      d: String): (String, String) =
+    (Fixture("graft_ivf_binl_frozen", IvfBinaryKind,
+      shiftScript(s, d, refresh = false)).ensure(s, d),
+      Fixture("graft_ivf_binl_refresh", IvfBinaryKind,
+        shiftScript(s, d, refresh = true)).ensure(s, d))
 
   /** Build-if-absent the binary AS-OF gate fixture — the
     * [[ensureAsOfIvfIndex]] lifecycle on the sign-word index: seed
@@ -1435,17 +1341,8 @@ object Similarity {
     * order so every horizon is distinguishable.
     */
   def ensureAsOfIvfBinaryIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, s"graft_ivf_binl_asof_k$FixedK"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfBinaryIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfBinaryIndex(e.filter(col("vec_id") % 5 === 4),
-        staging, 1L)
-      deleteFromIvfBinaryIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 2L)
-    }
+    Fixture("graft_ivf_binl_asof", IvfBinaryKind,
+      vecLifecycle(s, d, 1L, 2L)).ensure(s, d)
 
   /** Floor-bounded retention for the IVF+binary index — a
     * [[graft.index.FoldProtocol.vacuumKinds]] adapter on the
@@ -1464,26 +1361,9 @@ object Similarity {
   /** Build-if-absent the VACUUMED binary-rung gate fixture: the as-of
     * ledger layout (seed / b1 / d2) vacuumed at floor 1.
     */
-  def ensureVacuumedIvfBinaryIndex(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, s"graft_ivf_binl_vacuum_k$FixedK")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("bwords")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("bwords")}/seed"))
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfBinaryIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfBinaryIndex(e.filter(col("vec_id") % 5 === 4),
-        staging, 1L)
-      deleteFromIvfBinaryIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 2L)
-      vacuumIvfBinaryIndex(s, staging, 1L)
-    }
-  }
+  def ensureVacuumedIvfBinaryIndex(s: SparkSession, d: String): String =
+    Fixture("graft_ivf_binl_vacuum", IvfBinaryKind,
+      vecLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
 
   /** Serve approximate top-k from a persisted IVF+binary index:
     * probe `nprobe` cells, Hamming-shortlist `rerank` candidates per
@@ -1619,22 +1499,14 @@ object Similarity {
     * pays assignment once at ingest, queries pay only their probes.
     */
   def ensureIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_index"))(
-      ivfComplete(s, _)) { staging =>
-      writeIvfIndex(corpus(s, d).select(col("vec_id"), col("v")),
-        staging)
-    }
+    Fixture("graft_ivf_index", IvfKind, Seq(vecSeed(s, d))).ensure(s, d)
 
   /** Build-if-absent PERSISTED multi-round-trained IVF index — the
     * [[writeTrainedIvfIndex]] construction under its own root; serving
     * is the unchanged [[indexTopK]] path.
     */
   def ensureTrainedIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_trained"))(
-      ivfComplete(s, _)) { staging =>
-      writeTrainedIvfIndex(corpus(s, d).select(col("vec_id"), col("v")),
-        staging)
-    }
+    Fixture("graft_ivf", TrainedIvfKind, Seq(vecSeed(s, d))).ensure(s, d)
 
   /** Build-if-absent PERSISTED bounded-K IVF index: the
     * [[writeIvfIndexFixedK]] construction (hash-ordered LIMIT-`FixedK`
@@ -1643,29 +1515,7 @@ object Similarity {
     * as the default-seeded index — only the seed SET differs.
     */
   def ensureFixedKIvfIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, "graft_ivf_fixedk"))(
-      ivfComplete(s, _)) { staging =>
-      writeIvfIndexFixedK(corpus(s, d).select(col("vec_id"), col("v")),
-        staging)
-    }
-
-  /** cents plus a complete vector frame — a seed/ OR `c<hw>`
-    * compaction dir under the CURRENT vectors generation (after
-    * compaction the seed dir is folded into the compaction output, and
-    * a compacted index is a complete index; rebuilding would discard
-    * folds). Resolution goes through the manifest, so a
-    * generation-published index validates the generation it serves.
-    */
-  private def ivfIndexComplete(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Boolean = {
-    val p = protocol(root.toString)
-    fs.exists(new org.apache.hadoop.fs.Path(p.dir("cents"), "_SUCCESS")) &&
-      p.committedDirsOrEmpty("vectors").exists { d =>
-        val name = d.substring(d.lastIndexOf('/') + 1)
-        (name == "seed" || name.matches("c\\d+")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-      }
-  }
+    Fixture("graft_ivf", FixedKIvfKind, Seq(vecSeed(s, d))).ensure(s, d)
 
   /** Build a fresh IVF index at `path` from any `(vec_id, v)` frame:
     * every-`seedEvery`-th vector seeds one Lloyd refinement, the
@@ -1854,6 +1704,80 @@ object Similarity {
   private[graft] def protocol(path: String) =
     new graft.index.FoldProtocol(path, "_vec_ledger")
 
+  /** The float IVF index as the fixture layer sees it (every-25th
+    * seeds); the other seeding modes are the same kind with another
+    * build.
+    */
+  val IvfKind: IndexKind = IndexKind(protocol, Seq("cents"), Seq("vectors"),
+    write = writeIvfIndex(_, _),
+    fold = appendToIvfIndex(_, _, _),
+    delete = deleteFromIvfIndex(_, _, _),
+    vacuum = vacuumIvfIndex(_, _, _),
+    refresh = (s, r, id, _) => refreshIvfIndex(s, r, id),
+    merge = mergeIvfIndexes(_, _, _, _))
+
+  /** The multi-round-trained build ([[writeTrainedIvfIndex]]). */
+  val TrainedIvfKind: IndexKind = IvfKind.copy(params = "trained",
+    write = writeTrainedIvfIndex(_, _))
+
+  /** The bounded-K build ([[writeIvfIndexFixedK]] at [[FixedK]]). */
+  val FixedKIvfKind: IndexKind = IvfKind.copy(params = s"fixedk$FixedK",
+    write = writeIvfIndexFixedK(_, _))
+
+  /** The IVF-PQ index built bounded-K at `k` cells ([[writeIvfPqIndex]]):
+    * centroids + codebook + a committed coded frame.
+    */
+  def ivfPqKind(k: Int): IndexKind =
+    IndexKind(protocol, Seq("cents", "codebook"), Seq("vectors"),
+      write = writeIvfPqIndex(_, _, k),
+      fold = appendToIvfPqIndex(_, _, _),
+      delete = deleteFromIvfPqIndex(_, _, _),
+      vacuum = vacuumIvfPqIndex(_, _, _),
+      refresh = (s, r, id, vecs) => refreshIvfPqIndex(s, r, id, vecs),
+      params = s"k$k")
+
+  /** The IVF+binary (sign-word) index at [[FixedK]] cells. */
+  val IvfBinaryKind: IndexKind =
+    IndexKind(protocol, Seq("cents"), Seq("bwords"),
+      write = writeIvfBinaryIndex(_, _),
+      fold = appendToIvfBinaryIndex(_, _, _),
+      delete = deleteFromIvfBinaryIndex(_, _, _),
+      vacuum = vacuumIvfBinaryIndex(_, _, _),
+      refresh = (s, r, id, vecs) => refreshIvfBinaryIndex(s, r, id, vecs),
+      params = s"k$FixedK")
+
+  /** The full gate corpus as a seed. */
+  private def vecSeed(s: SparkSession, d: String): Step =
+    Seed(corpus(s, d).select(col("vec_id"), col("v")))
+
+  /** The two corpus waves every vector-index lifecycle gate replays:
+    * the history wave (vec_id % 5 ≠ 4) seeds, the remainder folds as
+    * `foldId`.
+    */
+  private def vecWaves(s: SparkSession, d: String,
+      foldId: Long): Seq[Step] = {
+    lazy val e = corpus(s, d).select(col("vec_id"), col("v"))
+    Seq(Seed(e.filter(col("vec_id") % 5 =!= 4)),
+      Fold(foldId, e.filter(col("vec_id") % 5 === 4)))
+  }
+
+  /** Seed → fold → takedown of vec_id % 9 = 0 (victims in both waves)
+    * at the given ledger ids.
+    */
+  private def vecLifecycle(s: SparkSession, d: String, foldId: Long,
+      deleteId: Long): Seq[Step] =
+    vecWaves(s, d, foldId) :+ Delete(deleteId,
+      corpus(s, d).filter(col("vec_id") % 9 === 0).select(col("vec_id")))
+
+  /** The refresh-gate scripts: the original corpus seeds, the shifted
+    * wave folds as batch 0, and the refreshed twin takes one refresh
+    * (refreshId 0, no drift gate).
+    */
+  private def shiftScript(s: SparkSession, d: String,
+      refresh: Boolean): Seq[Step] =
+    Seq(vecSeed(s, d), Fold(0L, shiftedWave(s, d))) ++
+      (if (refresh) Seq(Refresh(0L)) else Nil)
+
   /** BatchIds whose vector fold is fully committed. */
   def ivfFoldedBatches(path: String): Set[Long] =
     protocol(path).foldedBatches()
@@ -1988,25 +1912,9 @@ object Similarity {
     * horizons 1 and 2 must keep serving hash-equal to the unvacuumed
     * construction.
     */
-  def ensureVacuumedIvfIndex(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, "graft_ivf_vacuum")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("vectors")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("vectors")}/seed"))
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfIndex(e.filter(col("vec_id") % 5 === 4), staging, 1L)
-      deleteFromIvfIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 2L)
-      vacuumIvfIndex(s, staging, 1L)
-    }
-  }
+  def ensureVacuumedIvfIndex(s: SparkSession, d: String): String =
+    Fixture("graft_ivf_vacuum", IvfKind,
+      vecLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
 
   /** Re-cluster a persisted IVF index in place — the recovery op for
     * distribution drift (appends are assigned to FROZEN centroids, so
@@ -2562,46 +2470,15 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"))
   }
 
-  /** Centroids + codebook + a committed coded frame all landed — the
-    * IVF-PQ completeness contract the ensure fixtures check before
-    * re-serving a root.
-    */
-  private def ivfPqComplete(s: SparkSession, r: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(r)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    ivfIndexComplete(fs, p) &&
-      fs.exists(new org.apache.hadoop.fs.Path(
-        protocol(r).dir("codebook"), "_SUCCESS"))
-  }
-
-  private def fixtureRoot(s: SparkSession, d: String,
-      name: String): String =
-    new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      name + d.replaceAll("\\W", "_")).toString
-
   /** Build-if-absent the persisted IVF-PQ index over the gate corpus,
     * built through [[writeIvfPqIndex]]'s DEFAULT (bounded-K, K =
     * [[FixedK]]) — so `sim_ivfpq_recall` value-gates exactly the build
-    * a production operator gets from the obvious API. All PQ fixtures
-    * build STAGE-AND-PUBLISH (`Layout.ensurePublishedDir`): the whole
-    * index root — protocol ledger included, it lives inside the root —
-    * lands in a private staging sibling and swaps in atomically, so a
-    * reader never sees a mid-build root (cents without codebook, fold
-    * not yet applied).
+    * a production operator gets from the obvious API. The root name
+    * carries the build K (the kind's params), so a change of build
+    * mode can never re-serve the previous mode's artifact.
     */
   def ensureIvfPqIndex(s: SparkSession, d: String): String =
-    // The root name carries the build K: ivfPqComplete can only attest
-    // "a complete index is here", not WHICH construction built it, so
-    // any change of build mode must change the root — otherwise a
-    // persisted warehouse re-serves the previous mode's artifact under
-    // the new oracle (exactly what the pre-bounded-K "graft_ivfpq"
-    // roots would do).
-    Layout.ensurePublishedDir(s, fixtureRoot(s, d, s"graft_ivfpq_k$FixedK"))(
-      ivfPqComplete(s, _)) { staging =>
-      writeIvfPqIndex(corpus(s, d).select(col("vec_id"), col("v")),
-        staging)
-    }
+    Fixture("graft_ivfpq", ivfPqKind(FixedK), Seq(vecSeed(s, d))).ensure(s, d)
 
   /** Build-if-absent the GROWN IVF-PQ gate fixture — the PQ twin of
     * [[ensureGrownIvfIndex]]: centroids + codebook trained on the
@@ -2609,18 +2486,11 @@ object Similarity {
     * build, the incoming wave folded through [[appendToIvfPqIndex]]
     * against the FROZEN artifacts — so `sim_ivfpq_grown_recall`
     * value-gates the fold contract on the build mode production
-    * actually runs. Complete iff the fold's ledger entry committed;
-    * built stage-and-publish like every PQ fixture.
+    * actually runs.
     */
   def ensureGrownIvfPqIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, s"graft_ivfpq_grown_k$FixedK"))(
-      r => ivfPqComplete(s, r) && protocol(r).foldedBatches().contains(1L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfPqIndex(e.filter(col("vec_id") % 5 === 4), staging, 1L)
-    }
+    Fixture("graft_ivfpq_grown", ivfPqKind(FixedK), vecWaves(s, d, 1L))
+      .ensure(s, d)
 
   /** Build-if-absent the GROWN bounded-K fixture at the KNOB setting
     * ([[FixedKWide]]) — `sim_ivfpq_fixedk_grown_recall`'s fixture: the
@@ -2629,102 +2499,49 @@ object Similarity {
     * contract is value-gated at TWO cell counts.
     */
   def ensureFixedKGrownIvfPqIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, "graft_ivfpq_fixedk_grown"))(
-      r => ivfPqComplete(s, r) && protocol(r).foldedBatches().contains(1L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 4), staging,
-        FixedKWide)
-      appendToIvfPqIndex(e.filter(col("vec_id") % 5 === 4), staging, 1L)
-    }
+    Fixture("graft_ivfpq_grown", ivfPqKind(FixedKWide), vecWaves(s, d, 1L))
+      .ensure(s, d)
 
   /** Build-if-absent the EVOLVED IVF-PQ gate fixture — the PQ twin of
     * [[ensureEvolvedIvfIndex]]: the grown construction plus one
     * committed delete batch (vec_id % 9 = 0) tombstoned through
-    * [[deleteFromIvfPqIndex]]. Complete iff the delete's ledger entry
-    * committed; built stage-and-publish like every PQ fixture.
+    * [[deleteFromIvfPqIndex]].
     */
   def ensureEvolvedIvfPqIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, s"graft_ivfpq_evolved_k$FixedK"))(
-      r => protocol(r).deletedBatches().contains(2L)
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfPqIndex(e.filter(col("vec_id") % 5 === 4), staging, 1L)
-      deleteFromIvfPqIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 2L)
-    }
+    Fixture("graft_ivfpq_evolved", ivfPqKind(FixedK),
+      vecLifecycle(s, d, 1L, 2L)).ensure(s, d)
 
   /** Build-if-absent the VACUUMED IVF-PQ gate fixture: the evolved
     * lifecycle (seed 0, fold b1, takedown d2) then [[vacuumIvfPqIndex]]
     * at floor 1 — horizon 0 reclaimed (refuses), horizons 1 and 2 must
     * keep serving hash-equal to the unvacuumed construction.
-    * Completeness is the vacuum's POST-state (c1 landed, seed gone) so
-    * a crashed vacuum rebuilds rather than serving half-reclaimed.
     */
-  def ensureVacuumedIvfPqIndex(s: SparkSession, d: String): String = {
-    val root = fixtureRoot(s, d, s"graft_ivfpq_vacuum_k$FixedK")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.ensurePublishedDir(s, root)(r =>
-      protocol(r).deletedBatches().contains(2L) &&
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("vectors")}/c1", "_SUCCESS")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${protocol(r).dir("vectors")}/seed"))
-    ) { staging =>
-      val e = corpus(s, d).select(col("vec_id"), col("v"))
-      writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 4), staging)
-      appendToIvfPqIndex(e.filter(col("vec_id") % 5 === 4), staging, 1L)
-      deleteFromIvfPqIndex(e.filter(col("vec_id") % 9 === 0)
-        .select(col("vec_id")), staging, 2L)
-      vacuumIvfPqIndex(s, staging, 1L)
-    }
-  }
+  def ensureVacuumedIvfPqIndex(s: SparkSession, d: String): String =
+    Fixture("graft_ivfpq_vacuum", ivfPqKind(FixedK),
+      vecLifecycle(s, d, 1L, 2L) :+ Vacuum(1L)).ensure(s, d)
 
   /** Build-if-absent the bounded-K IVF-PQ index at the KNOB setting
     * ([[FixedKWide]] — the default fixture already builds at
     * [[FixedK]]) under its own warehouse root. Serving goes through
     * the same [[ivfPqTopK]] path — only targetK (and therefore the
-    * centroid count and per-cell size) differs. Built
-    * stage-and-publish like every PQ fixture. The fixture root keeps
-    * a K-suffixed name so a prior-round K=32 artifact can never
-    * satisfy the K=48 gate's build-if-absent check.
+    * centroid count and per-cell size) differs.
     */
   def ensureFixedKIvfPqIndex(s: SparkSession, d: String): String =
-    Layout.ensurePublishedDir(s,
-      fixtureRoot(s, d, s"graft_ivfpq_fixedk$FixedKWide"))(
-      ivfPqComplete(s, _)) { staging =>
-      writeIvfPqIndex(corpus(s, d).select(col("vec_id"), col("v")),
-        staging, FixedKWide)
-    }
+    Fixture("graft_ivfpq", ivfPqKind(FixedKWide), Seq(vecSeed(s, d)))
+      .ensure(s, d)
 
   /** Build-if-absent the PQ refresh-gate pair — the IVF-PQ twin of
     * [[ensureShiftIvfIndexes]]: BOTH indexes build bounded-K on the
     * original corpus and fold the shifted wave as one ledgered append
     * (codes encoded against the FROZEN codebook — exactly where a
     * frozen coarse layout starts hurting); the second then takes one
-    * [[refreshIvfPqIndex]] pass (refreshId 0, no drift gate). Roots
-    * carry the build K like every PQ fixture.
+    * [[refreshIvfPqIndex]] pass (refreshId 0, no drift gate).
     */
-  def ensureShiftIvfPqIndexes(s: SparkSession, d: String): (String, String) = {
-    val e = corpus(s, d).select(col("vec_id"), col("v"))
-    def build(name: String, refresh: Boolean): String =
-      Layout.ensurePublishedDir(s, fixtureRoot(s, d, name))(
-        r =>
-          if (refresh) protocol(r).entries().contains("r0")
-          else protocol(r).foldedBatches().contains(0L)
-      ) { staging =>
-        writeIvfPqIndex(e, staging)
-        appendToIvfPqIndex(shiftedWave(s, d), staging, 0L)
-        if (refresh)
-          refreshIvfPqIndex(s, staging, 0L, e.union(shiftedWave(s, d)))
-      }
-    (build(s"graft_ivfpq_frozen_k$FixedK", refresh = false),
-      build(s"graft_ivfpq_refresh_k$FixedK", refresh = true))
-  }
+  def ensureShiftIvfPqIndexes(s: SparkSession, d: String): (String, String) =
+    (Fixture("graft_ivfpq_frozen", ivfPqKind(FixedK),
+      shiftScript(s, d, refresh = false)).ensure(s, d),
+      Fixture("graft_ivfpq_refresh", ivfPqKind(FixedK),
+        shiftScript(s, d, refresh = true)).ensure(s, d))
 
   /** [[ivfTopK]] served from the PERSISTED index: result-identical by
     * construction (same centroids, same assignment, same rounded-cosine

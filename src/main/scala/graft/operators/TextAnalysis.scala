@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -548,9 +549,7 @@ object TextAnalysis {
     */
   def ensureNbModel(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_nb_model$suffix")
+    val root = new org.apache.hadoop.fs.Path(Fixture.root(s, d, "graft_nb_model"))
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root.toString)(r =>
       Seq("model", "langs").forall(side => fs.exists(
@@ -640,10 +639,7 @@ object TextAnalysis {
     */
   def ensureLedgeredNbModel(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_nb_ledger$suffix").toString
+    val root = Fixture.root(s, d, "graft_nb_ledger")
     Layout.ensurePublishedDir(s, root)(r =>
       modelProtocol(r).foldedBatches() == Set(1L, 2L)
     ) { staging =>
@@ -663,10 +659,7 @@ object TextAnalysis {
     */
   def ensureVacuumedNbModel(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_nb_vacuum$suffix").toString
+    val root = Fixture.root(s, d, "graft_nb_vacuum")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root)(r =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,10 +93,7 @@ object TimeTravel {
     *   d3: delete, event_id % 5 = 0 (victims span all three waves)
     */
   def ensureLedgeredEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_ledger$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_ledger")
     // Completeness is SCHEMA-GATED (names AND types), not just
     // ledger-gated: a fixture root built by an older build (fewer
     // columns, or an INT _commit) must rebuild, not serve stale
@@ -792,10 +790,7 @@ object TimeTravel {
     * rebuilds rather than serving a half-reclaimed layout.
     */
   def ensureVacuumedEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_vacuum$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_vacuum")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root)(r =>
@@ -828,10 +823,7 @@ object TimeTravel {
     * non-upserted pre-change rows NULL in `score`.
     */
   def ensureEvolvedEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_evolve$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_evolve")
     Layout.ensurePublishedDir(s, root)(r =>
       protocol(r).foldedBatches().contains(2L) &&
         // schema-gated on the evolved commit (the NB/DSIR lesson): a
@@ -862,10 +854,7 @@ object TimeTravel {
     * post-rename write lands on the same physical column.
     */
   def ensureRenamedEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_rename$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_rename")
     Layout.ensurePublishedDir(s, root)(r =>
       protocol(r).foldedBatches() == Set(1L, 2L, 3L) &&
         scala.util.Try(
@@ -927,10 +916,7 @@ object TimeTravel {
     * ledgers' final deletes plus the branch manifest.
     */
   def ensureBranchedEvents(s: SparkSession, d: String): (String, String) = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_branch$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_branch")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root)(r =>
@@ -967,10 +953,7 @@ object TimeTravel {
     * oracle verbatim).
     */
   def ensureMirroredEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_mirror$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_mirror")
     Layout.ensurePublishedDir(s, root)(r =>
       protocol(r).deletedBatches().contains(3L) &&
         protocol(r).foldedBatches() == Set(1L, 2L)
@@ -987,10 +970,7 @@ object TimeTravel {
     * the branch head did.
     */
   def ensureMergedBranchEvents(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_table_brmerge$suffix").toString
+    val root = Fixture.root(s, d, "graft_table_brmerge")
     Layout.ensurePublishedDir(s, root)(r =>
       protocol(s"$r/main").deletedBatches().contains(3L) &&
         protocol(s"$r/main").foldedBatches() == Set(1L, 2L)

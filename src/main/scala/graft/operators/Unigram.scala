@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -218,9 +219,7 @@ object Unigram {
 
   private def ensureModel(s: SparkSession, d: String, name: String,
       slice: DataFrame => DataFrame): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"$name$suffix")
+    val root = new org.apache.hadoop.fs.Path(Fixture.root(s, d, name))
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root.toString)(r =>
       Seq("pieces", "wordseg", "curve").forall(side => fs.exists(

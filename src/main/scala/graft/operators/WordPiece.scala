@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
+import graft.index.Fixture
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -148,9 +149,7 @@ object WordPiece {
     * (piece) parquet dirs, staged and published atomically.
     */
   def ensureWordPieceModel(s: SparkSession, d: String): String = {
-    val suffix = d.replaceAll("\\W", "_")
-    val root = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), s"graft_wp_model$suffix")
+    val root = new org.apache.hadoop.fs.Path(Fixture.root(s, d, "graft_wp_model"))
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.ensurePublishedDir(s, root.toString)(r =>
       Seq("merges", "pieces").forall(side => fs.exists(

@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.pipeline.IngestPipeline.Config
 import graft.schema.GeoPoint
 import graft.sources.HttpJsonSource.Fetcher
-import org.apache.spark.sql.SparkSession
 
 import java.time.{ZoneId, ZonedDateTime}
 import scala.util.{Failure, Success}
@@ -37,13 +36,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val cfg = Config(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.streaming.StatefulOps.Event
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -14,13 +13,7 @@ import java.nio.file.{Files, Paths}
   */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -103,7 +103,7 @@ object StreamingRetrieval {
   }
 
   /** Fold micro-batches of NEW documents into the positional index —
-    * `Retrieval.appendToPhraseIndex` per batch (pair postings of the
+    * `Retrieval.Phrase.appendTo` per batch (pair postings of the
     * BATCH only land in a ledgered `b<batchId>/` sub-root),
     * exactly-once under replay via the index ledger; ledger-gated
     * periodic compaction, same as [[startIngest]].
@@ -116,11 +116,11 @@ object StreamingRetrieval {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          Retrieval.appendToPhraseIndex(batch, indexPath, batchId)
+          Retrieval.Phrase.appendTo(batch, indexPath, batchId)
           IngestMaintenance.run(Retrieval.protocol(indexPath), batchId,
             compactEvery, retainCommits)(
-            Retrieval.compactPhraseIndex(batch.sparkSession, indexPath))(
-            Retrieval.vacuumPhraseIndex(batch.sparkSession, indexPath, _))
+            Retrieval.Phrase.compact(batch.sparkSession, indexPath))(
+            Retrieval.Phrase.vacuum(batch.sparkSession, indexPath, _))
         }
       }
       .start()
@@ -153,7 +153,7 @@ object StreamingRetrieval {
 
   /** Fold micro-batches of NEW documents into the trigram index —
     * ledgered postings-only folds with ledger-gated periodic
-    * compaction via the shared [[Retrieval.compactSubstringIndex]].
+    * compaction via the shared [[Retrieval.Trigram.compact]].
     */
   def startSubstringIngest(docs: DataFrame, indexPath: String,
       checkpoint: String, compactEvery: Int = 16,
@@ -163,11 +163,11 @@ object StreamingRetrieval {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          Retrieval.appendToSubstringIndex(batch, indexPath, batchId)
+          Retrieval.Trigram.appendTo(batch, indexPath, batchId)
           IngestMaintenance.run(Retrieval.protocol(indexPath), batchId,
             compactEvery, retainCommits)(
-            Retrieval.compactSubstringIndex(batch.sparkSession, indexPath))(
-            Retrieval.vacuumSubstringIndex(batch.sparkSession, indexPath, _))
+            Retrieval.Trigram.compact(batch.sparkSession, indexPath))(
+            Retrieval.Trigram.vacuum(batch.sparkSession, indexPath, _))
         }
       }
       .start()

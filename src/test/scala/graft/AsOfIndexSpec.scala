@@ -215,11 +215,11 @@ class AsOfIndexSpec extends SparkSpec {
 
     // phrase
     val ph = tmpDir("asof-phrase")
-    Retrieval.writePhraseIndex(hist, ph)
-    assert(Retrieval.appendToPhraseIndex(
+    Retrieval.Phrase.write(hist, ph)
+    assert(Retrieval.Phrase.appendTo(
       docs.filter($"doc_id" % 5 === 4), ph, 1L))
     val phFresh = tmpDir("asof-phrase-hist")
-    Retrieval.writePhraseIndex(hist, phFresh)
+    Retrieval.Phrase.write(hist, phFresh)
     def phServed(idx: String, asOf: Option[Long] = None) =
       Retrieval.phraseTopK(spark, idx, Retrieval.ProbePhrase, asOf = asOf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -231,11 +231,11 @@ class AsOfIndexSpec extends SparkSpec {
 
     // substring
     val tg = tmpDir("asof-trgm")
-    Retrieval.writeSubstringIndex(hist, tg)
-    assert(Retrieval.appendToSubstringIndex(
+    Retrieval.Trigram.write(hist, tg)
+    assert(Retrieval.Trigram.appendTo(
       docs.filter($"doc_id" % 5 === 4), tg, 1L))
     val tgFresh = tmpDir("asof-trgm-hist")
-    Retrieval.writeSubstringIndex(hist, tgFresh)
+    Retrieval.Trigram.write(hist, tgFresh)
     def tgServed(idx: String, asOf: Option[Long] = None) =
       Retrieval.substringSearch(spark, idx, docs, Retrieval.ProbeNeedle,
         asOf = asOf)
@@ -247,11 +247,11 @@ class AsOfIndexSpec extends SparkSpec {
 
     // NEAR
     val nr = tmpDir("asof-near")
-    Retrieval.writeNearIndex(hist, nr)
-    assert(Retrieval.appendToNearIndex(
+    Retrieval.Near.write(hist, nr)
+    assert(Retrieval.Near.appendTo(
       docs.filter($"doc_id" % 5 === 4), nr, 1L))
     val nrFresh = tmpDir("asof-near-hist")
-    Retrieval.writeNearIndex(hist, nrFresh)
+    Retrieval.Near.write(hist, nrFresh)
     def nrServed(idx: String, asOf: Option[Long] = None) =
       Retrieval.nearSearch(spark, idx, Retrieval.NearWords,
         Retrieval.NearWindow, asOf = asOf)
@@ -264,9 +264,9 @@ class AsOfIndexSpec extends SparkSpec {
     // honesty guard: compaction collapses per-fold history — every
     // horizon under the compaction high-water must REFUSE, the
     // current view keeps serving, on all three kinds
-    Retrieval.compactPhraseIndex(spark, ph)
-    Retrieval.compactSubstringIndex(spark, tg)
-    graft.operators.Retrieval.compactNearIndex(spark, nr)
+    Retrieval.Phrase.compact(spark, ph)
+    Retrieval.Trigram.compact(spark, tg)
+    graft.operators.Retrieval.Near.compact(spark, nr)
     for ((name, f) <- Seq[(String, () => Any)](
         "phrase" -> (() => phServed(ph, Some(0L))),
         "substring" -> (() => tgServed(tg, Some(0L))),
@@ -291,8 +291,8 @@ class AsOfIndexSpec extends SparkSpec {
     Retrieval.writeBm25Index(hist, bm)
     assert(Retrieval.appendToBm25Index(wave, bm, 1L))
     val tg = tmpDir("matrix-trgm")
-    Retrieval.writeSubstringIndex(hist, tg)
-    assert(Retrieval.appendToSubstringIndex(wave, tg, 1L))
+    Retrieval.Trigram.write(hist, tg)
+    assert(Retrieval.Trigram.appendTo(wave, tg, 1L))
     val ann = tmpDir("matrix-ivf")
     Similarity.writeIvfIndex(e.filter($"vec_id" % 5 =!= 4), ann)
     assert(Similarity.appendToIvfIndex(
@@ -307,7 +307,7 @@ class AsOfIndexSpec extends SparkSpec {
     val h1 = matrix(1L)
     assert(h1.nonEmpty, "horizon 1 must serve")
     // one leg loses horizon 0's physical history
-    Retrieval.compactSubstringIndex(spark, tg)
+    Retrieval.Trigram.compact(spark, tg)
     val err = intercept[IllegalArgumentException] { matrix(0L) }
     assert(err.getMessage.contains("compaction"),
       s"wrong refusal reason: ${err.getMessage}")
@@ -325,8 +325,8 @@ class AsOfIndexSpec extends SparkSpec {
     Retrieval.writeBm25Index(hist, bm)
     assert(Retrieval.appendToBm25Index(wave, bm, 1L))
     val tg = tmpDir("matrix-vac-trgm")
-    Retrieval.writeSubstringIndex(hist, tg)
-    assert(Retrieval.appendToSubstringIndex(wave, tg, 1L))
+    Retrieval.Trigram.write(hist, tg)
+    assert(Retrieval.Trigram.appendTo(wave, tg, 1L))
     val ann = tmpDir("matrix-vac-ivf")
     Similarity.writeIvfIndex(e.filter($"vec_id" % 5 =!= 4), ann)
     assert(Similarity.appendToIvfIndex(

@@ -504,4 +504,20 @@ class CurationSpec extends SparkSpec {
     assert(rej.values.sum + rep(5) == rep(0),
       "every input doc is either rejected with a reason or served")
   }
+
+  test("rejects audits on a NULL-text document answer like the oracle's " +
+    "NOT IN: doc_curate_rejects labels it quality, the corpus " +
+    "pipeline's extract stage drops it") {
+    val dir = tmpDir("graft-null-doc")
+    val docs = Tables.documents(spark, sf0001)
+    val nullId = docs.agg(max($"doc_id")).as[Long].head() + 1
+    docs.union(docs.limit(1).select(lit(nullId).as("doc_id"),
+        lit(null).cast("string").as("text"), lit("en").as("lang"),
+        lit("src1").as("source"), lit(null).cast("long").as("n_chars")))
+      .write.parquet(s"$dir/documents.parquet")
+    def reason(q: String) = SparkEntry.queries(q)(spark, dir)
+      .filter($"doc_id" === nullId).select($"reason").as[String].collect()
+    assert(reason("doc_curate_rejects").toSeq == Seq("quality"))
+    assert(reason("pipeline_corpus_rejects").toSeq == Seq("extract_empty"))
+  }
 }

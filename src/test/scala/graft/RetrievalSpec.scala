@@ -691,7 +691,7 @@ class RetrievalSpec extends SparkSpec {
     "identically to a corpus-direct recompute — 2-word, 3-word, " +
     "repeated-pair and absent phrases") {
     val idx = tmpDir("phrase-idx")
-    Retrieval.writePhraseIndex(Tables.documents(spark, sf0001), idx)
+    Retrieval.Phrase.write(Tables.documents(spark, sf0001), idx)
     for (ph <- Seq("table scan", Retrieval.ProbePhrase, "a a a",
         "zebra quantum phrase")) {
       val served = Retrieval.phraseTopK(spark, idx, ph)
@@ -710,18 +710,18 @@ class RetrievalSpec extends SparkSpec {
     "delete are no-ops") {
     val docs = Tables.documents(spark, sf0001)
     val idx = tmpDir("phrase-lifecycle")
-    Retrieval.writePhraseIndex(docs.filter($"doc_id" % 5 =!= 4), idx)
-    assert(Retrieval.appendToPhraseIndex(
+    Retrieval.Phrase.write(docs.filter($"doc_id" % 5 =!= 4), idx)
+    assert(Retrieval.Phrase.appendTo(
       docs.filter($"doc_id" % 5 === 4), idx, 0L))
-    assert(!Retrieval.appendToPhraseIndex(
+    assert(!Retrieval.Phrase.appendTo(
       docs.filter($"doc_id" % 5 === 4), idx, 0L),
       "a replayed fold must be a ledger-detected no-op")
     val victims = docs.filter($"doc_id" % 7 === 3).select($"doc_id")
-    assert(Retrieval.deleteFromPhraseIndex(victims, idx, 1L))
-    assert(!Retrieval.deleteFromPhraseIndex(victims, idx, 1L),
+    assert(Retrieval.Phrase.deleteFrom(victims, idx, 1L))
+    assert(!Retrieval.Phrase.deleteFrom(victims, idx, 1L),
       "a replayed delete must be a ledger-detected no-op")
     val fresh = tmpDir("phrase-fresh")
-    Retrieval.writePhraseIndex(docs.filter($"doc_id" % 7 =!= 3), fresh)
+    Retrieval.Phrase.write(docs.filter($"doc_id" % 7 =!= 3), fresh)
     for (ph <- Seq("table scan", Retrieval.ProbePhrase, "a the")) {
       val evolved = Retrieval.phraseTopK(spark, idx, ph)
         .as[(Long, Long, Long)].collect().toSeq
@@ -733,7 +733,7 @@ class RetrievalSpec extends SparkSpec {
     // serve-identical, and the compacted root audits clean
     val before = Retrieval.phraseTopK(spark, idx, Retrieval.ProbePhrase)
       .as[(Long, Long, Long)].collect().toSeq
-    Retrieval.compactPhraseIndex(spark, idx)
+    Retrieval.Phrase.compact(spark, idx)
     assert(Retrieval.phraseTopK(spark, idx, Retrieval.ProbePhrase)
       .as[(Long, Long, Long)].collect().toSeq == before,
       "compaction must be serve-identical")
@@ -756,7 +756,7 @@ class RetrievalSpec extends SparkSpec {
   test("phraseTopK: the postings scan carries a STATIC bucket " +
     "PartitionFilter and lists at most |pairs| of the bucket dirs") {
     val idx = tmpDir("phrase-prune")
-    Retrieval.writePhraseIndex(Tables.documents(spark, sf0001), idx)
+    Retrieval.Phrase.write(Tables.documents(spark, sf0001), idx)
     val scan = Retrieval.phraseTopK(spark, idx, Retrieval.ProbePhrase)
       .queryExecution.sparkPlan.collect {
         case f: FileSourceScanExec
@@ -784,7 +784,7 @@ class RetrievalSpec extends SparkSpec {
       .select($"doc_id", $"text")
       .union(Seq(falsePos, truePos).toDF("doc_id", "text"))
     val idx = tmpDir("trgm-idx")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     // direct-grep identity on corpus-native needles (incl. the probe)
     for (n <- Seq(Retrieval.ProbeNeedle, "sh join k", "zebraquantum")) {
       val served = Retrieval.substringSearch(spark, idx, docs, n)
@@ -815,19 +815,19 @@ class RetrievalSpec extends SparkSpec {
     "no-ops; batch serving agrees with single-needle serves") {
     val docs = Tables.documents(spark, sf0001)
     val idx = tmpDir("trgm-lifecycle")
-    Retrieval.writeSubstringIndex(docs.filter($"doc_id" % 5 =!= 4), idx)
-    assert(Retrieval.appendToSubstringIndex(
+    Retrieval.Trigram.write(docs.filter($"doc_id" % 5 =!= 4), idx)
+    assert(Retrieval.Trigram.appendTo(
       docs.filter($"doc_id" % 5 === 4), idx, 0L))
-    assert(!Retrieval.appendToSubstringIndex(
+    assert(!Retrieval.Trigram.appendTo(
       docs.filter($"doc_id" % 5 === 4), idx, 0L),
       "a replayed fold must be a ledger-detected no-op")
     val victims = docs.filter($"doc_id" % 7 === 3).select($"doc_id")
-    assert(Retrieval.deleteFromSubstringIndex(victims, idx, 1L))
-    assert(!Retrieval.deleteFromSubstringIndex(victims, idx, 1L),
+    assert(Retrieval.Trigram.deleteFrom(victims, idx, 1L))
+    assert(!Retrieval.Trigram.deleteFrom(victims, idx, 1L),
       "a replayed delete must be a ledger-detected no-op")
     val surviving = docs.filter($"doc_id" % 7 =!= 3)
     val fresh = tmpDir("trgm-fresh")
-    Retrieval.writeSubstringIndex(surviving, fresh)
+    Retrieval.Trigram.write(surviving, fresh)
     for (n <- Seq(Retrieval.ProbeNeedle, "w merge")) {
       val evolved = Retrieval.substringSearch(spark, idx, surviving, n)
         .as[(Long, Long)].collect().toSeq
@@ -872,7 +872,7 @@ class RetrievalSpec extends SparkSpec {
     "index identically to a corpus-direct recompute — 2 and 3 words, " +
     "tight and loose windows, absent words") {
     val idx = tmpDir("near-idx")
-    Retrieval.writeNearIndex(Tables.documents(spark, sf0001), idx)
+    Retrieval.Near.write(Tables.documents(spark, sf0001), idx)
     for ((ws, win) <- Seq(
         (Seq("hash", "join", "key"), 8),
         (Seq("hash", "join", "key"), 3), // tight: only the exact phrase
@@ -898,7 +898,7 @@ class RetrievalSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
     val phraseDocs = Retrieval.phraseTopK(spark,
       { val p = tmpDir("near-phrase-idx")
-        Retrieval.writePhraseIndex(Tables.documents(spark, sf0001), p); p },
+        Retrieval.Phrase.write(Tables.documents(spark, sf0001), p); p },
       Retrieval.ProbePhrase, k = 1000)
       .select($"doc_id").as[Long].collect().toSet
     assert(phraseDocs.subsetOf(tight.map(_._1).toSet),
@@ -911,16 +911,16 @@ class RetrievalSpec extends SparkSpec {
     "carries a STATIC bucket PartitionFilter of at most |words| dirs") {
     val docs = Tables.documents(spark, sf0001)
     val idx = tmpDir("near-lifecycle")
-    Retrieval.writeNearIndex(docs.filter($"doc_id" % 5 =!= 4), idx)
-    assert(Retrieval.appendToNearIndex(
+    Retrieval.Near.write(docs.filter($"doc_id" % 5 =!= 4), idx)
+    assert(Retrieval.Near.appendTo(
       docs.filter($"doc_id" % 5 === 4), idx, 0L))
-    assert(!Retrieval.appendToNearIndex(
+    assert(!Retrieval.Near.appendTo(
       docs.filter($"doc_id" % 5 === 4), idx, 0L),
       "a replayed fold must be a ledger-detected no-op")
     val victims = docs.filter($"doc_id" % 7 === 3).select($"doc_id")
-    assert(Retrieval.deleteFromNearIndex(victims, idx, 1L))
+    assert(Retrieval.Near.deleteFrom(victims, idx, 1L))
     val fresh = tmpDir("near-fresh")
-    Retrieval.writeNearIndex(docs.filter($"doc_id" % 7 =!= 3), fresh)
+    Retrieval.Near.write(docs.filter($"doc_id" % 7 =!= 3), fresh)
     for ((ws, win) <- Seq((Retrieval.NearWords, Retrieval.NearWindow),
         (Seq("table", "scan"), 4)))
       assert(Retrieval.nearSearch(spark, idx, ws, win)
@@ -974,7 +974,7 @@ class RetrievalSpec extends SparkSpec {
       .select($"doc_id", $"text")
       .union(Seq(falsePos).toDF("doc_id", "text"))
     val idx = tmpDir("trgm-regex")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     def brute(pattern: String) = docs
       .select($"doc_id",
         size(regexp_extract_all($"text", lit(pattern), lit(0)))
@@ -1004,7 +1004,7 @@ class RetrievalSpec extends SparkSpec {
     "shrinks the verify set") {
     val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
     val idx = tmpDir("trgm-fuzzy")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     def brute(term: String, d: Int) = docs
       .select($"doc_id", explode(split($"text", " ")).as("word"))
       .select($"doc_id", $"word",
@@ -1039,7 +1039,7 @@ class RetrievalSpec extends SparkSpec {
     "paths, and the all-grams prune genuinely shrinks the verify set") {
     val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
     val idx = tmpDir("trgm-prefix")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     def brute(p: String) = docs
       .select($"doc_id", explode(split($"text", " ")).as("word"))
       .filter($"word".startsWith(p))
@@ -1065,7 +1065,7 @@ class RetrievalSpec extends SparkSpec {
     "paths — the position-free trigram index needs no reversed twin") {
     val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
     val idx = tmpDir("trgm-suffix")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     def brute(p: String) = docs
       .select($"doc_id", explode(split($"text", " ")).as("word"))
       .filter($"word".endsWith(p))
@@ -1091,9 +1091,9 @@ class RetrievalSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
     val root = tmpDir("sweep")
     Retrieval.writeBm25Index(docs, s"$root/bm25")
-    Retrieval.writeNearIndex(docs, s"$root/near")
-    Retrieval.writePhraseIndex(docs, s"$root/phrase")
-    Retrieval.writeSubstringIndex(docs, s"$root/trgm")
+    Retrieval.Near.write(docs, s"$root/near")
+    Retrieval.Phrase.write(docs, s"$root/phrase")
+    Retrieval.Trigram.write(docs, s"$root/trgm")
     def audit() = Retrieval.takedownAudit(spark, root)
       .as[(String, Long)].collect().toMap
     def counts(d: org.apache.spark.sql.DataFrame) = {
@@ -1145,9 +1145,9 @@ class RetrievalSpec extends SparkSpec {
       .select($"vec_id", $"embedding".as("v"))
     val root = tmpDir("sweep-all")
     Retrieval.writeBm25Index(docs, s"$root/bm25")
-    Retrieval.writeNearIndex(docs, s"$root/near")
-    Retrieval.writePhraseIndex(docs, s"$root/phrase")
-    Retrieval.writeSubstringIndex(docs, s"$root/trgm")
+    Retrieval.Near.write(docs, s"$root/near")
+    Retrieval.Phrase.write(docs, s"$root/phrase")
+    Retrieval.Trigram.write(docs, s"$root/trgm")
     graft.operators.Similarity.writeIvfIndex(e, s"$root/ann")
     val hashes = Multimodal.perceptualHashes(
       Multimodal.plantedImages(spark, sf0001),
@@ -1194,7 +1194,7 @@ class RetrievalSpec extends SparkSpec {
     "bucket PartitionFilter listing at most |grams| bucket dirs") {
     val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
     val idx = tmpDir("trgm-prune")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     val plan = Retrieval.substringSearch(spark, idx, docs,
       Retrieval.ProbeNeedle).queryExecution.sparkPlan
     val scan = plan.collect {

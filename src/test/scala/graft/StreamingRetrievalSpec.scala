@@ -373,7 +373,7 @@ class StreamingRetrievalSpec extends SparkSpec {
 
     // search side: serve from a full persisted index
     val idx = tmpDir("phrase-stream-idx")
-    Retrieval.writePhraseIndex(docs, idx)
+    Retrieval.Phrase.write(docs, idx)
     val out = tmpDir("sphrase-out")
     val in = MemoryStream[(Long, String)]
     val q = StreamingRetrieval.startPhrase(
@@ -397,7 +397,7 @@ class StreamingRetrievalSpec extends SparkSpec {
 
     // ingest side: half-seeded index grows to the full-corpus answer
     val grown = tmpDir("phrase-stream-grown")
-    Retrieval.writePhraseIndex(docs.filter($"doc_id" % 2 === 0), grown)
+    Retrieval.Phrase.write(docs.filter($"doc_id" % 2 === 0), grown)
     val newDocs = docs.filter($"doc_id" % 2 === 1)
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
       .as[(Long, String, String, String, Long)].collect().toSeq
@@ -437,7 +437,7 @@ class StreamingRetrievalSpec extends SparkSpec {
 
     // search side: serve from a full persisted index
     val idx = tmpDir("trgm-stream-idx")
-    Retrieval.writeSubstringIndex(docs, idx)
+    Retrieval.Trigram.write(docs, idx)
     val out = tmpDir("strgm-out")
     val in = MemoryStream[(Long, String)]
     val q = StreamingRetrieval.startSubstring(
@@ -466,7 +466,7 @@ class StreamingRetrievalSpec extends SparkSpec {
     // ingest side: half-seeded index grows to the full-corpus answer,
     // compaction folds the postings into one c-dir
     val grown = tmpDir("trgm-stream-grown")
-    Retrieval.writeSubstringIndex(docs.filter($"doc_id" % 2 === 0), grown)
+    Retrieval.Trigram.write(docs.filter($"doc_id" % 2 === 0), grown)
     val newDocs = docs.filter($"doc_id" % 2 === 1)
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
       .as[(Long, String, String, String, Long)].collect().toSeq
@@ -503,9 +503,9 @@ class StreamingRetrievalSpec extends SparkSpec {
       .select($"doc_id", $"text")
     val root = tmpDir("ssweep")
     Retrieval.writeBm25Index(docs, s"$root/bm25")
-    Retrieval.writeNearIndex(docs, s"$root/near")
-    Retrieval.writePhraseIndex(docs, s"$root/phrase")
-    Retrieval.writeSubstringIndex(docs, s"$root/trgm")
+    Retrieval.Near.write(docs, s"$root/near")
+    Retrieval.Phrase.write(docs, s"$root/phrase")
+    Retrieval.Trigram.write(docs, s"$root/trgm")
     def audit() = Retrieval.takedownAudit(spark, root)
       .as[(String, Long)].collect().toMap
     val full = audit()
