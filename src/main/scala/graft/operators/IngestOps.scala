@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * Input: a DataFrame of `RawFetch` rows (geo_name, lat, lon, payload)
   * plus run-constant `date`/`time` strings (P8/P9 — ONE timestamp per
   * run, stamped by the caller, so the 4-key join works;
-  * `deployment_function.py:58-63`).
+  * `deployment_function.py:58-63`). The stamp may also be given as
+  * columns, for inputs whose records carry their own run's stamp (the
+  * streaming backlog).
   *
   * Malformed payloads (missing `flowSegmentData`, empty `weather` array)
   * null out under PERMISSIVE `from_json` and are dropped — the Spark
@@ -29,6 +31,9 @@ object IngestOps {
     * traffic_table rows.
     */
   def trafficFromRaw(raw: DataFrame, runDate: String, runTime: String)
+      : DataFrame = trafficFromRaw(raw, lit(runDate), lit(runTime))
+
+  def trafficFromRaw(raw: DataFrame, runDate: Column, runTime: Column)
       : DataFrame = {
     val parsed = raw.withColumn("j",
       from_json(col("payload"), Schemas.tomtomSchema))
@@ -40,8 +45,8 @@ object IngestOps {
       .filter(f.isNotNull && coords.isNotNull && size(coords) >= 1 &&
         f.getField("currentSpeed").isNotNull) // P12: drop bad records
       .select(
-        lit(runDate).as("date"), // P8/P9: run-constant stamp
-        lit(runTime).as("time"),
+        runDate.as("date"), // P8/P9: run-constant stamp
+        runTime.as("time"),
         col("geo_name"),
         col("lat").as("latitude"),
         col("lon").as("longitude"),
@@ -64,6 +69,9 @@ object IngestOps {
     * `deployment_function.py:140-143`).
     */
   def weatherFromRaw(raw: DataFrame, runDate: String, runTime: String)
+      : DataFrame = weatherFromRaw(raw, lit(runDate), lit(runTime))
+
+  def weatherFromRaw(raw: DataFrame, runDate: Column, runTime: Column)
       : DataFrame = {
     val parsed = raw.withColumn("j",
       from_json(col("payload"), Schemas.openWeatherSchema))
@@ -76,8 +84,8 @@ object IngestOps {
         size(j.getField("weather")) >= 1 && m.isNotNull &&
         m.getField("temp").isNotNull) // P12
       .select(
-        lit(runDate).as("date"),
-        lit(runTime).as("time"),
+        runDate.as("date"),
+        runTime.as("time"),
         col("geo_name"),
         j.getField("sys").getField("country").as("country"),
         j.getField("name").as("city_area_name"),

@@ -2016,8 +2016,7 @@ object Similarity {
       cents, nprobe)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cent_id"))
     // Driver-side probe-cell list: bounded by the CELL COUNT K whatever
-    // the batch size (distinct of a partition-key domain), the same
-    // class as StreamingIngest's micro-batch stamp collect. Collecting
+    // the batch size (distinct of a partition-key domain). Collecting
     // it is what turns the cell prune into a static PartitionFilter
     // instead of a runtime join. When a large query batch probes
     // (nearly) every cell the filter prunes nothing — skip it outright

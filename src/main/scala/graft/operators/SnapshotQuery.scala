@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.schema.Schemas
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The flagship snapshot query (`bigquery_scheduled_query.sql:1-17`):
   *
@@ -20,6 +23,10 @@ import org.apache.spark.sql.functions._
   * size. Date+time parse: one `to_timestamp(concat_ws(...))` replaces
   * PARSE_DATE + PARSE_TIME + DATETIME (D1–D3) with identical ordering
   * semantics (strings are zero-padded fixed-width).
+  *
+  * The hourly refresh over the on-disk history ([[publishLatest]])
+  * prunes one step earlier, at the file listing: it reads only the
+  * newest `date=` partition of each table.
   */
 object SnapshotQuery {
 
@@ -49,4 +56,69 @@ object SnapshotQuery {
       |WHERE to_timestamp(concat_ws(' ', date, time), 'yyyy-MM-dd HH:mm') =
       |  (SELECT MAX(to_timestamp(concat_ws(' ', date, time), 'yyyy-MM-dd HH:mm'))
       |   FROM traffic_table)""".stripMargin)
+
+  /** The hourly snapshot refresh over the date-partitioned history
+    * tables (K2): publishes the latest traffic hour joined with its
+    * weather rows to `snapshotPath` and returns the published row count.
+    * Returns 0 and publishes nothing while either table root is absent.
+    *
+    * Equal to [[latestJoined]] over the full-history read, but lists and
+    * scans one date partition, so the hourly cost does not grow with the
+    * append-forever history: the pipeline's zero-padded `yyyy-MM-dd`
+    * stamps sort lexicographically in timestamp order, so the global
+    * MAX lies in the newest `date=` dir that has a non-NULL one (a dir
+    * left empty by a crashed append falls back to the one before it).
+    * The MAX still reads traffic only, and weather is restricted to the
+    * same date, which is a join key — no dir there means no match, so
+    * the snapshot is empty, exactly as the full-history query answers.
+    */
+  def publishLatest(spark: SparkSession, trafficPath: String,
+      weatherPath: String, snapshotPath: String): Long = {
+    val trafficRoot = new Path(trafficPath)
+    val weatherRoot = new Path(weatherPath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def exists(p: Path) = p.getFileSystem(conf).exists(p)
+    if (!exists(trafficRoot) || !exists(weatherRoot)) return 0L
+
+    def empty(schema: StructType) =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    // `basePath` keeps `date` a partition column while listing one dir.
+    def day(root: Path, schema: StructType, dir: String): DataFrame =
+      if (!exists(new Path(root, dir))) empty(schema)
+      else spark.read.schema(schema).option("basePath", root.toString)
+        .parquet(new Path(root, dir).toString)
+    val newestFirst = trafficRoot.getFileSystem(conf).listStatus(trafficRoot)
+      .map(_.getPath.getName).filter(_.startsWith("date="))
+      .sortBy(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix("date=")))
+      .reverse
+    // The MAX as a descending top-1: one job, where an aggregate adds a
+    // shuffle stage.
+    def maxTs(traffic: DataFrame): Option[Any] =
+      traffic.select(tsExpr().as("ts")).where(col("ts").isNotNull)
+        .orderBy(col("ts").desc).limit(1).collect().headOption.map(_.get(0))
+    val latest = newestFirst.iterator.map { dir =>
+      val traffic = day(trafficRoot, Schemas.trafficTableSchema, dir)
+      (dir, traffic, maxTs(traffic))
+    }.collectFirst { case (dir, traffic, Some(mx)) => (dir, traffic, mx) }
+
+    val joined = latest match {
+      case Some((dir, traffic, mx)) =>
+        traffic.filter(tsExpr() === lit(mx)).join(
+          day(weatherRoot, Schemas.weatherTableSchema, dir)
+            .filter(tsExpr() === lit(mx)),
+          Schemas.joinKeys, "inner")
+      case None => // no traffic row has a timestamp: the MAX is NULL
+        empty(Schemas.trafficTableSchema)
+          .join(empty(Schemas.weatherTableSchema), Schemas.joinKeys, "inner")
+    }
+    // Overwrite even when empty: the reference's scheduled query replaces
+    // latest_joined_data with whatever the join returns. Staged write +
+    // swap, so a concurrent snapshot reader never sees a partial snapshot.
+    // The row count rides on the publishing write instead of a
+    // cache()+count() job.
+    val rows = Observation()
+    Layout.publishOverwrite(
+      joined.observe(rows, count(lit(1)).as("rows")), snapshotPath)
+    rows.get("rows").asInstanceOf[Long]
+  }
 }

@@ -1,14 +1,13 @@
 package graft.pipeline
 
 import graft.operators.{IngestOps, SnapshotQuery}
-import graft.schema.{GeoPoint, RawFetch, Schemas}
+import graft.schema.{GeoPoint, RawFetch}
 import graft.sources.HttpJsonSource
 import graft.sources.HttpJsonSource.Fetcher
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import java.time.ZonedDateTime
 import java.time.format.DateTimeFormatter
-import scala.util.Try
 
 /** The hourly micro-batch run (SURVEY.md §2.8 O1–O5, §3 entry points 1+2):
   * fetch → transform → append, then the snapshot query → overwrite.
@@ -73,20 +72,23 @@ object IngestPipeline {
       HttpJsonSource.fetchAll(cfg.weatherUrlTemplate, cfg.points, retrying)
 
     // Transform + K1 append, with K3 empty suppression and K4 isolation.
+    // The rows are driver-local: the transform over a LocalRelation folds
+    // to a LocalRelation, so `collect()` runs no job and a non-empty
+    // stage costs exactly its one write.
     def appendStage(raw: Seq[RawFetch],
         transform: DataFrame => DataFrame, path: String): Long =
       if (raw.isEmpty) 0L
       else {
-        val out = transform(toDf(spark, raw)).cache()
-        val n = out.count()
+        val out = transform(toDf(spark, raw))
+        val rows = out.collect()
         // Hive-style date partitioning: each hourly append lands in its
         // run-date directory, so history queries with a date predicate
         // prune at the file listing — the layout choice that keeps the
         // append-forever table queryable at 100 TB (SURVEY.md §4).
-        if (n > 0) out.write.mode(SaveMode.Append)
-          .partitionBy("date").parquet(path)
-        out.unpersist()
-        n
+        if (rows.nonEmpty)
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            .write.mode(SaveMode.Append).partitionBy("date").parquet(path)
+        rows.length.toLong
       }
 
     val nT = appendStage(trafficRaw,
@@ -94,31 +96,16 @@ object IngestPipeline {
     val nW = appendStage(weatherRaw,
       IngestOps.weatherFromRaw(_, date, time), cfg.weatherPath)
 
-    // Entry point 2: snapshot query over FULL table history → K2 overwrite.
+    // Entry point 2: the latest-snapshot query → K2 overwrite, reading
+    // only the newest date partition of each history table.
     // The reference's scheduled query reruns every hour UNCONDITIONALLY
     // (README.md:83-84), so the refresh is guarded only on the history
-    // tables being readable — not on this run having appended traffic
-    // rows. A run whose traffic fetches all fail but whose weather rows
-    // land must still refresh: a late-arriving weather row for the
-    // latest traffic hour belongs in the snapshot.
-    val nS = {
-        val traffic = Try(spark.read.schema(Schemas.trafficTableSchema)
-          .parquet(cfg.trafficPath)).getOrElse(null)
-        val weather = Try(spark.read.schema(Schemas.weatherTableSchema)
-          .parquet(cfg.weatherPath)).getOrElse(null)
-        if (traffic == null || weather == null) 0L
-        else {
-          val snap = SnapshotQuery.latestJoined(traffic, weather).cache()
-          val n = snap.count()
-          // Overwrite even when empty: the reference's scheduled query
-          // replaces latest_joined_data with whatever the join returns.
-          // Staged write + swap, so a concurrent snapshot reader never
-          // sees the delete-then-write gap of a plain Overwrite.
-          graft.operators.Layout.publishOverwrite(snap, cfg.snapshotPath)
-          snap.unpersist()
-          n
-        }
-      }
+    // tables existing — not on this run having appended traffic rows. A
+    // run whose traffic fetches all fail but whose weather rows land
+    // must still refresh: a late-arriving weather row for the latest
+    // traffic hour belongs in the snapshot.
+    val nS = SnapshotQuery.publishLatest(spark, cfg.trafficPath,
+      cfg.weatherPath, cfg.snapshotPath)
 
     RunReport(date, time, nT, nW, nS,
       (tFail ++ wFail).map { case (p, e) => p.geo_name -> e.getMessage },

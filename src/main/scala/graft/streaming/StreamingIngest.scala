@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.operators.{IngestOps, SnapshotQuery}
-import graft.schema.Schemas
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -21,8 +21,9 @@ import org.apache.spark.sql.types._
   * The snapshot is maintained by `foreachBatch` overwrite — the streaming
   * analogue of the hourly scheduled query (K2 / outputMode complete).
   * No watermarks: the reference is stateless by construction
-  * (SURVEY.md §2.9); every micro-batch recomputes "latest" from the full
-  * appended history.
+  * (SURVEY.md §2.9); every micro-batch recomputes "latest" from the
+  * appended history, reading only its newest date partition
+  * (`SnapshotQuery.publishLatest`).
   */
 object StreamingIngest {
 
@@ -49,47 +50,28 @@ object StreamingIngest {
       .start()
   }
 
-  /** One micro-batch: split by data_type, run the same batch transforms
-    * per distinct run stamp, append, then recompute the snapshot.
+  /** One micro-batch: split by data_type, run the batch transforms once
+    * per table with each record's own run stamp, append once per table,
+    * then republish the snapshot from the newest date partition. A
+    * backlog of several hours appends in one write per table: the
+    * `date` partitioning puts each stamp in its own directory.
     */
   private[streaming] def writeMicroBatch(batch: DataFrame, trafficPath: String,
       weatherPath: String, snapshotPath: String): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return // K3
-    // Driver-side collect is BOUNDED: rows here are distinct run stamps,
-    // and the run-constant-timestamp semantics (P9) put every record of
-    // an hourly run under ONE stamp — a micro-batch holds ≈1 stamp (a
-    // handful after downtime catch-up, ≤ hours-of-backlog, never
-    // O(records)).
-    val stamps = batch.select("date", "time").distinct().collect()
-    stamps.foreach { r =>
-      val (d, t) = (r.getString(0), r.getString(1))
-      val slice = batch.filter(
-        batch("date") === d && batch("time") === t).cache()
-      val traffic = IngestOps.trafficFromRaw(
-        slice.filter(slice("data_type") === "traffic"), d, t)
-      if (!traffic.isEmpty)
-        traffic.write.mode(SaveMode.Append)
-          .partitionBy("date").parquet(trafficPath)
-      val weather = IngestOps.weatherFromRaw(
-        slice.filter(slice("data_type") === "weather"), d, t)
-      if (!weather.isEmpty)
-        weather.write.mode(SaveMode.Append)
-          .partitionBy("date").parquet(weatherPath)
-      slice.unpersist()
+    // A record without a run stamp belongs to no hour: dropped, never
+    // written under `__HIVE_DEFAULT_PARTITION__`.
+    val stamped = batch.filter(col("date").isNotNull && col("time").isNotNull)
+    def append(dataType: String,
+        transform: (DataFrame, Column, Column) => DataFrame, path: String): Unit = {
+      val out = transform(stamped.filter(col("data_type") === dataType),
+        col("date"), col("time"))
+      if (!out.isEmpty) // K3
+        out.write.mode(SaveMode.Append).partitionBy("date").parquet(path)
     }
-    refreshSnapshot(spark, trafficPath, weatherPath, snapshotPath)
-  }
-
-  private def refreshSnapshot(spark: SparkSession, trafficPath: String,
-      weatherPath: String, snapshotPath: String): Unit = {
-    val traffic = scala.util.Try(
-      spark.read.schema(Schemas.trafficTableSchema).parquet(trafficPath))
-    val weather = scala.util.Try(
-      spark.read.schema(Schemas.weatherTableSchema).parquet(weatherPath))
-    for (t <- traffic; w <- weather)
-      // staged write + swap: readers never see a partial snapshot (K2)
-      graft.operators.Layout.publishOverwrite(
-        SnapshotQuery.latestJoined(t, w), snapshotPath)
+    append("traffic", IngestOps.trafficFromRaw, trafficPath)
+    append("weather", IngestOps.weatherFromRaw, weatherPath)
+    SnapshotQuery.publishLatest(batch.sparkSession, trafficPath, weatherPath,
+      snapshotPath)
   }
 }

@@ -5,6 +5,7 @@ import graft.pipeline.IngestPipeline.Config
 import graft.schema.GeoPoint
 import graft.sources.HttpJsonSource
 
+import java.nio.file.{Files, Paths}
 import java.time.{ZoneId, ZonedDateTime}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.util.{Failure, Success, Try}
@@ -82,6 +83,17 @@ class PipelineSpec extends SparkSpec {
     assert(r.trafficRows == 0 && r.weatherRows == 0 && r.snapshotRows == 0)
     assert(r.failures.length == 6)
     assert(Try(spark.read.parquet(s"$base/traffic_table").count()).isFailure)
+  }
+
+  test("all payloads malformed: 0 rows and no history dir is created (K3)") {
+    val base = tmpDir("pipeline")
+    val garbage: HttpJsonSource.Fetcher = (_, _) => Success(Fixtures.notJson)
+    val r = IngestPipeline.run(spark, cfg(base), garbage, hour1)
+    assert(r.trafficRows == 0 && r.weatherRows == 0 && r.snapshotRows == 0)
+    assert(r.failures.isEmpty)
+    assert(!Files.exists(Paths.get(base, "traffic_table")))
+    assert(!Files.exists(Paths.get(base, "weather_table")))
+    assert(!Files.exists(Paths.get(base, "latest_joined_data")))
   }
 
   test("malformed payloads drop per-record, run continues (P12/K4)") {

@@ -442,29 +442,30 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Bucketed: true"), p)
   }
 
+  private def ingestConfig(base: String) = graft.pipeline.IngestPipeline.Config(
+    trafficUrlTemplate = "traffic://{lat},{lon}?key={key}",
+    weatherUrlTemplate = "weather://{lat},{lon}?key={key}",
+    points = Fixtures.geoPoints,
+    trafficPath = s"$base/traffic_table",
+    weatherPath = s"$base/weather_table",
+    snapshotPath = s"$base/latest_joined_data",
+    retryDelayMillis = 0L)
+  private val ingestDay1 = java.time.ZonedDateTime.of(2026, 8, 12, 9, 0, 0, 0,
+    java.time.ZoneId.of("UTC"))
+  /** Well-formed payloads, except for the APIs named in `down`, which fail. */
+  private def ingestFetch(down: String*): graft.sources.HttpJsonSource.Fetcher =
+    (url, _) =>
+      if (down.exists(url.startsWith)) scala.util.Failure(new RuntimeException("down"))
+      else scala.util.Success(
+        if (url.startsWith("traffic")) Fixtures.tomtom() else Fixtures.openWeather())
+
   test("ingest history: a date predicate prunes partitions at the scan " +
     "(the 100-TB guard for the only append-forever table)") {
     import graft.pipeline.IngestPipeline
-    import graft.pipeline.IngestPipeline.Config
-    import graft.sources.HttpJsonSource
-    import java.time.{ZoneId, ZonedDateTime}
     import org.apache.spark.sql.functions.col
-    val base = tmpDir("prune")
-    val c = Config(
-      trafficUrlTemplate = "traffic://{lat},{lon}?key={key}",
-      weatherUrlTemplate = "weather://{lat},{lon}?key={key}",
-      points = Fixtures.geoPoints,
-      trafficPath = s"$base/traffic_table",
-      weatherPath = s"$base/weather_table",
-      snapshotPath = s"$base/latest_joined_data",
-      retryDelayMillis = 0L)
-    val fetch: HttpJsonSource.Fetcher = (url, _) =>
-      scala.util.Success(
-        if (url.startsWith("traffic")) Fixtures.tomtom()
-        else Fixtures.openWeather())
-    val day1 = ZonedDateTime.of(2026, 8, 12, 9, 0, 0, 0, ZoneId.of("UTC"))
-    IngestPipeline.run(spark, c, fetch, day1)
-    IngestPipeline.run(spark, c, fetch, day1.plusDays(1))
+    val c = ingestConfig(tmpDir("prune"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1))
     val q = spark.read.parquet(c.trafficPath).filter(col("date") === "2026-08-12")
     // the predicate must land in PartitionFilters (directory-level file
     // listing prune), NOT PushedFilters (row-group skipping after listing)
@@ -478,6 +479,78 @@ class PlanSpec extends SparkSpec {
     // selected for the scan's file listing
     assert(scans.head.selectedPartitions.partitionCount == 1)
     assert(q.count() == 3)
+  }
+
+  test("ingest snapshot: every scan of the hourly refresh lists ONE date " +
+    "partition, the newest (the per-hour 100-TB guard)") {
+    import graft.pipeline.IngestPipeline
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val c = ingestConfig(tmpDir("prune"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(ql)
+    val r = try {
+      val r = IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(ql)
+    assert(r.snapshotRows == 3)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+      helper.collectWithSubqueries(p) {
+        case f: FileSourceScanExec => Seq(f)
+        case cr: CommandResultExec => scans(cr.commandPhysicalPlan)
+      }.flatten
+    import scala.jdk.CollectionConverters._
+    val history = plans.asScala.toSeq.flatMap(scans).filter(_.relation.location
+      .rootPaths.exists(p => p.toString.contains(c.trafficPath) ||
+        p.toString.contains(c.weatherPath)))
+    def roots(f: FileSourceScanExec) = f.relation.location.rootPaths.map(_.toString)
+    assert(history.exists(roots(_).exists(_.contains(c.trafficPath))))
+    assert(history.exists(roots(_).exists(_.contains(c.weatherPath))))
+    history.foreach { f =>
+      assert(f.selectedPartitions.partitionCount == 1, roots(f))
+      assert(roots(f).forall(_.endsWith("date=2026-08-13")), roots(f))
+    }
+  }
+
+  test("ingest append: exactly ONE job per non-empty append stage (the " +
+    "transform folds into a LocalRelation, so its collect runs none)") {
+    import graft.pipeline.IngestPipeline
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // With the other API down its table root never exists, so the
+    // snapshot refresh returns before any job: the run's jobs are the
+    // one append stage's.
+    def jobsOf(run: => IngestPipeline.RunReport): (Long, Long, Int) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val r = run
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (r.trafficRows, r.weatherRows, jobs.get())
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      assert(jobsOf(IngestPipeline.run(spark, ingestConfig(tmpDir("jobs")),
+        ingestFetch("weather"), ingestDay1)) == ((3L, 0L, 1)))
+      assert(jobsOf(IngestPipeline.run(spark, ingestConfig(tmpDir("jobs")),
+        ingestFetch("traffic"), ingestDay1)) == ((0L, 3L, 1)))
+      val malformed: graft.sources.HttpJsonSource.Fetcher =
+        (_, _) => scala.util.Success(Fixtures.notJson)
+      assert(jobsOf(IngestPipeline.run(spark, ingestConfig(tmpDir("jobs")),
+        malformed, ingestDay1)) == ((0L, 0L, 0)))
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
   test("q_tpch2 / q_tpch15: the shared view subtree plans ONCE — one " +

@@ -1,8 +1,10 @@
 package graft
 
 import graft.operators.SnapshotQuery
-import graft.schema.{TrafficObservation, WeatherObservation}
-import org.apache.spark.sql.Dataset
+import graft.schema.{Schemas, TrafficObservation, WeatherObservation}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+
+import java.nio.file.{Files, Paths}
 
 class SnapshotQuerySpec extends SparkSpec {
   import spark.implicits._
@@ -75,6 +77,117 @@ class SnapshotQuerySpec extends SparkSpec {
       val geoAtMax = tr.filter(o => (o.date, o.time) == maxKey)
         .map(_.geo_name).distinct
       assert(out.length <= geoAtMax.length)
+    }
+  }
+
+  // ---- publishLatest: the partition-pruned refresh over on-disk history ----
+
+  /** A random history over two months: 4 geo points, 70 % of the
+    * traffic rows with a weather row for the same hour.
+    */
+  private def history(rnd: scala.util.Random)
+      : (Seq[TrafficObservation], Seq[WeatherObservation]) = {
+    val hist = Seq.fill(1 + rnd.nextInt(40)) {
+      (f"2026-0${8 + rnd.nextInt(2)}-${1 + rnd.nextInt(28)}%02d",
+        f"${rnd.nextInt(24)}%02d:00",
+        "abcd" (rnd.nextInt(4)).toString,
+        rnd.nextDouble() < 0.7)
+    }
+    (hist.map { case (d, h, g, _) => t(d, h, g) }.distinct,
+      hist.collect { case (d, h, g, true) => w(d, h, g) }.distinct)
+  }
+
+  /** Appends one write per date, in the given date order — the layout
+    * `IngestPipeline` writes.
+    */
+  private def appendByDate(df: DataFrame, path: String, dates: Seq[String]): Unit =
+    dates.foreach { d =>
+      df.filter(df("date") === d).write.mode(SaveMode.Append)
+        .partitionBy("date").parquet(path)
+    }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(df(_)): _*).collect().map(_.toString).sorted.toSeq
+
+  /** publishLatest's output and count equal latestJoined over the
+    * full-history read.
+    */
+  private def assertExact(base: String): Unit = {
+    val n = SnapshotQuery.publishLatest(spark, s"$base/traffic", s"$base/weather",
+      s"$base/snapshot")
+    val full = SnapshotQuery.latestJoined(
+      spark.read.schema(Schemas.trafficTableSchema).parquet(s"$base/traffic"),
+      spark.read.schema(Schemas.weatherTableSchema).parquet(s"$base/weather"))
+    val published = spark.read.parquet(s"$base/snapshot")
+    assert(rows(published) == rows(full))
+    assert(n == published.count())
+  }
+
+  test("publishLatest equals latestJoined over the full history, whatever " +
+    "order the dates were appended in (newest date before older ones)") {
+    val rnd = new scala.util.Random(7)
+    for (_ <- 1 to 6) {
+      val base = tmpDir("snapshot")
+      val (tr, we) = history(rnd)
+      val dates = (tr.map(_.date) ++ we.map(_.date)).distinct.sorted.reverse
+      appendByDate(ds(tr).toDF(), s"$base/traffic", dates)
+      appendByDate(ds(we).toDF(), s"$base/weather", rnd.shuffle(dates))
+      assertExact(base)
+    }
+  }
+
+  test("publishLatest: no weather dir for the newest date ⇒ empty snapshot, " +
+    "not an older hour") {
+    val rnd = new scala.util.Random(8)
+    for (_ <- 1 to 4) {
+      val base = tmpDir("snapshot")
+      val (tr, we) = history(rnd)
+      val newest = tr.map(_.date).max
+      appendByDate(ds(tr).toDF(), s"$base/traffic", tr.map(_.date).distinct)
+      val older = we.filter(_.date != newest)
+      appendByDate(ds(older).toDF(), s"$base/weather", older.map(_.date).distinct)
+      // the root must exist for a refresh at all
+      if (older.isEmpty) Files.createDirectories(Paths.get(base, "weather"))
+      assertExact(base)
+      assert(spark.read.parquet(s"$base/snapshot").count() == 0)
+    }
+  }
+
+  test("publishLatest: an empty newest date dir (a crashed append) falls " +
+    "back to the previous date") {
+    val rnd = new scala.util.Random(9)
+    for (_ <- 1 to 4) {
+      val base = tmpDir("snapshot")
+      val (tr, we) = history(rnd)
+      appendByDate(ds(tr).toDF(), s"$base/traffic", tr.map(_.date).distinct)
+      appendByDate(ds(we).toDF(), s"$base/weather", we.map(_.date).distinct)
+      Files.createDirectories(Paths.get(base, "traffic", "date=2026-12-31"))
+      Files.createDirectories(Paths.get(base, "weather", "date=2026-12-31"))
+      assertExact(base)
+      val latest = tr.map(o => (o.date, o.time)).max
+      val got = spark.read.parquet(s"$base/snapshot").select("date", "time")
+        .as[(String, String)].collect()
+      assert(got.forall(_ == latest))
+    }
+    // nothing but the empty dir: the MAX is NULL, the snapshot empty
+    val base = tmpDir("snapshot")
+    Files.createDirectories(Paths.get(base, "traffic", "date=2026-12-31"))
+    Files.createDirectories(Paths.get(base, "weather"))
+    assertExact(base)
+    assert(spark.read.parquet(s"$base/snapshot").count() == 0)
+  }
+
+  test("publishLatest: an absent traffic or weather root returns 0 and " +
+    "publishes nothing") {
+    for (absent <- Seq("traffic", "weather")) {
+      val base = tmpDir("snapshot")
+      if (absent != "traffic")
+        appendByDate(ds(traffic).toDF(), s"$base/traffic", Seq("2026-08-12"))
+      if (absent != "weather")
+        appendByDate(ds(weather).toDF(), s"$base/weather", Seq("2026-08-12"))
+      assert(SnapshotQuery.publishLatest(spark, s"$base/traffic", s"$base/weather",
+        s"$base/snapshot") == 0L)
+      assert(!Files.exists(Paths.get(base, "snapshot")))
     }
   }
 }

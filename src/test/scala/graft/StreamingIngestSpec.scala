@@ -99,4 +99,61 @@ class StreamingIngestSpec extends SparkSpec {
     assert(snap.select("geo_name").as[String].collect().toSet ==
       Fixtures.geoPoints.map(_.geo_name).toSet)
   }
+
+  test("one backlog file spanning three stamps across midnight: each stamp " +
+    "lands in its own date dir with its own time, snapshot = newest hour") {
+    val base = tmpDir("stream")
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    val stamps = Seq("2026-08-12" -> "23:00", "2026-08-13" -> "00:00",
+      "2026-08-13" -> "01:00")
+    writeBatchFile(in, "backlog.json", stamps.zipWithIndex.flatMap {
+      case ((d, t), i) =>
+        Seq(rec("a", Fixtures.tomtom(currentSpeed = 30L + i), d, t, "traffic"),
+          rec("a", Fixtures.openWeather(), d, t, "weather"))
+    })
+    StreamingIngest.start(spark, in, s"$base/traffic", s"$base/weather",
+      s"$base/snapshot", s"$base/ckpt").awaitTermination()
+
+    for (table <- Seq("traffic", "weather")) {
+      def timesIn(d: String) = spark.read.parquet(s"$base/$table/date=$d")
+        .select("time").as[String].collect().sorted.toSeq
+      assert(timesIn("2026-08-12") == Seq("23:00"), table)
+      assert(timesIn("2026-08-13") == Seq("00:00", "01:00"), table)
+    }
+    val speeds = spark.read.parquet(s"$base/traffic")
+      .select("date", "time", "current_speed").as[(String, String, Long)]
+      .collect().sorted.toSeq
+    assert(speeds == stamps.zipWithIndex.map { case ((d, t), i) => (d, t, 30L + i) })
+    val snap = spark.read.parquet(s"$base/snapshot")
+      .select("date", "time", "current_speed").as[(String, String, Long)].collect()
+    assert(snap.toSeq == Seq(("2026-08-13", "01:00", 32L)))
+  }
+
+  test("records with a NULL date or NULL time are dropped, never written " +
+    "under __HIVE_DEFAULT_PARTITION__") {
+    val base = tmpDir("stream")
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    def unstamped(r: String, field: String) =
+      r.replaceAll(s""""$field":"[^"]*"""", s""""$field":null""")
+    writeBatchFile(in, "h.json", Seq(
+      rec("a", Fixtures.tomtom(), "2026-08-12", "09:00", "traffic"),
+      rec("a", Fixtures.openWeather(), "2026-08-12", "09:00", "weather"),
+      unstamped(rec("b", Fixtures.tomtom(), "2026-08-12", "09:00", "traffic"), "date"),
+      unstamped(rec("b", Fixtures.openWeather(), "2026-08-12", "09:00", "weather"), "date"),
+      unstamped(rec("c", Fixtures.tomtom(), "2026-08-12", "09:00", "traffic"), "time"),
+      unstamped(rec("c", Fixtures.openWeather(), "2026-08-12", "09:00", "weather"), "time")))
+    StreamingIngest.start(spark, in, s"$base/traffic", s"$base/weather",
+      s"$base/snapshot", s"$base/ckpt").awaitTermination()
+
+    for (table <- Seq("traffic", "weather")) {
+      val dirs = Files.list(Paths.get(base, table)).toArray.map(_.toString)
+        .filter(_.contains("date="))
+      assert(dirs.toSeq.map(_.split('/').last) == Seq("date=2026-08-12"), table)
+      assert(spark.read.parquet(s"$base/$table").select("geo_name").as[String]
+        .collect().toSeq == Seq("a"), table)
+    }
+    assert(spark.read.parquet(s"$base/snapshot").count() == 1)
+  }
 }
