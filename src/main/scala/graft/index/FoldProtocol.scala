@@ -1,8 +1,10 @@
 package graft.index
 
+import graft.operators.Par
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, min}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** The staged-commit state machine shared by graft's nine persisted
   * index kinds (dedup shingle/hash; the BM25, positional phrase,
@@ -492,8 +494,10 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
     * `Similarity.vacuumIvfIndex`): collapse every sub-root with
     * ledger id ≤ `floor` into ONE `c<floor>` dir per side — each
     * side's `stage` callback writes the index's own resolved
-    * as-of-floor content into a dot-staging dir, and ONE atomic
-    * rename lands it (THE commit point: the compaction-supersedes
+    * as-of-floor content into a dot-staging dir (the sides' callbacks
+    * run concurrently on [[graft.operators.Par.runAll]] threads, so
+    * they only write — no lease, no commit), and ONE atomic
+    * rename per side lands it (THE commit point: the compaction-supersedes
     * rule in [[committedDirsOrEmpty]] hides the collapsed sources the
     * instant the c-dir appears) — then reclaim the sources and the
     * absorbed tombstone batches. Horizons ≥ floor serve exactly as
@@ -531,10 +535,16 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
           spentTombstones.isEmpty)
         false // committed no-op: this floor is already fully vacuumed
       else {
-        for (((kind, stage), (kd, target)) <-
-            sides.zip(kindDirs.zip(targets)) if !f.exists(target)) {
-          val staging = new Path(kd, s".c$floor.vacuum")
-          stage(floor, staging.toString)
+        val pending = sides.zip(kindDirs.zip(targets)).collect {
+          case ((kind, stage), (kd, target)) if !f.exists(target) =>
+            (kind, stage, new Path(kd, s".c$floor.vacuum"), target)
+        }
+        // The sides' dot-staging writes are independent: run them
+        // concurrently, then land each by its rename on THIS thread,
+        // the one holding the lease.
+        Par.runAll(pending.map { case (_, stage, staging, _) =>
+          () => stage(floor, staging.toString) }: _*)
+        for ((kind, _, staging, target) <- pending) {
           require(f.rename(staging, target),
             s"vacuum of $root/$kind: rename $staging -> $target failed")
         }
@@ -559,16 +569,12 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
       .filter(d => d.substring(d.lastIndexOf('/') + 1)
         .drop(1).toLong > floor)
     if (survivors.nonEmpty) {
-      // Mirror tombstones(): a legacy hw-less survivor (no `hw` column
-      // at all) reads as Long.MaxValue rather than failing analysis,
-      // and an all-empty survivor set (zero victim rows) yields a null
-      // min — vacuously safe, not an NPE.
-      val t = s.read.parquet(survivors: _*)
-      val hwCol =
-        if (t.columns.contains("hw")) coalesce(col("hw"), lit(Long.MaxValue))
-        else lit(Long.MaxValue)
-      val minHw = t
-        .agg(coalesce(org.apache.spark.sql.functions.min(hwCol),
+      // Only `hw` is read, under a declared schema (no footer-inference
+      // job): a legacy hw-less survivor reads NULL = Long.MaxValue, and
+      // an all-empty survivor set (zero victim rows) yields a null min
+      // — vacuously safe, not an NPE.
+      val minHw = s.read.schema("hw BIGINT").parquet(survivors: _*)
+        .agg(coalesce(min(coalesce(col("hw"), lit(Long.MaxValue))),
           lit(Long.MaxValue)))
         .head().getLong(0)
       val names = survivors
@@ -865,25 +871,25 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
   def stageTombstones(ids: DataFrame, idCol: String, deleteId: Long): Unit =
     ids.select(col(idCol)).distinct()
       .withColumn("hw", lit((allLedgerIds() + 0L).max))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite)
       .parquet(s"$root/tombstones/d$deleteId")
 
-  /** All committed tombstoned (id, hw) rows, or None when no delete
-    * has ever committed (the common case — readers skip the anti-join
-    * entirely). Tombstones written before high-water marks existed
-    * read as hw = Long.MaxValue — the old hide-from-everything
-    * semantics.
+  /** Declared read schema of the tombstone dirs stripped from a frame
+    * whose `idCol` has type `idType`: `(idCol, hw BIGINT)`, so the read
+    * runs no footer-inference job. Integral ids read as BIGINT (Parquet
+    * widens a narrower stored id, and a delete may pass wider ids than
+    * the index holds); other id types as the frame's own. A legacy
+    * tombstone written before high-water marks existed has no `hw`
+    * column and reads it as NULL, which the anti-join treats as
+    * Long.MaxValue — the old hide-from-everything semantics.
     */
-  def tombstones(s: SparkSession): Option[DataFrame] = {
-    val dirs = committedDirsOrEmpty("tombstones")
-    if (dirs.isEmpty) None
-    else {
-      val t = s.read.parquet(dirs: _*)
-      Some(
-        if (t.columns.contains("hw")) t
-        else t.withColumn("hw", lit(Long.MaxValue)))
-    }
-  }
+  private def tombstoneSchema(idCol: String, idType: DataType): StructType =
+    StructType(Seq(
+      StructField(idCol, idType match {
+        case ByteType | ShortType | IntegerType => LongType
+        case t => t
+      }),
+      StructField("hw", LongType)))
 
   /** Serve-side read of an index frame: read every committed sub-dir
     * of `kind` via `readDir`, tag each with its fold order, and
@@ -895,7 +901,8 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
     */
   def readCommittedStripped(s: SparkSession, kind: String, idCol: String)(
       readDir: String => DataFrame): DataFrame =
-    readStrippedFrom(committedDirs(kind), tombstones(s), idCol)(readDir)
+    readStrippedFrom(s, committedDirs(kind),
+      committedDirsOrEmpty("tombstones"), idCol)(readDir)
 
   /** [[readCommittedStripped]] AS OF a ledger horizon: serve the index
     * exactly as it stood after ledger id `asOf` — folds (`b<id>`),
@@ -924,16 +931,8 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
       readDir: String => DataFrame): DataFrame = {
     val dirs = committedDirsAsOf(kind, asOf)
     def name(d: String) = d.substring(d.lastIndexOf('/') + 1)
-    val ts = committedDirsOrEmpty("tombstones")
-      .filter(d => name(d).drop(1).toLong <= asOf) match {
-      case Nil => None
-      case kept =>
-        val t = s.read.parquet(kept: _*)
-        Some(
-          if (t.columns.contains("hw")) t
-          else t.withColumn("hw", lit(Long.MaxValue)))
-    }
-    readStrippedFrom(dirs, ts, idCol)(readDir)
+    readStrippedFrom(s, dirs, committedDirsOrEmpty("tombstones")
+      .filter(d => name(d).drop(1).toLong <= asOf), idCol)(readDir)
   }
 
   /** [[committedDirs]] restricted to a ledger horizon, with
@@ -959,25 +958,29 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
   }
 
   /** Shared serve core: union `dirs` tagged with their fold order,
-    * anti-join the given tombstone frame scoped by ledger order.
+    * anti-join the tombstone dirs `tsDirs` (none: no join at all)
+    * scoped by ledger order.
     */
-  private def readStrippedFrom(dirs: Seq[String], ts: Option[DataFrame],
-      idCol: String)(readDir: String => DataFrame): DataFrame = {
+  private def readStrippedFrom(s: SparkSession, dirs: Seq[String],
+      tsDirs: Seq[String], idCol: String)(
+      readDir: String => DataFrame): DataFrame = {
     val frames = dirs.map { d =>
       val name = d.substring(d.lastIndexOf('/') + 1)
       readDir(d).withColumn("_fold_ord", lit(dirOrd(name)))
     }
     val tagged = frames.reduce(_.union(_))
-    ts match {
-      case None => tagged.drop("_fold_ord")
-      case Some(t) =>
-        val tt = t.select(col(idCol).as("_ts_id"),
+    if (tsDirs.isEmpty) tagged.drop("_fold_ord")
+    else {
+      val tt = s.read
+        .schema(tombstoneSchema(idCol, tagged.schema(idCol).dataType))
+        .parquet(tsDirs: _*)
+        .select(col(idCol).as("_ts_id"),
           coalesce(col("hw"), lit(Long.MaxValue)).as("_ts_hw"))
-        tagged.join(tt,
-            tagged(idCol) === tt("_ts_id") &&
-              tagged("_fold_ord") <= tt("_ts_hw"),
-            "left_anti")
-          .drop("_fold_ord")
+      tagged.join(tt,
+          tagged(idCol) === tt("_ts_id") &&
+            tagged("_fold_ord") <= tt("_ts_hw"),
+          "left_anti")
+        .drop("_fold_ord")
     }
   }
 
@@ -1344,6 +1347,29 @@ object FoldProtocol {
     fc.rename(f.makeQualified(src), f.makeQualified(dst),
       Options.Rename.OVERWRITE)
   }
+
+  /** The one partitioned index write: `df` hash-clustered into exactly
+    * `spark.sql.shuffle.partitions` slots on `partCol` (plus `sliceBy`,
+    * which spreads one large partition value over several writers),
+    * then written hive-partitioned by `partCol` at `dir` in overwrite
+    * mode, so a replayed stage rewrites the same dir. Clustering by the
+    * partition value keeps each value's rows in few tasks, so a
+    * partition dir holds a few files, not one sliver per task.
+    * Repartitioning BY NUMBER is deliberate: AQE never coalesces that
+    * shuffle, so the write always runs the session's shuffle
+    * parallelism — a small fold into an index with many cells writes
+    * its cell files from every core instead of serially from one
+    * coalesced task, and a cluster-sized session fans out to the
+    * cluster.
+    */
+  def writePartitioned(df: DataFrame, dir: String, partCol: String,
+      sliceBy: Column*): Unit =
+    df.repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col(partCol) +: sliceBy: _*)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(partCol)
+      .parquet(dir)
 
   /** Publish `staging` at `target`: rename the live dir aside, rename
     * staging into place, then delete the old data — readers see the

@@ -596,16 +596,19 @@ object Dedup {
     val exploded = Par.fanOut(docs)
       .select(col("doc_id"), explode(shingles3(col("text"))).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
-    exploded.write.mode(SaveMode.Overwrite).parquet(s"$path/shingles/seed")
-    // Pre-aggregated per-shingle document frequency: the query-time stop
-    // list needs df(history) + df(incoming) per key, and reading this
-    // (shh, df) summary beats re-aggregating the full pair frame every
-    // batch — the pairs are then scanned exactly ONCE per batch (for
-    // candidate generation).
-    exploded.groupBy(col("shh")).agg(count(lit(1)).as("df"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/df")
-    docs.select(col("doc_id"), md5(col("text")).as("h"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/hashes/seed")
+    // The three frames are independent writes: overlapped.
+    Par.runAll(
+      () => exploded.write.mode(SaveMode.Overwrite)
+        .parquet(s"$path/shingles/seed"),
+      // Pre-aggregated per-shingle document frequency: the query-time
+      // stop list needs df(history) + df(incoming) per key, and reading
+      // this (shh, df) summary beats re-aggregating the full pair frame
+      // every batch — the pairs are then scanned exactly ONCE per batch
+      // (for candidate generation).
+      () => exploded.groupBy(col("shh")).agg(count(lit(1)).as("df"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$path/df"),
+      () => docs.select(col("doc_id"), md5(col("text")).as("h"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$path/hashes/seed"))
   }
 
   // ---- index sub-frame layout: `shingles/` and `hashes/` hold ONLY
@@ -641,8 +644,23 @@ object Dedup {
     */
   private def indexFrame(s: SparkSession, path: String,
       sub: String): DataFrame =
-    protocol(path).readCommittedStripped(s, sub, "doc_id")(d =>
-      s.read.parquet(d))
+    protocol(path).readCommittedStripped(s, sub, "doc_id")(readSub(s, sub))
+
+  /** Declared read schemas of the index frames, so no read runs a
+    * footer-inference job. Document ids are integral (a narrower stored
+    * id widens to BIGINT on read).
+    */
+  private val FrameSchemas = Map(
+    "shingles" -> "doc_id BIGINT, shh BIGINT",
+    "hashes" -> "doc_id BIGINT, h STRING")
+  private val DfSchema = "shh BIGINT, df BIGINT"
+
+  /** Reader of one committed sub-dir of frame `sub`. */
+  private def readSub(s: SparkSession, sub: String)(dir: String): DataFrame =
+    s.read.schema(FrameSchemas(sub)).parquet(dir)
+
+  private def readDf(s: SparkSession, path: String): DataFrame =
+    s.read.schema(DfSchema).parquet(protocol(path).dir("df"))
 
   /** Fold batch `batchId` into a persisted index, EXACTLY ONCE under
     * replay (the per-batch lifecycle step: after
@@ -687,16 +705,16 @@ object Dedup {
     */
   private[graft] def stageBatchFold(docs: DataFrame, path: String,
       batchId: Long): DataFrame = {
-    val s = docs.sparkSession
     val p = protocol(path)
+    val (shDir, hDir) =
+      (s"${p.dir("shingles")}/b$batchId", s"${p.dir("hashes")}/b$batchId")
     val exploded = Par.fanOut(docs)
       .select(col("doc_id"), explode(shingles3(col("text"))).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
-    exploded.write.mode(SaveMode.Overwrite)
-      .parquet(s"${p.dir("shingles")}/b$batchId")
-    docs.select(col("doc_id"), md5(col("text")).as("h"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"${p.dir("hashes")}/b$batchId")
+    Par.runAll(
+      () => exploded.write.mode(SaveMode.Overwrite).parquet(shDir),
+      () => docs.select(col("doc_id"), md5(col("text")).as("h"))
+        .write.mode(SaveMode.Overwrite).parquet(hDir))
     exploded.groupBy(col("shh")).agg(count(lit(1)).as("df"))
   }
 
@@ -704,26 +722,30 @@ object Dedup {
     * and publish summary + grown ledger in one directory swap.
     */
   private[graft] def commitBatchFold(incDf: DataFrame, path: String,
-      batchId: Long): Unit =
-    publishDfMerge(incDf, path, batchId.toString)
+      batchId: Long): Unit = {
+    stageDfMerge(incDf, path)
+    publishDf(path, batchId.toString)
+  }
 
-  /** Merge a (possibly negative) df delta into the summary and publish
-    * summary + grown ledger in ONE manifest commit — the shared commit
-    * point of folds AND deletes (the ledger rides the staged df
-    * generation, so the single pointer-file replace is atomic for
-    * both: a crash anywhere leaves the manifest naming a complete df
-    * dir whose embedded ledger matches it exactly). Keys whose count
-    * reaches 0 are dropped (only reachable via deletes).
+  /** Stage the summary with a (possibly negative) df delta merged in at
+    * `.df.staging`. Keys whose count reaches 0 are dropped (only
+    * reachable via deletes). A plain write — [[publishDf]] commits it.
     */
-  private def publishDfMerge(delta: DataFrame, path: String,
-      entry: String): Unit = {
-    val s = delta.sparkSession
-    val p = protocol(path)
-    s.read.parquet(p.dir("df"))
+  private def stageDfMerge(delta: DataFrame, path: String): Unit =
+    readDf(delta.sparkSession, path)
       .union(delta)
       .groupBy(col("shh")).agg(sum(col("df")).as("df"))
       .filter(col("df") =!= 0)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/.df.staging")
+
+  /** Publish the staged summary + grown ledger in ONE manifest commit —
+    * the shared commit point of folds AND deletes (the ledger rides the
+    * staged df generation, so the single pointer-file replace is atomic
+    * for both: a crash anywhere leaves the manifest naming a complete
+    * df dir whose embedded ledger matches it exactly).
+    */
+  private def publishDf(path: String, entry: String): Unit = {
+    val p = protocol(path)
     p.writeLedgerInto(".df.staging", entry)
     p.publishDir(".df.staging", "df")
   }
@@ -751,12 +773,16 @@ object Dedup {
       if (p.deletedBatches().contains(deleteId)) false
       else {
         val s = ids.sparkSession
-        p.stageTombstones(ids, "doc_id", deleteId)
-        val negDf = indexFrame(s, path, "shingles")
-          .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"),
-            "left_semi")
-          .groupBy(col("shh")).agg((-count(lit(1))).as("df"))
-        publishDfMerge(negDf, path, s"d$deleteId")
+        // the tombstone stage and the staged negative df merge are
+        // independent writes (the merge reads the committed tombstones
+        // only): overlapped; the publish stays on this thread
+        Par.runAll(
+          () => p.stageTombstones(ids, "doc_id", deleteId),
+          () => stageDfMerge(indexFrame(s, path, "shingles")
+            .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"),
+              "left_semi")
+            .groupBy(col("shh")).agg((-count(lit(1))).as("df")), path))
+        publishDf(path, s"d$deleteId")
         true
       }
     }
@@ -785,13 +811,16 @@ object Dedup {
     val p = protocol(path)
     p.withLease("compact-dedup") {
       val cname = p.compactDirName()
-      for ((sub, key) <- Seq("shingles" -> "shh", "hashes" -> "h")) {
+      val sides = Seq("shingles" -> "shh", "hashes" -> "h")
+      // the two sides stage concurrently; the publishes stay on this
+      // (lease-holding) thread
+      Par.runAll(sides.map { case (sub, key) => () =>
         indexFrame(s, path, sub)
           .repartition(numFiles, col(key))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$path/.$sub.compacting/$cname")
-        p.publishDir(s".$sub.compacting", sub)
-      }
+      }: _*)
+      for ((sub, _) <- sides) p.publishDir(s".$sub.compacting", sub)
       // Compaction rewrote the SERVED (tombstone-stripped) frames, so
       // the publish doubled as the physical purge; the df summary was
       // already corrected at delete-commit time and needs no rewrite.
@@ -818,8 +847,7 @@ object Dedup {
     incrementalKeepNewFromFrames(
       indexFrame(s, indexPath, "shingles"),
       indexFrame(s, indexPath, "hashes"),
-      s.read.parquet(protocol(indexPath).dir("df"))
-        .select(col("shh"), col("df").as("hdf")),
+      readDf(s, indexPath).select(col("shh"), col("df").as("hdf")),
       incoming)
   }
 
@@ -874,11 +902,11 @@ object Dedup {
       .localCheckpoint(false)
     Par.buildAll(horizons) { asOf =>
       val histSh = protocol(indexPath)
-        .readCommittedStrippedAsOf(s, "shingles", "doc_id", asOf)(d =>
-          s.read.parquet(d)).localCheckpoint(false)
+        .readCommittedStrippedAsOf(s, "shingles", "doc_id", asOf)(
+          readSub(s, "shingles")).localCheckpoint(false)
       val histHash = protocol(indexPath)
-        .readCommittedStrippedAsOf(s, "hashes", "doc_id", asOf)(d =>
-          s.read.parquet(d))
+        .readCommittedStrippedAsOf(s, "hashes", "doc_id", asOf)(
+          readSub(s, "hashes"))
       incrementalKeepNewFromFrames(histSh, histHash,
         histSh.groupBy(col("shh")).agg(count(lit(1)).as("hdf")),
         incoming, Some((incHashes, incSh)))
@@ -1091,8 +1119,7 @@ object Dedup {
     val p = protocol(path)
     p.vacuumKinds(s, floorRequested, Seq("shingles", "hashes").map(sub =>
       sub -> ((floor: Long, staging: String) =>
-        p.readCommittedStrippedAsOf(s, sub, "doc_id", floor)(dd =>
-            s.read.parquet(dd))
+        p.readCommittedStrippedAsOf(s, sub, "doc_id", floor)(readSub(s, sub))
           .write.mode(SaveMode.Overwrite).parquet(staging))))
   }
 

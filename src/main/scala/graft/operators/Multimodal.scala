@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
-import graft.index.{Delete, Fixture, Fold, IndexKind, Merge, Seed, Step, Vacuum}
+import graft.index.{Delete, Fixture, Fold, FoldProtocol, IndexKind, Merge, Seed, Step, Vacuum}
 import graft.media._
 import graft.media.Media._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -622,11 +622,7 @@ object Multimodal {
 
   private def stagePhashes(hashes: DataFrame, path: String,
       dir: String): Unit =
-    bandEntries(hashes)
-      .repartition(col("bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(dir)
+    FoldProtocol.writePartitioned(bandEntries(hashes), dir, "bucket")
 
   /** Build a fresh perceptual-hash index at `path` (seed sub-root). */
   def writePhashIndex(hashes: DataFrame, path: String): Unit =
@@ -673,11 +669,8 @@ object Multimodal {
   def compactPhashIndex(s: SparkSession, path: String): Unit = {
     val p = phashProtocol(path)
     p.withLease("compact-phash") {
-      indexPhashes(s, path)
-        .repartition(col("bucket"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.phashes.compacting/${p.compactDirName()}")
+      FoldProtocol.writePartitioned(indexPhashes(s, path),
+        s"$path/.phashes.compacting/${p.compactDirName()}", "bucket")
       p.publishDir(".phashes.compacting", "phashes")
       p.clearTombstones()
     }
@@ -694,11 +687,8 @@ object Multimodal {
       floorRequested: Long): Boolean =
     phashProtocol(path).vacuumKinds(s, floorRequested, Seq(
       "phashes" -> ((floor, staging) =>
-        indexPhashesAsOf(s, path, floor)
-          .repartition(col("bucket"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging))))
+        FoldProtocol.writePartitioned(indexPhashesAsOf(s, path, floor),
+          staging, "bucket"))))
 
   /** The perceptual-hash index as the fixture layer sees it. */
   val PhashKind: IndexKind = IndexKind(phashProtocol, Nil, Seq("phashes"),
@@ -827,11 +817,8 @@ object Multimodal {
       secondary: String, dest: String): Unit = {
     val p = phashProtocol(dest)
     def copySide(src: String, sub: String): Unit =
-      indexPhashes(s, src)
-        .repartition(col("bucket"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"${p.dir("phashes")}/$sub")
+      FoldProtocol.writePartitioned(indexPhashes(s, src),
+        s"${p.dir("phashes")}/$sub", "bucket")
     copySide(primary, "seed")
     copySide(secondary, "b0")
     p.commitStaged(Seq("phashes/b0"), "0", "merged-from=" +

@@ -72,6 +72,28 @@ object Par {
     } finally pool.shutdown()
   }
 
+  /** Run the independent writes of one index call concurrently, one
+    * thread each, and return once ALL have finished; then rethrow the
+    * first failure (in argument order). Unlike [[buildAll]], a failure
+    * does not interrupt the siblings: a write's Spark job keeps landing
+    * files after its driver thread is interrupted, so the call must
+    * not return — and release its writer lease to a replay that
+    * rewrites the same staged dirs — while one is still running.
+    */
+  def runAll(bodies: (() => Unit)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, bodies.size))
+    try {
+      val futures = bodies.map(b => pool.submit(
+        new java.util.concurrent.Callable[Unit] { def call(): Unit = b() }))
+      futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException =>
+          Some(e.getCause) }
+      }.headOption.foreach(throw _)
+    } finally pool.shutdown()
+  }
+
   // The narrow/wide verdict is pure function of (file set, parallelism,
   // split conf): memoize it so repeated query builds over the same
   // table (bench passes, multi-query jobs) don't re-pay the physical

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
-import graft.index.{Delete, Fixture, Fold, IndexKind, Merge, Seed, Step, Vacuum}
+import graft.index.{Delete, Fixture, Fold, FoldProtocol, IndexKind, Merge, Seed, Step, Vacuum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,30 +44,27 @@ object Retrieval {
     * trades listing granularity against small-dir overhead: a query
     * term maps to exactly ONE bucket (all its postings colocate), so a
     * q-term query lists ≤ q of the `Buckets` directories whatever the
-    * vocabulary size. It does NOT cap write parallelism: builds and
-    * compactions slice each bucket by a doc_id hash ([[bucketSliced]]),
-    * so a bucket directory holds as many files as the cluster has
-    * write slots.
+    * vocabulary size. It does NOT cap write parallelism: postings
+    * writes ([[writePostings]]) run the session's shuffle parallelism.
     */
   val Buckets = 32
 
-  /** Cluster a postings frame for a bucket-partitioned write WITHOUT
-    * capping parallelism at `Buckets`: shuffle on
-    * `(bucket, hash(doc_id) % slices)` where `slices` scales with the
-    * session's shuffle parallelism, so the write runs with the same
-    * fan-out as every other shuffle in the job (at 100 TB that is
-    * thousands of tasks, not 32) and a stop-word-heavy bucket spreads
-    * across `slices` writers instead of serializing into one straggler
-    * task. Each bucket directory then holds ~`slices` files — the
-    * `bucket=` listing prune is untouched, and within-bucket file
-    * count is what compaction already manages.
+  /** Bucket-partitioned postings write through
+    * [[graft.index.FoldProtocol.writePartitioned]]: the rows cluster on
+    * `(bucket, hash(doc_id) % slices)` with `slices = max(1,
+    * shuffle partitions / Buckets)`, so once the session has more
+    * write slots than buckets a stop-word-heavy bucket spreads across
+    * `slices` writers instead of serializing into one straggler task,
+    * and each bucket directory holds ~`slices` files. The `bucket=`
+    * listing prune is untouched; within-bucket file count is what
+    * compaction manages.
     */
-  private def bucketSliced(postings: DataFrame): DataFrame = {
+  private def writePostings(postings: DataFrame, dir: String): Unit = {
     val slices = math.max(1,
       postings.sparkSession.conf.get("spark.sql.shuffle.partitions")
         .toInt / Buckets)
-    postings.repartition(Buckets * slices,
-      col("bucket"), pmod(xxhash64(col("doc_id")), lit(slices)))
+    FoldProtocol.writePartitioned(postings, dir, "bucket",
+      pmod(xxhash64(col("doc_id")), lit(slices)))
   }
 
   private def words(c: Column): Column = split(c, " ")
@@ -171,31 +168,30 @@ object Retrieval {
     new graft.index.FoldProtocol(path, "_postings_ledger")
 
   /** Write one sub-root's postings + mergeable stats from a
-    * `documents`-shaped frame. One tokenize scan per output;
-    * [[bucketSliced]] clusters the rows bucket-first before the
-    * partitioned write (without any clustering every task writes a
-    * sliver of every bucket) while keeping the write fan-out at the
-    * session's shuffle parallelism. Overwrite semantics ⇒ a replayed
-    * fold rewrites the same dirs wholesale.
+    * `documents`-shaped frame. One tokenize scan per output, the two
+    * writes overlapped ([[Par.runAll]]); [[writePostings]] clusters
+    * the rows bucket-first before the partitioned write. Overwrite
+    * semantics ⇒ a replayed fold rewrites the same dirs wholesale.
     */
   private def writeSubRoot(docs: DataFrame, path: String,
       sub: String): Unit = {
     val p = protocol(path)
-    bucketSliced(Par.fanOut(docs)
-      .select(col("doc_id"), words(col("text")).as("ws"))
-      .select(col("doc_id"), size(col("ws")).as("dl"),
-        explode(col("ws")).as("word"))
-      .groupBy(col("word"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(s"${p.dir("postings")}/$sub")
-    docs
-      .select(size(words(col("text"))).as("dl"))
-      .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("sum_dl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"${p.dir("stats")}/$sub")
+    val (postingsDir, statsDir) =
+      (s"${p.dir("postings")}/$sub", s"${p.dir("stats")}/$sub")
+    Par.runAll(
+      () => writePostings(Par.fanOut(docs)
+        .select(col("doc_id"), words(col("text")).as("ws"))
+        .select(col("doc_id"), size(col("ws")).as("dl"),
+          explode(col("ws")).as("word"))
+        .groupBy(col("word"), col("doc_id"), col("dl"))
+        .agg(count(lit(1)).as("tf"))
+        .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets))),
+        postingsDir),
+      () => docs
+        .select(size(words(col("text"))).as("dl"))
+        .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("sum_dl"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(statsDir))
   }
 
   /** Build a fresh BM25 index at `path`: the corpus lands in the
@@ -262,14 +258,19 @@ object Retrieval {
       deleteId: Long): Boolean = {
     val p = protocol(path)
     p.delete(deleteId, Seq(s"stats/d$deleteId")) {
-      p.stageTombstones(ids, "doc_id", deleteId)
-      indexPostings(ids.sparkSession, path)
-        .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-        .agg((-count(lit(1))).as("n"),
-          (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("sum_dl"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"${p.dir("stats")}/d$deleteId")
+      val statsDir = s"${p.dir("stats")}/d$deleteId"
+      // the tombstone stage and the stats delta are independent writes
+      // (the delta reads the committed tombstones only): overlapped
+      Par.runAll(
+        () => p.stageTombstones(ids, "doc_id", deleteId),
+        () => indexPostings(ids.sparkSession, path)
+          .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"),
+            "left_semi")
+          .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+          .agg((-count(lit(1))).as("n"),
+            (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("sum_dl"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(statsDir))
     }
   }
 
@@ -324,6 +325,16 @@ object Retrieval {
       .agg(sum(col("n")).cast("double").as("n"),
         (sum(col("sum_dl")).cast("double") / sum(col("n"))).as("avgdl"))
 
+  /** The stats sides `dirs` re-summed to ONE `(n, sum_dl)` row — the
+    * integer form compactions, vacuums and merges persist (absorbing
+    * the deletes' negative rows; never through the avgdl double).
+    */
+  private def mergedStats(s: SparkSession, dirs: Seq[String]): DataFrame =
+    dirs.map(r => s.read.schema(StatsSchema).parquet(r))
+      .reduce(_.union(_))
+      .agg(sum(col("n")).cast("long").as("n"),
+        sum(col("sum_dl")).cast("long").as("sum_dl"))
+
   /** Compact the index: rewrite all committed sub-roots into ONE
     * `c<hw>/` dir per side (postings still bucket-partitioned, one
     * file per bucket; stats re-merged to one row), each published by a
@@ -346,17 +357,14 @@ object Retrieval {
     val p = protocol(path)
     p.withLease("compact-bm25") {
       val cname = p.compactDirName()
-      bucketSliced(indexPostings(s, path))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"$path/.postings.compacting/$cname")
-      subRoots(path, "stats").map(r =>
-        s.read.schema(StatsSchema).parquet(r))
-        .reduce(_.union(_))
-        .agg(sum(col("n")).cast("long").as("n"),
-          sum(col("sum_dl")).cast("long").as("sum_dl"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/.stats.compacting/$cname")
+      // both sides stage concurrently; the publishes stay on this
+      // (lease-holding) thread
+      Par.runAll(
+        () => writePostings(indexPostings(s, path),
+          s"$path/.postings.compacting/$cname"),
+        () => mergedStats(s, subRoots(path, "stats"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$path/.stats.compacting/$cname"))
       p.publishDir(".postings.compacting", "postings")
       p.publishDir(".stats.compacting", "stats")
       p.clearTombstones()
@@ -394,18 +402,9 @@ object Retrieval {
     val p = protocol(path)
     p.vacuumKinds(s, floorRequested, Seq(
       "postings" -> ((floor, staging) =>
-        bucketSliced(indexPostingsAsOf(s, path, floor))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("bucket")
-          .parquet(staging)),
+        writePostings(indexPostingsAsOf(s, path, floor), staging)),
       "stats" -> ((floor, staging) =>
-        // integer re-sum of the stats deltas ≤ floor (absorbing the
-        // deletes' negative rows) — never through the avgdl double
-        p.committedDirsAsOf("stats", floor)
-          .map(r => s.read.schema(StatsSchema).parquet(r))
-          .reduce(_.union(_))
-          .agg(sum(col("n")).cast("long").as("n"),
-            sum(col("sum_dl")).cast("long").as("sum_dl"))
+        mergedStats(s, p.committedDirsAsOf("stats", floor))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(staging))))
   }
@@ -481,18 +480,9 @@ object Retrieval {
   def mergeBm25Indexes(s: SparkSession, primary: String,
       secondary: String, dest: String): Unit = {
     val p = protocol(dest)
-    def mergedStats(src: String): DataFrame =
-      subRoots(src, "stats").map(r =>
-        s.read.schema(StatsSchema).parquet(r))
-        .reduce(_.union(_))
-        .agg(sum(col("n")).cast("long").as("n"),
-          sum(col("sum_dl")).cast("long").as("sum_dl"))
     def copySide(src: String, sub: String): Unit = {
-      bucketSliced(indexPostings(s, src))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(s"${p.dir("postings")}/$sub")
-      mergedStats(src)
+      writePostings(indexPostings(s, src), s"${p.dir("postings")}/$sub")
+      mergedStats(s, subRoots(src, "stats"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"${p.dir("stats")}/$sub")
     }
@@ -827,14 +817,8 @@ object Retrieval {
   final class PostingsIndex private[Retrieval] (key: String, schema: String,
       leaseTag: String, postings: DataFrame => DataFrame) {
 
-    private def writeBucketed(rows: DataFrame, dir: String): Unit =
-      bucketSliced(rows)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(dir)
-
     private def writeSub(docs: DataFrame, path: String, sub: String): Unit =
-      writeBucketed(postings(docs)
+      writePostings(postings(docs)
         .withColumn("bucket", pmod(xxhash64(col(key)), lit(Buckets))),
         s"${protocol(path).dir("postings")}/$sub")
 
@@ -886,7 +870,7 @@ object Retrieval {
     def compact(s: SparkSession, path: String): Unit = {
       val p = protocol(path)
       p.withLease(leaseTag) {
-        writeBucketed(read(s, path),
+        writePostings(read(s, path),
           s"$path/.postings.compacting/${p.compactDirName()}")
         p.publishDir(".postings.compacting", "postings")
         p.clearTombstones()
@@ -902,7 +886,7 @@ object Retrieval {
     def vacuum(s: SparkSession, path: String, floorRequested: Long): Boolean =
       protocol(path).vacuumKinds(s, floorRequested, Seq(
         "postings" -> ((floor, staging) =>
-          writeBucketed(read(s, path, Some(floor)), staging))))
+          writePostings(read(s, path, Some(floor)), staging))))
 
     /** Cross-root union of two roots of this index: bucket is a global
       * function of the posting key, so the merge is two partitioned
@@ -915,8 +899,8 @@ object Retrieval {
     def merge(s: SparkSession, primary: String, secondary: String,
         dest: String): Unit = {
       val p = protocol(dest)
-      writeBucketed(read(s, primary), s"${p.dir("postings")}/seed")
-      writeBucketed(read(s, secondary), s"${p.dir("postings")}/b0")
+      writePostings(read(s, primary), s"${p.dir("postings")}/seed")
+      writePostings(read(s, secondary), s"${p.dir("postings")}/b0")
       p.commitStaged(Seq("postings/b0"), "0", "merged-from=" +
         s"${new org.apache.hadoop.fs.Path(primary).getName}+" +
         new org.apache.hadoop.fs.Path(secondary).getName)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
-import graft.index.{Delete, Fixture, Fold, IndexKind, Merge, Refresh, Seed, Step, Vacuum}
+import graft.index.{Delete, Fixture, Fold, FoldProtocol, IndexKind, Merge, Refresh, Seed, Step, Vacuum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -585,14 +585,11 @@ object Similarity {
     // kernels (mergeBm25Indexes/mergePostingsRoots): identical for a
     // fresh staging dest, but an in-place dest whose kinds were ever
     // published onto generations must land in the SERVED generation.
-    s.read.parquet(protocol(primary).dir("cents"))
+    readCents(s, protocol(primary).dir("cents"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(protocol(dest).dir("cents"))
-    indexVectors(s, primary)
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id")
-      .parquet(protocol(dest).dir("vectors") + "/seed")
+    FoldProtocol.writePartitioned(indexVectors(s, primary),
+      protocol(dest).dir("vectors") + "/seed", "cent_id")
     appendToIvfIndex(
       indexVectors(s, secondary).select(col("vec_id"), col("v")),
       dest, 0L)
@@ -985,14 +982,12 @@ object Similarity {
     */
   private def stageBWords(e: DataFrame, path: String,
       dir: String): Unit = {
-    val cents = e.sparkSession.read.parquet(protocol(path).dir("cents"))
-    assign(e, cents, 1)
-      .select(col("vec_id"), signWord(col("v"), 0).as("w0"),
-        signWord(col("v"), 32).as("w1"), col("cent_id"))
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id")
-      .parquet(dir)
+    val cents = readCents(e.sparkSession, protocol(path).dir("cents"))
+    FoldProtocol.writePartitioned(
+      assign(e, cents, 1)
+        .select(col("vec_id"), signWord(col("v"), 0).as("w0"),
+          signWord(col("v"), 32).as("w1"), col("cent_id")),
+      dir, "cent_id")
   }
 
   /** Fold a batch of new vectors into a persisted IVF+binary index,
@@ -1044,11 +1039,8 @@ object Similarity {
   def compactIvfBinaryIndex(s: SparkSession, path: String): Unit = {
     val p = protocol(path)
     p.withLease("compact-ivfbin") {
-      indexBWords(s, path)
-        .repartition(col("cent_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cent_id")
-        .parquet(s"$path/.bwords.compacting/${p.compactDirName()}")
+      FoldProtocol.writePartitioned(indexBWords(s, path),
+        s"$path/.bwords.compacting/${p.compactDirName()}", "cent_id")
       p.publishDir(".bwords.compacting", "bwords")
       p.clearTombstones()
     }
@@ -1078,7 +1070,7 @@ object Similarity {
         .select(col("vec_id"), col("w0"), col("w1"))
       val live = vecs.select(col("vec_id"), col("v"))
         .join(words.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      val oldCents = s.read.parquet(p.dir("cents"))
+      val oldCents = readCents(s, p.dir("cents"))
       val newCents = lloydStep(live, oldCents)
       val drift = oldCents.select(col("cent_id"), col("cv").as("ocv"))
         .join(newCents.select(col("cent_id"), col("cv").as("ncv")),
@@ -1093,15 +1085,13 @@ object Similarity {
         newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/cents.refreshing")
         val staged = s"$path/.bwords.refreshing/${p.compactDirName()}"
-        assign(live, s.read.parquet(s"$path/cents.refreshing"), 1)
-          .select(col("vec_id"), col("cent_id"))
-          .join(words, Seq("vec_id"))
-          .select(col("vec_id"), col("w0"), col("w1"), col("cent_id"))
-          .repartition(col("cent_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cent_id")
-          .parquet(staged)
-        val stagedN = s.read.parquet(staged).count()
+        FoldProtocol.writePartitioned(
+          assign(live, readCents(s, s"$path/cents.refreshing"), 1)
+            .select(col("vec_id"), col("cent_id"))
+            .join(words, Seq("vec_id"))
+            .select(col("vec_id"), col("w0"), col("w1"), col("cent_id")),
+          staged, "cent_id")
+        val stagedN = s.read.schema(BWordsSchema).parquet(staged).count()
         val liveN = words.count()
         if (stagedN != liveN)
           throw new IllegalStateException(
@@ -1352,11 +1342,8 @@ object Similarity {
       floorRequested: Long): Boolean =
     protocol(path).vacuumKinds(s, floorRequested, Seq(
       "bwords" -> ((floor, staging) =>
-        indexBWordsAsOf(s, path, floor)
-          .repartition(col("cent_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cent_id")
-          .parquet(staging))))
+        FoldProtocol.writePartitioned(indexBWordsAsOf(s, path, floor),
+          staging, "cent_id"))))
 
   /** Build-if-absent the VACUUMED binary-rung gate fixture: the as-of
     * ledger layout (seed / b1 / d2) vacuumed at floor 1.
@@ -1380,7 +1367,7 @@ object Similarity {
       queries: DataFrame, nprobe: Int = 4,
       allowed: Option[DataFrame] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val cents = s.read.parquet(protocol(indexPath).dir("cents"))
+    val cents = readCents(s, protocol(indexPath).dir("cents"))
     val probes = assign(
       queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
       cents, nprobe)
@@ -1581,14 +1568,12 @@ object Similarity {
       .parquet(s"$path/cents")
     // Assignment reads the centroids BACK from parquet so the index
     // provably serves the same values later probes will read (double
-    // roundtrip is exact). repartition(cent_id) clusters each cell
-    // into one file before the partitioned write — without it every
-    // task writes a sliver of every cell (tasks × cells small files).
-    assign(e, e.sparkSession.read.parquet(s"$path/cents"), 1)
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id")
-      .parquet(s"$path/vectors/seed")
+    // roundtrip is exact). The write clusters each cell into one task
+    // (FoldProtocol.writePartitioned) — without it every task writes a
+    // sliver of every cell (tasks × cells small files).
+    FoldProtocol.writePartitioned(
+      assign(e, readCents(e.sparkSession, s"$path/cents"), 1),
+      s"$path/vectors/seed", "cent_id")
   }
 
   /** Lloyd rounds for the TRAINED build — enough to show genuine
@@ -1660,11 +1645,9 @@ object Similarity {
       rounds)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/cents")
-    assign(e, e.sparkSession.read.parquet(s"$path/cents"), 1)
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id")
-      .parquet(s"$path/vectors/seed")
+    FoldProtocol.writePartitioned(
+      assign(e, readCents(e.sparkSession, s"$path/cents"), 1),
+      s"$path/vectors/seed", "cent_id")
   }
 
   /** Fixed centroid count for the bounded-K build (the gate's choice;
@@ -1696,6 +1679,13 @@ object Similarity {
   // `vectors/` so compaction's directory swap cannot touch it. ----
 
   private val VecSchema = "vec_id BIGINT, v ARRAY<FLOAT>, cent_id BIGINT"
+
+  /** The frozen centroids `(cent_id, cv)` at `dir`, read under their
+    * declared schema — no footer-inference job per read (cell ids are
+    * vector ids, read as BIGINT whatever integral type built them).
+    */
+  private def readCents(s: SparkSession, dir: String): DataFrame =
+    s.read.schema("cent_id BIGINT, cv ARRAY<DOUBLE>").parquet(dir)
 
   /** The index's staged-commit machinery — ledger, committed-dir
     * resolution, tombstones, publishes (see
@@ -1829,12 +1819,10 @@ object Similarity {
   private[graft] def stageIvfFold(vecs: DataFrame, path: String,
       batchId: Long): Unit = {
     val p = protocol(path)
-    assign(vecs.select(col("vec_id"), col("v")),
-      vecs.sparkSession.read.parquet(p.dir("cents")), 1)
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id")
-      .parquet(s"${p.dir("vectors")}/b$batchId")
+    FoldProtocol.writePartitioned(
+      assign(vecs.select(col("vec_id"), col("v")),
+        readCents(vecs.sparkSession, p.dir("cents")), 1),
+      s"${p.dir("vectors")}/b$batchId", "cent_id")
   }
 
   /** Fold step 2: publish the grown ledger via one atomic file move. */
@@ -1870,11 +1858,8 @@ object Similarity {
   def compactIvfIndex(s: SparkSession, path: String): Unit = {
     val p = protocol(path)
     p.withLease("compact-ivf") {
-      indexVectors(s, path)
-        .repartition(col("cent_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cent_id")
-        .parquet(s"$path/.vectors.compacting/${p.compactDirName()}")
+      FoldProtocol.writePartitioned(indexVectors(s, path),
+        s"$path/.vectors.compacting/${p.compactDirName()}", "cent_id")
       p.publishDir(".vectors.compacting", "vectors")
       p.clearTombstones()
     }
@@ -1900,11 +1885,8 @@ object Similarity {
       floorRequested: Long): Boolean =
     protocol(path).vacuumKinds(s, floorRequested, Seq(
       "vectors" -> ((floor, staging) =>
-        indexVectorsAsOf(s, path, floor)
-          .repartition(col("cent_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cent_id")
-          .parquet(staging))))
+        FoldProtocol.writePartitioned(indexVectorsAsOf(s, path, floor),
+          staging, "cent_id"))))
 
   /** Build-if-absent the VACUUMED-index gate fixture: the as-of
     * lifecycle (seed = history wave, fold b1 = late wave, takedown d2)
@@ -1951,7 +1933,7 @@ object Similarity {
     if (p.entries().contains(s"r$refreshId")) return false
     p.withLease(s"refresh-$refreshId") {
       val vecs = indexVectors(s, path).select(col("vec_id"), col("v"))
-      val oldCents = s.read.parquet(p.dir("cents"))
+      val oldCents = readCents(s, p.dir("cents"))
       val newCents = lloydStep(vecs, oldCents)
       val drift = oldCents.select(col("cent_id"), col("cv").as("ocv"))
         .join(newCents.select(col("cent_id"), col("cv").as("ncv")),
@@ -1966,11 +1948,9 @@ object Similarity {
         // probes read)
         newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/cents.refreshing")
-        assign(vecs, s.read.parquet(s"$path/cents.refreshing"), 1)
-          .repartition(col("cent_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cent_id")
-          .parquet(s"$path/.vectors.refreshing/${p.compactDirName()}")
+        FoldProtocol.writePartitioned(
+          assign(vecs, readCents(s, s"$path/cents.refreshing"), 1),
+          s"$path/.vectors.refreshing/${p.compactDirName()}", "cent_id")
         p.publishDir(".vectors.refreshing", "vectors")
         p.publishDir("cents.refreshing", "cents")
         p.clearTombstones()
@@ -2010,7 +1990,7 @@ object Similarity {
       allowed: Option[DataFrame] = None,
       asOf: Option[Long] = None): DataFrame = {
     // K rows of a 64-double array.
-    val cents = s.read.parquet(protocol(indexPath).dir("cents"))
+    val cents = readCents(s, protocol(indexPath).dir("cents"))
     val probes = assign(
       queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
       cents, nprobe)
@@ -2226,15 +2206,13 @@ object Similarity {
   private def stageIvfPqDir(e: DataFrame, path: String, dir: String): Unit = {
     val s = e.sparkSession
     val p = protocol(path)
-    val cents = s.read.parquet(p.dir("cents"))
+    val cents = readCents(s, p.dir("cents"))
     val cb = s.read.parquet(p.dir("codebook"))
-    assign(e, cents, 1).select(col("vec_id"), col("cent_id"))
-      .join(pqEncode(e, cb), Seq("vec_id"))
-      .select(col("vec_id"), col("codes"), col("cent_id"))
-      .repartition(col("cent_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cent_id")
-      .parquet(dir)
+    FoldProtocol.writePartitioned(
+      assign(e, cents, 1).select(col("vec_id"), col("cent_id"))
+        .join(pqEncode(e, cb), Seq("vec_id"))
+        .select(col("vec_id"), col("codes"), col("cent_id")),
+      dir, "cent_id")
   }
 
   /** Fold a batch of new vectors into a persisted IVF-PQ index,
@@ -2290,11 +2268,8 @@ object Similarity {
       floorRequested: Long): Boolean =
     protocol(path).vacuumKinds(s, floorRequested, Seq(
       "vectors" -> ((floor, staging) =>
-        indexCodesAsOf(s, path, floor)
-          .repartition(col("cent_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cent_id")
-          .parquet(staging))))
+        FoldProtocol.writePartitioned(indexCodesAsOf(s, path, floor),
+          staging, "cent_id"))))
 
   /** Rewrite the committed coded sub-roots into one `c<hw>` dir —
     * [[compactIvfIndex]]'s contract on the coded frame: the input is
@@ -2307,11 +2282,8 @@ object Similarity {
   def compactIvfPqIndex(s: SparkSession, path: String): Unit = {
     val p = protocol(path)
     p.withLease("compact-ivfpq") {
-      indexCodes(s, path)
-        .repartition(col("cent_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cent_id")
-        .parquet(s"$path/.vectors.compacting/${p.compactDirName()}")
+      FoldProtocol.writePartitioned(indexCodes(s, path),
+        s"$path/.vectors.compacting/${p.compactDirName()}", "cent_id")
       p.publishDir(".vectors.compacting", "vectors")
       p.clearTombstones()
     }
@@ -2357,7 +2329,7 @@ object Similarity {
       val codes = indexCodes(s, path).select(col("vec_id"), col("codes"))
       val live = vecs.select(col("vec_id"), col("v"))
         .join(codes.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      val oldCents = s.read.parquet(p.dir("cents"))
+      val oldCents = readCents(s, p.dir("cents"))
       val newCents = lloydStep(live, oldCents)
       val drift = oldCents.select(col("cent_id"), col("cv").as("ocv"))
         .join(newCents.select(col("cent_id"), col("cv").as("ncv")),
@@ -2372,15 +2344,13 @@ object Similarity {
         newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/cents.refreshing")
         val staged = s"$path/.vectors.refreshing/${p.compactDirName()}"
-        assign(live, s.read.parquet(s"$path/cents.refreshing"), 1)
-          .select(col("vec_id"), col("cent_id"))
-          .join(codes, Seq("vec_id"))
-          .select(col("vec_id"), col("codes"), col("cent_id"))
-          .repartition(col("cent_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cent_id")
-          .parquet(staged)
-        val stagedN = s.read.parquet(staged).count()
+        FoldProtocol.writePartitioned(
+          assign(live, readCents(s, s"$path/cents.refreshing"), 1)
+            .select(col("vec_id"), col("cent_id"))
+            .join(codes, Seq("vec_id"))
+            .select(col("vec_id"), col("codes"), col("cent_id")),
+          staged, "cent_id")
+        val stagedN = s.read.schema(CodedSchema).parquet(staged).count()
         val liveN = codes.count()
         if (stagedN != liveN)
           throw new IllegalStateException(
@@ -2423,7 +2393,7 @@ object Similarity {
       allowed: Option[DataFrame] = None,
       asOf: Option[Long] = None): DataFrame = {
     val p = protocol(indexPath)
-    val cents = s.read.parquet(p.dir("cents"))
+    val cents = readCents(s, p.dir("cents"))
     val cb = s.read.parquet(p.dir("codebook"))
     val probes = assign(
       queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
@@ -4583,7 +4553,7 @@ object Similarity {
          |  round(CAST(mx AS DOUBLE) * k / nv, 6) + 0 AS imbalance
          |FROM t""".stripMargin) { (s, d) =>
       val root = ensureIvfIndex(s, d)
-      val cents = s.read.parquet(protocol(root).dir("cents"))
+      val cents = readCents(s, protocol(root).dir("cents"))
       val sizes = cents.select(col("cent_id"))
         .join(indexVectors(s, root).groupBy(col("cent_id"))
             .agg(count(lit(1)).as("n0")),

@@ -1,0 +1,116 @@
+#!/usr/bin/env python3
+"""Per-call breakdown of a traced perfbench run.
+
+    python3 tools/trace_calls.py .bench_build/traces/index_lifecycle-s5
+    python3 tools/trace_calls.py <trace dir> --prefix index. --sites
+
+Reads the `spans.jsonl`, `jobs.jsonl` and `execs.jsonl` that
+`perfbench/run.py --trace 1` leaves in `.bench_build/traces/<workload>-s<seed>/`
+and prints one row per timed call (each span whose name starts with
+`--prefix`, by default the index calls `index.<op>.<kind>`, serves
+excluded unless `--serves`): its wall ms, the Spark jobs that started
+inside it, how many of those are schema-inference jobs (a job outside any
+SQL execution whose call site is `parquet at ...`), the union of the jobs'
+run time, the driver gap (wall minus that union: planning, listings,
+ledger and manifest I/O, thread hand-offs) and the files its writes
+produced. `--sites` adds each call's jobs by call site. Only reads the
+trace files.
+"""
+import argparse
+import collections
+import json
+import os
+import sys
+
+
+def load(d, name):
+    path = os.path.join(d, name)
+    if not os.path.exists(path):
+        sys.exit(f"trace_calls: no {name} in {d}")
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def union_us(intervals):
+    total, end = 0, None
+    for s, e in sorted(intervals):
+        if end is None or s > end:
+            total += e - s
+            end = e
+        elif e > end:
+            total += e - end
+            end = e
+    return total
+
+
+def is_inference(job):
+    return job["exec"] == -1 and job["site"].startswith("parquet at ")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("trace_dir")
+    ap.add_argument("--prefix", default="index.",
+                    help="span-name prefix of the calls to report")
+    ap.add_argument("--serves", action="store_true",
+                    help="also report index.serve.* spans")
+    ap.add_argument("--sites", action="store_true",
+                    help="list each call's jobs by call site")
+    a = ap.parse_args()
+
+    spans = [s for s in load(a.trace_dir, "spans.jsonl")
+             if s["name"].startswith(a.prefix)
+             and (a.serves or not s["name"].startswith("index.serve"))]
+    jobs = [j for j in load(a.trace_dir, "jobs.jsonl") if "end_us" in j]
+    execs = load(a.trace_dir, "execs.jsonl")
+    spans.sort(key=lambda s: s["start_us"])
+
+    seen = collections.Counter()
+    totals = collections.defaultdict(lambda: collections.Counter())
+    header = (f"{'call':<22}{'run':>4}{'ms':>9}{'jobs':>6}{'infer':>6}"
+              f"{'job_ms':>9}{'gap_ms':>9}{'files':>7}")
+    print(header)
+    for s in spans:
+        lo, hi = s["start_us"], s["end_us"]
+        inside = [j for j in jobs if lo <= j["start_us"] <= hi]
+        job_us = union_us([(max(lo, j["start_us"]), min(hi, j["end_us"]))
+                           for j in inside])
+        files = sum(e["files_written"] for e in execs
+                    if lo <= e["start_us"] <= hi)
+        wall_us = hi - lo
+        seen[s["name"]] += 1
+        row = collections.Counter(
+            ms=wall_us / 1e3, jobs=len(inside),
+            infer=sum(is_inference(j) for j in inside),
+            job_ms=job_us / 1e3, gap_ms=(wall_us - job_us) / 1e3,
+            files=files, runs=1)
+        totals[s["name"]].update(row)
+        print(f"{s['name']:<22}{seen[s['name']]:>4}{row['ms']:>9.0f}"
+              f"{row['jobs']:>6}{row['infer']:>6}{row['job_ms']:>9.0f}"
+              f"{row['gap_ms']:>9.0f}{row['files']:>7}")
+        if a.sites:
+            for site, n in collections.Counter(
+                    j["site"] + (" [infer]" if is_inference(j) else "")
+                    for j in inside).most_common():
+                print(f"    {n:>3} x {site}")
+
+    print()
+    print("mean per run")
+    print(header)
+    grand = collections.Counter()
+    for name, t in totals.items():
+        n = t["runs"]
+        grand.update(t)
+        print(f"{name:<22}{n:>4}{t['ms'] / n:>9.0f}{t['jobs'] / n:>6.1f}"
+              f"{t['infer'] / n:>6.1f}{t['job_ms'] / n:>9.0f}"
+              f"{t['gap_ms'] / n:>9.0f}{t['files'] / n:>7.1f}")
+    if grand["runs"]:
+        n = max(seen.values())
+        print(f"{'all calls / run':<22}{n:>4}{grand['ms'] / n:>9.0f}"
+              f"{grand['jobs'] / n:>6.1f}{grand['infer'] / n:>6.1f}"
+              f"{grand['job_ms'] / n:>9.0f}{grand['gap_ms'] / n:>9.0f}"
+              f"{grand['files'] / n:>7.1f}")
+
+
+if __name__ == "__main__":
+    main()
