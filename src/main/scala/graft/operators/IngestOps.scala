@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.schema.Schemas
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** The two reference handlers re-expressed as single vectorized
@@ -103,4 +104,32 @@ object IngestOps {
         j.getField("clouds").getField("all").as("cloudiness_percent"),
         coordPair(col("lat"), col("lon")).as("original_coordinates"))
   }
+
+  /** Appends one batch to the two date-partitioned observation tables
+    * (K1): each `(rows, tableRoot)` is written with `partitionBy("date")`,
+    * so each run stamp lands in its own date dir and history scans with
+    * a date predicate prune at the file listing — the layout that keeps
+    * the append-forever tables queryable at 100 TB (SURVEY.md §4).
+    *
+    * The tables are independent until the snapshot, so their appends run
+    * together through [[Par.runAll]]: the call returns once every append
+    * has ended and then rethrows the first failure, so a failing table
+    * never stops its sibling's append (K4).
+    *
+    * Empty-batch suppression (K3): a table with no rows never creates
+    * its root. Driver-local rows (a `LocalRelation`: one hour of points)
+    * are checked without a job, and written from one partition, so an
+    * hourly append adds one file per table. Other rows are probed only
+    * while the root is absent: a zero-row partitioned append into an
+    * existing root writes no data file.
+    */
+  def appendPartitioned(tables: (DataFrame, String)*): Unit =
+    Par.runAll(tables.map { case (rows, path) => () =>
+      val root = new Path(path)
+      def rootExists =
+        root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration).exists(root)
+      if (if (rows.isLocal) !rows.isEmpty else rootExists || !rows.isEmpty)
+        (if (rows.isLocal) rows.coalesce(1) else rows)
+          .write.mode(SaveMode.Append).partitionBy("date").parquet(path)
+    }: _*)
 }

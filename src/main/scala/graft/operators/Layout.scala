@@ -160,7 +160,7 @@ object Layout {
 
   /** Compact the small files of ONE partition of a date-partitioned
     * parquet table (the ingest pipeline's append-forever layout): hourly
-    * appends land ~1 file per run, so a year-old partition holds
+    * appends land one file per run, so a year-old partition holds
     * thousands of KB-scale files whose open/footer cost dominates scans
     * long before data volume does. Rewrites the partition's rows into
     * `numFiles` files, then swaps directories so a concurrent reader of
@@ -176,6 +176,15 @@ object Layout {
     * parallel for large partitions; the shuffle is the price of N
     * parallel writers and is what a 100-TB partition needs.
     *
+    * Concurrent appends: the partition is re-listed after the staging
+    * write, and if its data files differ from the ones the rewrite read
+    * (an append landed meanwhile), the compaction fails with the live
+    * dir untouched and the staging dir removed; rerun it later. The
+    * check does not close the race: an append that commits into the
+    * partition between that re-listing and the rename-aside is moved
+    * into the trash with the old files and lost. Run it only on
+    * partitions no writer appends to any more (closed days).
+    *
     * Atomicity caveat: the rename pair is atomic on a local /
     * HDFS-like filesystem (Hadoop `FileContext` rename — see
     * `FoldProtocol.atomicReplace`), which is where this runs. Object
@@ -187,19 +196,30 @@ object Layout {
     */
   def compactDatePartition(spark: SparkSession, tablePath: String,
       date: String, numFiles: Int = 1): Unit = {
-    val partDir = s"$tablePath/date=$date"
-    val fs = new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(partDir)),
-      s"no partition directory: $partDir")
+    val partDir = new org.apache.hadoop.fs.Path(s"$tablePath/date=$date")
+    val fs = partDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(partDir), s"no partition directory: $partDir")
     val tmpDir = s"$tablePath/.date=$date.compacting"
+    // Data files as Spark lists them: hidden `_`/`.` names excluded.
+    def names(paths: Seq[String]) = paths.map(p =>
+      new org.apache.hadoop.fs.Path(p).getName).filterNot(n =>
+        n.startsWith("_") || n.startsWith(".")).toSet
     // 1. Write (streaming read → shuffle → N writers); completes fully
     //    before any source file is touched.
-    spark.read.parquet(partDir)
-      .repartition(numFiles)
+    val part = spark.read.parquet(partDir.toString)
+    val read = names(part.inputFiles.toSeq)
+    part.repartition(numFiles)
       .write.mode(SaveMode.Overwrite).parquet(tmpDir)
-    // 2. Publish.
-    replaceDir(spark, tmpDir, partDir, s"$tablePath/.date=$date.old")
+    // 2. Publish, unless the partition changed under the rewrite.
+    val live = names(fs.listStatus(partDir).toSeq.map(_.getPath.toString))
+    if (live != read) {
+      fs.delete(new org.apache.hadoop.fs.Path(tmpDir), true)
+      throw new java.util.ConcurrentModificationException(
+        s"compactDatePartition: $partDir changed during the rewrite " +
+          s"(${(live -- read).size} files added, ${(read -- live).size} " +
+          "removed); nothing was published, retry once appends stop")
+    }
+    replaceDir(spark, tmpDir, partDir.toString, s"$tablePath/.date=$date.old")
   }
 
   /** Publish `staging` at `target`: rename the live dir aside, rename

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.schema.Schemas
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -63,14 +63,19 @@ object SnapshotQuery {
     * Returns 0 and publishes nothing while either table root is absent.
     *
     * Equal to [[latestJoined]] over the full-history read, but lists and
-    * scans one date partition, so the hourly cost does not grow with the
-    * append-forever history: the pipeline's zero-padded `yyyy-MM-dd`
-    * stamps sort lexicographically in timestamp order, so the global
-    * MAX lies in the newest `date=` dir that has a non-NULL one (a dir
-    * left empty by a crashed append falls back to the one before it).
-    * The MAX still reads traffic only, and weather is restricted to the
-    * same date, which is a join key — no dir there means no match, so
-    * the snapshot is empty, exactly as the full-history query answers.
+    * scans one date partition of each table, once, so the hourly cost
+    * does not grow with the append-forever history: the pipeline's
+    * zero-padded `yyyy-MM-dd` stamps sort lexicographically in timestamp
+    * order, so the global MAX lies in the newest `date=` dir that has a
+    * non-NULL one (a dir left empty by a crashed append falls back to
+    * the one before it). The job that finds the MAX also returns the
+    * rows that hold it — each task keeps its partition-local newest
+    * hour, ties included, and the driver keeps the global one — so the
+    * join's traffic side is that driver-local hour (one row per point)
+    * and the traffic dir is not read again. The MAX still reads traffic
+    * only, and weather is restricted to the same hour, whose date is a
+    * join key — no dir there means no match, so the snapshot is empty,
+    * exactly as the full-history query answers.
     */
   def publishLatest(spark: SparkSession, trafficPath: String,
       weatherPath: String, snapshotPath: String): Long = {
@@ -91,21 +96,25 @@ object SnapshotQuery {
       .map(_.getPath.getName).filter(_.startsWith("date="))
       .sortBy(n => ExternalCatalogUtils.unescapePathName(n.stripPrefix("date=")))
       .reverse
-    // The MAX as a descending top-1: one job, where an aggregate adds a
-    // shuffle stage.
-    def maxTs(traffic: DataFrame): Option[Any] =
-      traffic.select(tsExpr().as("ts")).where(col("ts").isNotNull)
-        .orderBy(col("ts").desc).limit(1).collect().headOption.map(_.get(0))
-    val latest = newestFirst.iterator.map { dir =>
-      val traffic = day(trafficRoot, Schemas.trafficTableSchema, dir)
-      (dir, traffic, maxTs(traffic))
-    }.collectFirst { case (dir, traffic, Some(mx)) => (dir, traffic, mx) }
+    // The dir's newest traffic hour, with its ts as epoch micros in a
+    // last column: one job, one scan.
+    def newestHour(dir: String): Seq[Row] = {
+      val stamped = day(trafficRoot, Schemas.trafficTableSchema, dir)
+        .withColumn(TsCol, unix_micros(tsExpr())).where(col(TsCol).isNotNull)
+      val ts = stamped.schema.fieldIndex(TsCol)
+      newestRows(ts, stamped.mapPartitions(newestRows(ts, _))(
+        Encoders.row(stamped.schema)).collect().iterator).toSeq
+    }
+    val latest = newestFirst.iterator.map(dir => dir -> newestHour(dir))
+      .find(_._2.nonEmpty)
 
     val joined = latest match {
-      case Some((dir, traffic, mx)) =>
-        traffic.filter(tsExpr() === lit(mx)).join(
-          day(weatherRoot, Schemas.weatherTableSchema, dir)
-            .filter(tsExpr() === lit(mx)),
+      case Some((dir, hour)) =>
+        val schema = hour.head.schema
+        val traffic = spark.createDataFrame(java.util.Arrays.asList(hour: _*), schema)
+        broadcast(traffic.drop(TsCol)).join(
+          day(weatherRoot, Schemas.weatherTableSchema, dir).filter(
+            unix_micros(tsExpr()) === hour.head.getLong(schema.fieldIndex(TsCol))),
           Schemas.joinKeys, "inner")
       case None => // no traffic row has a timestamp: the MAX is NULL
         empty(Schemas.trafficTableSchema)
@@ -120,5 +129,19 @@ object SnapshotQuery {
     Layout.publishOverwrite(
       joined.observe(rows, count(lit(1)).as("rows")), snapshotPath)
     rows.get("rows").asInstanceOf[Long]
+  }
+
+  private val TsCol = "__graft_ts"
+
+  /** The rows of `rows`' newest hour (largest `ts` column), ties kept. */
+  private def newestRows(ts: Int, rows: Iterator[Row]): Iterator[Row] = {
+    var newest = Long.MinValue
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    rows.foreach { r =>
+      val t = r.getLong(ts)
+      if (t > newest) { newest = t; out.clear() }
+      if (t == newest) out += r
+    }
+    out.iterator
   }
 }

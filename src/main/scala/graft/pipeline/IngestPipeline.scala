@@ -4,7 +4,7 @@ import graft.operators.{IngestOps, SnapshotQuery}
 import graft.schema.{GeoPoint, RawFetch}
 import graft.sources.HttpJsonSource
 import graft.sources.HttpJsonSource.Fetcher
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.time.ZonedDateTime
 import java.time.format.DateTimeFormatter
@@ -22,6 +22,10 @@ import java.time.format.DateTimeFormatter
   *    zero rows (`:212-214`).
   *  - Append for the two observation tables (`:188`), overwrite for the
   *    snapshot (`README.md:84`).
+  *
+  * The traffic and weather halves are independent until the snapshot,
+  * so their fetches share one bounded pool and their appends run
+  * together; the snapshot starts once both appends have ended.
   */
 object IngestPipeline {
 
@@ -36,11 +40,18 @@ object IngestPipeline {
       retries: Int = 3,
       retryDelayMillis: Long = 1000L)
 
+  /** What one run did. Per stage: `fetchMillis` (all fetches, retries
+    * included), `appendMillis` (transform and both appends) and
+    * `snapshotMillis` (the refresh); `*Dropped` counts the payloads a
+    * table's transform rejected as malformed (fetched minus landed, P12).
+    */
   final case class RunReport(
       date: String, time: String,
       trafficRows: Long, weatherRows: Long, snapshotRows: Long,
       failures: Seq[(String, String)], // (geo_name, error) side channel (O2)
-      wallMillis: Long) // O4
+      wallMillis: Long, // O4
+      fetchMillis: Long, appendMillis: Long, snapshotMillis: Long,
+      trafficDropped: Long, weatherDropped: Long)
 
   /** Run-constant timestamp, formatted with the reference's zero-padded
     * patterns (`deployment_function.py:62-63`).
@@ -51,13 +62,23 @@ object IngestPipeline {
       t.format(DateTimeFormatter.ofPattern("HH:mm")))
   }
 
-  private def toDf(spark: SparkSession, rows: Seq[RawFetch]): DataFrame = {
+  /** One table's rows of the run, transformed on the driver: over a
+    * `LocalRelation` the transform folds to a `LocalRelation`, so the
+    * `collect()` runs no job, and the rows stay driver-local for the
+    * append.
+    */
+  private def transformed(spark: SparkSession, raw: Seq[RawFetch],
+      transform: DataFrame => DataFrame): (DataFrame, Long) = {
     import spark.implicits._
-    rows.toDS().toDF()
+    val out = transform(raw.toDS().toDF())
+    val rows = out.collect()
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema),
+      rows.length.toLong)
   }
 
   /** One full hourly run. `fetcher` is injectable (fixtures in tests,
-    * `HttpJsonSource.httpFetcher` in production).
+    * `HttpJsonSource.httpFetcher` in production) and is called from
+    * several threads at once.
     */
   def run(spark: SparkSession, cfg: Config, fetcher: Fetcher,
       now: ZonedDateTime = null): RunReport = {
@@ -65,36 +86,20 @@ object IngestPipeline {
     val (date, time) = runStamp(cfg.zone, now)
     val retrying = HttpJsonSource.withRetry(fetcher, cfg.retries, cfg.retryDelayMillis)
 
-    // S1/S2 fan-out with O2 isolation — traffic and weather independently.
-    val (trafficRaw, tFail) =
-      HttpJsonSource.fetchAll(cfg.trafficUrlTemplate, cfg.points, retrying)
-    val (weatherRaw, wFail) =
-      HttpJsonSource.fetchAll(cfg.weatherUrlTemplate, cfg.points, retrying)
+    // S1/S2 fan-out with O2 isolation: every (API, point) call of the run.
+    val Seq((trafficRaw, tFail), (weatherRaw, wFail)) = HttpJsonSource.fetchAll(
+      Seq(cfg.trafficUrlTemplate, cfg.weatherUrlTemplate), cfg.points, retrying)
+    val t1 = System.nanoTime()
 
-    // Transform + K1 append, with K3 empty suppression and K4 isolation.
-    // The rows are driver-local: the transform over a LocalRelation folds
-    // to a LocalRelation, so `collect()` runs no job and a non-empty
-    // stage costs exactly its one write.
-    def appendStage(raw: Seq[RawFetch],
-        transform: DataFrame => DataFrame, path: String): Long =
-      if (raw.isEmpty) 0L
-      else {
-        val out = transform(toDf(spark, raw))
-        val rows = out.collect()
-        // Hive-style date partitioning: each hourly append lands in its
-        // run-date directory, so history queries with a date predicate
-        // prune at the file listing — the layout choice that keeps the
-        // append-forever table queryable at 100 TB (SURVEY.md §4).
-        if (rows.nonEmpty)
-          spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-            .write.mode(SaveMode.Append).partitionBy("date").parquet(path)
-        rows.length.toLong
-      }
-
-    val nT = appendStage(trafficRaw,
-      IngestOps.trafficFromRaw(_, date, time), cfg.trafficPath)
-    val nW = appendStage(weatherRaw,
-      IngestOps.weatherFromRaw(_, date, time), cfg.weatherPath)
+    // Transform + K1 append of both tables together, with K3 empty
+    // suppression and K4 isolation; a non-empty table costs exactly its
+    // one write.
+    val (traffic, nT) =
+      transformed(spark, trafficRaw, IngestOps.trafficFromRaw(_, date, time))
+    val (weather, nW) =
+      transformed(spark, weatherRaw, IngestOps.weatherFromRaw(_, date, time))
+    IngestOps.appendPartitioned(traffic -> cfg.trafficPath, weather -> cfg.weatherPath)
+    val t2 = System.nanoTime()
 
     // Entry point 2: the latest-snapshot query → K2 overwrite, reading
     // only the newest date partition of each history table.
@@ -106,9 +111,12 @@ object IngestPipeline {
     // traffic hour belongs in the snapshot.
     val nS = SnapshotQuery.publishLatest(spark, cfg.trafficPath,
       cfg.weatherPath, cfg.snapshotPath)
+    val t3 = System.nanoTime()
 
+    def ms(from: Long, to: Long) = (to - from) / 1000000L
     RunReport(date, time, nT, nW, nS,
       (tFail ++ wFail).map { case (p, e) => p.geo_name -> e.getMessage },
-      (System.nanoTime() - t0) / 1000000L)
+      ms(t0, t3), ms(t0, t1), ms(t1, t2), ms(t2, t3),
+      trafficRaw.size - nT, weatherRaw.size - nW)
   }
 }

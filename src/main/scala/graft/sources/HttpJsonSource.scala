@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Par
 import graft.schema.{GeoPoint, RawFetch}
 
 import java.net.URI
@@ -63,19 +64,25 @@ object HttpJsonSource {
     last
   }
 
-  /** Fan-out over all geo points (O1) with per-unit error isolation (O2):
-    * one failed point never aborts the run; failures are returned as a
-    * side channel instead of printed (`deployment_function.py:297-307`).
+  /** Fan-out over every (template, point) pair of a run (O1) with
+    * per-unit error isolation (O2): one failed point never aborts the
+    * run; failures are returned as a side channel instead of printed
+    * (`deployment_function.py:297-307`). The calls are independent
+    * round-trips, so they run through [[Par.buildAll]], up to 4 at a
+    * time against the APIs; each template's rows and failures come back
+    * in point order. A `fetcher` shared by the calls must be
+    * thread-safe.
     */
-  def fetchAll(template: String, points: Seq[GeoPoint], fetcher: Fetcher)
-      : (Seq[RawFetch], Seq[(GeoPoint, Throwable)]) = {
-    val results = points.map { p =>
-      fetcher(template, p) match {
-        case Success(body) => Left(RawFetch(p.geo_name, p.lat, p.lon, body))
-        case Failure(e)    => Right(p -> e)
-      }
+  def fetchAll(templates: Seq[String], points: Seq[GeoPoint], fetcher: Fetcher)
+      : Seq[(Seq[RawFetch], Seq[(GeoPoint, Throwable)])] = {
+    val n = points.size
+    val results = Par.buildAll(for (t <- templates; p <- points) yield (t, p)) {
+      case (t, p) => fetcher(t, p)
     }
-    (results.collect { case Left(r) => r },
-      results.collect { case Right(f) => f })
+    templates.indices.map { i =>
+      val rs = points.zip(results.slice(i * n, (i + 1) * n))
+      (rs.collect { case (p, Success(body)) => RawFetch(p.geo_name, p.lat, p.lon, body) },
+        rs.collect { case (p, Failure(e)) => p -> e })
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{IngestOps, SnapshotQuery}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -51,26 +51,24 @@ object StreamingIngest {
   }
 
   /** One micro-batch: split by data_type, run the batch transforms once
-    * per table with each record's own run stamp, append once per table,
-    * then republish the snapshot from the newest date partition. A
-    * backlog of several hours appends in one write per table: the
-    * `date` partitioning puts each stamp in its own directory.
+    * per table with each record's own run stamp, append both tables
+    * together (`IngestOps.appendPartitioned`, which also keeps a table
+    * without rows from creating its root, K3), then republish the
+    * snapshot from the newest date partition. A backlog of several hours
+    * appends in one write per table: the `date` partitioning puts each
+    * stamp in its own directory. No emptiness probe runs once both
+    * roots exist: an empty table's append writes no data file.
     */
   private[streaming] def writeMicroBatch(batch: DataFrame, trafficPath: String,
       weatherPath: String, snapshotPath: String): Unit = {
-    if (batch.isEmpty) return // K3
     // A record without a run stamp belongs to no hour: dropped, never
     // written under `__HIVE_DEFAULT_PARTITION__`.
     val stamped = batch.filter(col("date").isNotNull && col("time").isNotNull)
-    def append(dataType: String,
-        transform: (DataFrame, Column, Column) => DataFrame, path: String): Unit = {
-      val out = transform(stamped.filter(col("data_type") === dataType),
-        col("date"), col("time"))
-      if (!out.isEmpty) // K3
-        out.write.mode(SaveMode.Append).partitionBy("date").parquet(path)
-    }
-    append("traffic", IngestOps.trafficFromRaw, trafficPath)
-    append("weather", IngestOps.weatherFromRaw, weatherPath)
+    def rows(dataType: String, transform: (DataFrame, Column, Column) => DataFrame) =
+      transform(stamped.filter(col("data_type") === dataType), col("date"), col("time"))
+    IngestOps.appendPartitioned(
+      rows("traffic", IngestOps.trafficFromRaw) -> trafficPath,
+      rows("weather", IngestOps.weatherFromRaw) -> weatherPath)
     SnapshotQuery.publishLatest(batch.sparkSession, trafficPath, weatherPath,
       snapshotPath)
   }

@@ -5,7 +5,7 @@ import graft.operators.{Dedup, Retrieval, Similarity}
 import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, SQLHadoopMapReduceCommitProtocol}
@@ -34,6 +34,21 @@ class HookedCommitProtocol(jobId: String, path: String,
 
 object HookedCommitProtocol {
   @volatile var beforeCommit: String => Unit = _ => ()
+
+  /** Runs `body` with the protocol installed and `hook` as its
+    * [[beforeCommit]], restoring the session's protocol after.
+    */
+  def withHook[T](spark: SparkSession)(hook: String => Unit)(body: => T): T = {
+    val key = "spark.sql.sources.commitProtocolClass"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[HookedCommitProtocol].getName)
+    beforeCommit = hook
+    try body
+    finally {
+      beforeCommit = _ => ()
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 }
 
 /** The index write path's fixed cost: partitioned index writes run
@@ -181,19 +196,6 @@ class IndexWritePathSpec extends SparkSpec {
     }
   }
 
-  /** Runs `body` with [[HookedCommitProtocol]] installed. */
-  private def withCommitHook[T](hook: String => Unit)(body: => T): T = {
-    val key = "spark.sql.sources.commitProtocolClass"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, classOf[HookedCommitProtocol].getName)
-    HookedCommitProtocol.beforeCommit = hook
-    try body
-    finally {
-      HookedCommitProtocol.beforeCommit = _ => ()
-      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
-  }
-
   test("fencing under overlap: a lease stolen while a compaction's " +
     "overlapped sides are writing fails the publish and leaves the " +
     "manifest unchanged") {
@@ -208,7 +210,7 @@ class IndexWritePathSpec extends SparkSpec {
     val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stolen = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err = intercept[IllegalStateException] {
-      withCommitHook { path =>
+      HookedCommitProtocol.withHook(spark) { path =>
         // the postings side is committing its staged write while the
         // stats side runs beside it: a thief takes the lease now
         if (path.contains(".postings.compacting") &&
@@ -257,7 +259,7 @@ class IndexWritePathSpec extends SparkSpec {
       val before = served(root)
       val batch = docs.filter($"doc_id" % 5 === 4)
       intercept[Exception] {
-        withCommitHook { path =>
+        HookedCommitProtocol.withHook(spark) { path =>
           if (path.endsWith(failing))
             throw new java.io.IOException(s"injected failure writing $path")
         }(fold(batch, root))

@@ -227,6 +227,36 @@ class LayoutSpec extends SparkSpec {
     assert(q.count() == 6)
   }
 
+  test("compaction fails, live partition untouched and staging removed, " +
+    "when an append lands in the partition during its staging write") {
+    val base = tmpDir("compact-race")
+    val path = s"$base/history"
+    import spark.implicits._
+    def append(speed: Long): Unit =
+      Seq((speed, "09:00")).toDF("speed", "time")
+        .withColumn("date", lit("2026-08-12"))
+        .write.mode("append").partitionBy("date").parquet(path)
+    (0 until 3).foreach(h => append(h.toLong))
+    val part = new java.io.File(s"$path/date=2026-08-12")
+    def files = part.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+    var landed = false
+    val err = intercept[java.util.ConcurrentModificationException] {
+      HookedCommitProtocol.withHook(spark) { out =>
+        if (out.contains(".compacting") && !landed) { landed = true; append(99L) }
+      } { Layout.compactDatePartition(spark, path, "2026-08-12") }
+    }
+    assert(landed && err.getMessage.contains("1 files added"), err.getMessage)
+    assert(files.size == 4)
+    assert(spark.read.parquet(path).select("speed").as[Long].collect().sorted
+      .toSeq == Seq(0L, 1L, 2L, 99L))
+    assert(new java.io.File(path).list().filterNot(_.endsWith(".crc")).toSet ==
+      Set("date=2026-08-12", "_SUCCESS"))
+    // with appends stopped, the rerun compacts all four rows
+    Layout.compactDatePartition(spark, path, "2026-08-12")
+    assert(files.size == 1)
+    assert(spark.read.parquet(path).count() == 4)
+  }
+
   test("morton32 stays monotone past 2^31: the sign-bit flip keeps " +
     "signed sort order equal to the unsigned interleave order for the " +
     "full 32-bit key range") {

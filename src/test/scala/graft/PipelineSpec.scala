@@ -67,9 +67,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("retry: succeeds on third attempt (S3: tries=3)") {
-    val calls = new AtomicInteger(0)
+    // Counted per (API, point): the run's calls interleave across threads.
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
     val eventuallyOk: HttpJsonSource.Fetcher = (url, p) =>
-      if (calls.incrementAndGet() % 3 == 0) okFetcher(30)(url, p)
+      if (calls.computeIfAbsent(url.take(7) + p.geo_name, _ => new AtomicInteger())
+          .incrementAndGet() % 3 == 0) okFetcher(30)(url, p)
       else Failure(new RuntimeException("transient"))
     val r = IngestPipeline.run(spark, cfg(tmpDir("pipeline")), eventuallyOk, hour1)
     assert(r.trafficRows == 3 && r.weatherRows == 3 && r.failures.isEmpty)
@@ -121,6 +123,59 @@ class PipelineSpec extends SparkSpec {
     val r2 = IngestPipeline.run(spark, c, trafficDown, hour2)
     assert(r2.trafficRows == 0 && r2.weatherRows == 3)
     assert(r2.snapshotRows == 3) // latest traffic hour (hour 1) still joins
+  }
+
+  test("concurrent fetches: with a seeded, different delay per point, rows " +
+    "and failures still come back in point order, each point isolated (O1/O2)") {
+    val points = (0 until 12).map(i => GeoPoint(f"p$i%02d", s"55.$i", s"12.$i"))
+    val delay = points.map(p => p.geo_name -> new scala.util.Random(p.geo_name.hashCode)
+      .nextInt(40)).toMap
+    val inFlight, peak = new AtomicInteger(0)
+    // every third point fails on both APIs; the rest answer with their index
+    val sleepy: HttpJsonSource.Fetcher = (url, p) => {
+      peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
+        Thread.sleep(delay(p.geo_name))
+        val i = points.indexOf(p)
+        if (i % 3 == 0) Failure(new RuntimeException(s"$url ${p.geo_name}"))
+        else Success(
+          if (url.startsWith("traffic")) Fixtures.tomtom(currentSpeed = i)
+          else Fixtures.openWeather())
+      } finally inFlight.decrementAndGet()
+    }
+    val ok = points.zipWithIndex.collect { case (p, i) if i % 3 != 0 => p }
+    val down = points.zipWithIndex.collect { case (p, i) if i % 3 == 0 => p }
+    val Seq((tRows, tFail), (wRows, wFail)) = HttpJsonSource.fetchAll(
+      Seq("traffic://x", "weather://x"), points, sleepy)
+    assert(tRows.map(_.geo_name) == ok.map(_.geo_name))
+    assert(wRows.map(_.geo_name) == ok.map(_.geo_name))
+    assert(tRows.map(_.payload) == ok.map(p =>
+      Fixtures.tomtom(currentSpeed = points.indexOf(p))))
+    assert(tFail.map(_._1) == down && wFail.map(_._1) == down)
+    assert(tFail.map(_._2.getMessage) == down.map(p => s"traffic://x ${p.geo_name}"))
+    assert(peak.get() > 1 && peak.get() <= 4, s"peak concurrency ${peak.get()}")
+
+    val c = cfg(tmpDir("pipeline")).copy(points = points)
+    val r = IngestPipeline.run(spark, c, sleepy, hour1)
+    assert(r.trafficRows == ok.size && r.weatherRows == ok.size)
+    assert(r.failures.map(_._1) == (down ++ down).map(_.geo_name))
+    assert(spark.read.parquet(c.trafficPath).select("geo_name", "current_speed")
+      .as[(String, Long)].collect().sorted.toSeq ==
+      ok.map(p => p.geo_name -> points.indexOf(p).toLong))
+  }
+
+  test("RunReport: per-stage milliseconds within the wall time, and the " +
+    "malformed payloads each table dropped (fetched minus landed)") {
+    val badTraffic: HttpJsonSource.Fetcher = (url, p) =>
+      if (p.geo_name == "langebro" && url.startsWith("traffic"))
+        Success(Fixtures.notJson)
+      else okFetcher(30)(url, p)
+    val r = IngestPipeline.run(spark, cfg(tmpDir("pipeline")), badTraffic, hour1)
+    assert(r.trafficRows == 2 && r.weatherRows == 3)
+    assert(r.trafficDropped == 1 && r.weatherDropped == 0)
+    assert(Seq(r.fetchMillis, r.appendMillis, r.snapshotMillis).forall(_ >= 0))
+    assert(r.fetchMillis + r.appendMillis + r.snapshotMillis <= r.wallMillis)
+    assert(r.snapshotMillis > 0)
   }
 
   test("url template rendering substitutes lat/lon/key (S1 URL shape)") {

@@ -519,6 +519,25 @@ class PlanSpec extends SparkSpec {
       assert(f.selectedPartitions.partitionCount == 1, roots(f))
       assert(roots(f).forall(_.endsWith("date=2026-08-13")), roots(f))
     }
+    // each table is scanned once: the newest-hour job returns the traffic
+    // rows the join uses, so no second traffic scan
+    def scansOf(path: String) = history.count(roots(_).exists(_.contains(path)))
+    assert(scansOf(c.trafficPath) == 1 && scansOf(c.weatherPath) == 1,
+      history.map(roots))
+  }
+
+  test("ingest append: each hourly append writes ONE parquet file per table " +
+    "(driver-local rows are written from one partition)") {
+    import graft.pipeline.IngestPipeline
+    val c = ingestConfig(tmpDir("files"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusHours(1))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1))
+    for (table <- Seq(c.trafficPath, c.weatherPath)) {
+      def files(date: String) = new java.io.File(s"$table/date=$date").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files("2026-08-12") == 2 && files("2026-08-13") == 1, table)
+    }
   }
 
   test("ingest append: exactly ONE job per non-empty append stage (the " +

@@ -1,8 +1,11 @@
 package graft
 
 import graft.streaming.StreamingIngest
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -155,5 +158,61 @@ class StreamingIngestSpec extends SparkSpec {
         .collect().toSeq == Seq("a"), table)
     }
     assert(spark.read.parquet(s"$base/snapshot").count() == 1)
+  }
+
+  test("a drain into existing tables runs no emptiness probe (five jobs), " +
+    "and a table without rows gains no data file") {
+    val base = tmpDir("stream")
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    def drain(name: String, records: Seq[String]): Unit = {
+      writeBatchFile(in, name, records)
+      StreamingIngest.start(spark, in, s"$base/traffic", s"$base/weather",
+        s"$base/snapshot", s"$base/ckpt").awaitTermination()
+    }
+    drain("h1.json", Seq(
+      rec("a", Fixtures.tomtom(currentSpeed = 30), "2026-08-12", "09:00", "traffic"),
+      rec("a", Fixtures.openWeather(), "2026-08-12", "09:00", "weather")))
+    def dataFiles(table: String) = {
+      val s = Files.walk(Paths.get(base, table))
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally s.close()
+    }
+    val trafficBefore = dataFiles("traffic")
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // hour 2: its traffic payload is malformed, so traffic has no rows
+      drain("h2.json", Seq(
+        rec("a", Fixtures.notJson, "2026-08-12", "10:00", "traffic"),
+        rec("a", Fixtures.openWeather(), "2026-08-12", "10:00", "weather")))
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // two appends, the newest-hour scan, the broadcast of that driver-local
+    // hour and the snapshot write; each emptiness probe would add one
+    assert(jobs.get() == 5)
+    assert(dataFiles("traffic") == trafficBefore)
+    assert(spark.read.parquet(s"$base/weather").count() == 2)
+    // the newest traffic hour is still 09:00, with its weather match
+    assert(spark.read.parquet(s"$base/snapshot").count() == 1)
+  }
+
+  test("a weather-only micro-batch into an absent traffic root creates no " +
+    "traffic dir (K3) and appends its weather rows") {
+    val base = tmpDir("stream")
+    val in = s"$base/in"
+    Files.createDirectories(Paths.get(in))
+    writeBatchFile(in, "w.json",
+      Seq(rec("a", Fixtures.openWeather(), "2026-08-12", "09:00", "weather")))
+    StreamingIngest.start(spark, in, s"$base/traffic", s"$base/weather",
+      s"$base/snapshot", s"$base/ckpt").awaitTermination()
+    assert(!Files.exists(Paths.get(base, "traffic")))
+    assert(!Files.exists(Paths.get(base, "snapshot")))
+    assert(spark.read.parquet(s"$base/weather").count() == 1)
   }
 }

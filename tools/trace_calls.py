@@ -15,6 +15,19 @@ run time, the driver gap (wall minus that union: planning, listings,
 ledger and manifest I/O, thread hand-offs) and the files its writes
 produced. `--sites` adds each call's jobs by call site. Only reads the
 trace files.
+
+    python3 tools/trace_calls.py .bench_build/traces/hourly_ingest-s5 \
+        --prefix pipeline.run --timeline
+
+`--timeline` prints, instead of the table, one block per call: its
+child spans grouped by name (count, first start and last end), then
+every SQL execution and every job that started inside it, in start
+order, each with its start and end in ms from the call's start. An
+execution line also gives the dirs it read and wrote (last two path
+components) and its files scanned and written; the jobs of an execution
+are indented under it. This is the per-hour view of `hourly_ingest`:
+it shows which steps of one hourly run overlap and which wait on each
+other.
 """
 import argparse
 import collections
@@ -47,6 +60,48 @@ def is_inference(job):
     return job["exec"] == -1 and job["site"].startswith("parquet at ")
 
 
+def short(paths):
+    return ",".join("/".join(p.rstrip("/").split("/")[-2:]) for p in paths) or "-"
+
+
+def timeline(call, all_spans, jobs, execs):
+    lo, hi = call["start_us"], call["end_us"]
+
+    def ms(us):
+        return (us - lo) / 1e3
+
+    print(f"{call['name']} ({(hi - lo) / 1e3:.0f} ms)")
+    kids = collections.defaultdict(list)
+    for s in all_spans:
+        if s["parent"] == call["id"]:
+            kids[s["name"]].append(s)
+    for name, ss in sorted(kids.items()):
+        print(f"  span {name} x{len(ss):<4}"
+              f"{ms(min(s['start_us'] for s in ss)):>8.0f}"
+              f"{ms(max(s['end_us'] for s in ss)):>8.0f}")
+    inside = [j for j in jobs if lo <= j["start_us"] <= hi]
+    by_exec = collections.defaultdict(list)
+    for j in inside:
+        by_exec[j["exec"]].append(j)
+    rows = [(e["start_us"], "exec", e) for e in execs
+            if lo <= e["start_us"] <= hi]
+    shown = {e["exec"] for _, _, e in rows}
+    rows += [(j["start_us"], "job", j) for j in inside
+             if j["exec"] not in shown]
+    for _, kind, r in sorted(rows, key=lambda r: r[0]):
+        if kind == "exec":
+            end = r["start_us"] + r["ms"] * 1e3
+            print(f"  exec {r['exec']:<8}{ms(r['start_us']):>8.0f}{ms(end):>8.0f}"
+                  f"  read {short(r['reads'])} ({r['files_scanned']} files)"
+                  f"  wrote {short(r['writes'])} ({r['files_written']} files)")
+            nested = by_exec[r["exec"]]
+        else:
+            nested = [r]
+        for j in sorted(nested, key=lambda j: j["start_us"]):
+            print(f"  {'  ' if kind == 'exec' else ''}job {j['job']:<6}"
+                  f"{ms(j['start_us']):>8.0f}{ms(j['end_us']):>8.0f}  {j['site']}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("trace_dir")
@@ -56,14 +111,23 @@ def main():
                     help="also report index.serve.* spans")
     ap.add_argument("--sites", action="store_true",
                     help="list each call's jobs by call site")
+    ap.add_argument("--timeline", action="store_true",
+                    help="print each call's spans, executions and jobs "
+                         "with start/end offsets instead of the table")
     a = ap.parse_args()
 
-    spans = [s for s in load(a.trace_dir, "spans.jsonl")
+    all_spans = load(a.trace_dir, "spans.jsonl")
+    spans = [s for s in all_spans
              if s["name"].startswith(a.prefix)
              and (a.serves or not s["name"].startswith("index.serve"))]
     jobs = [j for j in load(a.trace_dir, "jobs.jsonl") if "end_us" in j]
     execs = load(a.trace_dir, "execs.jsonl")
     spans.sort(key=lambda s: s["start_us"])
+    if a.timeline:
+        for s in spans:
+            timeline(s, all_spans, jobs, execs)
+            print()
+        return
 
     seen = collections.Counter()
     totals = collections.defaultdict(lambda: collections.Counter())
