@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *     partial one.
   *   - '''manifest''' — the versioned-publish pointer: a small
   *     `_manifest` file at the root mapping each logical kind
-  *     (`vectors`, `postings`, `df`, …) to its current PHYSICAL
+  *     (`vectors`, `postings`, `stats`, …) to its current PHYSICAL
   *     generation directory (`vectors.g3`). [[publishDir]] never swaps
   *     a live directory: it renames the staged dir to a FRESH
   *     generation name, then atomically replaces the manifest — the
@@ -394,17 +394,6 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
             "entry that points at missing data.")
     }
 
-  /** Write the grown ledger INTO a staged directory (for indexes whose
-    * ledger rides a directory publish — the manifest replace is then
-    * both the data publish and the commit point, see
-    * `Dedup.commitBatchFold`).
-    */
-  def writeLedgerInto(dirRel: String, extra: String*): Unit = {
-    val dest = new Path(new Path(rootPath, dirRel), ledgerPath.getName)
-    val out = fs.create(dest, true)
-    try out.write(renderLedger(extra)) finally out.close()
-  }
-
   /** Run an append fold exactly once under the writer lease: a
     * ledgered batchId is a committed no-op (returns false); otherwise
     * stage (overwrite-mode b-dir writes) then commit atomically.
@@ -429,7 +418,9 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
     * `d`-prefixed ledger entry. The delete's tombstone dir
     * (`tombstones/d<deleteId>`, the [[stageTombstones]] convention) is
     * always guarded at the commit; `stagedRels` adds any further
-    * staged dirs (e.g. a BM25 delete's negative stats delta).
+    * staged dirs (e.g. a BM25 delete's negative stats delta, a dedup
+    * delete's negative df delta), each marked by [[markAboveCollapse]]
+    * before the commit.
     */
   def delete(deleteId: Long, stagedRels: Seq[String] = Nil)(
       stage: => Unit): Boolean =
@@ -437,11 +428,45 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
       if (deletedBatches().contains(deleteId)) false
       else {
         stage
+        stagedRels.foreach(markAboveCollapse(_, deleteId))
         commitStaged(s"tombstones/d$deleteId" +: stagedRels,
           s"d$deleteId")
         true
       }
     }
+
+  /** A delete delta `<kind>/d<deleteId>` whose id is at or below the
+    * kind's newest collapse `c<n>` would be hidden by the
+    * compaction-supersedes rule the instant it commits, although `c<n>`
+    * never summed it. Such an id is outside the monotonic sequence (a
+    * takedown stream's raw batchIds beside the ingest folds' own), and
+    * its delta still has to serve: it gets an `_after_c<n>` marker
+    * file, which keeps it visible beside `c<n>` and lets only a LATER
+    * collapse absorb it (see [[committedAbove]]). Idempotent: a replay
+    * re-stages the dir under overwrite semantics and marks it again.
+    */
+  private def markAboveCollapse(rel: String, deleteId: Long): Unit = {
+    val d = new Path(rootPath, resolveRel(rel))
+    if (d.getName == s"d$deleteId") {
+      val f = fs
+      f.listStatus(d.getParent).iterator.map(_.getPath.getName)
+        .filter(_.matches("c\\d+")).map(dirOrd).maxOption
+        .filter(_ >= deleteId)
+        .foreach(n => f.create(new Path(d, s"$AfterMarker$n"), true).close())
+    }
+  }
+
+  private val AfterMarker = "_after_c"
+
+  /** The collapse order the delete delta `dDir` committed above (its
+    * [[markAboveCollapse]] marker), or -1 when it has none. A `c<n>`
+    * supersedes a `d<id>` with id ≤ n only when this is below n.
+    */
+  private def committedAbove(dDir: Path): Long =
+    fs.listStatus(dDir).iterator.map(_.getPath.getName)
+      .collectFirst { case n if n.startsWith(AfterMarker) =>
+        n.drop(AfterMarker.length).toLong }
+      .getOrElse(-1L)
 
   // ---- committed sub-dirs ----
 
@@ -513,47 +538,101 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
       val floor = normalizedFloor(floorRequested)
       requireNoDetachedSurvivors(s, floor)
       val f = fs
-      def sourcesOf(kindDir: Path): Seq[String] =
-        f.listStatus(kindDir).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .filter(n => n == "seed" ||
-            (n.matches("[bc]\\d+") && dirOrd(n) <= floor &&
-              n != s"c$floor") ||
-            // a d-dir's absorption is decided by its own ledger id
-            // (its fold order is its high-water mark's business)
-            (n.matches("d\\d+") && n.drop(1).toLong <= floor))
       val kindDirs = sides.map { case (kind, _) => new Path(dir(kind)) }
-      val targets = kindDirs.map(kd => new Path(kd, s"c$floor"))
       val tsDir = new Path(rootPath, "tombstones")
       def spentTombstones: Seq[String] =
         if (!f.exists(tsDir)) Seq.empty
         else f.listStatus(tsDir).toSeq.filter(_.isDirectory)
           .map(_.getPath.getName)
           .filter(n => n.matches("d\\d+") && n.drop(1).toLong <= floor)
-      val allSources = kindDirs.map(sourcesOf)
-      if (targets.forall(f.exists) && allSources.forall(_.isEmpty) &&
-          spentTombstones.isEmpty)
+      if (kindDirs.forall(kd => f.exists(new Path(kd, s"c$floor")) &&
+            collapsedSources(kd, floor).isEmpty) && spentTombstones.isEmpty)
         false // committed no-op: this floor is already fully vacuumed
       else {
-        val pending = sides.zip(kindDirs.zip(targets)).collect {
-          case ((kind, stage), (kd, target)) if !f.exists(target) =>
-            (kind, stage, new Path(kd, s".c$floor.vacuum"), target)
-        }
-        // The sides' dot-staging writes are independent: run them
-        // concurrently, then land each by its rename on THIS thread,
-        // the one holding the lease.
-        Par.runAll(pending.map { case (_, stage, staging, _) =>
-          () => stage(floor, staging.toString) }: _*)
-        for ((kind, _, staging, target) <- pending) {
-          require(f.rename(staging, target),
-            s"vacuum of $root/$kind: rename $staging -> $target failed")
-        }
-        for ((kd, srcs) <- kindDirs.zip(allSources); n <- srcs)
-          f.delete(new Path(kd, n), true)
+        // The sides are independent: each collapses concurrently (its
+        // stage, the rename that commits it, the reclaim of its
+        // sources — each side's collapse serves the same rows on its
+        // own). The absorbed tombstones go only once every side has
+        // landed: an uncollapsed side still needs them.
+        Par.runAll(sides.map { case (kind, stage) =>
+          () => collapseInPlace(kind, floor)(stage(floor, _)) }: _*)
         spentTombstones.foreach(n => f.delete(new Path(tsDir, n), true))
         true
       }
     }
+
+  /** The sub-dirs of `kindDir` that a `c<upTo>` collapse absorbs: the
+    * seed, every `b`/`c` dir of order ≤ `upTo` other than the target,
+    * and every `d` dir whose own ledger id is ≤ `upTo` (a d-dir's fold
+    * order is its high-water mark's business) unless it committed
+    * after a `c<upTo>` already stood ([[committedAbove]]). Exactly what
+    * the compaction-supersedes rule hides once `c<upTo>` exists.
+    */
+  private def collapsedSources(kindDir: Path, upTo: Long): Seq[String] =
+    fs.listStatus(kindDir).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .filter(n => n == "seed" ||
+        (n.matches("[bc]\\d+") && dirOrd(n) <= upTo && n != s"c$upTo") ||
+        (n.matches("d\\d+") && n.drop(1).toLong <= upTo &&
+          committedAbove(new Path(kindDir, n)) < upTo))
+
+  /** Collapse `kind` IN PLACE into one `c<upTo>` sub-dir — each side
+    * of [[vacuumKinds]], and the compaction of a kind whose directory
+    * is never generation-swapped (the dedup `df` deltas, whose
+    * directory also holds the ledger). `stage` writes the
+    * resolved content of every committed sub-dir with ledger id ≤
+    * `upTo` into the staging path it is given; one rename lands it, and
+    * that rename is the commit point (the compaction-supersedes rule in
+    * [[committedDirsOrEmpty]] hides the absorbed dirs from that
+    * instant); the absorbed dirs are then reclaimed. `upTo` must be the
+    * newest ledger id the collapse absorbs, so no committed delta above
+    * it is hidden and none below it stays visible. A present target
+    * skips the stage, so a replay after a crash only finishes the
+    * reclaim. Runs inside the caller's lease.
+    */
+  def collapseInPlace(kind: String, upTo: Long)(stage: String => Unit): Unit = {
+    val f = fs
+    val kindDir = new Path(dir(kind))
+    val target = new Path(kindDir, s"c$upTo")
+    if (!f.exists(target)) {
+      val staging = new Path(kindDir, s".c$upTo.collapse")
+      stage(staging.toString)
+      require(f.rename(staging, target),
+        s"collapse of $root/$kind: rename $staging -> $target failed")
+    }
+    collapsedSources(kindDir, upTo).foreach(n => f.delete(new Path(kindDir, n), true))
+  }
+
+  /** Whether `kind` still holds one FLAT frame (its parquet part files
+    * or its `_SUCCESS` directly under the kind dir) — not yet, or not
+    * completely, moved by [[adoptFlat]]. One listing of the kind dir.
+    */
+  def isFlat(kind: String): Boolean = {
+    val f = fs
+    val kd = new Path(dir(kind))
+    f.exists(kd) && f.listStatus(kd).exists(st => st.isFile && {
+      val n = st.getPath.getName
+      n.startsWith("part-") || n == "_SUCCESS"
+    })
+  }
+
+  /** Turn a flat `kind` into a multi-root one by moving its frame (the
+    * part files, then `_SUCCESS`) into the sub-dir `sub`. The sub-dir
+    * carries `_SUCCESS` only once every part file is in it; a replay
+    * after a crash ([[isFlat]] still holds) moves what is left. Runs
+    * inside the caller's lease.
+    */
+  def adoptFlat(kind: String, sub: String): Unit = {
+    val f = fs
+    val kd = new Path(dir(kind))
+    val target = new Path(kd, sub)
+    f.mkdirs(target)
+    val files = f.listStatus(kd).toSeq.filter(_.isFile).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    for (src <- files :+ new Path(kd, "_SUCCESS") if f.exists(src))
+      require(f.rename(src, new Path(target, src.getName)),
+        s"adopting flat $root/$kind: moving ${src.getName} into $sub failed")
+  }
 
   /** Vacuum honesty guard: every SURVIVING tombstone (deleteId >
     * floor) must carry a high-water mark ≥ floor, else the resolved
@@ -708,8 +787,8 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
         def isProto(n: String) = n == "seed" || n.matches("[bcd]\\d+")
         // Two layouts share the protocol: MULTI-ROOT kinds (a seed /
         // b<id> / c<hw> / d<id> sub-root per commit — vectors,
-        // postings, shingles, tombstones) and FLAT kinds (one parquet
-        // frame, possibly hive-partitioned — cents, codebook, df).
+        // postings, shingles, df, tombstones) and FLAT kinds (one
+        // parquet frame, possibly hive-partitioned — cents, codebook).
         // The ledger names sub-roots, so its cross-checks only apply
         // to the multi-root shape; a flat kind's integrity is its own
         // top-level _SUCCESS.
@@ -819,7 +898,7 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
           if (n.matches("b\\d+")) folded.contains(n.drop(1).toLong)
           else if (n.matches("d\\d+")) deleted.contains(n.drop(1).toLong)
           else true))
-      dropSuperseded(names).map(n => s"$root/$kindRel/$n").sorted
+      dropSuperseded(kindPath, names).map(n => s"$root/$kindRel/$n").sorted
     }
   }
 
@@ -829,16 +908,20 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
     * it resolved). The comparison is on the id embedded in the name,
     * not [[dirOrd]]: a d-dir's fold order is its high-water mark's
     * business — its absorption into a collapse is decided by when the
-    * DELETE committed, i.e. its own ledger id.
+    * DELETE committed, i.e. its own ledger id. A d-dir that committed
+    * after that collapse already stood ([[committedAbove]]) is not in
+    * it and stays visible.
     */
-  private def dropSuperseded(names: Seq[String]): Seq[String] = {
+  private def dropSuperseded(kindPath: Path, names: Seq[String]): Seq[String] = {
     val cOrds = names.filter(_.matches("c\\d+")).map(dirOrd)
     if (cOrds.isEmpty) names
     else {
       val maxC = cOrds.max
       names.filterNot(n => n == "seed" ||
         (n.matches("[bcd]\\d+") && n != s"c$maxC" &&
-          n.drop(1).toLong <= maxC))
+          n.drop(1).toLong <= maxC &&
+          !(n.startsWith("d") &&
+            committedAbove(new Path(kindPath, n)) >= maxC)))
     }
   }
 
@@ -866,10 +949,12 @@ final class FoldProtocol(val root: String, ledgerRel: String) {
     * ord ranges where no dir exists is harmless (nothing to anti-join);
     * re-ingest monotonicity is untouched (a later fold's id is above
     * EVERY earlier ledger id by the monotonic-sequence contract, so it
-    * still outranks this mark).
+    * still outranks this mark). The ids are written as given, without
+    * a `distinct` shuffle: a repeated or absent id is harmless to both
+    * readers (the serve-side anti-join and [[clearTombstones]]).
     */
   def stageTombstones(ids: DataFrame, idCol: String, deleteId: Long): Unit =
-    ids.select(col(idCol)).distinct()
+    ids.select(col(idCol))
       .withColumn("hw", lit((allLedgerIds() + 0L).max))
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$root/tombstones/d$deleteId")

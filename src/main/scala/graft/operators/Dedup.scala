@@ -573,16 +573,21 @@ object Dedup {
   }
 
   /** Persist the incremental-dedup index for `docs` (the already-ingested
-    * corpus) at `path`: two parquet frames —
+    * corpus) at `path`: three frames, each a multi-root kind whose
+    * `seed/` sub-dir this build writes —
     *   `shingles/` (doc_id, shh): the RAW exploded 8-byte shingle hashes
     *   `hashes/`   (doc_id, h):   the md5 content hash per document
+    *   `df/`       (shh, df):     per-shingle document frequency
     * The shingle frame is raw (un-capped) because the stop-shingle df cap
     * must count UNION(history, incoming) document frequency at query
     * time, exactly as a full re-dedup would — a cap baked in at index
     * time would freeze history's df and diverge from the convergence
-    * contract. This is the 100-TB lifecycle piece: each ingest batch
-    * APPENDS its survivors' pairs to the index (here: one overwrite,
-    * because the gate builds it once), and no later batch ever re-reads
+    * contract. The df frame is that frequency pre-aggregated: the
+    * query-time stop list needs df(history) + df(incoming) per key, and
+    * reading the `(shh, df)` deltas beats re-aggregating the pair
+    * frame every batch. This is the 100-TB lifecycle piece: each
+    * ingest batch APPENDS its survivors' pairs and df counts to the
+    * index ([[appendToIndex]]), and no later batch ever re-reads
     * history *text* — only these compact hash frames.
     *
     * Index keys are xxhash64 values, not shingle strings: 8 bytes/key vs
@@ -592,44 +597,81 @@ object Dedup {
     * vanishing at any realistic vocabulary), the standard signature-index
     * trade every production dedup index makes.
     */
-  def writeIndex(docs: DataFrame, path: String): Unit = {
+  def writeIndex(docs: DataFrame, path: String): Unit =
+    writeSubRoot(docs, path, "seed")
+
+  /** Write one sub-root `sub` of all three frames from a
+    * `documents`-shaped frame: the shingle pairs, the content hashes
+    * and the sub-root's df counts (`groupBy(shh)` of the same pairs).
+    * The three writes are independent and overlapped ([[Par.runAll]]);
+    * the shingle explode runs once per write that needs it, which is
+    * batch-sized work. Overwrite semantics ⇒ a replayed fold rewrites
+    * the same dirs wholesale.
+    */
+  private def writeSubRoot(docs: DataFrame, path: String, sub: String): Unit = {
+    val p = protocol(path)
+    val Seq(shDir, hDir, dfDir) =
+      Seq("shingles", "hashes", "df").map(k => s"${p.dir(k)}/$sub")
     val exploded = Par.fanOut(docs)
       .select(col("doc_id"), explode(shingles3(col("text"))).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
-    // The three frames are independent writes: overlapped.
     Par.runAll(
-      () => exploded.write.mode(SaveMode.Overwrite)
-        .parquet(s"$path/shingles/seed"),
-      // Pre-aggregated per-shingle document frequency: the query-time
-      // stop list needs df(history) + df(incoming) per key, and reading
-      // this (shh, df) summary beats re-aggregating the full pair frame
-      // every batch — the pairs are then scanned exactly ONCE per batch
-      // (for candidate generation).
+      () => exploded.write.mode(SaveMode.Overwrite).parquet(shDir),
       () => exploded.groupBy(col("shh")).agg(count(lit(1)).as("df"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/df"),
+        .write.mode(SaveMode.Overwrite).parquet(dfDir),
       () => docs.select(col("doc_id"), md5(col("text")).as("h"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/hashes/seed"))
+        .write.mode(SaveMode.Overwrite).parquet(hDir))
   }
 
-  // ---- index sub-frame layout: `shingles/` and `hashes/` hold ONLY
-  // subdirectories — `seed/` (writeIndex), `b<batchId>/` (one per folded
-  // batch, rewritten in place on replay) and `compact/` (compactIndex) —
-  // and the set of VALID b-dirs is the batch ledger, committed atomically
-  // with the df summary (a `_ledger` sidecar inside `df/`, published by
-  // the same directory swap). A b-dir not in the ledger is an orphan from
+  // ---- index sub-frame layout: `shingles/`, `hashes/` and `df/` hold
+  // ONLY subdirectories — `seed/` (writeIndex), `b<batchId>/` (one per
+  // folded batch, rewritten in place on replay) and `c<n>/`
+  // (compactIndex, vacuumDedupIndex); `df/` also holds `d<deleteId>/`,
+  // a delete's NEGATIVE counts — and the set of VALID b/d-dirs is the
+  // ledger at `df/_ledger`. A b-dir not in the ledger is an orphan from
   // a crashed fold: readers skip it, and the replay of that batch
-  // rewrites it wholesale before committing. That is what makes the fold
-  // exactly-once under replay. ----
+  // rewrites it wholesale before committing. That is what makes the
+  // fold exactly-once under replay. `df/` is never generation-swapped
+  // (the ledger lives in it); its collapses land in place. ----
 
   /** The index's staged-commit machinery — ledger, committed-dir
     * resolution, tombstones, publishes (see
-    * [[graft.index.FoldProtocol]]). The ledger is a `_ledger` sidecar
-    * INSIDE `df/`, so the df directory swap is also the ledger commit.
+    * [[graft.index.FoldProtocol]]). The ledger is a `_ledger` file
+    * inside `df/`, which only ever holds sub-dirs besides it.
     */
   private[graft] def protocol(path: String) =
     new graft.index.FoldProtocol(path, "df/_ledger")
 
-  /** BatchIds whose fold is fully committed (ledger = df sidecar). */
+  /** [[protocol]] of a root whose df is in the delta layout — every
+    * entry point below opens its root through this. A root written
+    * before the df became per-commit deltas holds ONE flat summary
+    * frame in `df/` (no sub-dirs): the first open moves it, under the
+    * writer lease, into the collapse `c<hw>` (hw = the newest fold),
+    * which is exactly what that summary sums. A summary that also
+    * holds a delete committed above the newest fold fits no collapse
+    * name (`c<hw>` would serve that delete at horizons before it, a
+    * later order would hide later folds), so such a root refuses: it
+    * has to be rebuilt with [[writeIndex]] over its live corpus.
+    */
+  private def opened(path: String): graft.index.FoldProtocol = {
+    val p = protocol(path)
+    if (p.isFlat("df")) p.withLease("adopt-flat-df") {
+      if (p.isFlat("df")) {
+        val hw = p.highWater()
+        val late = p.deletedBatches().filter(_ > hw)
+        require(late.isEmpty,
+          s"dedup index at $path has a flat df summary that includes " +
+            s"delete(s) d${late.toSeq.sorted.mkString(", d")} committed " +
+            s"after its newest fold $hw: it cannot be upgraded to the df " +
+            "delta layout in place — rebuild it with Dedup.writeIndex " +
+            "over its live corpus")
+        p.adoptFlat("df", s"c$hw")
+      }
+    }
+    p
+  }
+
+  /** BatchIds whose fold is fully committed. */
   def foldedBatches(path: String): Set[Long] =
     protocol(path).foldedBatches()
 
@@ -652,153 +694,129 @@ object Dedup {
     */
   private val FrameSchemas = Map(
     "shingles" -> "doc_id BIGINT, shh BIGINT",
-    "hashes" -> "doc_id BIGINT, h STRING")
-  private val DfSchema = "shh BIGINT, df BIGINT"
+    "hashes" -> "doc_id BIGINT, h STRING",
+    "df" -> "shh BIGINT, df BIGINT")
 
   /** Reader of one committed sub-dir of frame `sub`. */
   private def readSub(s: SparkSession, sub: String)(dir: String): DataFrame =
     s.read.schema(FrameSchemas(sub)).parquet(dir)
 
-  private def readDf(s: SparkSession, path: String): DataFrame =
-    s.read.schema(DfSchema).parquet(protocol(path).dir("df"))
+  /** The `(shh, df)` rows of the committed df delta dirs `dirs` (seed
+    * or collapse, `b<id>` positive, `d<id>` negative), unsummed: a
+    * key's df is the sum of its rows. The serves sum them inside the
+    * stop-list aggregate ([[incrementalKeepNewFromFrames]]), so reading
+    * N deltas costs a union, not a second aggregate.
+    */
+  private def dfDeltas(s: SparkSession, dirs: Seq[String]): DataFrame =
+    dirs.map(readSub(s, "df")).reduce(_.union(_))
+
+  /** [[dfDeltas]] summed per key, with the keys that reach 0 dropped
+    * (only reachable through deletes) — what a collapse persists. No
+    * aggregate when one dir is given: a seed or collapse already holds
+    * one positive row per key.
+    */
+  private def dfOf(s: SparkSession, dirs: Seq[String]): DataFrame =
+    if (dirs.size == 1) dfDeltas(s, dirs)
+    else dfDeltas(s, dirs)
+      .groupBy(col("shh")).agg(sum(col("df")).as("df"))
+      .filter(col("df") =!= 0)
+
+  /** The df the current serve sees: [[dfOf]] over every committed
+    * `df/` sub-dir, one row per key.
+    */
+  private[graft] def servedDf(s: SparkSession, path: String): DataFrame =
+    dfOf(s, opened(path).committedDirs("df"))
 
   /** Fold batch `batchId` into a persisted index, EXACTLY ONCE under
     * replay (the per-batch lifecycle step: after
     * `incrementalKeepNewIndexed` picks a batch's survivors, those
     * survivors join the corpus and must be queryable by the NEXT batch).
+    * Through [[graft.index.FoldProtocol.fold]]: a ledgered batchId is a
+    * committed no-op (returns false); otherwise the batch's shingle,
+    * hash and df rows land in `b<batchId>/` sub-dirs of the three
+    * frames with overwrite semantics ([[stageBatchFold]] — a replay
+    * after a mid-write crash rewrites the same dirs), and the one
+    * atomic ledger replace commits them together, after checking that
+    * all three staged dirs are still there.
     *
-    * Idempotence protocol (streaming restarts redeliver a micro-batch
-    * with the same batchId):
-    *   1. already in the ledger → whole fold is a no-op (returns false);
-    *   2. shingle/hash rows land in `b<batchId>/` subdirs with OVERWRITE
-    *      semantics — a replay after a crash mid-write rewrites the same
-    *      dirs instead of double-appending;
-    *   3. the df summary re-merge (old summary ∪ batch counts,
-    *      grouped-sum) stages a new `df/` dir CARRYING the ledger with
-    *      batchId added, then swaps it into place — one atomic rename is
-    *      both the df publish and the fold's commit point. A crash
-    *      before the swap leaves the ledger without batchId (replay
-    *      redoes everything); after it, step 1 short-circuits.
-    * Concurrent readers see the old or new summary, never a partial one
-    * (same local/HDFS rename semantics as `Layout.publishOverwrite`; an
-    * object-store deployment publishes the staged dir via a metadata
-    * commit instead). Single-writer, like all Layout publishes.
-    *
-    * Cost shape: O(|batch|) writes + a merge keyed by shingle hash whose
-    * inputs are two AGGREGATED frames — the corpus pair frame is never
-    * rewritten and never re-read.
+    * Cost shape: O(|batch|) reads and writes. The batch's df delta is
+    * its own `groupBy(shh)`; the existing df is never read and never
+    * rewritten, and neither is the corpus pair frame.
     */
   def appendToIndex(docs: DataFrame, path: String, batchId: Long): Boolean =
-    protocol(path).withLease(s"fold-$batchId") {
-      if (foldedBatches(path).contains(batchId)) false
-      else {
-        val incDf = stageBatchFold(docs, path, batchId)
-        commitBatchFold(incDf, path, batchId)
-        true
-      }
+    opened(path).fold(batchId, Seq("shingles", "hashes", "df")) {
+      stageBatchFold(docs, path, batchId)
     }
 
-  /** Steps 2 of the fold protocol: write the batch's shingle/hash rows
-    * into their b-dirs (overwrite ⇒ replay-safe) and return the batch's
-    * df delta. Exposed to the spec so a crash between frame writes and
-    * the df commit can be simulated.
+  /** The stage of a fold: the batch's three `b<batchId>` sub-dirs,
+    * written concurrently. Exposed to the spec so a crash between the
+    * writes and the ledger commit can be simulated.
     */
   private[graft] def stageBatchFold(docs: DataFrame, path: String,
-      batchId: Long): DataFrame = {
-    val p = protocol(path)
-    val (shDir, hDir) =
-      (s"${p.dir("shingles")}/b$batchId", s"${p.dir("hashes")}/b$batchId")
-    val exploded = Par.fanOut(docs)
-      .select(col("doc_id"), explode(shingles3(col("text"))).as("sh"))
-      .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
-    Par.runAll(
-      () => exploded.write.mode(SaveMode.Overwrite).parquet(shDir),
-      () => docs.select(col("doc_id"), md5(col("text")).as("h"))
-        .write.mode(SaveMode.Overwrite).parquet(hDir))
-    exploded.groupBy(col("shh")).agg(count(lit(1)).as("df"))
-  }
-
-  /** Step 3 of the fold protocol: merge the df delta into the summary
-    * and publish summary + grown ledger in one directory swap.
-    */
-  private[graft] def commitBatchFold(incDf: DataFrame, path: String,
-      batchId: Long): Unit = {
-    stageDfMerge(incDf, path)
-    publishDf(path, batchId.toString)
-  }
-
-  /** Stage the summary with a (possibly negative) df delta merged in at
-    * `.df.staging`. Keys whose count reaches 0 are dropped (only
-    * reachable via deletes). A plain write — [[publishDf]] commits it.
-    */
-  private def stageDfMerge(delta: DataFrame, path: String): Unit =
-    readDf(delta.sparkSession, path)
-      .union(delta)
-      .groupBy(col("shh")).agg(sum(col("df")).as("df"))
-      .filter(col("df") =!= 0)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/.df.staging")
-
-  /** Publish the staged summary + grown ledger in ONE manifest commit —
-    * the shared commit point of folds AND deletes (the ledger rides the
-    * staged df generation, so the single pointer-file replace is atomic
-    * for both: a crash anywhere leaves the manifest naming a complete
-    * df dir whose embedded ledger matches it exactly).
-    */
-  private def publishDf(path: String, entry: String): Unit = {
-    val p = protocol(path)
-    p.writeLedgerInto(".df.staging", entry)
-    p.publishDir(".df.staging", "df")
-  }
+      batchId: Long): Unit =
+    writeSubRoot(docs, path, s"b$batchId")
 
   /** Tombstone a batch of documents, EXACTLY ONCE under replay — the
-    * index-side half of a takedown/retraction request. Stage writes
-    * the victim ids under `tombstones/d<deleteId>/` (overwrite ⇒
-    * replay-safe) and computes the victims' per-shingle counts FROM THE
-    * SERVED INDEX (their (doc_id, shh) rows are right there — the text
-    * is never re-read); commit merges that delta NEGATIVELY into the df
-    * summary and publishes summary + `d<deleteId>` ledger entry in the
-    * one atomic df swap. From that instant every reader ([[indexFrame]]
-    * anti-joins committed tombstones) serves as if the docs were never
+    * index-side half of a takedown/retraction request. Through
+    * [[graft.index.FoldProtocol.delete]], two overlapped writes stage:
+    * the victim ids under `tombstones/d<deleteId>/`, and the victims'
+    * NEGATIVE per-shingle counts under `df/d<deleteId>/`, computed FROM
+    * THE SERVED INDEX (their (doc_id, shh) rows are right there — the
+    * text is never re-read, and the df is never read). The ledger
+    * replace (`d<deleteId>`) commits both: from that instant every
+    * reader ([[indexFrame]] anti-joins committed tombstones, the df
+    * readers sum the committed deltas) serves as if the docs were never
     * indexed — result-identical to a from-scratch rebuild without them
     * (the df stop-list sees the corrected counts, candidate joins never
     * see the victims' shingles). [[compactIndex]] later purges the rows
-    * physically. Cost: O(victims' index rows); the corpus is never
-    * rewritten. Replay-safe: an uncommitted stage reads the UNCHANGED
-    * served index, so a crashed delete recomputes the identical delta.
+    * physically. Repeated ids and ids absent from the index are
+    * harmless: the semi-join emits each served shingle row once.
+    *
+    * Cost: the writes are O(|ids|) tombstone rows plus O(the victims'
+    * distinct shingles) df rows. The read is NOT victim-bounded: the
+    * semi-join scans every served shingle row, since the shingle frame
+    * is not clustered by document and nothing prunes it. Replay-safe:
+    * an uncommitted stage reads the UNCHANGED served index, so a
+    * crashed delete recomputes the identical delta. A deleteId at or
+    * below a df collapse (a takedown stream's raw batchIds beside the
+    * ingest folds') still serves its delta: the protocol marks it as
+    * committed after that collapse.
     */
   def deleteFromIndex(ids: DataFrame, path: String,
       deleteId: Long): Boolean = {
-    val p = protocol(path)
-    p.withLease(s"delete-$deleteId") {
-      if (p.deletedBatches().contains(deleteId)) false
-      else {
-        val s = ids.sparkSession
-        // the tombstone stage and the staged negative df merge are
-        // independent writes (the merge reads the committed tombstones
-        // only): overlapped; the publish stays on this thread
-        Par.runAll(
-          () => p.stageTombstones(ids, "doc_id", deleteId),
-          () => stageDfMerge(indexFrame(s, path, "shingles")
-            .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"),
-              "left_semi")
-            .groupBy(col("shh")).agg((-count(lit(1))).as("df")), path))
-        publishDf(path, s"d$deleteId")
-        true
-      }
+    val p = opened(path)
+    p.delete(deleteId, Seq(s"df/d$deleteId")) {
+      Par.runAll(
+        () => p.stageTombstones(ids, "doc_id", deleteId),
+        () => indexFrame(ids.sparkSession, path, "shingles")
+          .join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .groupBy(col("shh")).agg((-count(lit(1))).as("df"))
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"${p.dir("df")}/d$deleteId"))
     }
   }
 
-  /** Compact the index's shingle/hash frames: rewrite all committed
+  /** Compact the index: rewrite the shingle/hash frames' committed
     * sub-dirs (seed + ledgered batches + any previous compact) into ONE
-    * `compact/` dir of `numFiles` files hash-clustered by key, published
-    * by the same staged-write + swap as every Layout publish. Without
-    * this, batch N's readers pay an O(N) file listing (one file-set per
-    * fold, forever); with it, a periodic compaction (every K batches,
-    * like `Layout.compactDatePartition` on the ingest table) keeps the
-    * listing O(numFiles + K). The `repartition(numFiles, key)`
-    * clustering co-locates each key range in one file — a catalog
-    * deployment would make this a `bucketBy(shh)` table write so the
-    * candidate join can also skip its exchange, same as `bucketJoin`.
+    * `c<hw>/` dir of `numFiles` files each, hash-clustered by key and
+    * published by a manifest generation swap, and collapse the df
+    * deltas in place into one summed `c<hw>/` dir. Without this, batch
+    * N's readers pay an O(N) file listing and an O(N)-way df sum; with
+    * a periodic compaction (every K batches, like
+    * `Layout.compactDatePartition` on the ingest table) both stay
+    * O(numFiles + K). The `repartition(numFiles, key)` clustering
+    * co-locates each key range in one file — a catalog deployment
+    * would make this a `bucketBy(shh)` table write so the candidate
+    * join can also skip its exchange, same as `bucketJoin`.
+    *
+    * The df collapse sums exactly the df dirs it supersedes — those
+    * with ledger id ≤ hw — so a delete committed above the newest fold
+    * stays a separate delta instead of being subtracted twice, and a
+    * delete id of another sequence (a takedown stream's epoch-namespaced
+    * ids) never hides later folds. When a vacuum at a delete id already
+    * collapsed df past hw, that collapse is the df's. Every publish is
+    * value-preserving on its own (each rewrites the same served
+    * content), so a crash between them serves correct results.
     *
     * Single-writer: must not run concurrently with an in-flight fold
     * (orphan b-dirs being rewritten by a replay are excluded from the
@@ -808,22 +826,26 @@ object Dedup {
     * after their b-dirs are compacted away.
     */
   def compactIndex(s: SparkSession, path: String, numFiles: Int = 8): Unit = {
-    val p = protocol(path)
+    val p = opened(path)
     p.withLease("compact-dedup") {
       val cname = p.compactDirName()
+      val dfUpTo = (p.committedDirs("df")
+        .map(d => d.substring(d.lastIndexOf('/') + 1))
+        .filter(_.matches("c\\d+")).map(p.dirOrd) :+ p.highWater()).max
+      val dfDirs = p.committedDirsAsOf("df", dfUpTo)
       val sides = Seq("shingles" -> "shh", "hashes" -> "h")
-      // the two sides stage concurrently; the publishes stay on this
+      // the sides stage concurrently; the publishes stay on this
       // (lease-holding) thread
       Par.runAll(sides.map { case (sub, key) => () =>
         indexFrame(s, path, sub)
           .repartition(numFiles, col(key))
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$path/.$sub.compacting/$cname")
-      }: _*)
+      } :+ (() => p.collapseInPlace("df", dfUpTo)(
+        dfOf(s, dfDirs).write.mode(SaveMode.Overwrite).parquet(_))): _*)
       for ((sub, _) <- sides) p.publishDir(s".$sub.compacting", sub)
       // Compaction rewrote the SERVED (tombstone-stripped) frames, so
-      // the publish doubled as the physical purge; the df summary was
-      // already corrected at delete-commit time and needs no rewrite.
+      // the publish doubled as the physical purge.
       p.clearTombstones()
     }
   }
@@ -837,34 +859,32 @@ object Dedup {
     * cost is right": per batch the engine reads |corpus| 16-byte index
     * rows instead of re-tokenizing |corpus| documents (and the index
     * read is column-pruned parquet, amenable to the same
-    * bucketing/compaction as any Layout table). Plan-pinned in
-    * OperatorsSpec: the only scans of the documents table in this plan
-    * carry the incoming-batch filter.
+    * bucketing/compaction as any Layout table). The history df is the
+    * sum of the committed df deltas, taken inside the stop-list
+    * aggregate: its read grows with the folds and deletes since the
+    * last compaction or vacuum.
+    * Plan-pinned in OperatorsSpec: the only scans of the documents
+    * table in this plan carry the incoming-batch filter.
     */
   def incrementalKeepNewIndexed(indexPath: String,
       incoming: DataFrame): DataFrame = {
     val s = incoming.sparkSession
+    val dfDirs = opened(indexPath).committedDirs("df")
     incrementalKeepNewFromFrames(
       indexFrame(s, indexPath, "shingles"),
       indexFrame(s, indexPath, "hashes"),
-      readDf(s, indexPath).select(col("shh"), col("df").as("hdf")),
+      dfDeltas(s, dfDirs),
       incoming)
   }
 
   /** [[incrementalKeepNewIndexed]] AS OF a ledger horizon: the history
     * side is the index exactly as it stood after ledger id `asOf` —
     * shingle/hash dirs and tombstone batches ledger-scoped through
-    * [[graft.index.FoldProtocol.readCommittedStrippedAsOf]] (honesty
-    * guards included: a compaction or vacuum that collapsed the
-    * horizon refuses). The df stop-list summary is overwrite-published
-    * per commit (the manifest-riding ledger dialect), so past horizons
-    * have no persisted summary — but the summary IS, by construction,
-    * the per-key count of the served shingle frame ([[writeIndex]]
-    * aggregates it, folds add batch counts, deletes subtract served
-    * victim rows), so the as-of read recomputes it with ONE aggregate
-    * over the horizon's index rows. That aggregate is the as-of read's
-    * only extra cost — the reproducibility path pays O(horizon's index
-    * rows) once; current serves keep the pre-aggregated summary.
+    * [[graft.index.FoldProtocol.readCommittedStrippedAsOf]], and the df
+    * summed over the df deltas with ledger id ≤ `asOf`
+    * ([[graft.index.FoldProtocol.committedDirsAsOf]], as BM25's
+    * `indexStatsAsOf` sums its stats deltas). Honesty guards included:
+    * a compaction or vacuum that collapsed the horizon refuses.
     */
   def incrementalKeepNewIndexedAsOf(indexPath: String,
       incoming: DataFrame, asOf: Long): DataFrame =
@@ -877,18 +897,14 @@ object Dedup {
     * the per-horizon form re-derived each of them twice per horizon
     * (once for the stop-list merge, once for the candidate union) — six
     * evaluations of the incoming explode/hash pipeline for a 3-horizon
-    * serve. Pinned once, eagerly, before the horizons fan out. The
-    * per-horizon ledger-scoped history frames are ALSO pinned (each is
-    * consumed twice — candidate union + df recompute — and its scoped
-    * union/tombstone plan subtree dominated the serve's multi-second
-    * driver-side analysis/codegen gap: the before-plan was 170 KB of
-    * formatted text; pinning truncates it to LogicalRDD leaves). The
-    * pins are construction-only — every byte still derives from the
-    * parquet index and batch per invocation.
+    * serve. Pinned once, before the horizons fan out. The pins are
+    * construction-only — every byte still derives from the parquet
+    * index and batch per invocation.
     */
   def incrementalKeepNewIndexedAsOfAll(indexPath: String,
       incoming: DataFrame, horizons: Seq[Long]): Seq[DataFrame] = {
     val s = incoming.sparkSession
+    val p = opened(indexPath)
     // LAZY pins: plan truncation + single evaluation with NO
     // construction job — the eager form (pin jobs up front) was
     // A/B-measured slower at bench scale, where the extra scheduler
@@ -901,21 +917,18 @@ object Dedup {
       .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
       .localCheckpoint(false)
     Par.buildAll(horizons) { asOf =>
-      val histSh = protocol(indexPath)
-        .readCommittedStrippedAsOf(s, "shingles", "doc_id", asOf)(
-          readSub(s, "shingles")).localCheckpoint(false)
-      val histHash = protocol(indexPath)
-        .readCommittedStrippedAsOf(s, "hashes", "doc_id", asOf)(
-          readSub(s, "hashes"))
-      incrementalKeepNewFromFrames(histSh, histHash,
-        histSh.groupBy(col("shh")).agg(count(lit(1)).as("hdf")),
+      def scoped(sub: String) =
+        p.readCommittedStrippedAsOf(s, sub, "doc_id", asOf)(readSub(s, sub))
+      incrementalKeepNewFromFrames(scoped("shingles"), scoped("hashes"),
+        dfDeltas(s, p.committedDirsAsOf("df", asOf)),
         incoming, Some((incHashes, incSh)))
     }
   }
 
   /** The incremental-dedup core over explicit history frames — shared
-    * by the current-horizon read (persisted df summary) and the as-of
-    * read (ledger-scoped frames, summary recomputed).
+    * by the current-horizon read and the as-of read (ledger-scoped
+    * frames and df deltas). `histDf` is the history's unsummed
+    * `(shh, df)` delta rows ([[dfDeltas]]).
     */
   private def incrementalKeepNewFromFrames(histSh: DataFrame,
       histHash: DataFrame, histDf: DataFrame,
@@ -946,14 +959,15 @@ object Dedup {
         .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
         .localCheckpoint(false))
     val allSh = histSh.union(incSh)
-    // Union df per key = history df + incoming df: the stop list is a
-    // full-outer merge of two AGGREGATED frames — history's pair frame
-    // is never scanned for it (that scan happens once, below, for
-    // candidates).
-    val incDf = incSh.groupBy(col("shh")).agg(count(lit(1)).as("idf"))
-    val stop = histDf.join(incDf, Seq("shh"), "full")
-      .filter(coalesce(col("hdf"), lit(0L)) +
-        coalesce(col("idf"), lit(0L)) > MaxDf)
+    // Union df per key = history df + incoming df: ONE aggregate over
+    // the history's df delta rows plus a 1 per incoming (doc, shingle)
+    // pair — history's pair frame is never scanned for it (that scan
+    // happens once, below, for candidates), and the deltas need no sum
+    // of their own first.
+    val stop = histDf
+      .union(incSh.select(col("shh"), lit(1L).as("df")))
+      .groupBy(col("shh")).agg(sum(col("df")).as("df"))
+      .filter(col("df") > MaxDf)
       .select(col("shh"))
     // No broadcast hint (same rationale as docShingles): the stop list
     // grows with corpus vocabulary; AQE broadcasts it while it is small
@@ -994,11 +1008,11 @@ object Dedup {
     Fixture("graft_dedup_index", DedupKind, Seq(Seed(history(s, d))))
       .ensure(s, d)
 
-  /** The dedup shingle/hash index as the fixture layer sees it: a
-    * committed df summary plus the two ledgered frames.
+  /** The dedup index as the fixture layer sees it: three ledgered
+    * frames, the df deltas among them.
     */
   val DedupKind: IndexKind = IndexKind(protocol,
-    Seq("df"), Seq("shingles", "hashes"),
+    Nil, Seq("shingles", "hashes", "df"),
     write = writeIndex(_, _),
     fold = appendToIndex(_, _, _),
     delete = deleteFromIndex(_, _, _),
@@ -1099,28 +1113,29 @@ object Dedup {
       Fold(2L, hist.filter(isShield)))).ensure(s, d)
   }
 
-  /** Floor-bounded retention for the dedup shingle/hash index — the
-    * last ledgered family to join the kind-generic
-    * [[graft.index.FoldProtocol.vacuumKinds]] kernel: both sub-frames
-    * collapse their dirs with ledger id ≤ floor into one `c<floor>`
-    * holding the as-of-floor SERVED view (tombstones ≤ floor stripped
-    * — the collapse doubles as their physical purge), then the sources
-    * reclaim. Horizons ≥ floor keep serving exactly as before; below,
-    * the compaction honesty guard refuses. The df summary is untouched:
-    * it is a flat current-horizon aggregate, already correct under any
-    * physical re-layout (as-of reads recompute their horizon's summary
-    * from the scoped shingle frame, see
-    * [[incrementalKeepNewIndexedAsOf]]). Value-gated by
+  /** Floor-bounded retention for the dedup index — the kind-generic
+    * [[graft.index.FoldProtocol.vacuumKinds]] kernel over all three
+    * frames: each collapses its dirs with ledger id ≤ floor into one
+    * `c<floor>`. The shingle/hash collapses hold the as-of-floor SERVED
+    * view (tombstones ≤ floor stripped — the collapse doubles as their
+    * physical purge); the df collapse holds the sum of the df deltas
+    * ≤ floor, so the deletes above the floor stay separate deltas.
+    * Then the sources reclaim. Horizons ≥ floor keep serving exactly
+    * as before; below, the compaction honesty guard refuses. Value-gated by
     * `dedup_incremental_vacuum` (surviving horizons hash-equal to
     * `dedup_incremental_asof`'s oracle branches).
     */
   def vacuumDedupIndex(s: SparkSession, path: String,
       floorRequested: Long): Boolean = {
-    val p = protocol(path)
-    p.vacuumKinds(s, floorRequested, Seq("shingles", "hashes").map(sub =>
+    val p = opened(path)
+    val frames = Seq("shingles", "hashes").map(sub =>
       sub -> ((floor: Long, staging: String) =>
         p.readCommittedStrippedAsOf(s, sub, "doc_id", floor)(readSub(s, sub))
-          .write.mode(SaveMode.Overwrite).parquet(staging))))
+          .write.mode(SaveMode.Overwrite).parquet(staging)))
+    val df = "df" -> ((floor: Long, staging: String) =>
+      dfOf(s, p.committedDirsAsOf("df", floor))
+        .write.mode(SaveMode.Overwrite).parquet(staging))
+    p.vacuumKinds(s, floorRequested, frames :+ df)
   }
 
   /** Build-if-absent the AS-OF dedup-index gate fixture — ledger ids
@@ -1572,10 +1587,8 @@ object Dedup {
     // answers the incremental-survivor question at three ledger
     // horizons — post-seed (late wave invisible), post-fold, and
     // post-takedown — by ledger-scoped dir/tombstone filters on the
-    // shingle/hash frames, with each horizon's df stop-list recomputed
-    // from its scoped shingle frame (the summary is overwrite-published
-    // per commit, so past horizons derive theirs — one aggregate over
-    // the horizon's index rows, the reproducibility price). Oracle =
+    // shingle/hash frames, with each horizon's df stop-list summed over
+    // the df deltas whose ledger id is within the horizon. Oracle =
     // the full-batch rebuild restricted per horizon, the
     // dedup_incremental_deleted convention. This was the last ledgered
     // family with no as-of read.
@@ -1596,8 +1609,7 @@ object Dedup {
     // the as-of lifecycle VACUUMED at floor 1 — horizon 0 reclaimed
     // (refuses), horizons 1 and 2 hash-equal to the unvacuumed as-of
     // oracle's surviving branches. Completes vacuum coverage across
-    // every ledgered family, including this manifest-riding ledger
-    // dialect.
+    // every ledgered family.
     QuerySpec(
       "dedup_incremental_vacuum",
       asofDedupOracleSql(asofDedupHorizons.drop(1))) { (s, d) =>

@@ -248,11 +248,16 @@ object Retrieval {
     * the stats fold in the negative delta from the same instant, so df,
     * N and avgdl all serve as if the docs were never indexed —
     * result-identical to a from-scratch rebuild without them.
-    * [[compactBm25Index]] later purges the postings physically. Cost:
-    * O(|ids| + their postings) — the corpus postings are never
-    * rewritten. Replay-safe: an uncommitted stage reads the UNCHANGED
-    * served index, so recomputing the delta after a crash yields the
-    * same rows.
+    * [[compactBm25Index]] later purges the postings physically.
+    * Repeated ids and ids absent from the index are harmless: the
+    * semi-join emits each served posting once, so each present victim
+    * counts once in `-n`. Cost: the writes are O(|ids|) tombstone rows
+    * plus one stats row, and the corpus postings are never rewritten;
+    * the READ is not victim-bounded — the semi-join scans every
+    * committed posting, because postings are partitioned by word
+    * bucket, not by document, so nothing prunes it. Replay-safe: an
+    * uncommitted stage reads the UNCHANGED served index, so
+    * recomputing the delta after a crash yields the same rows.
     */
   def deleteFromBm25Index(ids: DataFrame, path: String,
       deleteId: Long): Boolean = {
@@ -264,8 +269,7 @@ object Retrieval {
       Par.runAll(
         () => p.stageTombstones(ids, "doc_id", deleteId),
         () => indexPostings(ids.sparkSession, path)
-          .join(ids.select(col("doc_id")).distinct(), Seq("doc_id"),
-            "left_semi")
+          .join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
           .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
           .agg((-count(lit(1))).as("n"),
             (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("sum_dl"))

@@ -26,8 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * every publish is batchId-keyed: survivors land in
   * `outPath/b<batchId>` with overwrite semantics (a replay rewrites
   * the same directory), the index fold writes b-dirs the same way, and
-  * the fold's COMMIT POINT is the atomic df-summary swap that also
-  * publishes the batch ledger (`Dedup.appendToIndex`). A batchId found
+  * the fold's COMMIT POINT is the atomic replace of the batch ledger
+  * (`Dedup.appendToIndex`). A batchId found
   * in the ledger short-circuits the whole publish — whatever partial
   * state the crash left is either rewritten wholesale (pre-commit) or
   * skipped (post-commit), so corpus AND index are exactly-once.
@@ -40,8 +40,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale shape per batch: candidate pairs are only ever generated
   * against the incoming side (the batch), the index pair frame is
-  * scanned once, and the index append is O(|survivors|) plus a merge of
-  * two aggregated df summaries.
+  * scanned once, and the index append is O(|survivors|): it writes the
+  * survivors' shingle, hash and df rows and never reads the index.
   */
 object StreamingDedup {
 

@@ -345,35 +345,42 @@ class FoldProtocolSpec extends SparkSpec {
     }
   }
 
-  test("dedup ledger rides the manifest commit: a staged df generation " +
-    "without its manifest replace leaves the old ledger AND old summary " +
-    "served (the crash cannot lose the committed-batch set)") {
+  test("dedup fold commit point: staged shingles, hashes and df b-dirs " +
+    "without the ledger replace stay invisible, the replay commits, and " +
+    "fsck is clean") {
     val idx = tmpDir("dedup-ledger-crash")
     val docs = Tables.documents(spark, sf0001)
     Dedup.writeIndex(docs.filter($"doc_id" % 5 === 0), idx)
     assert(Dedup.appendToIndex(docs.filter($"doc_id" % 5 === 1), idx, 1L))
     val p = Dedup.protocol(idx)
-    assert(p.foldedBatches() == Set(1L))
-    val dfBefore = spark.read.parquet(p.dir("df")).count()
+    val incoming = docs.filter($"doc_id" % 5 === 4)
+    def served() = Dedup.incrementalKeepNewIndexed(idx, incoming)
+      .select($"doc_id").as[Long].collect().toSet
+    def dfOf(root: String) =
+      Dedup.servedDf(spark, root).as[(Long, Long)].collect().toMap
+    val (servedBefore, dfBefore) = (served(), dfOf(idx))
 
-    // simulated crash inside the NEXT fold's commit: the staged df
-    // generation (with the grown ledger inside) was renamed into place
-    // but the manifest replace never ran
+    // simulated crash inside the NEXT fold: its three b2 dirs are
+    // staged, the ledger replace (the commit point) never ran
+    val batch = docs.filter($"doc_id" % 5 === 2)
+    Dedup.stageBatchFold(batch, idx, 2L)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = s"$idx/df.g99"
-    spark.read.parquet(p.dir("df")).limit(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(gen)
-    p.writeLedgerInto("df.g99", "2")
-
+    for (k <- Seq("shingles", "hashes", "df"))
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"${p.dir(k)}/b2/_SUCCESS")),
+        s"$k/b2 must be staged")
     assert(p.foldedBatches() == Set(1L),
-      "an uncommitted df generation must not change the ledger")
-    assert(spark.read.parquet(p.dir("df")).count() == dfBefore,
-      "an uncommitted df generation must not change the summary")
-    // the batch replays cleanly and retires the orphan
-    assert(Dedup.appendToIndex(docs.filter($"doc_id" % 5 === 2), idx, 2L))
+      "an uncommitted fold must not change the ledger")
+    assert(served() == servedBefore && dfOf(idx) == dfBefore,
+      "staged b2 dirs must stay invisible to rows and df")
+
+    // the replay commits, and the df is a from-scratch build's
+    assert(Dedup.appendToIndex(batch, idx, 2L))
     assert(p.foldedBatches() == Set(1L, 2L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(gen)), "orphan swept")
+    val scratch = tmpDir("dedup-ledger-crash-scratch")
+    Dedup.writeIndex(docs.filter($"doc_id" % 5 < 3), scratch)
+    assert(dfOf(idx) == dfOf(scratch))
+    assert(p.fsck(Seq("shingles", "hashes", "df", "tombstones")).clean)
   }
 
   test("fsck: a healthy index (folds, deletes, compaction, publish) " +

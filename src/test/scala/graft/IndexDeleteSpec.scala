@@ -162,7 +162,7 @@ class IndexDeleteSpec extends SparkSpec {
     assert(afterDelete ==
       Dedup.incrementalKeepNewIndexed(idx2, incoming)
         .select($"doc_id").as[Long].collect().toSeq.sorted)
-    def dfSummary(p: String) = spark.read.parquet(Dedup.protocol(p).dir("df"))
+    def dfSummary(p: String) = Dedup.servedDf(spark, p)
       .select($"shh", $"df").as[(Long, Long)].collect().toSet
     assert(dfSummary(idx) == dfSummary(idx2),
       "delete-commit must leave the exact live-history df summary")

@@ -487,10 +487,8 @@ class OperatorsSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet
     assert(viaGrown == viaFull)
     // df summaries are value-identical, not just result-equivalent
-    val dfGrown = spark.read.parquet(Dedup.protocol(grown).dir("df"))
-      .as[(Long, Long)].collect().toMap
-    val dfScratch = spark.read.parquet(Dedup.protocol(scratch).dir("df"))
-      .as[(Long, Long)].collect().toMap
+    val dfGrown = Dedup.servedDf(spark, grown).as[(Long, Long)].collect().toMap
+    val dfScratch = Dedup.servedDf(spark, scratch).as[(Long, Long)].collect().toMap
     assert(dfGrown == dfScratch)
   }
 

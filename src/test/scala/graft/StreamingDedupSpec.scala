@@ -85,10 +85,8 @@ class StreamingDedupSpec extends SparkSpec {
     val scratch = tmpDir("sdedup-scratch")
     Dedup.writeIndex(
       init.union(corpusOf(out).select($"doc_id", $"text")), scratch)
-    val dfGrown = spark.read.parquet(Dedup.protocol(idx).dir("df"))
-      .as[(Long, Long)].collect().toMap
-    val dfScratch = spark.read.parquet(Dedup.protocol(scratch).dir("df"))
-      .as[(Long, Long)].collect().toMap
+    val dfGrown = Dedup.servedDf(spark, idx).as[(Long, Long)].collect().toMap
+    val dfScratch = Dedup.servedDf(spark, scratch).as[(Long, Long)].collect().toMap
     assert(dfGrown == dfScratch)
   }
 
@@ -202,6 +200,80 @@ class StreamingDedupSpec extends SparkSpec {
       "the re-minted marker must be pinned for subsequent resolutions")
   }
 
+  test("takedown ids outside the fold sequence keep the served df exact " +
+    "across compactions: an epoch-namespaced delete never hides later " +
+    "folds, and a raw-batchId delete at or below a collapse still serves") {
+    val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
+    val incoming = docs.filter($"doc_id" % 5 === 4)
+    val history = docs.filter($"doc_id" % 5 =!= 4)
+    val seed = history.filter($"doc_id" % 8 < 2)
+    def wave(k: Int) = history.filter($"doc_id" % 8 === k + 1)
+    val isVictim = $"doc_id" % 10 === 0
+    def check(root: String, live: org.apache.spark.sql.DataFrame,
+        step: String): Unit = {
+      val scratch = tmpDir("takedown-ids-scratch")
+      Dedup.writeIndex(live, scratch)
+      def served(r: String) = Dedup.incrementalKeepNewIndexed(r, incoming)
+        .select($"doc_id").as[Long].collect().toSet
+      def df(r: String) =
+        Dedup.servedDf(spark, r).as[(Long, Long)].collect().toMap
+      assert(df(root) == df(scratch), s"$step: served df differs")
+      assert(served(root) == served(scratch), s"$step: served rows differ")
+      assert(Dedup.protocol(root)
+        .fsck(Seq("shingles", "hashes", "df", "tombstones")).clean, step)
+    }
+    def dfDirs(root: String) = Dedup.protocol(root).committedDirs("df")
+      .map(d => d.substring(d.lastIndexOf('/') + 1))
+
+    // fold 1, an epoch-1 takedown, compaction, fold 2: the df collapse
+    // is c1 and the takedown delta stays beside it, so fold 2 serves
+    val epoch = tmpDir("takedown-ids-epoch")
+    Dedup.writeIndex(seed, epoch)
+    assert(Dedup.appendToIndex(wave(1), epoch, 1L))
+    val early = seed.union(wave(1))
+    assert(Dedup.deleteFromIndex(early.filter(isVictim).select($"doc_id"),
+      epoch, 1L << 32))
+    Dedup.compactIndex(spark, epoch)
+    assert(dfDirs(epoch) == Seq("c1", s"d${1L << 32}"))
+    assert(Dedup.appendToIndex(wave(2), epoch, 2L))
+    check(epoch, early.filter(!isVictim).union(wave(2)), "epoch takedown")
+
+    // folds 1-5, compaction (c5), then takedown batch 1 (raw id 1 ≤ 5):
+    // its delta serves beside c5, survives a compaction at the same
+    // high-water mark, and a later compaction absorbs it
+    val raw = tmpDir("takedown-ids-raw")
+    Dedup.writeIndex(seed, raw)
+    for (k <- 1 to 5) assert(Dedup.appendToIndex(wave(k), raw, k.toLong))
+    Dedup.compactIndex(spark, raw)
+    val folded = (1 to 5).map(wave).foldLeft(seed)(_.union(_))
+    assert(Dedup.deleteFromIndex(folded.filter(isVictim).select($"doc_id"),
+      raw, 1L))
+    val live = folded.filter(!isVictim)
+    check(raw, live, "raw takedown below the collapse")
+    Dedup.compactIndex(spark, raw)
+    assert(dfDirs(raw) == Seq("c5", "d1"))
+    check(raw, live, "compaction at the same high-water mark")
+    assert(Dedup.appendToIndex(wave(6), raw, 6L))
+    Dedup.compactIndex(spark, raw)
+    assert(dfDirs(raw) == Seq("c6"))
+    check(raw, live.union(wave(6)), "compaction that absorbs the takedown")
+
+    // the same for the BM25 stats deltas
+    val bm25 = tmpDir("takedown-ids-bm25")
+    graft.operators.Retrieval.writeBm25Index(seed, bm25)
+    for (k <- 1 to 5)
+      assert(graft.operators.Retrieval.appendToBm25Index(wave(k), bm25, k.toLong))
+    graft.operators.Retrieval.compactBm25Index(spark, bm25)
+    assert(graft.operators.Retrieval.deleteFromBm25Index(
+      folded.filter(isVictim).select($"doc_id"), bm25, 1L))
+    val bm25Scratch = tmpDir("takedown-ids-bm25-scratch")
+    graft.operators.Retrieval.writeBm25Index(live, bm25Scratch)
+    def ranked(root: String) = graft.operators.Retrieval.bm25TopK(
+      spark, root, graft.operators.Retrieval.QueryTerms)
+      .as[(Long, Double)].collect().toSeq
+    assert(ranked(bm25) == ranked(bm25Scratch))
+  }
+
   test("replay idempotence: redelivering a batchId after every crash " +
     "window — post-commit, between corpus write and fold, mid-fold " +
     "before the df commit — leaves corpus and df summary exactly-once") {
@@ -212,7 +284,7 @@ class StreamingDedupSpec extends SparkSpec {
 
     def state() = (
       corpusOf(out).select($"doc_id").as[Long].collect().toSet,
-      spark.read.parquet(Dedup.protocol(idx).dir("df")).as[(Long, Long)].collect().toMap)
+      Dedup.servedDf(spark, idx).as[(Long, Long)].collect().toMap)
 
     // batch 0: normal publish, then a POST-COMMIT replay (restart after
     // the checkpoint-side crash: ledger already has the batch).
@@ -239,11 +311,11 @@ class StreamingDedupSpec extends SparkSpec {
     val scratch1 = tmpDir("sdedup-r-scratch1")
     Dedup.writeIndex(
       init.union(corpusOf(out).select($"doc_id", $"text")), scratch1)
-    assert(afterB1._2 == spark.read.parquet(Dedup.protocol(scratch1).dir("df"))
+    assert(afterB1._2 == Dedup.servedDf(spark, scratch1)
       .as[(Long, Long)].collect().toMap)
 
-    // batch 2: crash MID-FOLD — survivors written, shingle/hash b-dirs
-    // staged, df swap (the commit point) never ran. The orphan b-dirs
+    // batch 2: crash MID-FOLD — survivors written, shingle/hash/df
+    // b-dirs staged, the ledger replace (the commit point) never ran. The orphan b-dirs
     // must stay invisible to readers and be rewritten by the replay.
     val h = "h1 h2 h3 h4 h5 h6 h7 h8 h9 h10 " +
       "h11 h12 h13 h14 h15 h16 h17 h18 h19 h20"
@@ -251,7 +323,7 @@ class StreamingDedupSpec extends SparkSpec {
     val s2 = Dedup.incrementalKeepNewIndexed(idx, b2)
     s2.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$out/b2")
-    Dedup.stageBatchFold(s2, idx, 2L) // fold dies before commitBatchFold
+    Dedup.stageBatchFold(s2, idx, 2L) // fold dies before its ledger commit
     // orphan b-dirs are excluded from reads: recomputing the batch's
     // survivors against the index still sees the PRE-fold state
     assert(Dedup.incrementalKeepNewIndexed(idx, b2)
@@ -262,7 +334,7 @@ class StreamingDedupSpec extends SparkSpec {
     val scratch2 = tmpDir("sdedup-r-scratch2")
     Dedup.writeIndex(
       init.union(corpusOf(out).select($"doc_id", $"text")), scratch2)
-    assert(afterB2._2 == spark.read.parquet(Dedup.protocol(scratch2).dir("df"))
+    assert(afterB2._2 == Dedup.servedDf(spark, scratch2)
       .as[(Long, Long)].collect().toMap)
     // and a final full replay of everything already committed is inert
     StreamingDedup.publishBatch(b0, 0L, idx, out)

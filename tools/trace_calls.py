@@ -28,6 +28,17 @@ components) and its files scanned and written; the jobs of an execution
 are indented under it. This is the per-hour view of `hourly_ingest`:
 it shows which steps of one hourly run overlap and which wait on each
 other.
+
+    python3 tools/trace_calls.py .bench_build/traces/index_lifecycle-s5 --rows
+
+`--rows` prints, instead of the table, the data each call moves: one
+line per SQL execution that started inside it (its rows and files
+scanned, its rows and files written, and the dirs it read and wrote,
+last two path components), a total line per call, then the mean per run
+of each call's rows scanned, rows written, files scanned and files
+written. All four come from `execs.jsonl`. This is the view that shows
+whether a fold or delete reads and writes rows in proportion to its
+batch or to the whole index.
 """
 import argparse
 import collections
@@ -102,6 +113,40 @@ def timeline(call, all_spans, jobs, execs):
                   f"{ms(j['start_us']):>8.0f}{ms(j['end_us']):>8.0f}  {j['site']}")
 
 
+ROW_KEYS = ("rows_scanned", "rows_written", "files_scanned", "files_written")
+
+
+def rows(spans, execs):
+    seen = collections.Counter()
+    totals = collections.defaultdict(collections.Counter)
+    for s in spans:
+        lo, hi = s["start_us"], s["end_us"]
+        inside = sorted((e for e in execs if lo <= e["start_us"] <= hi),
+                        key=lambda e: e["start_us"])
+        seen[s["name"]] += 1
+        print(f"{s['name']} run {seen[s['name']]} ({(hi - lo) / 1e3:.0f} ms)")
+        row = collections.Counter(runs=1)
+        for e in inside:
+            row.update({k: e[k] for k in ROW_KEYS})
+            print(f"  exec {e['exec']:<8}scan {e['rows_scanned']:>8} rows"
+                  f" {e['files_scanned']:>4} files  write {e['rows_written']:>8} rows"
+                  f" {e['files_written']:>4} files"
+                  f"  read {short(e['reads'])}  wrote {short(e['writes'])}")
+        print(f"  total {len(inside)} execs, scan {row['rows_scanned']} rows"
+              f" {row['files_scanned']} files, write {row['rows_written']} rows"
+              f" {row['files_written']} files")
+        totals[s["name"]].update(row)
+    print()
+    print("mean per run")
+    print(f"{'call':<22}{'run':>4}{'rows_scan':>11}{'rows_write':>11}"
+          f"{'files_scan':>11}{'files_write':>12}")
+    for name, t in totals.items():
+        n = t["runs"]
+        print(f"{name:<22}{n:>4}{t['rows_scanned'] / n:>11.0f}"
+              f"{t['rows_written'] / n:>11.0f}{t['files_scanned'] / n:>11.1f}"
+              f"{t['files_written'] / n:>12.1f}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("trace_dir")
@@ -114,6 +159,9 @@ def main():
     ap.add_argument("--timeline", action="store_true",
                     help="print each call's spans, executions and jobs "
                          "with start/end offsets instead of the table")
+    ap.add_argument("--rows", action="store_true",
+                    help="print each call's rows and files scanned and "
+                         "written, per execution, instead of the table")
     a = ap.parse_args()
 
     all_spans = load(a.trace_dir, "spans.jsonl")
@@ -127,6 +175,9 @@ def main():
         for s in spans:
             timeline(s, all_spans, jobs, execs)
             print()
+        return
+    if a.rows:
+        rows(spans, execs)
         return
 
     seen = collections.Counter()
