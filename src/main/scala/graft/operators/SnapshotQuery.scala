@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.StructType
   *
   * The hourly refresh over the on-disk history ([[publishLatest]])
   * prunes one step earlier, at the file listing: it reads only the
-  * newest `date=` partition of each table.
+  * newest `date=` partition of each table, and looks the newest traffic
+  * hour's rows up by key inside the weather scan instead of joining.
   */
 object SnapshotQuery {
 
@@ -71,11 +72,12 @@ object SnapshotQuery {
     * the one before it). The job that finds the MAX also returns the
     * rows that hold it — each task keeps its partition-local newest
     * hour, ties included, and the driver keeps the global one — so the
-    * join's traffic side is that driver-local hour (one row per point)
-    * and the traffic dir is not read again. The MAX still reads traffic
-    * only, and weather is restricted to the same hour, whose date is a
-    * join key — no dir there means no match, so the snapshot is empty,
-    * exactly as the full-history query answers.
+    * traffic dir is not read again. The join is then one narrow pass
+    * over the same date's weather dir ([[lookupJoin]]): no join node,
+    * no exchange, and the publish is the refresh's second and last job.
+    * The MAX still reads traffic only, and weather is restricted to the
+    * hour's own keys — no dir there means no match, so the snapshot is
+    * empty, exactly as the full-history query answers.
     */
   def publishLatest(spark: SparkSession, trafficPath: String,
       weatherPath: String, snapshotPath: String): Long = {
@@ -110,15 +112,8 @@ object SnapshotQuery {
 
     val joined = latest match {
       case Some((dir, hour)) =>
-        val schema = hour.head.schema
-        val traffic = spark.createDataFrame(java.util.Arrays.asList(hour: _*), schema)
-        broadcast(traffic.drop(TsCol)).join(
-          day(weatherRoot, Schemas.weatherTableSchema, dir).filter(
-            unix_micros(tsExpr()) === hour.head.getLong(schema.fieldIndex(TsCol))),
-          Schemas.joinKeys, "inner")
-      case None => // no traffic row has a timestamp: the MAX is NULL
-        empty(Schemas.trafficTableSchema)
-          .join(empty(Schemas.weatherTableSchema), Schemas.joinKeys, "inner")
+        lookupJoin(hour, day(weatherRoot, Schemas.weatherTableSchema, dir))
+      case None => empty(snapshotSchema) // no traffic row has a timestamp: the MAX is NULL
     }
     // Overwrite even when empty: the reference's scheduled query replaces
     // latest_joined_data with whatever the join returns. Staged write +
@@ -132,6 +127,47 @@ object SnapshotQuery {
   }
 
   private val TsCol = "__graft_ts"
+
+  private def nonKeys(schema: StructType): Seq[String] =
+    schema.fieldNames.toSeq.filterNot(Schemas.joinKeys.contains)
+
+  /** The published snapshot's columns, in the USING join's order: the 4
+    * keys, then traffic's other columns, then weather's. Every column is
+    * nullable, as the Parquet write stores it. Both the lookup publish
+    * and the NULL-MAX empty one take their shape from here.
+    */
+  val snapshotSchema: StructType = {
+    import Schemas.{trafficTableSchema => t, weatherTableSchema => w}
+    StructType(((Schemas.joinKeys ++ nonKeys(t)).map(t(_)) ++ nonKeys(w).map(w(_)))
+      .map(_.copy(nullable = true)))
+  }
+
+  /** The inner USING join of the driver-local newest traffic `hour` with
+    * `weather`, as one narrow pass. Weather is filtered to the hour's
+    * `time` strings — join keys, so the filter drops no match, and it is
+    * pushed into the Parquet scan — and read from one partition: one
+    * task, one output file. Each weather row is looked up by its 4 keys
+    * among the hour's traffic rows and emits one row per match, so
+    * duplicates on either side multiply as in the join. A NULL key
+    * matches nothing.
+    */
+  private def lookupJoin(hour: Seq[Row], weather: DataFrame): DataFrame = {
+    def at(r: Row, idx: Array[Int]): Seq[Any] = idx.toSeq.map(r.get)
+    // by name: a read that lists `date=` dirs puts `date` last
+    def idx(s: StructType, names: Seq[String]) = names.map(s.fieldIndex).toArray
+    val (tKeys, tRest) = (idx(hour.head.schema, Schemas.joinKeys),
+      idx(hour.head.schema, nonKeys(Schemas.trafficTableSchema)))
+    val byKey = hour.map(r => at(r, tKeys) -> at(r, tRest))
+      .filterNot(_._1.contains(null)).groupMap(_._1)(_._2)
+    val (wKeys, wRest) = (idx(weather.schema, Schemas.joinKeys),
+      idx(weather.schema, nonKeys(Schemas.weatherTableSchema)))
+    weather.filter(col("time").isin(hour.map(_.getAs[String]("time")).distinct: _*))
+      .coalesce(1)
+      .mapPartitions(_.flatMap { r =>
+        val k = at(r, wKeys)
+        byKey.getOrElse(k, Nil).map(tr => Row.fromSeq(k ++ tr ++ at(r, wRest)))
+      })(Encoders.row(snapshotSchema))
+  }
 
   /** The rows of `rows`' newest hour (largest `ts` column), ties kept. */
   private def newestRows(ts: Int, rows: Iterator[Row]): Iterator[Row] = {

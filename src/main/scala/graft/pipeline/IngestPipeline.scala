@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.operators.{IngestOps, SnapshotQuery}
+import graft.operators.{IngestOps, Par, SnapshotQuery}
 import graft.schema.{GeoPoint, RawFetch}
 import graft.sources.HttpJsonSource
 import graft.sources.HttpJsonSource.Fetcher
@@ -24,8 +24,9 @@ import java.time.format.DateTimeFormatter
   *    snapshot (`README.md:84`).
   *
   * The traffic and weather halves are independent until the snapshot,
-  * so their fetches share one bounded pool and their appends run
-  * together; the snapshot starts once both appends have ended.
+  * so their fetches share one bounded pool and their transforms and
+  * appends run together; the snapshot starts once both appends have
+  * ended.
   */
 object IngestPipeline {
 
@@ -93,11 +94,11 @@ object IngestPipeline {
 
     // Transform + K1 append of both tables together, with K3 empty
     // suppression and K4 isolation; a non-empty table costs exactly its
-    // one write.
-    val (traffic, nT) =
-      transformed(spark, trafficRaw, IngestOps.trafficFromRaw(_, date, time))
-    val (weather, nW) =
-      transformed(spark, weatherRaw, IngestOps.weatherFromRaw(_, date, time))
+    // one write. The two transforms are driver-side Catalyst folding
+    // only, so they overlap too.
+    val Seq((traffic, nT), (weather, nW)) = Par.buildAll(Seq[() => (DataFrame, Long)](
+      () => transformed(spark, trafficRaw, IngestOps.trafficFromRaw(_, date, time)),
+      () => transformed(spark, weatherRaw, IngestOps.weatherFromRaw(_, date, time))))(_())
     IngestOps.appendPartitioned(traffic -> cfg.trafficPath, weather -> cfg.weatherPath)
     val t2 = System.nanoTime()
 

@@ -23,7 +23,9 @@ import org.apache.spark.sql.types._
   * No watermarks: the reference is stateless by construction
   * (SURVEY.md §2.9); every micro-batch recomputes "latest" from the
   * appended history, reading only its newest date partition
-  * (`SnapshotQuery.publishLatest`).
+  * (`SnapshotQuery.publishLatest`: one job finds the newest traffic hour
+  * and keeps its rows on the driver, one job looks them up inside the
+  * weather scan and writes the snapshot).
   */
 object StreamingIngest {
 
@@ -57,7 +59,9 @@ object StreamingIngest {
     * snapshot from the newest date partition. A backlog of several hours
     * appends in one write per table: the `date` partitioning puts each
     * stamp in its own directory. No emptiness probe runs once both
-    * roots exist: an empty table's append writes no data file.
+    * roots exist: an empty table's append writes no data file. A
+    * micro-batch into existing roots is four jobs: the two appends, the
+    * refresh's MAX and its publish.
     */
   private[streaming] def writeMicroBatch(batch: DataFrame, trafficPath: String,
       weatherPath: String, snapshotPath: String): Unit = {

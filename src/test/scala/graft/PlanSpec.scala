@@ -481,13 +481,15 @@ class PlanSpec extends SparkSpec {
     assert(q.count() == 3)
   }
 
-  test("ingest snapshot: every scan of the hourly refresh lists ONE date " +
-    "partition, the newest (the per-hour 100-TB guard)") {
-    import graft.pipeline.IngestPipeline
-    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+  /** Runs `body` and returns its result, every node of the physical
+    * plans its SQL executions ran (subqueries and write commands'
+    * inner plans included) and the number of jobs it started.
+    */
+  private def observed[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    val c = ingestConfig(tmpDir("prune"))
-    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    import scala.jdk.CollectionConverters._
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -495,23 +497,44 @@ class PlanSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(counter)
     val r = try {
-      val r = IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1))
+      val r = body
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       r
-    } finally spark.listenerManager.unregister(ql)
-    assert(r.snapshotRows == 3)
+    } finally {
+      spark.sparkContext.removeSparkListener(counter)
+      spark.listenerManager.unregister(ql)
+    }
     val helper = new AdaptiveSparkPlanHelper {}
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] =
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
       helper.collectWithSubqueries(p) {
-        case f: FileSourceScanExec => Seq(f)
-        case cr: CommandResultExec => scans(cr.commandPhysicalPlan)
+        case cr: CommandResultExec => cr +: nodes(cr.commandPhysicalPlan)
+        case n => Seq(n)
       }.flatten
-    import scala.jdk.CollectionConverters._
-    val history = plans.asScala.toSeq.flatMap(scans).filter(_.relation.location
-      .rootPaths.exists(p => p.toString.contains(c.trafficPath) ||
-        p.toString.contains(c.weatherPath)))
+    (r, plans.asScala.toSeq.flatMap(nodes), jobs.get())
+  }
+
+  test("ingest snapshot: every scan of the hourly refresh lists ONE date " +
+    "partition, the newest (the per-hour 100-TB guard)") {
+    import graft.pipeline.IngestPipeline
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val c = ingestConfig(tmpDir("prune"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    val (r, nodes, _) = observed(
+      IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1)))
+    assert(r.snapshotRows == 3)
+    val history = nodes.collect { case f: FileSourceScanExec => f }
+      .filter(_.relation.location.rootPaths.exists(p =>
+        p.toString.contains(c.trafficPath) || p.toString.contains(c.weatherPath)))
     def roots(f: FileSourceScanExec) = f.relation.location.rootPaths.map(_.toString)
     assert(history.exists(roots(_).exists(_.contains(c.trafficPath))))
     assert(history.exists(roots(_).exists(_.contains(c.weatherPath))))
@@ -520,10 +543,38 @@ class PlanSpec extends SparkSpec {
       assert(roots(f).forall(_.endsWith("date=2026-08-13")), roots(f))
     }
     // each table is scanned once: the newest-hour job returns the traffic
-    // rows the join uses, so no second traffic scan
+    // rows the lookup uses, so no second traffic scan
     def scansOf(path: String) = history.count(roots(_).exists(_.contains(path)))
     assert(scansOf(c.trafficPath) == 1 && scansOf(c.weatherPath) == 1,
       history.map(roots))
+    // the hour's `time` reaches the weather scan as a Parquet filter, so
+    // the publish's one task reads only that hour's row groups
+    history.filter(roots(_).exists(_.contains(c.weatherPath))).foreach { f =>
+      assert(f.metadata("PushedFilters").contains("time"), f.metadata)
+    }
+  }
+
+  test("ingest snapshot: a non-empty hourly run into existing roots is 4 " +
+    "jobs (two appends, the MAX, the publish), with no join and no broadcast") {
+    import graft.pipeline.IngestPipeline
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val c = ingestConfig(tmpDir("jobs"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    val (r, nodes, jobs) = observed(
+      IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusHours(1)))
+    assert(r.trafficRows == 3 && r.weatherRows == 3 && r.snapshotRows == 3)
+    assert(jobs == 4)
+    assert(nodes.nonEmpty)
+    assert(!nodes.exists {
+      case _: BaseJoinExec | _: BroadcastExchangeExec => true
+      case _ => false
+    }, nodes.map(_.nodeName).distinct)
+    // the newest weather dir holds both runs' files, two scan splits, yet
+    // the publish writes from one partition: one snapshot file, not an
+    // extra empty one for partition 0
+    assert(new java.io.File(c.snapshotPath).listFiles()
+      .count(_.getName.endsWith(".parquet")) == 1)
   }
 
   test("ingest append: each hourly append writes ONE parquet file per table " +

@@ -109,8 +109,8 @@ class SnapshotQuerySpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.select(df.columns.sorted.map(df(_)): _*).collect().map(_.toString).sorted.toSeq
 
-  /** publishLatest's output and count equal latestJoined over the
-    * full-history read.
+  /** publishLatest's output, count and column names, order and types
+    * equal latestJoined over the full-history read.
     */
   private def assertExact(base: String): Unit = {
     val n = SnapshotQuery.publishLatest(spark, s"$base/traffic", s"$base/weather",
@@ -119,6 +119,8 @@ class SnapshotQuerySpec extends SparkSpec {
       spark.read.schema(Schemas.trafficTableSchema).parquet(s"$base/traffic"),
       spark.read.schema(Schemas.weatherTableSchema).parquet(s"$base/weather"))
     val published = spark.read.parquet(s"$base/snapshot")
+    def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(shape(published) == shape(full))
     assert(rows(published) == rows(full))
     assert(n == published.count())
   }
@@ -134,6 +136,44 @@ class SnapshotQuerySpec extends SparkSpec {
       appendByDate(ds(we).toDF(), s"$base/weather", rnd.shuffle(dates))
       assertExact(base)
     }
+  }
+
+  test("publishLatest keeps the join's semantics on duplicate and NULL " +
+    "keys, and publishes its shape whether rows match, none do, or the MAX " +
+    "is NULL") {
+    val d = "2026-08-12"
+    def speed(o: TrafficObservation, v: Long) = o.copy(current_speed = v)
+    // the newest hour: "a" twice in traffic and three times in weather
+    // (two of them identical), so 2 x 3 matches; "b" only in traffic,
+    // twice; NULL geo_name / original_coordinates on both sides must
+    // never match
+    val tr = Seq(t(d, "09:00", "a"), t(d, "10:00", "a"), speed(t(d, "10:00", "a"), 40L),
+      t(d, "10:00", "b"), t(d, "10:00", "b"), t(d, "10:00", null),
+      t(d, "10:00", "c").copy(original_coordinates = null))
+    val we = Seq(w(d, "09:00", "a"), w(d, "10:00", "a"), w(d, "10:00", "a"),
+      w(d, "10:00", "a").copy(temperature = 1.5), w(d, "10:00", null),
+      w(d, "10:00", "c").copy(original_coordinates = null))
+    val base = tmpDir("snapshot")
+    appendByDate(ds(tr).toDF(), s"$base/traffic", Seq(d))
+    appendByDate(ds(we).toDF(), s"$base/weather", Seq(d))
+    assertExact(base)
+    val got = spark.read.parquet(s"$base/snapshot")
+      .select("geo_name", "original_coordinates").as[(String, String)].collect()
+    assert(got.length == 6 && got.forall { case (g, c) => g == "a" && c != null })
+
+    // the weather dir exists but holds no row of the newest hour
+    val noMatch = tmpDir("snapshot")
+    appendByDate(ds(tr).toDF(), s"$noMatch/traffic", Seq(d))
+    appendByDate(ds(we.filter(_.time != "10:00")).toDF(), s"$noMatch/weather", Seq(d))
+    assertExact(noMatch)
+    assert(spark.read.parquet(s"$noMatch/snapshot").count() == 0)
+
+    // no traffic row has a timestamp: the MAX is NULL
+    val nullMax = tmpDir("snapshot")
+    Files.createDirectories(Paths.get(nullMax, "traffic", s"date=$d"))
+    appendByDate(ds(we).toDF(), s"$nullMax/weather", Seq(d))
+    assertExact(nullMax)
+    assert(spark.read.parquet(s"$nullMax/snapshot").count() == 0)
   }
 
   test("publishLatest: no weather dir for the newest date ⇒ empty snapshot, " +

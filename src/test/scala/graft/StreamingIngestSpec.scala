@@ -160,7 +160,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/snapshot").count() == 1)
   }
 
-  test("a drain into existing tables runs no emptiness probe (five jobs), " +
+  test("a drain into existing tables runs no emptiness probe (four jobs), " +
     "and a table without rows gains no data file") {
     val base = tmpDir("stream")
     val in = s"$base/in"
@@ -193,9 +193,10 @@ class StreamingIngestSpec extends SparkSpec {
         rec("a", Fixtures.openWeather(), "2026-08-12", "10:00", "weather")))
       ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // two appends, the newest-hour scan, the broadcast of that driver-local
-    // hour and the snapshot write; each emptiness probe would add one
-    assert(jobs.get() == 5)
+    // two appends, the newest-hour scan and the snapshot publish, which
+    // looks that driver-local hour up inside the weather scan; each
+    // emptiness probe would add one
+    assert(jobs.get() == 4)
     assert(dataFiles("traffic") == trafficBefore)
     assert(spark.read.parquet(s"$base/weather").count() == 2)
     // the newest traffic hour is still 09:00, with its weather match

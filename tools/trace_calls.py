@@ -31,6 +31,16 @@ other.
 
     python3 tools/trace_calls.py .bench_build/traces/index_lifecycle-s5 --rows
 
+    python3 tools/trace_calls.py <change trace dir> \
+        --against <parent trace dir> --prefix pipeline.run,streaming.drain
+
+`--against` prints, instead of the table, each call's mean per run in
+the two trace dirs side by side: its wall ms, jobs and files written,
+parent (`_p`, the `--against` dir) then change (`_c`), and `ms_d`, the
+change's wall ms relative to the parent's. A call seen in only one dir
+shows `-` on the other side. `--prefix` takes a comma-separated list,
+here as in every mode.
+
 `--rows` prints, instead of the table, the data each call moves: one
 line per SQL execution that started inside it (its rows and files
 scanned, its rows and files written, and the dirs it read and wrote,
@@ -113,6 +123,67 @@ def timeline(call, all_spans, jobs, execs):
                   f"{ms(j['start_us']):>8.0f}{ms(j['end_us']):>8.0f}  {j['site']}")
 
 
+def call_rows(spans, jobs, execs):
+    """Yields each span with its row of the table (wall ms, jobs,
+    inference jobs, job ms, driver gap ms, files written) and its jobs."""
+    for s in spans:
+        lo, hi = s["start_us"], s["end_us"]
+        inside = [j for j in jobs if lo <= j["start_us"] <= hi]
+        job_us = union_us([(max(lo, j["start_us"]), min(hi, j["end_us"]))
+                           for j in inside])
+        files = sum(e["files_written"] for e in execs
+                    if lo <= e["start_us"] <= hi)
+        wall_us = hi - lo
+        yield s, collections.Counter(
+            ms=wall_us / 1e3, jobs=len(inside),
+            infer=sum(is_inference(j) for j in inside),
+            job_ms=job_us / 1e3, gap_ms=(wall_us - job_us) / 1e3,
+            files=files, runs=1), inside
+
+
+def calls(trace_dir, prefixes, serves):
+    """The spans named by `prefixes` in start order, the finished jobs
+    and the executions of `trace_dir`."""
+    all_spans = load(trace_dir, "spans.jsonl")
+    spans = sorted((s for s in all_spans
+                    if s["name"].startswith(prefixes)
+                    and (serves or not s["name"].startswith("index.serve"))),
+                   key=lambda s: s["start_us"])
+    jobs = [j for j in load(trace_dir, "jobs.jsonl") if "end_us" in j]
+    return spans, jobs, load(trace_dir, "execs.jsonl")
+
+
+def means(trace_dir, prefixes, serves):
+    """Mean row per run of each call in `trace_dir`, in first-seen order."""
+    totals = collections.defaultdict(collections.Counter)
+    for s, row, _ in call_rows(*calls(trace_dir, prefixes, serves)):
+        totals[s["name"]].update(row)
+    out = {}
+    for name, t in totals.items():
+        out[name] = {k: v / t["runs"] for k, v in t.items()}
+        out[name]["runs"] = t["runs"]
+    return out
+
+
+def against(change_dir, parent_dir, prefixes, serves):
+    before = means(parent_dir, prefixes, serves)
+    after = means(change_dir, prefixes, serves)
+    print(f"{'call':<22}{'runs_p':>7}{'runs_c':>7}{'ms_p':>8}{'ms_c':>8}"
+          f"{'ms_d':>7}{'jobs_p':>7}{'jobs_c':>7}{'files_p':>8}{'files_c':>8}")
+
+    def cell(row, key, width, fmt):
+        return f"{row[key]:>{width}{fmt}}" if row else f"{'-':>{width}}"
+
+    for name in list(before) + [n for n in after if n not in before]:
+        b, c = before.get(name), after.get(name)
+        pct = (f"{100 * (c['ms'] - b['ms']) / b['ms']:>+6.0f}%"
+               if b and c and b["ms"] else f"{'-':>7}")
+        print(f"{name:<22}{cell(b, 'runs', 7, '')}{cell(c, 'runs', 7, '')}"
+              f"{cell(b, 'ms', 8, '.0f')}{cell(c, 'ms', 8, '.0f')}{pct}"
+              f"{cell(b, 'jobs', 7, '.1f')}{cell(c, 'jobs', 7, '.1f')}"
+              f"{cell(b, 'files', 8, '.1f')}{cell(c, 'files', 8, '.1f')}")
+
+
 ROW_KEYS = ("rows_scanned", "rows_written", "files_scanned", "files_written")
 
 
@@ -151,7 +222,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("trace_dir")
     ap.add_argument("--prefix", default="index.",
-                    help="span-name prefix of the calls to report")
+                    help="span-name prefix of the calls to report; a "
+                         "comma-separated list names several")
     ap.add_argument("--serves", action="store_true",
                     help="also report index.serve.* spans")
     ap.add_argument("--sites", action="store_true",
@@ -162,16 +234,18 @@ def main():
     ap.add_argument("--rows", action="store_true",
                     help="print each call's rows and files scanned and "
                          "written, per execution, instead of the table")
+    ap.add_argument("--against", metavar="PARENT_TRACE_DIR",
+                    help="print each call's mean ms, jobs and files in this "
+                         "dir and in trace_dir side by side")
     a = ap.parse_args()
 
-    all_spans = load(a.trace_dir, "spans.jsonl")
-    spans = [s for s in all_spans
-             if s["name"].startswith(a.prefix)
-             and (a.serves or not s["name"].startswith("index.serve"))]
-    jobs = [j for j in load(a.trace_dir, "jobs.jsonl") if "end_us" in j]
-    execs = load(a.trace_dir, "execs.jsonl")
-    spans.sort(key=lambda s: s["start_us"])
+    prefixes = tuple(a.prefix.split(","))
+    if a.against:
+        against(a.trace_dir, a.against, prefixes, a.serves)
+        return
+    spans, jobs, execs = calls(a.trace_dir, prefixes, a.serves)
     if a.timeline:
+        all_spans = load(a.trace_dir, "spans.jsonl")
         for s in spans:
             timeline(s, all_spans, jobs, execs)
             print()
@@ -181,24 +255,12 @@ def main():
         return
 
     seen = collections.Counter()
-    totals = collections.defaultdict(lambda: collections.Counter())
+    totals = collections.defaultdict(collections.Counter)
     header = (f"{'call':<22}{'run':>4}{'ms':>9}{'jobs':>6}{'infer':>6}"
               f"{'job_ms':>9}{'gap_ms':>9}{'files':>7}")
     print(header)
-    for s in spans:
-        lo, hi = s["start_us"], s["end_us"]
-        inside = [j for j in jobs if lo <= j["start_us"] <= hi]
-        job_us = union_us([(max(lo, j["start_us"]), min(hi, j["end_us"]))
-                           for j in inside])
-        files = sum(e["files_written"] for e in execs
-                    if lo <= e["start_us"] <= hi)
-        wall_us = hi - lo
+    for s, row, inside in call_rows(spans, jobs, execs):
         seen[s["name"]] += 1
-        row = collections.Counter(
-            ms=wall_us / 1e3, jobs=len(inside),
-            infer=sum(is_inference(j) for j in inside),
-            job_ms=job_us / 1e3, gap_ms=(wall_us - job_us) / 1e3,
-            files=files, runs=1)
         totals[s["name"]].update(row)
         print(f"{s['name']:<22}{seen[s['name']]:>4}{row['ms']:>9.0f}"
               f"{row['jobs']:>6}{row['infer']:>6}{row['job_ms']:>9.0f}"
@@ -225,7 +287,6 @@ def main():
               f"{grand['jobs'] / n:>6.1f}{grand['infer'] / n:>6.1f}"
               f"{grand['job_ms'] / n:>9.0f}{grand['gap_ms'] / n:>9.0f}"
               f"{grand['files'] / n:>7.1f}")
-
 
 if __name__ == "__main__":
     main()
