@@ -46,8 +46,19 @@ object Tables {
       case _ => raw
     }
   }
-  def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
+  /** The corpus tables read under their declared schemas — the types of
+    * every generated scale dir — so constructing a frame over them runs
+    * no footer-inference job. A column missing from a file reads as
+    * NULL. [[load]] keeps inferring, for the other tables and for any
+    * external input.
+    */
+  def documents(s: SparkSession, d: String): DataFrame =
+    s.read.schema("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT").parquet(s"$d/documents.parquet")
+  def embeddings(s: SparkSession, d: String): DataFrame =
+    s.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+      .parquet(s"$d/embeddings.parquet")
 
   /** Register every table as a temp view (for `spark.sql` entry points).
     * `events` goes through its nanos-conversion wrapper.

@@ -18,9 +18,11 @@ import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
   * function) on the driver: identical values, zero jobs. Parity with
   * the Column form is pinned in Md5LongSpec.
   *
-  * Only for constant key sets: corpus-derived key frames (boolean
-  * query batches, probe frames) keep the distributed collect, which is
-  * bounded by the bucket-domain size.
+  * For driver-side key sets: constants, and keys a serve has already
+  * collected from its bounded query batch (`Retrieval.bm25Batch`).
+  * Key frames still to be evaluated (boolean query batches, probe
+  * frames) keep the distributed collect, which is bounded by the
+  * bucket-domain size.
   */
 object LocalHash {
 

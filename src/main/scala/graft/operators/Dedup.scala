@@ -605,14 +605,16 @@ object Dedup {
     * and the sub-root's df counts (`groupBy(shh)` of the same pairs).
     * The three writes are independent and overlapped ([[Par.runAll]]);
     * the shingle explode runs once per write that needs it, which is
-    * batch-sized work. Overwrite semantics ⇒ a replayed fold rewrites
-    * the same dirs wholesale.
+    * batch-sized work. The explode is not fanned out: the df
+    * aggregate's exchange already spreads its rows, and the shingle
+    * pairs are written as the scan splits them. Overwrite semantics ⇒
+    * a replayed fold rewrites the same dirs wholesale.
     */
   private def writeSubRoot(docs: DataFrame, path: String, sub: String): Unit = {
     val p = protocol(path)
     val Seq(shDir, hDir, dfDir) =
       Seq("shingles", "hashes", "df").map(k => s"${p.dir(k)}/$sub")
-    val exploded = Par.fanOut(docs)
+    val exploded = docs
       .select(col("doc_id"), explode(shingles3(col("text"))).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
     Par.runAll(

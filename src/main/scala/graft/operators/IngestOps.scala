@@ -3,6 +3,7 @@ package graft.operators
 import graft.schema.Schemas
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** The two reference handlers re-expressed as single vectorized
@@ -118,18 +119,23 @@ object IngestOps {
     *
     * Empty-batch suppression (K3): a table with no rows never creates
     * its root. Driver-local rows (a `LocalRelation`: one hour of points)
-    * are checked without a job, and written from one partition, so an
-    * hourly append adds one file per table. Other rows are probed only
-    * while the root is absent: a zero-row partitioned append into an
-    * existing root writes no data file.
+    * are checked by the relation's own row count, with no execution,
+    * and written from one partition, so an hourly append adds one file
+    * per table. Other rows are probed only while the root is absent: a
+    * zero-row partitioned append into an existing root writes no data
+    * file.
     */
   def appendPartitioned(tables: (DataFrame, String)*): Unit =
     Par.runAll(tables.map { case (rows, path) => () =>
       val root = new Path(path)
       def rootExists =
         root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration).exists(root)
-      if (if (rows.isLocal) !rows.isEmpty else rootExists || !rows.isEmpty)
-        (if (rows.isLocal) rows.coalesce(1) else rows)
+      val localNonEmpty = rows.queryExecution.analyzed match {
+        case l: LocalRelation => Some(l.data.nonEmpty)
+        case _ => None
+      }
+      if (localNonEmpty.getOrElse(rootExists || !rows.isEmpty))
+        (if (localNonEmpty.isDefined) rows.coalesce(1) else rows)
           .write.mode(SaveMode.Append).partitionBy("date").parquet(path)
     }: _*)
 }

@@ -59,12 +59,17 @@ object Retrieval {
     * listing prune is untouched; within-bucket file count is what
     * compaction manages.
     */
-  private def writePostings(postings: DataFrame, dir: String): Unit = {
-    val slices = math.max(1,
-      postings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        .toInt / Buckets)
+  private def writePostings(postings: DataFrame, dir: String): Unit =
     FoldProtocol.writePartitioned(postings, dir, "bucket",
-      pmod(xxhash64(col("doc_id")), lit(slices)))
+      sliceOf(postings.sparkSession))
+
+  /** The within-bucket write slice of a posting, `hash(doc_id) % slices`
+    * (see [[writePostings]]).
+    */
+  private def sliceOf(s: SparkSession): Column = {
+    val slices = math.max(1,
+      s.conf.get("spark.sql.shuffle.partitions").toInt / Buckets)
+    pmod(xxhash64(col("doc_id")), lit(slices))
   }
 
   private def words(c: Column): Column = split(c, " ")
@@ -169,9 +174,12 @@ object Retrieval {
 
   /** Write one sub-root's postings + mergeable stats from a
     * `documents`-shaped frame. One tokenize scan per output, the two
-    * writes overlapped ([[Par.runAll]]); [[writePostings]] clusters
-    * the rows bucket-first before the partitioned write. Overwrite
-    * semantics ⇒ a replayed fold rewrites the same dirs wholesale.
+    * writes overlapped ([[Par.runAll]]). The postings shuffle ONCE: the
+    * exploded tokens cluster on [[writePostings]]'s `(bucket, slice)`
+    * key, and the tf aggregate groups by keys that contain both, so it
+    * runs in the write's own partitions — no fan-out of the document
+    * text and no separate aggregate exchange. Overwrite semantics ⇒ a
+    * replayed fold rewrites the same dirs wholesale.
     */
   private def writeSubRoot(docs: DataFrame, path: String,
       sub: String): Unit = {
@@ -179,14 +187,22 @@ object Retrieval {
     val (postingsDir, statsDir) =
       (s"${p.dir("postings")}/$sub", s"${p.dir("stats")}/$sub")
     Par.runAll(
-      () => writePostings(Par.fanOut(docs)
+      () => docs
         .select(col("doc_id"), words(col("text")).as("ws"))
         .select(col("doc_id"), size(col("ws")).as("dl"),
           explode(col("ws")).as("word"))
-        .groupBy(col("word"), col("doc_id"), col("dl"))
+        .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets)))
+        .withColumn("slice", sliceOf(docs.sparkSession))
+        .repartition(
+          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+          col("bucket"), col("slice"))
+        .groupBy(col("word"), col("doc_id"), col("dl"), col("bucket"),
+          col("slice"))
         .agg(count(lit(1)).as("tf"))
-        .withColumn("bucket", pmod(xxhash64(col("word")), lit(Buckets))),
-        postingsDir),
+        .select(col("word"), col("doc_id"), col("dl"), col("tf"),
+          col("bucket"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .partitionBy("bucket").parquet(postingsDir),
       () => docs
         .select(size(words(col("text"))).as("dl"))
         .agg(count(lit(1)).as("n"), sum(col("dl")).cast("long").as("sum_dl"))
@@ -327,7 +343,10 @@ object Retrieval {
     dirs.map(r => s.read.schema(StatsSchema).parquet(r))
       .reduce(_.union(_))
       .agg(sum(col("n")).cast("double").as("n"),
-        (sum(col("sum_dl")).cast("double") / sum(col("n"))).as("avgdl"))
+        // no live documents: NULL, as for an index built empty (whose
+        // sum_dl is NULL), not a division by zero
+        when(sum(col("n")) =!= 0,
+          sum(col("sum_dl")).cast("double") / sum(col("n"))).as("avgdl"))
 
   /** The stats sides `dirs` re-summed to ONE `(n, sum_dl)` row — the
     * integer form compactions, vacuums and merges persist (absorbing
@@ -713,33 +732,42 @@ object Retrieval {
     * `(query_id, doc_id, rank)`, rank cut per query on the ROUNDED
     * score with doc_id tie-break (the `top_k` comparator contract).
     *
-    * Plan shape: the batch's bucket set is collected driver-side
-    * (bounded by the query batch — a gate query set or one
-    * micro-batch, the indexTopK probe-cell class) into a static
-    * PartitionFilter; postings semi-join the batch's word list BEFORE
-    * df so a word shared by many queries counts its documents once;
-    * the per-query fan-out join comes AFTER the df aggregate; per-query
-    * ranking is the bounded-state `top_k` aggregate (k-pair buffers
-    * merge map-side — no window over the scored set). The query frame
-    * is batch-bounded and joins unhinted (AQE sizes it).
+    * Plan shape: the batch's distinct `(query_id, word)` pairs are
+    * collected once (bounded by the query batch — a gate query set or
+    * one micro-batch, the indexTopK probe class) and so is the merged
+    * `(n, avgdl)` stats row. On the driver the pairs give the bucket
+    * set ([[graft.functions.LocalHash]], the hash the build used) — a
+    * static PartitionFilter — and the word list, an `isInCollection`
+    * filter applied to the postings BEFORE df, so a word shared by many
+    * queries counts its documents once; the stats ride as typed
+    * literals (NULL for an index with no live documents, as the
+    * aggregate gives). The per-query fan-out join against the pairs,
+    * a local relation, comes AFTER the df aggregate; per-query ranking
+    * is the bounded-state `top_k` aggregate (k-pair buffers merge
+    * map-side — no window over the scored set).
     */
   def bm25Batch(s: SparkSession, indexPath: String, queries: DataFrame,
       k: Int = TopK): DataFrame = {
-    val qterms = queries
+    val exploded = queries
       .select(col("query_id"), explode(col("terms")).as("word"))
-      .distinct()
-    val buckets = qterms
-      .select(pmod(xxhash64(col("word")), lit(Buckets)).as("bucket"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    val words = qterms.select(col("word")).distinct()
+    val pairs = exploded.collect().distinct
+    // a NULL term matches no posting (the join below is on word)
+    val words = pairs.flatMap(r => Option(r.getString(1))).distinct.sorted
+      .toSeq
+    val qterms = s.createDataFrame(java.util.Arrays.asList(pairs: _*),
+      exploded.schema)
+    val stats = indexStats(s, indexPath).head()
+    def stat(i: Int): Column =
+      if (stats.isNullAt(i)) lit(null).cast("double") else lit(stats.getDouble(i))
     val qPostings = indexPostings(s, indexPath)
-      .filter(col("bucket").isin(buckets: _*))
-      .join(words, Seq("word"), "left_semi")
+      .filter(col("bucket").isin(
+        graft.functions.LocalHash.bucketsOf(words, Buckets): _*))
+      .filter(col("word").isInCollection(words))
       .select(col("word"), col("doc_id"), col("tf"), col("dl"))
     val df_ = qPostings.groupBy(col("word"))
       .agg(count(lit(1)).cast("double").as("df"))
     val scored = qPostings.join(df_, Seq("word"))
-      .crossJoin(broadcast(indexStats(s, indexPath)))
+      .select(col("*"), stat(0).as("n"), stat(1).as("avgdl"))
       .join(qterms, Seq("word"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(idf * tfNorm), 4).as("score"))
@@ -3469,8 +3497,8 @@ object Retrieval {
   private[graft] def hybridFused(s: SparkSession, bmIndex: String,
       ivfIndex: String, queries: DataFrame, k: Int = TopK): DataFrame = {
     // the two legs' construction-time jobs (the lexical batch's term
-    // collect, the dense leg's probe collect + cents count) are
-    // independent — overlapped (guide §2.6)
+    // and stats collects, the dense leg's centroid and probe collects)
+    // are independent — overlapped (guide §2.6)
     val Seq(lex, dense) = Par.buildAll(Seq[() => DataFrame](
       () => bm25Batch(s, bmIndex,
           queries.select(col("query_id"), col("terms")), k)

@@ -48,33 +48,27 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
 
   /** Nearest-`n` centroid assignment, shuffle-free: the K centroids
-    * collapse to ONE row carrying a (cent_id, cv) array, and each
-    * vector ranks all K in-row (sort of a K-element array) —
-    * assignment is pure map work. The previous formulation windowed
-    * over a vec_id-keyed exchange of N×K candidate rows, each dragging
-    * the 64-float vector: ~20× data amplification through a shuffle for
-    * what is row-local arithmetic, and at corpus scale the difference
-    * between an exchange-free scan and the biggest shuffle in the IVF
-    * build. Ranking matches the window form exactly (rounded cosine
-    * desc, cent_id tie-break, including the -0.0 edge: negation keeps
+    * ride ONE row carrying a (cent_id, cv) array, and each vector ranks
+    * all K in-row (sort of a K-element array) — assignment is pure map
+    * work. The previous formulation windowed over a vec_id-keyed
+    * exchange of N×K candidate rows, each dragging the 64-float vector:
+    * ~20× data amplification through a shuffle for what is row-local
+    * arithmetic, and at corpus scale the difference between an
+    * exchange-free scan and the biggest shuffle in the IVF build.
+    * Ranking matches the window form exactly (rounded cosine desc,
+    * cent_id tie-break, including the -0.0 edge: negation keeps
     * Double.compare order).
     *
-    * The centroid row carries NO broadcast hint: it is ONE row, but its
-    * bytes grow with the centroid count (K×dim doubles inside a
-    * collect_list buffer — K here scales as N/25), so the broadcast
-    * decision belongs to AQE's runtime size check. The planner still
-    * picks a broadcast nested-loop join while the row is small (the
-    * group-less aggregate's 1-row size estimate), and falls back once
-    * it is not — the same policy as every corpus-derived build side.
+    * The one-row `cs` frame has two sources and this one kernel ranks
+    * both: centroids computed inside the query ([[centsRow]] of a Lloyd
+    * step or a seed frame) and a persisted index's frozen [[Centroids]]
+    * (read once per call onto the driver). Output: (vec_id, v,
+    * cent_id, prank) with prank 1..n — the frame the nprobe tuning
+    * curve slices.
     */
-  /** [[assign]] keeping the probe ORDER: (vec_id, v, cent_id, prank)
-    * with prank 1..n — the frame the nprobe tuning curve slices.
-    */
-  private def assignRanked(vecs: DataFrame, cents: DataFrame,
-      n: Int): DataFrame = {
-    val centsRow = cents
-      .agg(collect_list(struct(col("cent_id"), col("cv"))).as("cs"))
-    vecs.crossJoin(centsRow)
+  private def assignRanked(vecs: DataFrame, cs: DataFrame,
+      n: Int): DataFrame =
+    vecs.crossJoin(cs)
       .select(col("vec_id"), col("v"),
         slice(array_sort(transform(col("cs"), c =>
           struct((round(cosine(col("v"), c("cv")), 4) * -1).as("nsim"),
@@ -83,10 +77,75 @@ object Similarity {
         posexplode(col("top")).as(Seq("pos", "sc")))
       .select(col("vec_id"), col("v"), col("sc.cent_id").as("cent_id"),
         (col("pos") + 1).as("prank"))
-  }
+
+  /** The one-row centroid frame of centroids computed inside a query:
+    * their group-less `collect_list`. It carries NO broadcast hint: it
+    * is ONE row, but its bytes grow with the centroid count (K×dim
+    * doubles inside a collect_list buffer — K here scales as N/25), so
+    * the broadcast decision belongs to AQE's runtime size check. The
+    * planner still picks a broadcast nested-loop join while the row is
+    * small (the group-less aggregate's 1-row size estimate), and falls
+    * back once it is not — the same policy as every corpus-derived
+    * build side.
+    */
+  private def centsRow(cents: DataFrame): DataFrame =
+    cents.agg(collect_list(struct(col("cent_id"), col("cv"))).as("cs"))
 
   private def assign(vecs: DataFrame, cents: DataFrame, n: Int): DataFrame =
-    assignRanked(vecs, cents, n).drop("prank")
+    assignRanked(vecs, centsRow(cents), n).drop("prank")
+
+  /** [[assign]] against a persisted index's frozen centroids. */
+  private def assign(vecs: DataFrame, cents: Centroids, n: Int): DataFrame =
+    assignRanked(vecs, cents.row(vecs.sparkSession), n).drop("prank")
+
+  private val CentsSchema =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "cent_id BIGINT, cv ARRAY<DOUBLE>")
+  private val CsSchema =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "cs ARRAY<STRUCT<cent_id: BIGINT, cv: ARRAY<DOUBLE>>>")
+
+  /** A persisted index's frozen centroids, read ONCE per call onto the
+    * driver: K `(cent_id, cv)` rows, K × dim doubles — the bytes the
+    * aggregated one-row form already carried to every executor. Every
+    * use in the call takes this one value: the serve's probes, a fold's
+    * assignment, a refresh's drift gate and re-bin, a build's `cents/`
+    * write and assignment. So `cents/` is scanned once and no centroid
+    * aggregate runs. [[row]] reaches each executor once, as the
+    * broadcast side of the assignment's nested-loop join (a hinted
+    * one-row local relation), never as a plan literal carried by every
+    * task. A build's collected values are exactly what its `cents/`
+    * files hold (a double round-trips through parquet unchanged), so
+    * the vectors are assigned against the values later probes read.
+    */
+  private final class Centroids(rows: Seq[org.apache.spark.sql.Row]) {
+    def size: Int = rows.size
+
+    /** The K rows as a local `(cent_id, cv)` frame. */
+    def frame(s: SparkSession): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), CentsSchema)
+
+    /** The one-row `cs` frame [[assignRanked]] ranks against. */
+    def row(s: SparkSession): DataFrame =
+      broadcast(s.createDataFrame(
+        java.util.Arrays.asList(org.apache.spark.sql.Row(rows)), CsSchema))
+
+    /** Lands the K rows as one parquet file at `dir`. */
+    def write(s: SparkSession, dir: String): Unit =
+      frame(s).coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(dir)
+  }
+
+  private object Centroids {
+    /** The frozen centroids of the index root at `path`. */
+    def of(s: SparkSession, path: String): Centroids =
+      collected(readCents(s, protocol(path).dir("cents")))
+
+    /** Centroids computed by a build or refresh, collected once. */
+    def collected(cents: DataFrame): Centroids =
+      new Centroids(cents.select(col("cent_id").cast("long"),
+        col("cv").cast("array<double>")).collect().toSeq)
+  }
 
   /** One Lloyd (k-means) iteration: assign every vector to its nearest
     * seed, replace each seed with its cell's element-wise mean. The
@@ -94,7 +153,14 @@ object Similarity {
     * one shuffle keyed by (cell, dim).
     */
   private def lloydStep(vecs: DataFrame, seeds: DataFrame): DataFrame =
-    assign(vecs, seeds, 1)
+    cellMeans(assign(vecs, seeds, 1))
+
+  /** [[lloydStep]] from a persisted index's frozen centroids. */
+  private def lloydStep(vecs: DataFrame, cents: Centroids): DataFrame =
+    cellMeans(assign(vecs, cents, 1))
+
+  private def cellMeans(assigned: DataFrame): DataFrame =
+    assigned
       .select(col("cent_id"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cent_id"), col("dim"))
       .agg(avg(col("x")).as("cx"))
@@ -964,31 +1030,28 @@ object Similarity {
     * vector's two sign words landed cell-partitioned in
     * `bwords/seed/`. The root speaks the FoldProtocol dialect like
     * the float and PQ indexes, so ledgered folds, tombstoned deletes
-    * and fsck compose unchanged. Centroids are read BACK before
-    * assignment (double-roundtrip parity).
+    * and fsck compose unchanged ([[buildCells]]: the centroids are
+    * collected once and assign the vectors beside their `cents/`
+    * write).
     */
   def writeIvfBinaryIndex(vecs: DataFrame, path: String,
       targetK: Int = FixedK): Unit = {
     val e = vecs.select(col("vec_id"), col("v"))
-    lloydStep(e, fixedKSeeds(e, targetK))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/cents")
-    stageBWords(e, path, s"$path/bwords/seed")
+    buildCells(path, lloydStep(e, fixedKSeeds(e, targetK)))(
+      stageBWords(e, _, s"$path/bwords/seed"))
   }
 
   /** Assign + sign-pack `e` against the index's FROZEN centroids and
     * land it cell-partitioned at `dir` — shared by the seed build and
     * every fold (the [[stageIvfPqDir]] contract on sign words).
     */
-  private def stageBWords(e: DataFrame, path: String,
-      dir: String): Unit = {
-    val cents = readCents(e.sparkSession, protocol(path).dir("cents"))
+  private def stageBWords(e: DataFrame, cents: Centroids,
+      dir: String): Unit =
     FoldProtocol.writePartitioned(
       assign(e, cents, 1)
         .select(col("vec_id"), signWord(col("v"), 0).as("w0"),
           signWord(col("v"), 32).as("w1"), col("cent_id")),
       dir, "cent_id")
-  }
 
   /** Fold a batch of new vectors into a persisted IVF+binary index,
     * exactly once under replay — [[appendToIvfPqIndex]]'s contract on
@@ -997,7 +1060,8 @@ object Similarity {
   def appendToIvfBinaryIndex(vecs: DataFrame, path: String,
       batchId: Long): Boolean =
     protocol(path).fold(batchId, Seq("bwords")) {
-      stageBWords(vecs.select(col("vec_id"), col("v")), path,
+      stageBWords(vecs.select(col("vec_id"), col("v")),
+        Centroids.of(vecs.sparkSession, path),
         s"${protocol(path).dir("bwords")}/b$batchId")
     }
 
@@ -1062,50 +1126,23 @@ object Similarity {
     */
   def refreshIvfBinaryIndex(s: SparkSession, path: String,
       refreshId: Long, vecs: DataFrame,
-      minDrift: Double = 0.0): Boolean = {
-    val p = protocol(path)
-    if (p.entries().contains(s"r$refreshId")) return false
-    p.withLease(s"refresh-bin-$refreshId") {
+      minDrift: Double = 0.0): Boolean =
+    refreshCells(s, path, refreshId, "refresh-bin", "bwords", minDrift) { () =>
       val words = indexBWords(s, path)
         .select(col("vec_id"), col("w0"), col("w1"))
       val live = vecs.select(col("vec_id"), col("v"))
         .join(words.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      val oldCents = readCents(s, p.dir("cents"))
-      val newCents = lloydStep(live, oldCents)
-      val drift = oldCents.select(col("cent_id"), col("cv").as("ocv"))
-        .join(newCents.select(col("cent_id"), col("cv").as("ncv")),
-          Seq("cent_id"))
-        .agg(avg(lit(1.0) - cosine(col("ocv"), col("ncv"))))
-        .head().getDouble(0)
-      if (drift < minDrift) { p.commit(s"r$refreshId"); false }
-      else {
-        // cents staging is NOT dot-prefixed: the staged centroids are
-        // read back before the publish (double-roundtrip parity — the
-        // re-bin provably uses the values later probes read)
-        newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/cents.refreshing")
-        val staged = s"$path/.bwords.refreshing/${p.compactDirName()}"
+      (live, (cents, staged) => {
         FoldProtocol.writePartitioned(
-          assign(live, readCents(s, s"$path/cents.refreshing"), 1)
+          assign(live, cents, 1)
             .select(col("vec_id"), col("cent_id"))
             .join(words, Seq("vec_id"))
             .select(col("vec_id"), col("w0"), col("w1"), col("cent_id")),
           staged, "cent_id")
-        val stagedN = s.read.schema(BWordsSchema).parquet(staged).count()
-        val liveN = words.count()
-        if (stagedN != liveN)
-          throw new IllegalStateException(
-            s"refresh sidecar covers $stagedN of $liveN live index " +
-              "rows — the full-precision frame must cover the index's " +
-              "live population; refusing to publish")
-        p.publishDir(".bwords.refreshing", "bwords")
-        p.publishDir("cents.refreshing", "cents")
-        p.clearTombstones()
-        p.commit(s"r$refreshId")
-        true
-      }
+        requireCovered(s.read.schema(BWordsSchema).parquet(staged).count(),
+          words.count())
+      })
     }
-  }
 
   /** The full IVF+binary serve as composable oracle text (bn_-prefixed
     * CTEs): bounded-K seeds, one Lloyd step, sign-pack of the assigned
@@ -1367,27 +1404,16 @@ object Similarity {
       queries: DataFrame, nprobe: Int = 4,
       allowed: Option[DataFrame] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val cents = readCents(s, protocol(indexPath).dir("cents"))
-    val probes = assign(
-      queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
-      cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("cent_id"))
-    // Driver-side probe-cell list — bounded by the cell count K (the
-    // indexTopK prune class); turns the cell read into a static
-    // PartitionFilter on the bwords scan.
-    val cells = probes.select(col("cent_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val totalCells = cents.count()
+    // the probes, collected once (see probed) — the cell list prunes
+    // the bwords scan statically
+    val (probes, cellPrune) = probed(s, indexPath, queries, nprobe)
     // committed-roots union read (seed + ledgered appends + compact)
     // minus tombstones; the isin prune pushes into every sub-root's
     // PartitionFilters like indexVectors' (see indexTopK). An asOf
     // horizon swaps ONLY the list-time dir/tombstone scope — zero
     // data cost, like indexVectorsAsOf/indexCodesAsOf.
-    val allWords = asOf.fold(indexBWords(s, indexPath))(h =>
-      indexBWordsAsOf(s, indexPath, h))
-    val cellPruned =
-      if (cells.length >= totalCells) allWords
-      else allWords.filter(col("cent_id").isin(cells: _*))
+    val cellPruned = cellPrune(asOf.fold(indexBWords(s, indexPath))(h =>
+      indexBWordsAsOf(s, indexPath, h)))
     // metadata restriction AFTER the cell prune, BEFORE Hamming — the
     // sim_ivfpq_filtered placement: the semi-join's left side is
     // ~nprobe/K of the corpus at 16 B/row, and disallowed candidates
@@ -1395,11 +1421,10 @@ object Similarity {
     val pruned = allowed.fold(cellPruned)(a =>
       cellPruned.join(a.select(col("vec_id")), Seq("vec_id"),
         "left_semi"))
-    val qb = binarized(
-      queries.select(col("query_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("query_id"),
-        col("w0").as("q0"), col("w1").as("q1"))
-    probes.join(broadcast(qb), Seq("query_id"))
+    // each probe row packs its own query's sign words: the serve plan
+    // reads the queries only through the collected probes
+    probes.select(col("query_id"), col("cent_id"),
+        signWord(col("qv"), 0).as("q0"), signWord(col("qv"), 32).as("q1"))
       .join(pruned, Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -1562,19 +1587,34 @@ object Similarity {
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
 
   private def writeIvfIndexFrom(e: DataFrame, seeds: DataFrame,
-      path: String): Unit = {
-    lloydStep(e, seeds)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/cents")
-    // Assignment reads the centroids BACK from parquet so the index
-    // provably serves the same values later probes will read (double
-    // roundtrip is exact). The write clusters each cell into one task
-    // (FoldProtocol.writePartitioned) — without it every task writes a
-    // sliver of every cell (tasks × cells small files).
-    FoldProtocol.writePartitioned(
-      assign(e, readCents(e.sparkSession, s"$path/cents"), 1),
-      s"$path/vectors/seed", "cent_id")
+      path: String): Unit =
+    buildCells(path, lloydStep(e, seeds))(stageVectors(e, _,
+      s"$path/vectors/seed"))
+
+  /** A build's coarse layer: the K `cents` are collected once
+    * ([[Centroids]]), land in `cents/` and, concurrently, `stage`
+    * assigns the corpus against the same values — a double round-trips
+    * through parquet unchanged, so the index serves exactly the
+    * centroids its vectors were assigned to, with no write, re-read
+    * and re-aggregate of `cents/` in between.
+    */
+  private def buildCells(path: String, cents: DataFrame)(
+      stage: Centroids => Unit): Unit = {
+    val held = Centroids.collected(cents)
+    Par.runAll(
+      () => held.write(cents.sparkSession, s"$path/cents"),
+      () => stage(held))
   }
+
+  /** Assign `e` to its nearest frozen centroid and land it
+    * cell-partitioned at `dir` (overwrite ⇒ replay-safe) — the float
+    * build's and every fold's write. The write clusters each cell into
+    * one task (FoldProtocol.writePartitioned) — without it every task
+    * writes a sliver of every cell (tasks × cells small files).
+    */
+  private def stageVectors(e: DataFrame, cents: Centroids,
+      dir: String): Unit =
+    FoldProtocol.writePartitioned(assign(e, cents, 1), dir, "cent_id")
 
   /** Lloyd rounds for the TRAINED build — enough to show genuine
     * multi-round convergence without an unbounded oracle unroll.
@@ -1639,15 +1679,10 @@ object Similarity {
   def writeTrainedIvfIndex(vecs: DataFrame, path: String,
       rounds: Int = TrainedRounds, seedEvery: Int = 25): Unit = {
     val e = vecs.select(col("vec_id"), col("v"))
-    lloydTrain(e,
+    buildCells(path, lloydTrain(e,
       e.filter(col("vec_id") % seedEvery === 0)
         .select(col("vec_id").as("cent_id"), col("v").as("cv")),
-      rounds)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/cents")
-    FoldProtocol.writePartitioned(
-      assign(e, readCents(e.sparkSession, s"$path/cents"), 1),
-      s"$path/vectors/seed", "cent_id")
+      rounds))(stageVectors(e, _, s"$path/vectors/seed"))
   }
 
   /** Fixed centroid count for the bounded-K build (the gate's choice;
@@ -1817,13 +1852,10 @@ object Similarity {
     * the write and the ledger commit can be simulated.
     */
   private[graft] def stageIvfFold(vecs: DataFrame, path: String,
-      batchId: Long): Unit = {
-    val p = protocol(path)
-    FoldProtocol.writePartitioned(
-      assign(vecs.select(col("vec_id"), col("v")),
-        readCents(vecs.sparkSession, p.dir("cents")), 1),
-      s"${p.dir("vectors")}/b$batchId", "cent_id")
-  }
+      batchId: Long): Unit =
+    stageVectors(vecs.select(col("vec_id"), col("v")),
+      Centroids.of(vecs.sparkSession, path),
+      s"${protocol(path).dir("vectors")}/b$batchId")
 
   /** Fold step 2: publish the grown ledger via one atomic file move. */
   private[graft] def commitIvfFold(path: String, batchId: Long): Unit =
@@ -1928,30 +1960,47 @@ object Similarity {
     * Writer-lease-guarded, like every index publish.
     */
   def refreshIvfIndex(s: SparkSession, path: String, refreshId: Long,
-      minDrift: Double = 0.0): Boolean = {
+      minDrift: Double = 0.0): Boolean =
+    refreshCells(s, path, refreshId, "refresh", "vectors", minDrift) { () =>
+      val vecs = indexVectors(s, path).select(col("vec_id"), col("v"))
+      (vecs, stageVectors(vecs, _, _))
+    }
+
+  /** The coarse-layer refresh every IVF kind shares, under the writer
+    * lease: `open` (run inside the lease) yields the index's live
+    * full-precision vectors and the kind's re-bin; one Lloyd step from
+    * the frozen [[Centroids]] over those vectors is collected once and
+    * gated on its mean movement (1 − cosine of old vs new, `minDrift`).
+    * A refresh past the gate writes the new centroids to
+    * `cents.refreshing` while the re-bin stages the `kind` frame under
+    * them, then publishes `kind` before `cents` (the reader-window
+    * argument of [[refreshIvfIndex]]), clears the tombstones the
+    * rewrite purged and commits `r<refreshId>`. A ledgered refreshId is
+    * a committed no-op.
+    */
+  private def refreshCells(s: SparkSession, path: String, refreshId: Long,
+      tag: String, kind: String, minDrift: Double)(
+      open: () => (DataFrame, (Centroids, String) => Unit)): Boolean = {
     val p = protocol(path)
     if (p.entries().contains(s"r$refreshId")) return false
-    p.withLease(s"refresh-$refreshId") {
-      val vecs = indexVectors(s, path).select(col("vec_id"), col("v"))
-      val oldCents = readCents(s, p.dir("cents"))
-      val newCents = lloydStep(vecs, oldCents)
-      val drift = oldCents.select(col("cent_id"), col("cv").as("ocv"))
-        .join(newCents.select(col("cent_id"), col("cv").as("ncv")),
+    p.withLease(s"$tag-$refreshId") {
+      val (live, rebin) = open()
+      val old = Centroids.of(s, path)
+      val fresh = Centroids.collected(lloydStep(live, old))
+      val drift = old.frame(s).select(col("cent_id"), col("cv").as("ocv"))
+        .join(fresh.frame(s).select(col("cent_id"), col("cv").as("ncv")),
           Seq("cent_id"))
         .agg(avg(lit(1.0) - cosine(col("ocv"), col("ncv"))))
         .head().getDouble(0)
       if (drift < minDrift) { p.commit(s"r$refreshId"); false }
       else {
-        // the staging name is NOT dot-prefixed: the staged centroids are
-        // read back before the publish (double-roundtrip parity with
-        // writeIvfIndex — the index provably serves the same values later
-        // probes read)
-        newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/cents.refreshing")
-        FoldProtocol.writePartitioned(
-          assign(vecs, readCents(s, s"$path/cents.refreshing"), 1),
-          s"$path/.vectors.refreshing/${p.compactDirName()}", "cent_id")
-        p.publishDir(".vectors.refreshing", "vectors")
+        // the centroid staging name is NOT dot-prefixed, the staged
+        // `kind` frame's is (the layout every refresh has published)
+        Par.runAll(
+          () => fresh.write(s, s"$path/cents.refreshing"),
+          () => rebin(fresh,
+            s"$path/.$kind.refreshing/${p.compactDirName()}"))
+        p.publishDir(s".$kind.refreshing", kind)
         p.publishDir("cents.refreshing", "cents")
         p.clearTombstones()
         p.commit(s"r$refreshId")
@@ -1959,6 +2008,17 @@ object Similarity {
       }
     }
   }
+
+  /** A refresh's coverage check: the staged re-bin must hold every live
+    * index row, or the full-precision frame missed some and publishing
+    * would silently drop them.
+    */
+  private def requireCovered(stagedN: Long, liveN: Long): Unit =
+    if (stagedN != liveN)
+      throw new IllegalStateException(
+        s"refresh sidecar covers $stagedN of $liveN live index " +
+          "rows — the full-precision frame must cover the index's " +
+          "live population; refusing to publish")
 
   /** Top-k ANN for an arbitrary query frame `(query_id, qv)` against a
     * persisted IVF index (see [[ensureIvfIndex]]) — the serving core
@@ -1989,30 +2049,13 @@ object Similarity {
       nprobe: Int = 4, k: Int = TopK,
       allowed: Option[DataFrame] = None,
       asOf: Option[Long] = None): DataFrame = {
-    // K rows of a 64-double array.
-    val cents = readCents(s, protocol(indexPath).dir("cents"))
-    val probes = assign(
-      queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
-      cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cent_id"))
-    // Driver-side probe-cell list: bounded by the CELL COUNT K whatever
-    // the batch size (distinct of a partition-key domain). Collecting
-    // it is what turns the cell prune into a static PartitionFilter
-    // instead of a runtime join. When a large query batch probes
-    // (nearly) every cell the filter prunes nothing — skip it outright
-    // rather than planning a K-literal InSet for zero benefit.
-    val cells = probes.select(col("cent_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val totalCells = cents.count()
+    val (probes, cellPrune) = probed(s, indexPath, queries, nprobe)
     // Committed-roots union read (seed + ledgered appends + compact):
     // the isin prune pushes through the union into every branch's
     // PartitionFilters — only probed cent_id= dirs are listed, in every
     // sub-root.
-    val allVecs = asOf.fold(indexVectors(s, indexPath))(
-      indexVectorsAsOf(s, indexPath, _))
-    val pruned =
-      if (cells.length >= totalCells) allVecs
-      else allVecs.filter(col("cent_id").isin(cells: _*))
+    val pruned = cellPrune(asOf.fold(indexVectors(s, indexPath))(
+      indexVectorsAsOf(s, indexPath, _)))
     val vecs = allowed.fold(pruned)(a =>
       pruned.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi"))
     val scored = probes.join(vecs, Seq("cent_id"))
@@ -2021,6 +2064,35 @@ object Similarity {
         round(cosine(col("qv"), col("v")), 4).as("sim"))
     rankTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
+  }
+
+  /** The probe side of a persisted-index serve, derived once on the
+    * driver: each query's `nprobe` nearest frozen centroids (the
+    * [[assign]] kernel against the index's [[Centroids]]), collected —
+    * ≤ |queries| × nprobe `(query_id, qv, cent_id)` rows — and handed
+    * back as a local relation the serve plan joins, so the serve
+    * execution neither re-reads the centroids nor re-ranks the probes.
+    * With it comes the cell prune: the probed cell ids (≤ K whatever
+    * the batch size) as a static `cent_id` filter, which turns the
+    * prune into a PartitionFilter that lists only the probed
+    * `cent_id=` dirs; when the batch probes every cell the filter
+    * would prune nothing and is skipped rather than planned as a
+    * K-literal InSet.
+    */
+  private def probed(s: SparkSession, indexPath: String, queries: DataFrame,
+      nprobe: Int): (DataFrame, DataFrame => DataFrame) = {
+    val cents = Centroids.of(s, indexPath)
+    val ranked = assign(
+      queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
+      cents, nprobe)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cent_id"))
+    val rows = ranked.collect()
+    val cells = rows.map(_.getLong(2)).distinct.sorted
+    val probes = s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      ranked.schema)
+    (probes, frame =>
+      if (cells.length >= cents.size) frame
+      else frame.filter(col("cent_id").isin(cells.toIndexedSeq: _*)))
   }
 
   // ---- product quantization (PQ) ----
@@ -2139,10 +2211,11 @@ object Similarity {
 
   /** Build a fresh IVF-PQ index at `path`: train the IVF centroids and
     * the PQ codebook on the build corpus, then land every vector as
-    * `(vec_id, codes)` cell-partitioned by its nearest centroid. Both
-    * artifacts are read BACK from parquet before assignment/encoding
-    * (double-roundtrip parity — the index provably serves the values
-    * later probes read).
+    * `(vec_id, codes)` cell-partitioned by its nearest centroid. The
+    * centroids are collected once and assign the vectors beside their
+    * `cents/` write ([[buildCells]]); the codebook is read BACK before
+    * encoding ([[readCodebook]]) — either way the index provably serves
+    * the values later probes read.
     *
     * The DEFAULT seeding is BOUNDED-K ([[fixedKSeeds]]: the smallest
     * `targetK` ids in multiplicative-hash order, one Lloyd step) — the
@@ -2189,25 +2262,32 @@ object Similarity {
   }
 
   private def writeIvfPqIndexFrom(e: DataFrame, seeds: DataFrame,
-      path: String): Unit = {
-    lloydStep(e, seeds)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/cents")
-    pqCodebookOf(e)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/codebook")
-    stageIvfPqDir(e, path, s"$path/vectors/seed")
-  }
+      path: String): Unit =
+    buildCells(path, lloydStep(e, seeds)) { cents =>
+      // float sub-vectors, the codebook's declared read type (a no-op
+      // cast for the float corpus)
+      pqCodebookOf(e).withColumn("c8", col("c8").cast("array<float>"))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$path/codebook")
+      stageIvfPqDir(e, cents, path, s"$path/vectors/seed")
+    }
+
+  /** The frozen PQ codebook of the index root at `path`, read under its
+    * declared schema (no footer-inference job) — read BACK by the build
+    * too, so the index is encoded against exactly the values later
+    * serves decode with.
+    */
+  private def readCodebook(s: SparkSession, path: String): DataFrame =
+    s.read.schema("m INT, code_id BIGINT, c8 ARRAY<FLOAT>")
+      .parquet(protocol(path).dir("codebook"))
 
   /** Assign + encode `e` against the index's FROZEN artifacts and land
     * it cell-partitioned at `dir` (overwrite ⇒ replay-safe) — the
     * staging step shared by the seed build and every fold.
     */
-  private def stageIvfPqDir(e: DataFrame, path: String, dir: String): Unit = {
-    val s = e.sparkSession
-    val p = protocol(path)
-    val cents = readCents(s, p.dir("cents"))
-    val cb = s.read.parquet(p.dir("codebook"))
+  private def stageIvfPqDir(e: DataFrame, cents: Centroids, path: String,
+      dir: String): Unit = {
+    val cb = readCodebook(e.sparkSession, path)
     FoldProtocol.writePartitioned(
       assign(e, cents, 1).select(col("vec_id"), col("cent_id"))
         .join(pqEncode(e, cb), Seq("vec_id"))
@@ -2224,7 +2304,8 @@ object Similarity {
   def appendToIvfPqIndex(vecs: DataFrame, path: String,
       batchId: Long): Boolean =
     protocol(path).fold(batchId, Seq("vectors")) {
-      stageIvfPqDir(vecs.select(col("vec_id"), col("v")), path,
+      stageIvfPqDir(vecs.select(col("vec_id"), col("v")),
+        Centroids.of(vecs.sparkSession, path), path,
         s"${protocol(path).dir("vectors")}/b$batchId")
     }
 
@@ -2322,49 +2403,22 @@ object Similarity {
     * view (victims are already stripped by [[indexCodes]]).
     */
   def refreshIvfPqIndex(s: SparkSession, path: String, refreshId: Long,
-      vecs: DataFrame, minDrift: Double = 0.0): Boolean = {
-    val p = protocol(path)
-    if (p.entries().contains(s"r$refreshId")) return false
-    p.withLease(s"refresh-pq-$refreshId") {
+      vecs: DataFrame, minDrift: Double = 0.0): Boolean =
+    refreshCells(s, path, refreshId, "refresh-pq", "vectors", minDrift) { () =>
       val codes = indexCodes(s, path).select(col("vec_id"), col("codes"))
       val live = vecs.select(col("vec_id"), col("v"))
         .join(codes.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      val oldCents = readCents(s, p.dir("cents"))
-      val newCents = lloydStep(live, oldCents)
-      val drift = oldCents.select(col("cent_id"), col("cv").as("ocv"))
-        .join(newCents.select(col("cent_id"), col("cv").as("ncv")),
-          Seq("cent_id"))
-        .agg(avg(lit(1.0) - cosine(col("ocv"), col("ncv"))))
-        .head().getDouble(0)
-      if (drift < minDrift) { p.commit(s"r$refreshId"); false }
-      else {
-        // cents staging is NOT dot-prefixed: the staged centroids are
-        // read back before the publish (double-roundtrip parity — the
-        // re-bin provably uses the values later probes read)
-        newCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$path/cents.refreshing")
-        val staged = s"$path/.vectors.refreshing/${p.compactDirName()}"
+      (live, (cents, staged) => {
         FoldProtocol.writePartitioned(
-          assign(live, readCents(s, s"$path/cents.refreshing"), 1)
+          assign(live, cents, 1)
             .select(col("vec_id"), col("cent_id"))
             .join(codes, Seq("vec_id"))
             .select(col("vec_id"), col("codes"), col("cent_id")),
           staged, "cent_id")
-        val stagedN = s.read.schema(CodedSchema).parquet(staged).count()
-        val liveN = codes.count()
-        if (stagedN != liveN)
-          throw new IllegalStateException(
-            s"refresh sidecar covers $stagedN of $liveN live index " +
-              "rows — the full-precision frame must cover the index's " +
-              "live population; refusing to publish")
-        p.publishDir(".vectors.refreshing", "vectors")
-        p.publishDir("cents.refreshing", "cents")
-        p.clearTombstones()
-        p.commit(s"r$refreshId")
-        true
-      }
+        requireCovered(s.read.schema(CodedSchema).parquet(staged).count(),
+          codes.count())
+      })
     }
-  }
 
   /** Top-k ANN for `(query_id, qv)` queries against a persisted IVF-PQ
     * index. Same static cell prune as [[indexTopK]] (probed `cent_id=`
@@ -2392,24 +2446,11 @@ object Similarity {
       rerank: Int = PqRerank,
       allowed: Option[DataFrame] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val p = protocol(indexPath)
-    val cents = readCents(s, p.dir("cents"))
-    val cb = s.read.parquet(p.dir("codebook"))
-    val probes = assign(
-      queries.select(col("query_id").as("vec_id"), col("qv").as("v")),
-      cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cent_id"))
-    // Driver-side probe-cell list: bounded by the cell count K, same
-    // class as indexTopK's (what turns the prune into a static
-    // PartitionFilter).
-    val cells = probes.select(col("cent_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val totalCells = cents.count()
-    val allCoded = asOf.fold(indexCodes(s, indexPath))(
-      indexCodesAsOf(s, indexPath, _))
-    val pruned =
-      if (cells.length >= totalCells) allCoded
-      else allCoded.filter(col("cent_id").isin(cells: _*))
+    val cb = readCodebook(s, indexPath)
+    // the probes, collected once, and indexTopK's static cell prune
+    val (probes, cellPrune) = probed(s, indexPath, queries, nprobe)
+    val pruned = cellPrune(asOf.fold(indexCodes(s, indexPath))(
+      indexCodesAsOf(s, indexPath, _)))
     val candidates = allowed.fold(pruned)(a =>
       pruned.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi"))
     val adc = probes.join(pqDecode(candidates, cb), Seq("cent_id"))
@@ -3664,7 +3705,7 @@ object Similarity {
           col("cent_id"))
       val q = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id"), col("v"))
-      val probes = assignRanked(q, cents, 8)
+      val probes = assignRanked(q, centsRow(cents), 8)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
           col("cent_id"), col("prank"))
       // Pinned once, sliced four times — without the pin each nprobe

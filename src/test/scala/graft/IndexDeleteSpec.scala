@@ -73,8 +73,10 @@ class IndexDeleteSpec extends SparkSpec {
     val queries = Tables.embeddings(spark, sf0001)
       .filter($"vec_id" < 20)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    // sorted: the serve's row order follows the physical layout of the
+    // cells it streams, which compaction rewrites
     def served() = Similarity.indexTopK(spark, idx, queries)
-      .as[(Long, Long, Int)].collect().toSeq
+      .as[(Long, Long, Int)].collect().toSeq.sorted
     val baseline = served()
     // victims = 3 currently-served neighbors: the delete must change
     // some ranking

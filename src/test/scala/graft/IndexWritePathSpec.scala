@@ -6,11 +6,14 @@ import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.datasources.{InsertIntoHadoopFsRelationCommand, SQLHadoopMapReduceCommitProtocol}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import scala.jdk.CollectionConverters._
 
@@ -104,12 +107,15 @@ class IndexWritePathSpec extends SparkSpec {
     def inference: Boolean = exec == -1L && site.startsWith("parquet at ")
   }
 
-  /** Runs `body` and returns the jobs it launched plus the execution
-    * ids of its hive-partitioned writes.
+  /** Runs `body` and returns the jobs it launched, the execution ids of
+    * its hive-partitioned writes and every node of the physical plans
+    * its SQL executions ran (write commands' inner plans included).
     */
-  private def recording(body: => Unit): (Seq[JobSeen], Set[Long]) = {
+  private def recording(body: => Unit)
+      : (Seq[JobSeen], Set[Long], Seq[SparkPlan]) = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[JobSeen]()
     val partitioned = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val last = e.stageInfos.maxBy(_.stageId)
@@ -122,13 +128,15 @@ class IndexWritePathSpec extends SparkSpec {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case end: SparkListenerSQLExecutionEnd =>
           val qe = org.apache.spark.sql.ListenerAccess.queryExecution(end)
-          if (qe != null && new AdaptiveSparkPlanHelper {}
-              .collect(qe.executedPlan) {
-                case DataWritingCommandExec(
-                    c: InsertIntoHadoopFsRelationCommand, _)
-                  if c.partitionColumns.nonEmpty => c
-              }.nonEmpty)
-            partitioned.add(end.executionId)
+          if (qe != null) {
+            plans.add(qe.executedPlan)
+            if (helper.collect(qe.executedPlan) {
+                  case DataWritingCommandExec(
+                      c: InsertIntoHadoopFsRelationCommand, _)
+                    if c.partitionColumns.nonEmpty => c
+                }.nonEmpty)
+              partitioned.add(end.executionId)
+          }
         case _ =>
       }
     }
@@ -137,9 +145,23 @@ class IndexWritePathSpec extends SparkSpec {
     try {
       body
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (jobs.asScala.toSeq, partitioned.asScala.toSet)
+      (jobs.asScala.toSeq, partitioned.asScala.toSet,
+        plans.asScala.toSeq.flatMap(nodes))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  private val helper = new AdaptiveSparkPlanHelper {}
+
+  /** Every node of `p`, subqueries and command inner plans included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+    helper.collectWithSubqueries(p) {
+      case cr: CommandResultExec => cr +: nodes(cr.commandPhysicalPlan)
+      case n => Seq(n)
+    }.flatten
+
+  private def scansOf(plan: Seq[SparkPlan], dir: String): Seq[FileSourceScanExec] =
+    plan.collect { case f: FileSourceScanExec
+      if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f }
 
   test("fold, delete and compact of BM25, IVF and dedup launch no " +
     "schema-inference job, and every partitioned write stage runs " +
@@ -177,7 +199,7 @@ class IndexWritePathSpec extends SparkSpec {
       val root = tmpDir(s"write-path-$name")
       for ((op, call) <- Seq("write" -> write, "fold" -> fold,
           "delete" -> delete, "compact" -> compact)) {
-        val (jobs, partitioned) = recording(call(root))
+        val (jobs, partitioned, _) = recording(call(root))
         val inference = jobs.filter(_.inference)
         assert(inference.isEmpty,
           s"$name $op ran schema-inference jobs: ${inference.map(_.site)}")
@@ -270,5 +292,125 @@ class IndexWritePathSpec extends SparkSpec {
       assert(fold(batch, root), s"$name: the replay must commit")
       assert(folded(root).contains(1L))
     }
+  }
+
+  private def ivfQueries(v: DataFrame) =
+    v.filter($"vec_id" < 8).select($"vec_id".as("query_id"), $"v".as("qv"))
+
+  test("IVF serves and folds of every kind scan cents/ once and run no " +
+    "centroid aggregate; a float serve runs at most 6 jobs") {
+    val v = vecs
+    val q = ivfQueries(v)
+    val kinds: Seq[(String, String => Unit, String => Boolean,
+        String => Unit)] = Seq(
+      ("ivf", Similarity.writeIvfIndex(v.filter($"vec_id" % 5 =!= 4), _),
+        Similarity.appendToIvfIndex(v.filter($"vec_id" % 5 === 4), _, 1L),
+        root => Similarity.indexTopK(spark, root, q).collect()),
+      ("pq", Similarity.writeIvfPqIndex(v.filter($"vec_id" % 5 =!= 4), _),
+        Similarity.appendToIvfPqIndex(v.filter($"vec_id" % 5 === 4), _, 1L),
+        root => Similarity.ivfPqTopK(spark, root, q, v).collect()),
+      ("binary",
+        Similarity.writeIvfBinaryIndex(v.filter($"vec_id" % 5 =!= 4), _),
+        Similarity.appendToIvfBinaryIndex(v.filter($"vec_id" % 5 === 4),
+          _, 1L),
+        root => Similarity.ivfBinaryTopK(spark, root, q, v).collect()))
+    for ((name, write, fold, serve) <- kinds) {
+      val root = tmpDir(s"serve-fold-$name")
+      write(root)
+      for ((op, call) <- Seq[(String, () => Unit)](
+          "fold" -> (() => assert(fold(root))), "serve" -> (() => serve(root)))) {
+        val (jobs, _, plan) = recording(call())
+        assert(scansOf(plan, "/cents").size == 1,
+          s"$name $op: cents/ scans ${scansOf(plan, "/cents").size}")
+        val centroidAggs = plan.collect { case a: BaseAggregateExec
+          if a.aggregateExpressions.exists(_.references.exists(_.name == "cv")) => a }
+        assert(centroidAggs.isEmpty, s"$name $op: $centroidAggs")
+        if (name == "ivf" && op == "serve")
+          assert(jobs.size <= 6, s"float serve ran ${jobs.size} jobs")
+      }
+    }
+  }
+
+  private def bm25Queries(terms: Seq[String]*) =
+    terms.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("query_id", "terms")
+
+  test("bm25Batch constructs without a distinct shuffle and plans the " +
+    "stats as literals, not a broadcast; the postings write plans one " +
+    "exchange") {
+    val root = tmpDir("bm25-batch-plan")
+    val (_, _, writePlan) =
+      recording(Retrieval.writeBm25Index(docs, root))
+    val postingsWrite = writePlan.collect {
+      case w @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+        if c.outputPath.toString.contains("/postings/") => w
+    }
+    assert(postingsWrite.size == 1)
+    assert(nodes(postingsWrite.head).count {
+      case _: ShuffleExchangeExec => true
+      case _ => false
+    } == 1, postingsWrite.head)
+    var served: DataFrame = null
+    val (_, _, construct) = recording {
+      served = Retrieval.bm25Batch(spark, root,
+        bm25Queries(Seq("query", "scan"), Seq("dup", "query")))
+    }
+    // the stats row's group-less sum is the only aggregate: nothing
+    // groups the query terms
+    assert(!construct.exists {
+      case a: BaseAggregateExec => a.groupingExpressions.nonEmpty
+      case _ => false
+    }, construct.map(_.nodeName).distinct)
+    val (_, _, serve) = recording(served.collect())
+    assert(scansOf(serve, "/stats").isEmpty, "the serve re-reads the stats")
+    assert(!serve.exists {
+      case b: BroadcastExchangeExec => scansOf(nodes(b), "/stats").nonEmpty
+      case _ => false
+    })
+  }
+
+  test("edge serves equal a from-scratch build's: empty query frames, " +
+    "BM25 terms absent from the index, every indexed row deleted") {
+    val d = docs
+    val v = vecs
+    def bm25(root: String, qs: DataFrame) =
+      Retrieval.bm25Batch(spark, root, qs)
+        .as[(Long, Long, Int)].collect().toSeq.sorted
+    def ivf(root: String, qs: DataFrame) =
+      Similarity.indexTopK(spark, root, qs)
+        .as[(Long, Long, Int)].collect().toSeq.sorted
+    def pq(root: String, qs: DataFrame) =
+      Similarity.ivfPqTopK(spark, root, qs, v)
+        .as[(Long, Long, Int)].collect().toSeq.sorted
+    val noTerms = bm25Queries()
+    val noVecs = ivfQueries(v).where(lit(false))
+    val absent = bm25Queries(Seq("zzqx", "qqzx"), Seq("xzzq"))
+    val present = bm25Queries(Seq("query", "scan"), Seq("dup"))
+    val bm = tmpDir("edge-bm25")
+    Retrieval.writeBm25Index(d, bm)
+    val iv = tmpDir("edge-ivf")
+    Similarity.writeIvfIndex(v, iv)
+    val pqRoot = tmpDir("edge-pq")
+    Similarity.writeIvfPqIndex(v, pqRoot)
+    assert(bm25(bm, present).nonEmpty && ivf(iv, ivfQueries(v)).nonEmpty)
+    // a from-scratch build over the same rows serves the same nothing
+    val bmFresh = tmpDir("edge-bm25-fresh")
+    Retrieval.writeBm25Index(d, bmFresh)
+    assert(bm25(bm, noTerms) == bm25(bmFresh, noTerms))
+    assert(bm25(bm, noTerms).isEmpty)
+    assert(bm25(bm, absent) == bm25(bmFresh, absent))
+    assert(bm25(bm, absent).isEmpty)
+    assert(ivf(iv, noVecs).isEmpty && pq(pqRoot, noVecs).isEmpty)
+    // every indexed row deleted serves what a build over no rows does
+    assert(Retrieval.deleteFromBm25Index(d.select($"doc_id"), bm, 1L))
+    assert(Similarity.deleteFromIvfIndex(v.select($"vec_id"), iv, 1L))
+    val bmEmpty = tmpDir("edge-bm25-empty")
+    Retrieval.writeBm25Index(d.where(lit(false)), bmEmpty)
+    val ivEmpty = tmpDir("edge-ivf-empty")
+    Similarity.writeIvfIndex(v.where(lit(false)), ivEmpty)
+    assert(bm25(bm, present) == bm25(bmEmpty, present))
+    assert(bm25(bm, present).isEmpty)
+    assert(ivf(iv, ivfQueries(v)) == ivf(ivEmpty, ivfQueries(v)))
+    assert(ivf(iv, ivfQueries(v)).isEmpty)
   }
 }

@@ -483,10 +483,11 @@ class PlanSpec extends SparkSpec {
 
   /** Runs `body` and returns its result, every node of the physical
     * plans its SQL executions ran (subqueries and write commands'
-    * inner plans included) and the number of jobs it started.
+    * inner plans included), the number of jobs it started and the
+    * number of SQL executions it ran.
     */
   private def observed[T](body: => T)
-      : (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+      : (T, Seq[org.apache.spark.sql.execution.SparkPlan], Int, Int) = {
     import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import scala.jdk.CollectionConverters._
@@ -520,7 +521,7 @@ class PlanSpec extends SparkSpec {
         case cr: CommandResultExec => cr +: nodes(cr.commandPhysicalPlan)
         case n => Seq(n)
       }.flatten
-    (r, plans.asScala.toSeq.flatMap(nodes), jobs.get())
+    (r, plans.asScala.toSeq.flatMap(nodes), jobs.get(), plans.size)
   }
 
   test("ingest snapshot: every scan of the hourly refresh lists ONE date " +
@@ -529,7 +530,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val c = ingestConfig(tmpDir("prune"))
     IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
-    val (r, nodes, _) = observed(
+    val (r, nodes, _, _) = observed(
       IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1)))
     assert(r.snapshotRows == 3)
     val history = nodes.collect { case f: FileSourceScanExec => f }
@@ -561,10 +562,15 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val c = ingestConfig(tmpDir("jobs"))
     IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
-    val (r, nodes, jobs) = observed(
+    val (r, nodes, jobs, executions) = observed(
       IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusHours(1)))
     assert(r.trafficRows == 3 && r.weatherRows == 3 && r.snapshotRows == 3)
     assert(jobs == 4)
+    // 6 SQL executions: the two transform collects (no job), the two
+    // appends, the MAX and the publish — the appends decide emptiness
+    // from the transformed rows' local relation, with no isEmpty
+    // execution of their own
+    assert(executions == 6)
     assert(nodes.nonEmpty)
     assert(!nodes.exists {
       case _: BaseJoinExec | _: BroadcastExchangeExec => true
