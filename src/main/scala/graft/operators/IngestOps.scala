@@ -126,7 +126,13 @@ object IngestOps {
     * file.
     */
   def appendPartitioned(tables: (DataFrame, String)*): Unit =
-    Par.runAll(tables.map { case (rows, path) => () =>
+    Par.runAll(appends(tables: _*): _*)
+
+  /** The one-table bodies [[appendPartitioned]] runs together, for a
+    * caller that runs them beside work of its own.
+    */
+  def appends(tables: (DataFrame, String)*): Seq[() => Unit] =
+    tables.map { case (rows, path) => () =>
       val root = new Path(path)
       def rootExists =
         root.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration).exists(root)
@@ -137,5 +143,5 @@ object IngestOps {
       if (localNonEmpty.getOrElse(rootExists || !rows.isEmpty))
         (if (localNonEmpty.isDefined) rows.coalesce(1) else rows)
           .write.mode(SaveMode.Append).partitionBy("date").parquet(path)
-    }: _*)
+    }
 }

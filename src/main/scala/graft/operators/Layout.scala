@@ -418,12 +418,27 @@ object Layout {
     * then swap (see `replaceDir`). A reader of the snapshot path sees
     * either the previous complete snapshot or the new complete one,
     * never the empty/partial directory `SaveMode.Overwrite` leaves
-    * visible while the new files land.
+    * visible while the new files land. The two halves are also
+    * callable apart ([[stageOverwrite]], [[swapStaged]]), for a caller
+    * that stages while other work runs and swaps once it succeeded.
     */
   def publishOverwrite(df: DataFrame, path: String): Unit = {
-    val staging = path + ".staging"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    replaceDir(df.sparkSession, staging, path, path + ".old")
+    stageOverwrite(df, path)
+    swapStaged(df.sparkSession, path)
+  }
+
+  /** Writes `df` to the staging sibling of `path`; nothing is served. */
+  def stageOverwrite(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(path + ".staging")
+
+  /** Serves the [[stageOverwrite]]n dir at `path`. */
+  def swapStaged(spark: SparkSession, path: String): Unit =
+    replaceDir(spark, path + ".staging", path, path + ".old")
+
+  /** Drops a [[stageOverwrite]]n dir that will not be served. */
+  def discardStaged(spark: SparkSession, path: String): Unit = {
+    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
+    staging.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(staging, true)
   }
 
   /** The pay-shuffle-once capability as a gated query: orders and

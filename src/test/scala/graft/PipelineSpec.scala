@@ -178,6 +178,42 @@ class PipelineSpec extends SparkSpec {
     assert(r.snapshotMillis > 0)
   }
 
+  test("a failed traffic append fails the run, still lands the weather " +
+    "append and leaves the previous snapshot served (K4); the next good run " +
+    "publishes") {
+    val base = tmpDir("pipeline")
+    val c = cfg(base)
+    assert(IngestPipeline.run(spark, c, okFetcher(30), hour1).snapshotRows == 3)
+    def snapshot = spark.read.parquet(c.snapshotPath)
+      .select("time", "current_speed").as[(String, Long)].collect().toSeq
+    val before = snapshot
+    val failed = intercept[Exception] {
+      HookedCommitProtocol.withHook(spark) { path =>
+        if (path.contains("traffic_table")) throw new RuntimeException("injected")
+      }(IngestPipeline.run(spark, c, okFetcher(55), hour2))
+    }
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected")), failed)
+    def times(table: String) =
+      spark.read.parquet(table).select("time").as[String].collect().toSeq
+    assert(times(c.weatherPath).count(_ == "10:00") == 3)
+    assert(!times(c.trafficPath).contains("10:00"))
+    // the run staged a snapshot beside the appends; none of it is served
+    // or left behind
+    assert(snapshot == before && before.forall(_ == ("09:00", 30L)))
+    assert(!Files.exists(Paths.get(s"${c.snapshotPath}.staging")))
+
+    val hour3 = hour2.plusHours(1)
+    val r3 = IngestPipeline.run(spark, c, okFetcher(70), hour3)
+    assert(r3.snapshotRows == 3)
+    assert(snapshot.sorted == Seq.fill(3)(("11:00", 70L)))
+    val full = graft.operators.SnapshotQuery.latestJoined(
+      spark.read.parquet(c.trafficPath), spark.read.parquet(c.weatherPath))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(df(_)): _*).collect().map(_.toString).sorted.toSeq
+    assert(rows(spark.read.parquet(c.snapshotPath)) == rows(full))
+  }
+
   test("url template rendering substitutes lat/lon/key (S1 URL shape)") {
     val url = HttpJsonSource.renderUrl(
       "https://api/x?point={lat},{lon}&key={key}",

@@ -524,24 +524,31 @@ class PlanSpec extends SparkSpec {
     (r, plans.asScala.toSeq.flatMap(nodes), jobs.get(), plans.size)
   }
 
+  /** The scans of the observed `nodes` that read `c`'s history tables. */
+  private def historyScans(c: graft.pipeline.IngestPipeline.Config,
+      nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    nodes.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      .filter(_.relation.location.rootPaths.exists(p =>
+        p.toString.contains(c.trafficPath) || p.toString.contains(c.weatherPath)))
+
   test("ingest snapshot: every scan of the hourly refresh lists ONE date " +
     "partition, the newest (the per-hour 100-TB guard)") {
     import graft.pipeline.IngestPipeline
     import org.apache.spark.sql.execution.FileSourceScanExec
     val c = ingestConfig(tmpDir("prune"))
+    // two date dirs of history; the observed run is on the newer day
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.minusDays(1))
     IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
     val (r, nodes, _, _) = observed(
-      IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1)))
+      IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusHours(1)))
     assert(r.snapshotRows == 3)
-    val history = nodes.collect { case f: FileSourceScanExec => f }
-      .filter(_.relation.location.rootPaths.exists(p =>
-        p.toString.contains(c.trafficPath) || p.toString.contains(c.weatherPath)))
+    val history = historyScans(c, nodes)
     def roots(f: FileSourceScanExec) = f.relation.location.rootPaths.map(_.toString)
     assert(history.exists(roots(_).exists(_.contains(c.trafficPath))))
     assert(history.exists(roots(_).exists(_.contains(c.weatherPath))))
     history.foreach { f =>
       assert(f.selectedPartitions.partitionCount == 1, roots(f))
-      assert(roots(f).forall(_.endsWith("date=2026-08-13")), roots(f))
+      assert(roots(f).forall(_.endsWith("date=2026-08-12")), roots(f))
     }
     // each table is scanned once: the newest-hour job returns the traffic
     // rows the lookup uses, so no second traffic scan
@@ -553,6 +560,41 @@ class PlanSpec extends SparkSpec {
     history.filter(roots(_).exists(_.contains(c.weatherPath))).foreach { f =>
       assert(f.metadata("PushedFilters").contains("time"), f.metadata)
     }
+  }
+
+  test("ingest snapshot: no scan of the hourly refresh lists the run's own " +
+    "appended file (the refresh adds the run's rows from the driver)") {
+    import graft.pipeline.IngestPipeline
+    val c = ingestConfig(tmpDir("own"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    def files(table: String) = new java.io.File(s"$table/date=2026-08-12").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.toURI.getPath).toSet
+    val tables = Seq(c.trafficPath, c.weatherPath)
+    val before = tables.flatMap(files).toSet
+    val (r, nodes, _, _) = observed(
+      IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusHours(1)))
+    assert(r.snapshotRows == 3)
+    val own = tables.flatMap(files).toSet -- before
+    assert(own.size == 2, own)
+    val history = historyScans(c, nodes)
+    assert(history.size == 2) // the MAX and the publish
+    val scanned = history.flatMap(_.relation.location.inputFiles)
+      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    assert(scanned == before, scanned)
+  }
+
+  test("ingest snapshot: a day-rollover run's refresh scans no history dir " +
+    "and runs no MAX job (3 jobs: two appends, the publish)") {
+    import graft.pipeline.IngestPipeline
+    val c = ingestConfig(tmpDir("rollover"))
+    IngestPipeline.run(spark, c, ingestFetch(), ingestDay1)
+    val (r, nodes, jobs, _) = observed(
+      IngestPipeline.run(spark, c, ingestFetch(), ingestDay1.plusDays(1)))
+    assert(r.snapshotRows == 3)
+    assert(historyScans(c, nodes).isEmpty, historyScans(c, nodes).map(_.relation.location))
+    assert(jobs == 3)
+    assert(spark.read.parquet(c.snapshotPath).select("date").as[String](
+      org.apache.spark.sql.Encoders.STRING).collect().toSeq == Seq.fill(3)("2026-08-13"))
   }
 
   test("ingest snapshot: a non-empty hourly run into existing roots is 4 " +

@@ -112,9 +112,14 @@ class SnapshotQuerySpec extends SparkSpec {
   /** publishLatest's output, count and column names, order and types
     * equal latestJoined over the full-history read.
     */
-  private def assertExact(base: String): Unit = {
-    val n = SnapshotQuery.publishLatest(spark, s"$base/traffic", s"$base/weather",
-      s"$base/snapshot")
+  private def assertExact(base: String): Unit =
+    assertPublished(base, SnapshotQuery.publishLatest(spark, s"$base/traffic",
+      s"$base/weather", s"$base/snapshot"))
+
+  /** The snapshot published at `base` (`n` rows) equals latestJoined
+    * over the full-history read, with its column names, order and types.
+    */
+  private def assertPublished(base: String, n: Long): Unit = {
     val full = SnapshotQuery.latestJoined(
       spark.read.schema(Schemas.trafficTableSchema).parquet(s"$base/traffic"),
       spark.read.schema(Schemas.weatherTableSchema).parquet(s"$base/weather"))
@@ -229,5 +234,101 @@ class SnapshotQuerySpec extends SparkSpec {
         s"$base/snapshot") == 0L)
       assert(!Files.exists(Paths.get(base, "snapshot")))
     }
+  }
+
+  // ---- the overlapped refresh of an hourly run (IngestPipeline.run) ----
+
+  /** One hourly run against the history at `base`, as `IngestPipeline`
+    * runs it: a `Refresh` lists both tables, the run appends its rows
+    * stamped `date`, then the refresh stages the listed files plus the
+    * run's own rows and swaps. The MAX runs after the appends here, so
+    * only the listing keeps the run's files out of it. Returns the
+    * refresh, for its `readsHistory`.
+    */
+  private def overlappedRun(base: String, date: String, runTr: Seq[TrafficObservation],
+      runWe: Seq[WeatherObservation]): SnapshotQuery.Refresh = {
+    val refresh = new SnapshotQuery.Refresh(spark, s"$base/traffic", s"$base/weather",
+      s"$base/snapshot", date)
+    if (runTr.nonEmpty) appendByDate(ds(runTr).toDF(), s"$base/traffic", Seq(date))
+    if (runWe.nonEmpty) appendByDate(ds(runWe).toDF(), s"$base/weather", Seq(date))
+    assert(refresh.publishes(runTr.nonEmpty, runWe.nonEmpty))
+    val n = refresh.stage(refresh.listedMax(),
+      SnapshotQuery.stamped(ds(runTr).toDF()).collect().toSeq,
+      Some(ds(runWe).toDF()).filter(_ => runWe.nonEmpty))
+    refresh.swap()
+    assertPublished(base, n)
+    refresh
+  }
+
+  /** A run's rows at `(date, time)`: 1–5 traffic rows over random points
+    * (repeats allowed, so they may duplicate each other and history
+    * rows), and a weather row for 70 % of them.
+    */
+  private def runRows(rnd: scala.util.Random, date: String, time: String)
+      : (Seq[TrafficObservation], Seq[WeatherObservation]) = {
+    val geos = Seq.fill(1 + rnd.nextInt(5))("abcd" (rnd.nextInt(4)).toString)
+    (geos.map(t(date, time, _).copy(current_speed = 77L)),
+      geos.distinct.filter(_ => rnd.nextDouble() < 0.7).map(w(date, time, _)))
+  }
+
+  private def written(base: String, tr: Seq[TrafficObservation],
+      we: Seq[WeatherObservation]): Unit = {
+    appendByDate(ds(tr).toDF(), s"$base/traffic", tr.map(_.date).distinct)
+    appendByDate(ds(we).toDF(), s"$base/weather", we.map(_.date).distinct)
+    Files.createDirectories(Paths.get(base, "weather")) // a history may have no weather row
+  }
+
+  test("overlapped refresh: a listing taken before the run's appends plus " +
+    "the run's own rows equals latestJoined over the full history read " +
+    "after them") {
+    val rnd = new scala.util.Random(11)
+    for (_ <- 1 to 3) {
+      // the run's hour on a newer day: the listing has no dir at or
+      // after its stamp, so no MAX job
+      val rollover = tmpDir("overlap")
+      val (tr, we) = history(rnd)
+      written(rollover, tr, we)
+      val (rt, rw) = runRows(rnd, "2026-10-01", "00:00")
+      assert(!overlappedRun(rollover, "2026-10-01", rt, rw).readsHistory)
+
+      // the run repeats the newest listed hour: ties are kept, and
+      // duplicate keys multiply with the history's rows
+      val repeat = tmpDir("overlap")
+      val (tr2, we2) = history(rnd)
+      written(repeat, tr2, we2)
+      val (d, h) = tr2.map(o => (o.date, o.time)).max
+      val (rt2, rw2) = runRows(rnd, d, h)
+      assert(overlappedRun(repeat, d, rt2, rw2).readsHistory)
+
+      // no traffic row lands, but weather rows arrive for the newest
+      // listed hour: they join the listed traffic rows (late weather)
+      val late = tmpDir("overlap")
+      val (tr3, we3) = history(rnd)
+      val (d3, h3) = tr3.map(o => (o.date, o.time)).max
+      written(late, tr3, we3.filterNot(o => (o.date, o.time) == (d3, h3)))
+      overlappedRun(late, d3, Nil,
+        tr3.filter(o => (o.date, o.time) == (d3, h3)).map(o => w(d3, h3, o.geo_name)))
+    }
+  }
+
+  test("overlapped refresh: an empty newest listed dir (a crashed append) " +
+    "and tables absent before the first run") {
+    val rnd = new scala.util.Random(12)
+    for (runLandsTraffic <- Seq(true, false)) {
+      val base = tmpDir("overlap")
+      val (tr, we) = history(rnd)
+      written(base, tr, we)
+      Files.createDirectories(Paths.get(base, "traffic", "date=2026-12-31"))
+      Files.createDirectories(Paths.get(base, "weather", "date=2026-12-31"))
+      // with no traffic row of its own, the run's refresh falls back to
+      // the older listed dirs
+      val (rt, rw) = runRows(rnd, "2026-12-31", "05:00")
+      overlappedRun(base, "2026-12-31", if (runLandsTraffic) rt else Nil, rw)
+    }
+    // the first run: neither root exists when the refresh lists them
+    val first = tmpDir("overlap")
+    val (rt, rw) = runRows(rnd, "2026-08-12", "09:00")
+    assert(!overlappedRun(first, "2026-08-12", rt, rw :+ w("2026-08-12", "09:00", "a"))
+      .readsHistory)
   }
 }

@@ -27,7 +27,12 @@ execution line also gives the dirs it read and wrote (last two path
 components) and its files scanned and written; the jobs of an execution
 are indented under it. This is the per-hour view of `hourly_ingest`:
 it shows which steps of one hourly run overlap and which wait on each
-other.
+other. A last line per call gives the wall-clock union of its append
+executions (those that write a dir other than a `.staging` one), the
+union of its refresh executions (those that write a `.staging` dir, or
+only read: the MAX and the staged publish) and the ms where the two
+overlap, so the overlap shows without the serial sums of the per-layer
+`pipeline.append_ms` and `snapshot.ms`.
 
     python3 tools/trace_calls.py .bench_build/traces/index_lifecycle-s5 --rows
 
@@ -85,6 +90,29 @@ def short(paths):
     return ",".join("/".join(p.rstrip("/").split("/")[-2:]) for p in paths) or "-"
 
 
+def role(e):
+    """`append`, `refresh` or None (neither reads nor writes a dir)."""
+    if any(w.rstrip("/").endswith(".staging") for w in e["writes"]):
+        return "refresh"
+    if e["writes"]:
+        return "append"
+    return "refresh" if e["reads"] else None
+
+
+def overlap_line(execs):
+    spans = {"append": [], "refresh": []}
+    for e in execs:
+        r = role(e)
+        if r:
+            spans[r].append((e["start_us"], e["start_us"] + e["ms"] * 1e3))
+    if not spans["append"] and not spans["refresh"]:
+        return None
+    a, r = union_us(spans["append"]), union_us(spans["refresh"])
+    both = a + r - union_us(spans["append"] + spans["refresh"])
+    return (f"  appends {a / 1e3:.0f} ms  refresh {r / 1e3:.0f} ms"
+            f"  overlap {both / 1e3:.0f} ms")
+
+
 def timeline(call, all_spans, jobs, execs):
     lo, hi = call["start_us"], call["end_us"]
 
@@ -121,6 +149,9 @@ def timeline(call, all_spans, jobs, execs):
         for j in sorted(nested, key=lambda j: j["start_us"]):
             print(f"  {'  ' if kind == 'exec' else ''}job {j['job']:<6}"
                   f"{ms(j['start_us']):>8.0f}{ms(j['end_us']):>8.0f}  {j['site']}")
+    line = overlap_line([e for _, kind, e in rows if kind == "exec"])
+    if line:
+        print(line)
 
 
 def call_rows(spans, jobs, execs):
